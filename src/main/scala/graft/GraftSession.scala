@@ -8,6 +8,15 @@ import org.apache.spark.sql.SparkSession
   * partitions); on a real cluster the same builder is used without `master`,
   * letting spark-submit supply parallelism. AQE stays on everywhere so skewed
   * shuffles re-plan at runtime, which is the behavior we want at 100 TB.
+  *
+  * `file:` checkpoints resolve through [[graft.util.ForkFreeLocalFs]].
+  * Without libhadoop, Hadoop's stock local `FileContext` filesystem forks
+  * `chmod` on every file it creates and `readlink` on every rename: about
+  * 180 processes per micro-batch of the canonical stream, across its offset
+  * and commit logs and HDFS-backed state-store deltas. The registration
+  * covers the `FileContext` API only. The `FileSystem` API (`fs.file.impl`,
+  * which RocksDB snapshot uploads take) still forks `chmod`, and RocksDB
+  * snapshot cleanup still forks `rm -rf`.
   */
 object GraftSession {
 
@@ -34,6 +43,8 @@ object GraftSession {
       // registers), so 64k hash-resident keys per task is still tiny memory.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.util.ForkFreeLocalFs].getName)
 
   /** Switch streaming state to RocksDB — the production state backend:
     * state spills to local disk instead of living on the executor heap, so

@@ -7,7 +7,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent
 /** Bounded in-memory capture of streaming progress — the observability
   * surface a long-running pipeline needs: per-micro-batch input volume and
   * rate, state-store rows/bytes (the watermark-eviction health signal the
-  * scale soak graphs), and the current event-time watermark.
+  * scale soak graphs), the current event-time watermark, and the batch's
+  * time split into trigger, sink, WAL, commit and state-commit layers.
   *
   * Attach once per session ([[attach]]); every query's progress lands in
   * one bounded ring (oldest batches evicted past `maxBatches`, so a
@@ -32,6 +33,7 @@ class Monitor(maxBatches: Int = 256) extends StreamingQueryListener {
   override def onQueryProgress(e: QueryProgressEvent): Unit = {
     val p = e.progress
     val so = p.stateOperators
+    def ms(k: String): Long = Option(p.durationMs.get(k)).fold(0L)(_.longValue)
     record(Batch(
       query_name = Option(p.name).getOrElse(""),
       batch_id = p.batchId,
@@ -40,7 +42,12 @@ class Monitor(maxBatches: Int = 256) extends StreamingQueryListener {
       rows_per_sec = p.inputRowsPerSecond,
       state_rows = if (so == null) 0L else so.map(_.numRowsTotal).sum,
       state_bytes = if (so == null) 0L else so.map(_.memoryUsedBytes).sum,
-      watermark = Option(p.eventTime.get("watermark")).getOrElse("")))
+      watermark = Option(p.eventTime.get("watermark")).getOrElse(""),
+      trigger_ms = ms("triggerExecution"),
+      add_batch_ms = ms("addBatch"),
+      wal_commit_ms = ms("walCommit"),
+      commit_offsets_ms = ms("commitOffsets"),
+      state_commit_ms = if (so == null) 0L else so.map(_.commitTimeMs).sum))
   }
 
   private[streaming] def record(b: Batch): Unit = {
@@ -105,7 +112,12 @@ class Monitor(maxBatches: Int = 256) extends StreamingQueryListener {
 
 object Monitor {
   /** One micro-batch's health record. `rows_per_sec` is NaN on the first
-    * batch (Spark reports no elapsed interval yet). */
+    * batch (Spark reports no elapsed interval yet). The `*_ms` fields say
+    * where the batch's time went: the whole trigger, the sink write
+    * (`addBatch`), the offset-log (WAL) and commit-log writes from
+    * `progress.durationMs` (0 when Spark reports no such phase), and
+    * `state_commit_ms`, the state-store commit time summed over the
+    * stateful operators. */
   case class Batch(
       query_name: String,
       batch_id: Long,
@@ -114,5 +126,10 @@ object Monitor {
       rows_per_sec: Double,
       state_rows: Long,
       state_bytes: Long,
-      watermark: String)
+      watermark: String,
+      trigger_ms: Long,
+      add_batch_ms: Long,
+      wal_commit_ms: Long,
+      commit_offsets_ms: Long,
+      state_commit_ms: Long)
 }

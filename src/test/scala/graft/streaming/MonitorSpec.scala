@@ -43,6 +43,17 @@ class MonitorSpec extends SparkSpec {
       s"captured ${got.map(_.input_rows).sum} input rows")
     assert(got.forall(_.state_rows > 0), "stateful query must report state rows")
     assert(got.last.watermark.nonEmpty, "watermark must be reported after batch 1")
+    // the layer split is the query's own progress, batch for batch
+    val progress = q.recentProgress.map(p => p.batchId -> p).toMap
+    got.foreach { b =>
+      val p = progress(b.batch_id)
+      def ms(k: String): Long = p.durationMs.get(k).longValue
+      assert((b.trigger_ms, b.add_batch_ms, b.wal_commit_ms, b.commit_offsets_ms) ==
+        ((ms("triggerExecution"), ms("addBatch"), ms("walCommit"), ms("commitOffsets"))),
+        s"batch ${b.batch_id}: $b vs ${p.durationMs}")
+      assert(b.state_commit_ms == p.stateOperators.map(_.commitTimeMs).sum)
+      assert(b.trigger_ms > 0 && b.add_batch_ms > 0, s"a data batch takes time: $b")
+    }
     // and it is queryable with the engine itself
     val df = mon.toDF(spark).filter(col("query_name") === "monitor_spec")
     assert(df.agg(sum(col("input_rows"))).as[Long].head() >= batches * perBatch)
@@ -52,7 +63,8 @@ class MonitorSpec extends SparkSpec {
     import spark.implicits._
     val mon = new Monitor()
     def feed(q: String, rows: Seq[Long]): Unit = rows.zipWithIndex.foreach {
-      case (r, i) => mon.record(Monitor.Batch(q, i.toLong, "", 10L, 1.0, r, r * 100, ""))
+      case (r, i) =>
+        mon.record(Monitor.Batch(q, i.toLong, "", 10L, 1.0, r, r * 100, "", 0L, 0L, 0L, 0L, 0L))
     }
     // leaky: strictly climbing across every recent batch (no eviction)
     feed("leaky", Seq(100L, 200L, 300L, 400L, 500L, 600L))
@@ -70,7 +82,7 @@ class MonitorSpec extends SparkSpec {
   test("buffer is bounded: old batches evict past maxBatches") {
     val mon = new Monitor(maxBatches = 4)
     (0L until 10L).foreach(i =>
-      mon.record(Monitor.Batch("q", i, "", 1L, 1.0, 0L, 0L, "")))
+      mon.record(Monitor.Batch("q", i, "", 1L, 1.0, 0L, 0L, "", 0L, 0L, 0L, 0L, 0L)))
     assert(mon.batches.map(_.batch_id) == Seq(6L, 7L, 8L, 9L))
   }
 }

@@ -454,8 +454,11 @@ class SpendingPipelineSpec extends SparkSpec {
     * aggregation STATE must reload, so a duplicate id arriving after the
     * restart is still dropped and totals update incrementally. The sink is
     * the idempotent-upsert shape (keyed overwrite), i.e. the exactly-once
-    * contract the JdbcUpsert sink claims (SURVEY §4.3-1/4). */
-  private def recoveryRoundTrip(tag: String): Unit = {
+    * contract the JdbcUpsert sink claims (SURVEY §4.3-1/4). `firstFs` and
+    * `secondFs` pick the local `FileContext` filesystem each run writes its
+    * checkpoint through (None: the session's default). */
+  private def recoveryRoundTrip(tag: String, firstFs: Option[String] = None,
+      secondFs: Option[String] = None): Unit = {
     import scala.collection.concurrent.TrieMap
     val srcDir = java.nio.file.Files.createTempDirectory(s"graft-rec-src-$tag").toString
     val conf = SpendingPipeline.Config(checkpointDir =
@@ -470,9 +473,14 @@ class SpendingPipelineSpec extends SparkSpec {
       tx("t1", "1", "2025-03-10T12:01:00Z", 100.0),
       tx("t2", "1", "2025-03-10T12:05:00Z", 150.0),
       tx("t3", "2", "2025-03-10T13:00:00Z", 50.0)))
-    val q1 = SpendingPipeline.run(spark, Source.JsonFiles(srcDir), upsert, conf)
-    q1.processAllAvailable()
-    q1.stop() // "crash" after the first half of the stream
+    def runToEnd(fs: Option[String]): Unit =
+      graft.util.ForkFreeLocalFsSpec.withFileImpl(spark, fs) {
+        val q = SpendingPipeline.run(spark, Source.JsonFiles(srcDir), upsert, conf)
+        q.processAllAvailable()
+        q.stop()
+      }
+
+    runToEnd(firstFs) // "crash" after the first half of the stream
     assert(store.toMap == Map(("1", "2025-03-10") -> 250.0, ("2", "2025-03-10") -> 50.0))
 
     // second half: a duplicate of t3 (within the watermark — only recovered
@@ -480,9 +488,7 @@ class SpendingPipelineSpec extends SparkSpec {
     writeFile("b.json", Seq(
       tx("t3", "2", "2025-03-10T13:00:00Z", 50.0),
       tx("t4", "1", "2025-03-10T13:05:00Z", 25.0)))
-    val q2 = SpendingPipeline.run(spark, Source.JsonFiles(srcDir), upsert, conf)
-    q2.processAllAvailable()
-    q2.stop()
+    runToEnd(secondFs)
     // t1/t2/t3 counted exactly once across the restart; t4 lands on top of
     // the RECOVERED day-total for customer 1
     assert(store.toMap == Map(("1", "2025-03-10") -> 275.0, ("2", "2025-03-10") -> 50.0),
@@ -490,7 +496,12 @@ class SpendingPipelineSpec extends SparkSpec {
   }
 
   test("checkpoint recovery: restart resumes exactly-once (state + upsert sink)") {
+    import graft.util.ForkFreeLocalFsSpec.StockLocalFs
     recoveryRoundTrip("hdfs")
+    // a checkpoint written through Hadoop's stock LocalFs restarts under
+    // graft's fork-free one, and the other way round
+    recoveryRoundTrip("stock-graft", firstFs = Some(StockLocalFs))
+    recoveryRoundTrip("graft-stock", secondFs = Some(StockLocalFs))
   }
 
   test("checkpoint recovery under the RocksDB state store backend") {
