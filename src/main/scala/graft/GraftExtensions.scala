@@ -10,9 +10,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 
 /** SparkSessionExtensions entry point: registers graft's custom Catalyst
   * expressions as SQL functions, so `spark.sql("SELECT graft_dot(a, b)")`
-  * works alongside the Column API, and graft's optimizer rules
+  * works alongside the Column API, graft's optimizer rules
   * ([[graft.plans.RewriteDotProductHof]]: portable HOF dot product ->
-  * codegen'd DotProduct).
+  * codegen'd DotProduct, and MvRewrite, TopKRewrite, AutoSalt,
+  * AutoChunkWindow) and its planner strategies
+  * ([[graft.plans.AsOfJoinStrategy]]: native as-of join;
+  * [[graft.plans.ParseJsonOnce]]: a filter on parsed JSON fields reads the
+  * one full parse instead of re-parsing the payload).
   *
   * Usage: SparkSession.builder().withExtensions(new GraftExtensions) or
   * spark.sql.extensions=graft.GraftExtensions.
@@ -83,6 +87,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // whole-operator tier: the native as-of join's planner strategy
     // (AsOfJoinPlan logical -> AsOfJoinExec sort-merge physical)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.ParseJsonOnce)
   }
 }
 
@@ -190,6 +195,11 @@ object GraftExtensions {
         .contains(graft.plans.AsOfJoinStrategy)) {
       spark.sessionState.experimentalMethods.extraStrategies ++=
         Seq(graft.plans.AsOfJoinStrategy)
+    }
+    if (!spark.sessionState.experimentalMethods.extraStrategies
+        .contains(graft.plans.ParseJsonOnce)) {
+      spark.sessionState.experimentalMethods.extraStrategies ++=
+        Seq(graft.plans.ParseJsonOnce)
     }
   }
 }

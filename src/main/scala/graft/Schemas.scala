@@ -29,11 +29,6 @@ object Schemas {
     StructField("category", StringType, nullable = true)
   ))
 
-  /** The 7 canonical column names, in declaration order. */
-  val canonicalColumns: Seq[String] = Seq(
-    "transaction_id", "customer_id", "merchant_id", "timestamp",
-    "amount", "payment_method", "status")
-
   /** Typed view of a parsed transaction. */
   final case class Transaction(
       transaction_id: String,

@@ -11,8 +11,13 @@ import org.apache.spark.sql.types.StructType
   * same; only the source differs). Mirrors the reference semantics of
   * cast -> from_json -> flatten
   * (/root/reference/src/main/scala/com/example/kafka/CustomerSpendingAnalysis.scala:39-42)
-  * as one collapsed projection that Catalyst fuses into a single stage; the
-  * unaccessed JSON fields are pruned by OptimizeJsonExprs.
+  * as one parse projection under the flatten (CollapseProject will not copy
+  * `from_json` into each of the nine field reads). A filter on
+  * parsed fields downstream ([[wellFormed]]) is pushed below that
+  * projection with the `from_json` inlined, one copy per field, each pruned
+  * to that field by OptimizeJsonExprs but each tokenizing the whole
+  * payload. [[graft.plans.ParseJsonOnce]] plans such a filter back over the
+  * single full parse, so each payload is parsed once per row.
   */
 object Ingest {
 
@@ -24,10 +29,6 @@ object Ingest {
     raw
       .select(from_json(col("value").cast("string"), schema).alias("data"))
       .select("data.*")
-
-  /** Same, keeping only the 7 canonical columns. */
-  def parseCanonical(raw: DataFrame): DataFrame =
-    parseTransactions(raw).select(Schemas.canonicalColumns.map(col): _*)
 
   /** Drop rows whose required fields failed to parse. */
   def wellFormed(parsed: DataFrame): DataFrame =

@@ -42,9 +42,11 @@ object Spend {
     * Shape: a min AGGREGATION over struct(order, row), not a window. Both
     * shuffle on the keys, but the aggregate partial-combines duplicates
     * map-side (the shuffle carries at most one row per key per input
-    * partition) and never sorts, where the window form shuffles EVERY row
-    * and pays a per-partition sort — the difference between the two is the
-    * dedup cost at 100 TB. min over the combined struct rather than
+    * partition), where the window form shuffles EVERY row. Neither avoids
+    * sorting: Spark 4.1 cannot hash-aggregate `min` over a struct buffer,
+    * so it plans SortAggregate with a Sort on both sides of the exchange
+    * (PlanSweep's `sort_aggregate` column counts them). min over the
+    * combined struct rather than
     * min_by(row, struct(order, row)): identical lexicographic order, but
     * the aggregation buffer (and shuffle row) carries the payload ONCE —
     * min_by's separate ordering key duplicated the full row and nearly
