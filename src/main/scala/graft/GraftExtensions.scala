@@ -1,12 +1,15 @@
 package graft
 
 import graft.functions.{DamerauLevenshtein, DotProduct, MinHashBandKeys,
-  MinHashMd5, SimHash64, StripAccentsExpr, UnicodeNfc, WordShingles}
+  MinHashMd5, SimHash64, StripAccentsExpr, TopKByScore, UnicodeNfc, WordShingles}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, Lower}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** SparkSessionExtensions entry point: registers graft's custom Catalyst
   * expressions as SQL functions, so `spark.sql("SELECT graft_dot(a, b)")`
@@ -23,75 +26,52 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
+    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftExtensions.strategies.foreach(st => ext.injectPlannerStrategy(_ => st))
+  }
+}
+
+object GraftExtensions {
+
   private def intArg(e: Expression, name: String): Int = e match {
     case Literal(v: Int, _) => v
     case other => throw new IllegalArgumentException(
       s"$name must be an integer literal, got $other")
   }
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (args: Seq[Expression]) => DotProduct(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashMd5].getName, "graft_minhash"),
-      (args: Seq[Expression]) => MinHashMd5(args(0), intArg(args(1), "k"))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash_bands"),
-      new ExpressionInfo(classOf[MinHashBandKeys].getName, "graft_minhash_bands"),
-      (args: Seq[Expression]) =>
-        MinHashBandKeys(args(0), intArg(args(1), "k"), intArg(args(2), "bands"))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-      (args: Seq[Expression]) => SimHash64(args(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_damerau"),
-      new ExpressionInfo(classOf[DamerauLevenshtein].getName, "graft_damerau"),
-      (args: Seq[Expression]) => DamerauLevenshtein(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_word_shingles"),
-      (args: Seq[Expression]) => WordShingles(args(0), intArg(args(1), "n"))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[UnicodeNfc].getName, "graft_nfc"),
-      (args: Seq[Expression]) => UnicodeNfc(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_strip_accents"),
-      new ExpressionInfo(classOf[StripAccentsExpr].getName, "graft_strip_accents"),
-      (args: Seq[Expression]) => StripAccentsExpr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_fold_key"),
-      new ExpressionInfo(classOf[StripAccentsExpr].getName, "graft_fold_key"),
-      (args: Seq[Expression]) => GraftExtensions.foldKeyExpr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_zvalue"),
-      new ExpressionInfo(graft.operators.Layout.getClass.getName, "graft_zvalue"),
-      (args: Seq[Expression]) =>
-        GraftExtensions.zValueExpr(args.tail, intArg(args.head, "bits"))))
+  /** Every graft SQL function as (name, class its ExpressionInfo names,
+    * builder) — the one table both registration paths read. */
+  private[graft] val functions: Seq[(String, Class[_], FunctionBuilder)] = Seq(
+    ("graft_dot", classOf[DotProduct], a => DotProduct(a(0), a(1))),
+    ("graft_minhash", classOf[MinHashMd5], a => MinHashMd5(a(0), intArg(a(1), "k"))),
+    ("graft_minhash_bands", classOf[MinHashBandKeys], a =>
+      MinHashBandKeys(a(0), intArg(a(1), "k"), intArg(a(2), "bands"))),
+    ("graft_simhash", classOf[SimHash64], a => SimHash64(a(0))),
+    ("graft_damerau", classOf[DamerauLevenshtein], a => DamerauLevenshtein(a(0), a(1))),
+    ("graft_word_shingles", classOf[WordShingles], a => WordShingles(a(0), intArg(a(1), "n"))),
+    ("graft_nfc", classOf[UnicodeNfc], a => UnicodeNfc(a.head)),
+    ("graft_strip_accents", classOf[StripAccentsExpr], a => StripAccentsExpr(a.head)),
+    ("graft_fold_key", classOf[StripAccentsExpr], a => foldKeyExpr(a.head)),
+    ("graft_zvalue", graft.operators.Layout.getClass, a =>
+      zValueExpr(a.tail, intArg(a.head, "bits"))),
     // aggregate: the analyzer wraps a returned AggregateFunction in an
     // AggregateExpression itself (same contract as built-in aggregates)
-    ext.injectFunction((
-      FunctionIdentifier("graft_top_k"),
-      new ExpressionInfo(classOf[graft.functions.TopKByScore].getName, "graft_top_k"),
-      (args: Seq[Expression]) =>
-        graft.functions.TopKByScore(args(0), args(1), intArg(args(2), "k"))))
-    ext.injectOptimizerRule(_ => graft.plans.RewriteDotProductHof)
-    ext.injectOptimizerRule(_ => graft.plans.MvRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.AutoSalt)
-    ext.injectOptimizerRule(_ => graft.plans.AutoChunkWindow)
-    // whole-operator tier: the native as-of join's planner strategy
-    // (AsOfJoinPlan logical -> AsOfJoinExec sort-merge physical)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.ParseJsonOnce)
-  }
-}
+    ("graft_top_k", classOf[TopKByScore], a => TopKByScore(a(0), a(1), intArg(a(2), "k"))))
 
-object GraftExtensions {
+  /** Optimizer rules, in the order they run. */
+  private[graft] val rules: Seq[Rule[LogicalPlan]] = Seq(
+    graft.plans.RewriteDotProductHof, graft.plans.MvRewrite,
+    graft.plans.TopKRewrite, graft.plans.AutoSalt, graft.plans.AutoChunkWindow)
+
+  /** Planner strategies: the native as-of join (AsOfJoinPlan logical ->
+    * AsOfJoinExec sort-merge physical), then the one-parse JSON filter. */
+  private[graft] val strategies: Seq[SparkStrategy] = Seq(
+    graft.plans.AsOfJoinStrategy, graft.plans.ParseJsonOnce)
 
   /** `lower(strip_accents(nfc(s)))` — the EXACT tree
     * [[graft.functions.TextNorm.foldKey]] builds, so the SQL and Column
@@ -132,74 +112,20 @@ object GraftExtensions {
     terms.reduce(Add(_, _)) // disjoint bit positions: + is bitwise OR
   }
 
-  /** Register the same function set on an already-built session. */
+  /** Register the same functions, rules and strategies on an already-built
+    * session. Idempotent: a function the registry already has (injected,
+    * or from an earlier call) is kept, and only missing rules/strategies
+    * are appended — optimizer rules can't be injected post-build, so
+    * experimentalMethods is the late-registration hook. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg: FunctionRegistry = spark.sessionState.functionRegistry
-    def intLit(e: Expression, name: String): Int = e match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"$name must be an integer literal, got $other")
+    val reg = spark.sessionState.functionRegistry
+    functions.foreach { case (name, cls, builder) =>
+      val id = FunctionIdentifier(name)
+      if (!reg.functionExists(id))
+        reg.registerFunction(id, new ExpressionInfo(cls.getName, name), builder)
     }
-    reg.createOrReplaceTempFunction("graft_dot",
-      args => DotProduct(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      args => SimHash64(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_damerau",
-      args => DamerauLevenshtein(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash",
-      args => MinHashMd5(args(0), intLit(args(1), "k")), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_bands",
-      args => MinHashBandKeys(args(0), intLit(args(1), "k"), intLit(args(2), "bands")),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_word_shingles",
-      args => WordShingles(args(0), intLit(args(1), "n")), "built-in")
-    reg.createOrReplaceTempFunction("graft_nfc",
-      args => UnicodeNfc(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_strip_accents",
-      args => StripAccentsExpr(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_fold_key",
-      args => foldKeyExpr(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_zvalue",
-      args => zValueExpr(args.tail, intLit(args.head, "bits")), "built-in")
-    reg.createOrReplaceTempFunction("graft_top_k",
-      args => graft.functions.TopKByScore(args(0), args(1), intLit(args(2), "k")),
-      "built-in")
-    // optimizer rules can't be injected post-build via SparkSessionExtensions;
-    // experimentalMethods is the supported late-registration hook
-    if (!spark.sessionState.experimentalMethods.extraOptimizations
-        .contains(graft.plans.RewriteDotProductHof)) {
-      spark.sessionState.experimentalMethods.extraOptimizations ++=
-        Seq(graft.plans.RewriteDotProductHof)
-    }
-    if (!spark.sessionState.experimentalMethods.extraOptimizations
-        .contains(graft.plans.MvRewrite)) {
-      spark.sessionState.experimentalMethods.extraOptimizations ++=
-        Seq(graft.plans.MvRewrite)
-    }
-    if (!spark.sessionState.experimentalMethods.extraOptimizations
-        .contains(graft.plans.TopKRewrite)) {
-      spark.sessionState.experimentalMethods.extraOptimizations ++=
-        Seq(graft.plans.TopKRewrite)
-    }
-    if (!spark.sessionState.experimentalMethods.extraOptimizations
-        .contains(graft.plans.AutoSalt)) {
-      spark.sessionState.experimentalMethods.extraOptimizations ++=
-        Seq(graft.plans.AutoSalt)
-    }
-    if (!spark.sessionState.experimentalMethods.extraOptimizations
-        .contains(graft.plans.AutoChunkWindow)) {
-      spark.sessionState.experimentalMethods.extraOptimizations ++=
-        Seq(graft.plans.AutoChunkWindow)
-    }
-    if (!spark.sessionState.experimentalMethods.extraStrategies
-        .contains(graft.plans.AsOfJoinStrategy)) {
-      spark.sessionState.experimentalMethods.extraStrategies ++=
-        Seq(graft.plans.AsOfJoinStrategy)
-    }
-    if (!spark.sessionState.experimentalMethods.extraStrategies
-        .contains(graft.plans.ParseJsonOnce)) {
-      spark.sessionState.experimentalMethods.extraStrategies ++=
-        Seq(graft.plans.ParseJsonOnce)
-    }
+    val xm = spark.sessionState.experimentalMethods
+    xm.extraOptimizations ++= rules.filterNot(xm.extraOptimizations.contains)
+    xm.extraStrategies ++= strategies.filterNot(xm.extraStrategies.contains)
   }
 }

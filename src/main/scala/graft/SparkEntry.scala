@@ -3,8 +3,10 @@ package graft
 import graft.functions.Exact._
 import graft.operators.{Ingest, Spend}
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SQLContext, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.DecimalType
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -2262,8 +2264,6 @@ object SparkEntry {
     // rollup). Same oracle as x29: the final table must equal a flat full
     // recompute exactly.
     "stream_incremental_rollup" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = s.sqlContext
       import s.implicits._
       val tableDir = sys.props("java.io.tmpdir") + "/graft-increll-stream-" +
         math.abs(dir.hashCode)
@@ -2271,18 +2271,15 @@ object SparkEntry {
       val rows = Tables.events(s, dir)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_type"), col("value"))
-        .as[(Long, Long, String, Double)].collect() // bounded harness feed
-      val ms = MemoryStream[(Long, Long, String, Double)]
-      val q = ms.toDF().toDF("event_id", "ts_us", "event_type", "value")
-        .withColumn("ts", timestamp_micros(col("ts_us")))
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Incremental.applyIncrement(s, batch, tableDir)
-        }
-        .start()
-      try rows.grouped(math.max(1, rows.length / 5)).foreach { chunk =>
-        ms.addData(chunk.toIndexedSeq); q.processAllAvailable()
-      } finally q.stop()
+        .as[(Long, Long, String, Double)].collect().toSeq // bounded harness feed
+      feedStream(s, chunks(rows, 5)) { ms =>
+        ms.toDF("event_id", "ts_us", "event_type", "value")
+          .withColumn("ts", timestamp_micros(col("ts_us")))
+          .writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            graft.operators.Incremental.applyIncrement(s, batch, tableDir)
+          }
+      }
       graft.operators.Incremental.serve(s, tableDir)
     }),
 
@@ -6725,22 +6722,15 @@ object SparkEntry {
     // the batch-catchup trigger graded end to end: the whole feed
     // (including the watermark-flushing sentinel) is already available
     // when the query STARTS; Trigger.AvailableNow drains it and stops on
-    // its own (awaitTermination — no processAllAvailable loop), with the
+    // its own (awaitTermination — no per-batch feed loop), with the
     // trailing no-data micro-batch finalizing every window. Same relation
     // as the incrementally-fed twin, same oracle.
     "stream_daily_spend_available_now" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import org.apache.spark.sql.streaming.Trigger
       implicit val sqlCtx = s.sqlContext
       import s.implicits._
-      val payloads = graft.sources.DataGen
-        .transactions(s, streamN, 42L, streamEpoch, eventsPerSecond = 1.0)
-        .select(to_json(struct(col("*"))).as("value"))
-        .collect().map(_.getString(0))
       val ms = MemoryStream[String]
-      payloads.grouped(math.max(1, payloads.length / 4))
-        .foreach(c => ms.addData(c.toIndexedSeq))
-      ms.addData(Seq(sentinelJson))
+      (chunks(txPayloads(s), 4) :+ Seq(sentinelJson)).foreach(c => ms.addData(c))
       val out = Spend.dailySpendStream(Spend.dedupeStream(
         Ingest.parseTransactions(ms.toDF()).withWatermark("timestamp", "1 hour")))
       val q = out.writeStream.outputMode("append").format("memory")
@@ -6834,7 +6824,7 @@ object SparkEntry {
         .transactions(s, 1000L, 42L, streamEpoch - 90000L,
           eventsPerSecond = 1.0, startId = 90000L)
         .select(to_json(struct(col("*"))).as("value"))
-        .collect().map(_.getString(0))
+        .collect().map(_.getString(0)).toSeq
       runStream(s, "stream_late_data_drop_t", parsed => {
         val marked = parsed.withWatermark("timestamp", "1 hour")
         Spend.dailySpendStream(Spend.dedupeStream(marked))
@@ -6915,15 +6905,7 @@ object SparkEntry {
     // streaming SCD2 changelog: one ValueState row per key in TWS, change
     // rows append as attributes transition — the CDC shape of x23's
     // dimension history (RocksDB required by TWS, conf restored after)
-    "stream_scd2_changes" -> ((s, dir) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      GraftSession.enableRocksDbState(s)
-      try streamScd2(s, dir) finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
-    }),
+    "stream_scd2_changes" -> ((s, dir) => withRocksDbState(s)(streamScd2(s, dir))),
 
     // live drift monitor: the stream maintains only bucket counts; the
     // fixed-point PSI report projects over them vs the static reference
@@ -6935,15 +6917,7 @@ object SparkEntry {
     // mode); rank selection re-runs each trigger
     "stream_quantile_sample" -> ((s, dir) => streamQuantileSample(s, dir)),
 
-    "stream_bloom_dedup" -> ((s, dir) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      GraftSession.enableRocksDbState(s)
-      try streamBloomDedup(s, dir) finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
-    }),
+    "stream_bloom_dedup" -> ((s, dir) => withRocksDbState(s)(streamBloomDedup(s, dir))),
 
     // batch-trained centroids applied to a live embedding stream as a
     // stateless per-row argmin — the "score the stream with a trained
@@ -6955,30 +6929,14 @@ object SparkEntry {
     // a lead() window can't run on a stream; the pair multiset must equal
     // the batch window's (shares x56's oracle). RocksDB required by TWS,
     // conf restored after.
-    "stream_transitions" -> ((s, dir) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      GraftSession.enableRocksDbState(s)
-      try streamTransitions(s, dir) finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
-    }),
+    "stream_transitions" -> ((s, dir) => withRocksDbState(s)(streamTransitions(s, dir))),
 
     // real-time conversion funnel: per-user progress ValueState advances
     // and emits the moment a step completes — the greedy in-order scan
     // computes exactly the batch recurrence's earliest-qualifying reach,
     // so the (user, step) reach set equals x19's frame (shared oracle).
     // RocksDB required by TWS, conf restored after.
-    "stream_funnel" -> ((s, dir) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      GraftSession.enableRocksDbState(s)
-      try streamFunnel(s, dir) finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
-    }),
+    "stream_funnel" -> ((s, dir) => withRocksDbState(s)(streamFunnel(s, dir))),
 
     // stream-static enrichment: the live stream joined to a static
     // dimension (merchant -> category) — the canonical "enrich the stream
@@ -7041,11 +6999,8 @@ object SparkEntry {
     // the default provider); the conf is restored afterwards so the other
     // graded stream rows keep their recorded backend. Cents trick as in
     // the fmGWS row: integer-valued doubles sum exactly in any fold order.
-    "stream_session_tws" -> ((s, dir) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      GraftSession.enableRocksDbState(s)
-      try runStream(s, "stream_session_tws_t", parsed => {
+    "stream_session_tws" -> ((s, dir) =>
+      withRocksDbState(s)(runStream(s, "stream_session_tws_t", parsed => {
         import s.implicits._
         val ev = parsed.withWatermark("timestamp", "1 hour")
           .select(col("customer_id"), col("timestamp"),
@@ -7058,11 +7013,7 @@ object SparkEntry {
             col("session_end").cast("long").as("sess_end"),
             (col("total_spent") / 100.0).as("total_spent"),
             col("n_events").cast("long").as("n_events"))
-      }) finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
-    }),
+      }))),
 
     // streaming data-quality monitor: the suite's counters (row count,
     // non-null count, per-rule pass counts) maintained as ONE complete-mode
@@ -7234,11 +7185,6 @@ object SparkEntry {
       """"timestamp":"2024-06-01T00:00:00.000Z","amount":1.0,""" +
       """"payment_method":"UPI","status":"Success"}"""
 
-  /** Feed the generator stream through `transform` (a streaming transform
-    * of the parsed transaction stream) across several micro-batches; with
-    * `dupTail` the last chunk is re-fed as an extra batch (cross-batch
-    * duplicates the pipeline's dedup must drop). Returns the finalized
-    * table. */
   /** Throwaway checkpoint dir for a graded stream run, removed at JVM
     * exit — repeated gate runs must not litter tmpdir. Deletion is
     * DEFERRED (not at q.stop()): the session-wide state-store maintenance
@@ -7270,39 +7216,96 @@ object SparkEntry {
     }
   }
 
+  /** Run `body` on RocksDB streaming state (transformWithState refuses the
+    * default provider), then restore the session's provider so the other
+    * graded stream rows keep their recorded backend. */
+  private def withRocksDbState[A](s: SparkSession)(body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = s.conf.getOption(key)
+    GraftSession.enableRocksDbState(s)
+    try body finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None    => s.conf.unset(key)
+    }
+  }
+
+  /** The harness every single-source graded stream row runs on: a
+    * `MemoryStream` of `T` feeding the writer `sink` builds from it, with a
+    * reaped [[tempCkpt]] checkpoint. Each inner `Seq` of `batches` is
+    * exactly one micro-batch, in order. With `restartAfter = Some(k)` the
+    * query stops after `k` batches and `sink` is called again on the same
+    * source and checkpoint — a new query (and a fresh foreachBatch
+    * closure, when the sink builds one) that must recover offsets and
+    * state before the remaining batches arrive. The query is stopped on
+    * every exit, and a failure propagates. */
+  private[graft] def feedStream[T: Encoder](s: SparkSession, batches: Seq[Seq[T]],
+      restartAfter: Option[Int] = None)(sink: Dataset[T] => DataStreamWriter[_]): Unit = {
+    implicit val sqlCtx: SQLContext = s.sqlContext
+    val ms = MemoryStream[T]
+    val ckpt = tempCkpt()
+    val runs = restartAfter.fold(Seq(batches))(k => Seq(batches.take(k), batches.drop(k)))
+    runs.foreach { run =>
+      val q = sink(ms.toDS()).option("checkpointLocation", ckpt).start()
+      try run.foreach { b => ms.addData(b); q.processAllAvailable() }
+      finally q.stop()
+    }
+  }
+
+  /** `rows` cut into micro-batches of `rows.length / n` rows (a short
+    * remainder batch when `n` does not divide the length). */
+  private def chunks[T](rows: Seq[T], n: Int): Seq[Seq[T]] =
+    rows.grouped(math.max(1, rows.length / n)).toSeq
+
+  /** The generator transaction feed as the JSON payloads the transaction
+    * stream rows parse. */
+  private def txPayloads(s: SparkSession): Seq[String] =
+    graft.sources.DataGen
+      .transactions(s, streamN, 42L, streamEpoch, eventsPerSecond = 1.0)
+      .select(to_json(struct(col("*"))).as("value"))
+      .collect().map(_.getString(0)).toSeq
+
+  /** Feed the generator stream through `transform` (a streaming transform
+    * of the parsed transaction stream) in four micro-batches into the
+    * append-mode memory table `name`, then a sentinel batch that pushes
+    * the watermark past every real window. Extra batches go between the
+    * two: with `dupTail` the last chunk again (cross-batch duplicates the
+    * pipeline's dedup must drop), then `lateTail` — genuinely late
+    * arrivals (fresh ids, event times below the current watermark) the
+    * engine must drop every one of. Returns the finalized table. */
   private def runStream(
       s: SparkSession,
       name: String,
       transform: DataFrame => DataFrame,
       dupTail: Boolean = false,
-      lateTail: Array[String] = Array.empty): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
+      lateTail: Seq[String] = Nil): DataFrame = {
     import s.implicits._
-    val payloads = graft.sources.DataGen
-      .transactions(s, streamN, 42L, streamEpoch, eventsPerSecond = 1.0)
-      .select(to_json(struct(col("*"))).as("value"))
-      .collect().map(_.getString(0))
-    val ms = MemoryStream[String]
-    val out = transform(Ingest.parseTransactions(ms.toDF()))
-    val ckpt = tempCkpt()
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName(name).option("checkpointLocation", ckpt).start()
-    try {
-      val chunks = payloads.grouped(math.max(1, payloads.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-      if (dupTail) { ms.addData(chunks.last.toIndexedSeq); q.processAllAvailable() }
-      // genuinely late arrivals (fresh ids, event times below the current
-      // watermark): fed as their own micro-batch AFTER the feed advanced
-      // the watermark past their windows — the engine must drop every one
-      if (lateTail.nonEmpty) { ms.addData(lateTail.toIndexedSeq); q.processAllAvailable() }
-      ms.addData(Seq(sentinelJson)); q.processAllAvailable()
-    } finally q.stop()
+    val feed = chunks(txPayloads(s), 4)
+    val dup = if (dupTail) Seq(feed.last) else Nil
+    val late = if (lateTail.nonEmpty) Seq(lateTail) else Nil
+    feedStream(s, feed ++ dup ++ late :+ Seq(sentinelJson)) { ms =>
+      transform(Ingest.parseTransactions(ms.toDF())).writeStream
+        .outputMode("append").format("memory").queryName(name)
+    }
     // drop any finalized sentinel rows; transforms that aggregate the
     // customer away (e.g. stream_static_enrich) rely on the sentinel's
     // window never finalizing instead
     val t = s.table(name)
     if (t.columns.contains("customer_id")) t.filter(col("customer_id") =!= "-1") else t
+  }
+
+  /** Per-batch overwrite-mode parquet output for a foreachBatch verb:
+    * batch `id` writes `cols` to its own directory (idempotent per batchId,
+    * the foreachBatch exactly-once contract, so an engine replay rewrites
+    * rather than duplicates); the graded result is the union read back. */
+  private final class BatchParquet(cols: String*) {
+    private val outDir = tempCkpt()
+    private val dirs = scala.collection.mutable.Buffer.empty[String]
+    def write(out: DataFrame, id: Long): Unit = {
+      val dir = s"$outDir/b_$id"
+      out.select(cols.map(col): _*).write.mode("overwrite").parquet(dir)
+      dirs.synchronized { dirs += dir }
+    }
+    def read(s: SparkSession): DataFrame = s.read.parquet(dirs.distinct.toSeq: _*)
   }
 
   /** The run behind `stream_running_chunked`: the transaction feed in 4
@@ -7316,36 +7319,25 @@ object SparkEntry {
     * sum. No watermark/sentinel — the pipeline is stateless inside the
     * stream engine (the cross-batch state lives in the verb). */
   private def runningChunkedStream(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    val payloads = graft.sources.DataGen
-      .transactions(s, streamN, 42L, streamEpoch, eventsPerSecond = 1.0)
-      .select(to_json(struct(col("*"))).as("value"))
-      .collect().map(_.getString(0))
-    val ms = MemoryStream[String]
-    val outDir = tempCkpt()
-    val batchDirs = scala.collection.mutable.Buffer.empty[String]
+    val out = new BatchParquet("customer_id", "te", "running_cents")
     val fn = graft.streaming.ChunkedRunning.foreachBatch(
-        "customer_id", "te", "cents", "running_cents",
-        agg = "sum", chunks = 8, stateDir = Some(tempCkpt())) { (out, id) =>
-      val dir = s"$outDir/b_$id"
-      out.select(col("customer_id"), col("te"), col("running_cents"))
-        .write.mode("overwrite").parquet(dir)
-      batchDirs.synchronized { batchDirs += dir }
+      "customer_id", "te", "cents", "running_cents",
+      agg = "sum", chunks = 8, stateDir = Some(tempCkpt()))(out.write)
+    feedStream(s, chunks(txPayloads(s), 4)) { ms =>
+      txCents(ms.toDF()).writeStream.foreachBatch(fn)
     }
-    val prepared = Ingest.parseTransactions(ms.toDF())
+    out.read(s)
+  }
+
+  /** The parsed transaction stream as the (customer_id, te, cents) rows
+    * the running and rolling verbs take: epoch-second event time, exact
+    * long cents. */
+  private def txCents(payloads: DataFrame): DataFrame =
+    Ingest.parseTransactions(payloads)
       .select(col("customer_id"),
         col("timestamp").cast("long").as("te"),
         round(col("amount") * lit(100)).cast("long").as("cents"))
-    val q = prepared.writeStream.foreachBatch(fn)
-      .option("checkpointLocation", tempCkpt()).start()
-    try {
-      payloads.grouped(math.max(1, payloads.length / 4))
-        .foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
-    s.read.parquet(batchDirs.distinct.toSeq: _*)
-  }
 
   /** The run behind `stream_rolling_range` (r12): the transaction feed in
     * 4 micro-batches through [[graft.streaming.RollingRange.foreachBatch]]
@@ -7356,36 +7348,16 @@ object SparkEntry {
     * RANGE verb runs. Per-batch overwrite parquet sinks (idempotent by
     * batchId), graded as the union read back. Exact long cents. */
   private def rollingRangeStream(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    val payloads = graft.sources.DataGen
-      .transactions(s, streamN, 42L, streamEpoch, eventsPerSecond = 1.0)
-      .select(to_json(struct(col("*"))).as("value"))
-      .collect().map(_.getString(0))
-    val ms = MemoryStream[String]
-    val outDir = tempCkpt()
-    val batchDirs = scala.collection.mutable.Buffer.empty[String]
+    val out = new BatchParquet("customer_id", "te", "roll_cents")
     val fn = graft.streaming.RollingRange.foreachBatch(
-        "customer_id", "te", "cents", "roll_cents",
-        agg = "sum", preceding = 3600L, chunks = 8,
-        stateDir = Some(tempCkpt())) { (out, id) =>
-      val dir = s"$outDir/b_$id"
-      out.select(col("customer_id"), col("te"), col("roll_cents"))
-        .write.mode("overwrite").parquet(dir)
-      batchDirs.synchronized { batchDirs += dir }
+      "customer_id", "te", "cents", "roll_cents",
+      agg = "sum", preceding = 3600L, chunks = 8,
+      stateDir = Some(tempCkpt()))(out.write)
+    feedStream(s, chunks(txPayloads(s), 4)) { ms =>
+      txCents(ms.toDF()).writeStream.foreachBatch(fn)
     }
-    val prepared = Ingest.parseTransactions(ms.toDF())
-      .select(col("customer_id"),
-        col("timestamp").cast("long").as("te"),
-        round(col("amount") * lit(100)).cast("long").as("cents"))
-    val q = prepared.writeStream.foreachBatch(fn)
-      .option("checkpointLocation", tempCkpt()).start()
-    try {
-      payloads.grouped(math.max(1, payloads.length / 4))
-        .foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
-    s.read.parquet(batchDirs.distinct.toSeq: _*)
+    out.read(s)
   }
 
   /** The bounded-disorder twin of [[rollingRangeStream]] (r13, VERDICT
@@ -7402,8 +7374,6 @@ object SparkEntry {
     * graded result is the union of per-batch emissions — it must equal
     * the batch RANGE window over the ordered relation exactly. */
   private def rollingRangeSlackStream(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val rows = graft.sources.DataGen
       .transactions(s, streamN, 42L, streamEpoch, eventsPerSecond = 1.0)
@@ -7420,26 +7390,15 @@ object SparkEntry {
     val sentinelTe = rows.map(_._2).max + 61L
     val sentinels = rows.map(_._1).distinct.sorted
       .map(c => (c, sentinelTe, 0L))
-    val ms = MemoryStream[(String, Long, Long)]
-    val outDir = tempCkpt()
-    val batchDirs = scala.collection.mutable.Buffer.empty[String]
+    val out = new BatchParquet("customer_id", "te", "roll_cents")
     val fn = graft.streaming.RollingRange.foreachBatch(
-        "customer_id", "te", "cents", "roll_cents",
-        agg = "sum", preceding = 3600L, chunks = 8,
-        stateDir = Some(tempCkpt()), slack = 60L) { (out, id) =>
-      val dir = s"$outDir/b_$id"
-      out.select(col("customer_id"), col("te"), col("roll_cents"))
-        .write.mode("overwrite").parquet(dir)
-      batchDirs.synchronized { batchDirs += dir }
+      "customer_id", "te", "cents", "roll_cents",
+      agg = "sum", preceding = 3600L, chunks = 8,
+      stateDir = Some(tempCkpt()), slack = 60L)(out.write)
+    feedStream(s, chunks(scrambled, 4) :+ sentinels) { ms =>
+      ms.toDF("customer_id", "te", "cents").writeStream.foreachBatch(fn)
     }
-    val prepared = ms.toDF().toDF("customer_id", "te", "cents")
-    val q = prepared.writeStream.foreachBatch(fn)
-      .option("checkpointLocation", tempCkpt()).start()
-    try {
-      (scrambled.grouped(math.max(1, scrambled.length / 4)).toSeq :+ sentinels)
-        .foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
-    s.read.parquet(batchDirs.distinct.toSeq: _*)
+    out.read(s)
   }
 
   /** The restart-recovery twin of [[runningChunkedStream]]
@@ -7453,46 +7412,18 @@ object SparkEntry {
     * recovery bug — lost offsets, double-applied replay — shifts every
     * later running value and fails the oracle hash. */
   private def runningChunkedRestartStream(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    val payloads = graft.sources.DataGen
-      .transactions(s, streamN, 42L, streamEpoch, eventsPerSecond = 1.0)
-      .select(to_json(struct(col("*"))).as("value"))
-      .collect().map(_.getString(0))
-    val ms = MemoryStream[String]
-    val outDir = tempCkpt()
+    val out = new BatchParquet("customer_id", "te", "running_cents")
     val stateDir = tempCkpt()
-    val ckpt = tempCkpt()
-    val batchDirs = scala.collection.mutable.Buffer.empty[String]
-    def start() = {
+    feedStream(s, chunks(txPayloads(s), 4), restartAfter = Some(2)) { ms =>
       // a NEW closure per start: in-memory offsets begin empty and the
       // stateDir reload path is what the row grades
       val fn = graft.streaming.ChunkedRunning.foreachBatch(
-          "customer_id", "te", "cents", "running_cents",
-          agg = "sum", chunks = 8, stateDir = Some(stateDir)) { (out, id) =>
-        val dir = s"$outDir/b_$id"
-        out.select(col("customer_id"), col("te"), col("running_cents"))
-          .write.mode("overwrite").parquet(dir)
-        batchDirs.synchronized { batchDirs += dir }
-      }
-      Ingest.parseTransactions(ms.toDF())
-        .select(col("customer_id"),
-          col("timestamp").cast("long").as("te"),
-          round(col("amount") * lit(100)).cast("long").as("cents"))
-        .writeStream.foreachBatch(fn)
-        .option("checkpointLocation", ckpt).start()
+        "customer_id", "te", "cents", "running_cents",
+        agg = "sum", chunks = 8, stateDir = Some(stateDir))(out.write)
+      txCents(ms.toDF()).writeStream.foreachBatch(fn)
     }
-    val chunks = payloads.grouped(math.max(1, payloads.length / 4)).toSeq
-    val q1 = start()
-    try {
-      chunks.take(2).foreach { c => ms.addData(c.toIndexedSeq); q1.processAllAvailable() }
-    } finally q1.stop()
-    val q2 = start()
-    try {
-      chunks.drop(2).foreach { c => ms.addData(c.toIndexedSeq); q2.processAllAvailable() }
-    } finally q2.stop()
-    s.read.parquet(batchDirs.distinct.toSeq: _*)
+    out.read(s)
   }
 
   /** The restart-recovery run behind `stream_daily_spend_restart`: the
@@ -7507,34 +7438,17 @@ object SparkEntry {
     * through the metadata log, so an uncommitted or double-committed batch
     * would surface as missing/duplicated rows and fail the oracle hash. */
   private def restartStream(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    val payloads = graft.sources.DataGen
-      .transactions(s, streamN, 42L, streamEpoch, eventsPerSecond = 1.0)
-      .select(to_json(struct(col("*"))).as("value"))
-      .collect().map(_.getString(0))
-    val ms = MemoryStream[String]
-    val ckpt = tempCkpt()
     val outDir = tempCkpt() // same deferred-reap lifecycle as the checkpoint
-    def start() = {
-      val out = Spend.dailySpendStream(Spend.dedupeStream(
-        Ingest.parseTransactions(ms.toDF()).withWatermark("timestamp", "1 hour")))
-      out.writeStream.outputMode("append").format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt).start()
+    val feed = chunks(txPayloads(s), 4)
+    // the re-fed second chunk lands AFTER recovery: dropping it requires
+    // the dedup state to have survived the restart, not just the offsets
+    val batches = feed.take(2) ++ (feed(1) +: feed.drop(2)) :+ Seq(sentinelJson)
+    feedStream(s, batches, restartAfter = Some(2)) { ms =>
+      Spend.dailySpendStream(Spend.dedupeStream(
+          Ingest.parseTransactions(ms.toDF()).withWatermark("timestamp", "1 hour")))
+        .writeStream.outputMode("append").format("parquet").option("path", outDir)
     }
-    val chunks = payloads.grouped(math.max(1, payloads.length / 4)).toSeq
-    val q1 = start()
-    try chunks.take(2).foreach { c => ms.addData(c.toIndexedSeq); q1.processAllAvailable() }
-    finally q1.stop()
-    val q2 = start()
-    try {
-      // the re-fed chunk lands AFTER recovery: dropping it requires the
-      // dedup state to have survived the restart, not just the offsets
-      ms.addData(chunks(1).toIndexedSeq); q2.processAllAvailable()
-      chunks.drop(2).foreach { c => ms.addData(c.toIndexedSeq); q2.processAllAvailable() }
-      ms.addData(Seq(sentinelJson)); q2.processAllAvailable()
-    } finally q2.stop()
     s.read.parquet(outDir).filter(col("customer_id") =!= "-1")
   }
 
@@ -7558,7 +7472,6 @@ object SparkEntry {
     * sentinel's own (possibly null-padded) output row is filtered by its
     * customer_id. */
   private def streamStreamJoin(s: SparkSession, joinType: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType, TimestampType}
     implicit val sqlCtx = s.sqlContext
     import s.implicits._
@@ -7567,12 +7480,9 @@ object SparkEntry {
       case "left_outer" => "stream_stream_join_left_t"
       case _ => "stream_stream_join_full_t"
     }
-    val txPayloads = graft.sources.DataGen
-      .transactions(s, streamN, 42L, streamEpoch, eventsPerSecond = 1.0)
-      .select(to_json(struct(col("*"))).as("value")).collect().map(_.getString(0))
     val rfPayloads = graft.sources.DataGen
       .refunds(s, streamN, 42L, streamEpoch, eventsPerSecond = 1.0)
-      .select(to_json(struct(col("*"))).as("value")).collect().map(_.getString(0))
+      .select(to_json(struct(col("*"))).as("value")).collect().map(_.getString(0)).toSeq
     val msTx = MemoryStream[String]
     val msRf = MemoryStream[String]
     val tx = Ingest.parseTransactions(msTx.toDF())
@@ -7607,11 +7517,9 @@ object SparkEntry {
       s"""{"transaction_id":"sentinel-r","refund_ts":"$ts","refund_amount":1.0}"""
     val txSentinel2 = sentinelJson.replace("2024-06-01", "2024-06-02")
     try {
-      val txChunks = txPayloads.grouped(math.max(1, txPayloads.length / 4)).toSeq
-      val rfChunks = rfPayloads.grouped(math.max(1, rfPayloads.length / 4)).toSeq
-      txChunks.zipAll(rfChunks, Array.empty[String], Array.empty[String])
+      chunks(txPayloads(s), 4).zipAll(chunks(rfPayloads, 4), Nil, Nil)
         .foreach { case (t, r) =>
-          msTx.addData(t.toIndexedSeq); msRf.addData(r.toIndexedSeq)
+          msTx.addData(t); msRf.addData(r)
           q.processAllAvailable()
         }
       msTx.addData(Seq(sentinelJson))
@@ -7629,9 +7537,6 @@ object SparkEntry {
         col("transaction_id") =!= "sentinel-r")
   }
 
-  /** The streaming-quality run behind `stream_quality_monitor`: four
-    * additive counters over the whole transaction stream in complete
-    * mode; the final counter row unfolds into per-check metric rows. */
   /** The streaming run behind `stream_eval_confusion`: the events table
     * fed in four micro-batches, the confusion counters maintained as ONE
     * complete-mode global aggregation (state = four additive longs,
@@ -7640,27 +7545,21 @@ object SparkEntry {
     * so the finished relation must equal the batch suite over the same
     * rows — same oracle as `ext_eval_confusion`. */
   private def streamEvalConfusion(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val rows = Tables.events(s, dir)
       .select(col("event_type"), col("value"))
-      .collect().map(r => (r.getString(0), r.getDouble(1)))
-    val ms = MemoryStream[(String, Double)]
+      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
     def cnt(c: org.apache.spark.sql.Column) =
       sum(when(c, 1L).otherwise(0L))
     val label = col("event_type") === "purchase"
     val pred = col("value") >= 150.0
-    val counters = ms.toDF().toDF("event_type", "value").agg(
-      cnt(label && pred).as("tp"), cnt(!label && pred).as("fp"),
-      cnt(label && !pred).as("fn"), cnt(!label && !pred).as("tn"))
-    val q = counters.writeStream.outputMode("complete").format("memory")
-      .queryName("stream_eval_confusion_t")
-      .option("checkpointLocation", tempCkpt()).start()
-    try {
-      rows.grouped(math.max(1, rows.length / 4))
-        .foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+    feedStream(s, chunks(rows, 4)) { ms =>
+      ms.toDF("event_type", "value").agg(
+          cnt(label && pred).as("tp"), cnt(!label && pred).as("fp"),
+          cnt(label && !pred).as("fn"), cnt(!label && !pred).as("tn"))
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("stream_eval_confusion_t")
+    }
     graft.operators.Eval.metricsFromCounts(s.table("stream_eval_confusion_t"))
   }
 
@@ -7669,29 +7568,23 @@ object SparkEntry {
     * stateless, append mode — then the appended rows are rolled into the
     * per-rule census the batch oracle states. */
   private def streamQuarantine(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val rows = Tables.events(s, dir)
       .select(col("event_id"), col("event_type"), col("value"))
-      .as[(Long, String, Double)].collect()
-    val ms = MemoryStream[(Long, String, Double)]
-    val tagged = graft.operators.Quality.quarantine(
-      ms.toDF().toDF("event_id", "event_type", "value"), Seq(
-        "value_le_400" -> (col("value") <= 400.0),
-        "purchase_le_300" ->
-          (col("event_type") =!= "purchase" || col("value") <= 300.0),
-        "known_type" -> col("event_type").isin(
-          "view", "click", "signup", "purchase", "error")))
-      .select(col("event_id"), coalesce(col("quarantine_rule"), lit("PASS"))
-        .as("rule"))
-    val q = tagged.writeStream.outputMode("append").format("memory")
-      .queryName("stream_quarantine_t")
-      .option("checkpointLocation", tempCkpt()).start()
-    try {
-      rows.grouped(math.max(1, rows.length / 4))
-        .foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+      .as[(Long, String, Double)].collect().toSeq
+    feedStream(s, chunks(rows, 4)) { ms =>
+      graft.operators.Quality.quarantine(
+          ms.toDF("event_id", "event_type", "value"), Seq(
+            "value_le_400" -> (col("value") <= 400.0),
+            "purchase_le_300" ->
+              (col("event_type") =!= "purchase" || col("value") <= 300.0),
+            "known_type" -> col("event_type").isin(
+              "view", "click", "signup", "purchase", "error")))
+        .select(col("event_id"), coalesce(col("quarantine_rule"), lit("PASS"))
+          .as("rule"))
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_quarantine_t")
+    }
     s.table("stream_quarantine_t")
       .groupBy(col("rule")).agg(count(lit(1)).as("n"))
       .orderBy(col("rule"))
@@ -7703,8 +7596,6 @@ object SparkEntry {
     * join the static even-half counts through the same fixed-point PSI
     * projection ([[graft.operators.Quality.psiDriftCounts]]). */
   private def streamEmbeddingDrift(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val proj = graft.operators.Similarity.randomProject(
       col("embedding").cast("array<double>"), outDim = 4, dim = 64)
@@ -7717,18 +7608,14 @@ object SparkEntry {
       .groupBy(col("bucket")).agg(count(lit(1)).as("__ra"))
     val rows = emb.filter(col("vec_id") % 2 === 1)
       .select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect()
-    val ms = MemoryStream[(Long, Seq[Float])]
-    val live = ms.toDF().toDF("vec_id", "embedding")
-      .select(bucket.as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("__rb"))
-    val q = live.writeStream.outputMode("complete").format("memory")
-      .queryName("stream_embdrift_t")
-      .option("checkpointLocation", tempCkpt()).start()
-    try {
-      rows.grouped(math.max(1, rows.length / 4))
-        .foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+      .as[(Long, Seq[Float])].collect().toSeq
+    feedStream(s, chunks(rows, 4)) { ms =>
+      ms.toDF("vec_id", "embedding")
+        .select(bucket.as("bucket"))
+        .groupBy(col("bucket")).agg(count(lit(1)).as("__rb"))
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("stream_embdrift_t")
+    }
     graft.operators.Quality.psiDriftCounts(
         staticCounts, s.table("stream_embdrift_t"))
       .orderBy(col("bucket"))
@@ -7738,25 +7625,19 @@ object SparkEntry {
     * per-bin counters in complete mode, the reliability columns projected
     * only after the feed finishes. */
   private def streamCalibration(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val rows = Tables.events(s, dir)
       .select(col("event_type"), col("value"))
-      .as[(String, Double)].collect()
-    val ms = MemoryStream[(String, Double)]
-    val counters = ms.toDF().toDF("event_type", "value")
-      .groupBy(floor(col("value") / 50.0).cast("long").as("bin"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("n_pos"))
-    val q = counters.writeStream.outputMode("complete").format("memory")
-      .queryName("stream_calibration_t")
-      .option("checkpointLocation", tempCkpt()).start()
-    try {
-      rows.grouped(math.max(1, rows.length / 4))
-        .foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+      .as[(String, Double)].collect().toSeq
+    feedStream(s, chunks(rows, 4)) { ms =>
+      ms.toDF("event_type", "value")
+        .groupBy(floor(col("value") / 50.0).cast("long").as("bin"))
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
+            .as("n_pos"))
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("stream_calibration_t")
+    }
     s.table("stream_calibration_t")
       .select(col("bin"), col("n"), col("n_pos"),
         ((col("bin").cast("double") + 0.5) / 10.0).as("conf"),
@@ -7771,8 +7652,6 @@ object SparkEntry {
     * their level forward, new users initialize at their first day. The
     * state table is one row per user at any stream length. */
   private def streamEwma(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val stateDir = sys.props("java.io.tmpdir") + "/graft-ewma-stream-" +
       math.abs(dir.hashCode)
@@ -7781,33 +7660,30 @@ object SparkEntry {
       .groupBy(col("user_id"), to_date(col("ts")).as("d"))
       .agg((sum(money(col("value"))) * 100).cast("long").as("cents"))
       .select(col("user_id"), col("d").cast("string").as("d"), col("cents"))
-      .as[(Long, String, Long)].collect() // bounded: users x days
+      .as[(Long, String, Long)].collect().toSeq // bounded: users x days
     val days = daily.map(_._2).distinct.sorted
-    val ms = MemoryStream[(Long, String, Long)]
-    val q = ms.toDF().toDF("user_id", "d", "cents").writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.select(col("user_id"), col("cents").as("x"))
-        val first = !java.nio.file.Files.exists(
-          java.nio.file.Paths.get(stateDir))
-        val merged =
-          if (first)
-            b.select(col("user_id"), col("x").as("level"),
-              lit(1L).as("n_days"))
-          else s.read.parquet(stateDir).join(b, Seq("user_id"), "full_outer")
-            .select(col("user_id"),
-              when(col("x").isNull, col("level"))
-                .when(col("level").isNull, col("x"))
-                .otherwise(expr("(level + x) div 2")).as("level"),
-              (coalesce(col("n_days"), lit(0L)) +
-                when(col("x").isNull, 0L).otherwise(1L)).as("n_days"))
-        // stage before overwriting the directory being read
-        graft.util.Checkpoints.cut(merged)
-          .write.mode("overwrite").parquet(stateDir)
-      }.start()
-    try days.foreach { day =>
-      ms.addData(daily.filter(_._2 == day).toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
+    feedStream(s, days.map(day => daily.filter(_._2 == day))) { ms =>
+      ms.toDF("user_id", "d", "cents").writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val b = batch.select(col("user_id"), col("cents").as("x"))
+          val first = !java.nio.file.Files.exists(
+            java.nio.file.Paths.get(stateDir))
+          val merged =
+            if (first)
+              b.select(col("user_id"), col("x").as("level"),
+                lit(1L).as("n_days"))
+            else s.read.parquet(stateDir).join(b, Seq("user_id"), "full_outer")
+              .select(col("user_id"),
+                when(col("x").isNull, col("level"))
+                  .when(col("level").isNull, col("x"))
+                  .otherwise(expr("(level + x) div 2")).as("level"),
+                (coalesce(col("n_days"), lit(0L)) +
+                  when(col("x").isNull, 0L).otherwise(1L)).as("n_days"))
+          // stage before overwriting the directory being read
+          graft.util.Checkpoints.cut(merged)
+            .write.mode("overwrite").parquet(stateDir)
+        }
+    }
     s.read.parquet(stateDir)
       .select(col("user_id"), col("n_days"), col("level").as("ewma_cents"))
       .orderBy(col("user_id"))
@@ -7819,9 +7695,7 @@ object SparkEntry {
     * the day's single peak row to the results table — per-day independence
     * is what makes the streaming union equal the one-shot sweep. */
   private def streamMaxConcurrency(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.expressions.Window
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val outDir = sys.props("java.io.tmpdir") + "/graft-conc-stream-" +
       math.abs(dir.hashCode)
@@ -7829,32 +7703,29 @@ object SparkEntry {
     val rows = Tables.events(s, dir)
       .select(col("user_id"), to_date(col("ts")).cast("string").as("d"),
         unix_micros(col("ts")).as("ts_us"))
-      .as[(Long, String, Long)].collect()
+      .as[(Long, String, Long)].collect().toSeq
     val days = rows.map(_._2).distinct.sorted
-    val ms = MemoryStream[(Long, String, Long)]
-    val q = ms.toDF().toDF("user_id", "d", "ts_us").writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val iv = batch.groupBy(col("user_id"), col("d"))
-          .agg(min(col("ts_us")).as("s_us"), max(col("ts_us")).as("e_us"))
-        val pts = iv.select(col("d"), col("s_us").as("t"), lit(1L).as("delta"))
-          .unionAll(iv.select(col("d"), (col("e_us") + 1).as("t"),
-            lit(-1L).as("delta")))
-          .groupBy(col("d"), col("t")).agg(sum(col("delta")).as("net"))
-        val w = Window.partitionBy(col("d")).orderBy(col("t"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val curve = pts.withColumn("conc", sum(col("net")).over(w))
-        val peak = curve.groupBy(col("d"))
-          .agg(max(col("conc")).as("max_concurrent"))
-        peak.join(curve.select(col("d").as("c_d"), col("conc"), col("t")),
-            col("d") === col("c_d") && col("max_concurrent") === col("conc"))
-          .groupBy(col("d"), col("max_concurrent"))
-          .agg(min(col("t")).as("peak_at_us"))
-          .write.mode("append").parquet(outDir)
-      }.start()
-    try days.foreach { day =>
-      ms.addData(rows.filter(_._2 == day).toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
+    feedStream(s, days.map(day => rows.filter(_._2 == day))) { ms =>
+      ms.toDF("user_id", "d", "ts_us").writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val iv = batch.groupBy(col("user_id"), col("d"))
+            .agg(min(col("ts_us")).as("s_us"), max(col("ts_us")).as("e_us"))
+          val pts = iv.select(col("d"), col("s_us").as("t"), lit(1L).as("delta"))
+            .unionAll(iv.select(col("d"), (col("e_us") + 1).as("t"),
+              lit(-1L).as("delta")))
+            .groupBy(col("d"), col("t")).agg(sum(col("delta")).as("net"))
+          val w = Window.partitionBy(col("d")).orderBy(col("t"))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+          val curve = pts.withColumn("conc", sum(col("net")).over(w))
+          val peak = curve.groupBy(col("d"))
+            .agg(max(col("conc")).as("max_concurrent"))
+          peak.join(curve.select(col("d").as("c_d"), col("conc"), col("t")),
+              col("d") === col("c_d") && col("max_concurrent") === col("conc"))
+            .groupBy(col("d"), col("max_concurrent"))
+            .agg(min(col("t")).as("peak_at_us"))
+            .write.mode("append").parquet(outDir)
+        }
+    }
     s.read.parquet(outDir)
       .select(col("d"), col("max_concurrent"), col("peak_at_us"))
       .orderBy(col("d"))
@@ -7866,8 +7737,6 @@ object SparkEntry {
     * never rejoin), so the state table IS the answer and stays
     * frontier-sized at any stream length. */
   private def streamSkyline(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val stateDir = sys.props("java.io.tmpdir") + "/graft-skyline-stream-" +
       math.abs(dir.hashCode)
@@ -7876,23 +7745,21 @@ object SparkEntry {
       .select(col("p_partkey"),
         (money(col("p_retailprice")) * 100).cast("long").as("price_cents"),
         col("p_size"))
-      .as[(Long, Long, Int)].collect()
-    val ms = MemoryStream[(Long, Long, Int)]
-    val q = ms.toDF().toDF("p_partkey", "price_cents", "p_size").writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val first = !java.nio.file.Files.exists(
-          java.nio.file.Paths.get(stateDir))
-        val candidates =
-          if (first) batch
-          else s.read.parquet(stateDir).unionByName(batch)
-        graft.util.Checkpoints.cut( // stage before overwriting the source
-          graft.operators.Skyline.frontier2d(
-            candidates, "price_cents", "p_size"))
-          .write.mode("overwrite").parquet(stateDir)
-      }.start()
-    try rows.grouped(math.max(1, rows.length / 4))
-      .foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    finally q.stop()
+      .as[(Long, Long, Int)].collect().toSeq
+    feedStream(s, chunks(rows, 4)) { ms =>
+      ms.toDF("p_partkey", "price_cents", "p_size").writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val first = !java.nio.file.Files.exists(
+            java.nio.file.Paths.get(stateDir))
+          val candidates =
+            if (first) batch
+            else s.read.parquet(stateDir).unionByName(batch)
+          graft.util.Checkpoints.cut( // stage before overwriting the source
+            graft.operators.Skyline.frontier2d(
+              candidates, "price_cents", "p_size"))
+            .write.mode("overwrite").parquet(stateDir)
+        }
+    }
     s.read.parquet(stateDir)
       .select(col("p_partkey"), col("price_cents"), col("p_size"))
       .orderBy(col("price_cents"), col("p_partkey"))
@@ -7905,8 +7772,6 @@ object SparkEntry {
     * table, and writes the new state. Gap weeks would need a tick per
     * empty week; the corpus has none (30 contiguous days). */
   private def streamGrowthAccounting(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val base = sys.props("java.io.tmpdir") + "/graft-growth-stream-" +
       math.abs(dir.hashCode)
@@ -7917,58 +7782,55 @@ object SparkEntry {
       .select(col("user_id"),
         date_trunc("week", col("ts")).cast("date").cast("string").as("w"))
       .distinct()
-      .as[(Long, String)].collect()
+      .as[(Long, String)].collect().toSeq
     val weeks = uw.map(_._2).distinct.sorted
-    val ms = MemoryStream[(Long, String)]
-    val q = ms.toDF().toDF("user_id", "w").writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cur = batch.select(col("user_id"), col("w"))
-        val first = !java.nio.file.Files.exists(
-          java.nio.file.Paths.get(stateDir))
-        val stats =
-          if (first) cur.groupBy(col("w")).agg(
-            count(lit(1)).as("new_users"), lit(0L).as("retained"),
-            lit(0L).as("resurrected"), lit(0L).as("churned"))
-          else {
-            val st = s.read.parquet(stateDir) // (user_id, was_prev, seen)
-            val j = st.join(cur.withColumn("act", lit(1L)),
-              Seq("user_id"), "full_outer")
-            j.agg(
-              max(col("w")).as("w"),
-              sum(when(col("act").isNotNull && col("seen").isNull, 1L)
-                .otherwise(0L)).as("new_users"),
-              sum(when(col("act").isNotNull &&
-                coalesce(col("was_prev"), lit(0L)) === 1L, 1L)
-                .otherwise(0L)).as("retained"),
-              sum(when(col("act").isNotNull && col("seen").isNotNull &&
-                coalesce(col("was_prev"), lit(0L)) === 0L, 1L)
-                .otherwise(0L)).as("resurrected"),
-              sum(when(col("act").isNull &&
-                coalesce(col("was_prev"), lit(0L)) === 1L, 1L)
-                .otherwise(0L)).as("churned"))
-              .select(col("w"), col("new_users"), col("retained"),
-                col("resurrected"), col("churned"))
-          }
-        stats.write.mode("append").parquet(outDir)
-        // next state: current actives flagged prev, everyone-seen kept
-        val prevState =
-          if (first) s.emptyDataFrame.select(lit(0L).as("user_id"),
-            lit(0L).as("was_prev"), lit(1L).as("seen")).limit(0)
-          else s.read.parquet(stateDir)
-        val nextState = prevState.select(col("user_id"), lit(1L).as("seen"))
-          .unionByName(cur.select(col("user_id"), lit(1L).as("seen")))
-          .groupBy(col("user_id")).agg(max(col("seen")).as("seen"))
-          .join(cur.select(col("user_id"), lit(1L).as("was_prev")),
-            Seq("user_id"), "left_outer")
-          .select(col("user_id"), coalesce(col("was_prev"), lit(0L))
-            .as("was_prev"), col("seen"))
-        graft.util.Checkpoints.cut(nextState)
-          .write.mode("overwrite").parquet(stateDir)
-      }.start()
-    try weeks.foreach { wk =>
-      ms.addData(uw.filter(_._2 == wk).toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
+    feedStream(s, weeks.map(wk => uw.filter(_._2 == wk))) { ms =>
+      ms.toDF("user_id", "w").writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val cur = batch.select(col("user_id"), col("w"))
+          val first = !java.nio.file.Files.exists(
+            java.nio.file.Paths.get(stateDir))
+          val stats =
+            if (first) cur.groupBy(col("w")).agg(
+              count(lit(1)).as("new_users"), lit(0L).as("retained"),
+              lit(0L).as("resurrected"), lit(0L).as("churned"))
+            else {
+              val st = s.read.parquet(stateDir) // (user_id, was_prev, seen)
+              val j = st.join(cur.withColumn("act", lit(1L)),
+                Seq("user_id"), "full_outer")
+              j.agg(
+                max(col("w")).as("w"),
+                sum(when(col("act").isNotNull && col("seen").isNull, 1L)
+                  .otherwise(0L)).as("new_users"),
+                sum(when(col("act").isNotNull &&
+                  coalesce(col("was_prev"), lit(0L)) === 1L, 1L)
+                  .otherwise(0L)).as("retained"),
+                sum(when(col("act").isNotNull && col("seen").isNotNull &&
+                  coalesce(col("was_prev"), lit(0L)) === 0L, 1L)
+                  .otherwise(0L)).as("resurrected"),
+                sum(when(col("act").isNull &&
+                  coalesce(col("was_prev"), lit(0L)) === 1L, 1L)
+                  .otherwise(0L)).as("churned"))
+                .select(col("w"), col("new_users"), col("retained"),
+                  col("resurrected"), col("churned"))
+            }
+          stats.write.mode("append").parquet(outDir)
+          // next state: current actives flagged prev, everyone-seen kept
+          val prevState =
+            if (first) s.emptyDataFrame.select(lit(0L).as("user_id"),
+              lit(0L).as("was_prev"), lit(1L).as("seen")).limit(0)
+            else s.read.parquet(stateDir)
+          val nextState = prevState.select(col("user_id"), lit(1L).as("seen"))
+            .unionByName(cur.select(col("user_id"), lit(1L).as("seen")))
+            .groupBy(col("user_id")).agg(max(col("seen")).as("seen"))
+            .join(cur.select(col("user_id"), lit(1L).as("was_prev")),
+              Seq("user_id"), "left_outer")
+            .select(col("user_id"), coalesce(col("was_prev"), lit(0L))
+              .as("was_prev"), col("seen"))
+          graft.util.Checkpoints.cut(nextState)
+            .write.mode("overwrite").parquet(stateDir)
+        }
+    }
     s.read.parquet(outDir)
       .select(col("w").as("week"), col("new_users"), col("retained"),
         col("resurrected"), col("churned"))
@@ -7981,26 +7843,21 @@ object SparkEntry {
     * itself (serialize/merge exercised across batches), finalized once at
     * the end. */
   private def streamTopkUsers(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.graft.ColumnBridge
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val pu = Tables.events(s, dir)
       .groupBy(col("event_type"), col("user_id"))
       .agg((sum(money(col("value"))) * 100).cast("long").as("cents"))
-      .as[(String, Long, Long)].collect()
-    val ms = MemoryStream[(String, Long, Long)]
+      .as[(String, Long, Long)].collect().toSeq
     val agg = ColumnBridge.column(graft.functions.TopKByScore(
       ColumnBridge.expression(col("cents").cast("double")),
       ColumnBridge.expression(col("user_id")), 3).toAggregateExpression())
-    val q = ms.toDF().toDF("event_type", "user_id", "cents")
-      .groupBy(col("event_type")).agg(agg.as("__top"))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("stream_topk_users_t")
-      .option("checkpointLocation", tempCkpt()).start()
-    try pu.grouped(math.max(1, pu.length / 4))
-      .foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    finally q.stop()
+    feedStream(s, chunks(pu, 4)) { ms =>
+      ms.toDF("event_type", "user_id", "cents")
+        .groupBy(col("event_type")).agg(agg.as("__top"))
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("stream_topk_users_t")
+    }
     s.table("stream_topk_users_t")
       .select(col("event_type"),
         posexplode(col("__top")).as(Seq("__pos", "__e")))
@@ -8017,8 +7874,6 @@ object SparkEntry {
     * own counts and merges them into the persisted state, and the rules
     * project once from the final counters. */
   private def streamBasketRules(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val base = sys.props("java.io.tmpdir") + "/graft-basket-stream-" +
       math.abs(dir.hashCode)
@@ -8026,38 +7881,35 @@ object SparkEntry {
     val bi = Tables.lineitem(s, dir)
       .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("b"), col("p_brand").as("i")).distinct()
-      .as[(Long, String)].collect()
-    val chunkOf = (b: Long) => (b % 4).toInt
-    val ms = MemoryStream[(Long, String)]
-    val q = ms.toDF().toDF("b", "i").writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pairs = batch.select(col("b"), col("i").as("item_a"))
-          .join(batch.select(col("b"), col("i").as("item_b")), Seq("b"))
-          .filter(col("item_a") < col("item_b"))
-          .groupBy(col("item_a"), col("item_b"))
-          .agg(count(lit(1)).as("n_ab"))
-        val items = batch.groupBy(col("i")).agg(count(lit(1)).as("ni"))
-        val nb = batch.select(countDistinct(col("b")).as("nb"))
-        def merge(dirName: String, delta: DataFrame, keys: Seq[String],
-            cnt: String): Unit = {
-          val path = s"$base/$dirName"
-          val merged =
-            if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-              delta
-            else s.read.parquet(path).unionByName(delta)
-              .groupBy(keys.map(col): _*)
-              .agg(sum(col(cnt)).as(cnt))
-          graft.util.Checkpoints.cut(merged)
-            .write.mode("overwrite").parquet(path)
+      .as[(Long, String)].collect().toSeq
+    val byOrder = (0 until 4).map(c => bi.filter(t => (t._1 % 4).toInt == c))
+    feedStream(s, byOrder) { ms =>
+      ms.toDF("b", "i").writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val pairs = batch.select(col("b"), col("i").as("item_a"))
+            .join(batch.select(col("b"), col("i").as("item_b")), Seq("b"))
+            .filter(col("item_a") < col("item_b"))
+            .groupBy(col("item_a"), col("item_b"))
+            .agg(count(lit(1)).as("n_ab"))
+          val items = batch.groupBy(col("i")).agg(count(lit(1)).as("ni"))
+          val nb = batch.select(countDistinct(col("b")).as("nb"))
+          def merge(dirName: String, delta: DataFrame, keys: Seq[String],
+              cnt: String): Unit = {
+            val path = s"$base/$dirName"
+            val merged =
+              if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+                delta
+              else s.read.parquet(path).unionByName(delta)
+                .groupBy(keys.map(col): _*)
+                .agg(sum(col(cnt)).as(cnt))
+            graft.util.Checkpoints.cut(merged)
+              .write.mode("overwrite").parquet(path)
+          }
+          merge("pairs", pairs, Seq("item_a", "item_b"), "n_ab")
+          merge("items", items, Seq("i"), "ni")
+          merge("baskets", nb.select(lit(0L).as("k"), col("nb")), Seq("k"), "nb")
         }
-        merge("pairs", pairs, Seq("item_a", "item_b"), "n_ab")
-        merge("items", items, Seq("i"), "ni")
-        merge("baskets", nb.select(lit(0L).as("k"), col("nb")), Seq("k"), "nb")
-      }.start()
-    try (0 until 4).foreach { c =>
-      ms.addData(bi.filter(t => chunkOf(t._1) == c).toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
+    }
     val pairs = s.read.parquet(s"$base/pairs").filter(col("n_ab") >= 5L)
     val items = s.read.parquet(s"$base/items")
     val nb = s.read.parquet(s"$base/baskets")
@@ -8086,8 +7938,6 @@ object SparkEntry {
     * length. Absent types carry state; the earliest-peak tie rule is the
     * batch fold's strict `>`. */
   private def streamCusum(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val stateDir = sys.props("java.io.tmpdir") + "/graft-cusum-stream-" +
       math.abs(dir.hashCode)
@@ -8100,46 +7950,43 @@ object SparkEntry {
       .agg(expr("sum(cents) div count(1)").as("mean_cents"))
     val daily = dailyDf
       .select(col("event_type"), col("d").cast("string").as("d"), col("cents"))
-      .as[(String, String, Long)].collect() // bounded: types x days
+      .as[(String, String, Long)].collect().toSeq // bounded: types x days
     val days = daily.map(_._2).distinct.sorted
-    val ms = MemoryStream[(String, String, Long)]
-    val q = ms.toDF().toDF("event_type", "d", "cents").writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.join(broadcast(mean), Seq("event_type"))
-          .select(col("event_type"), col("d").as("bd"),
-            col("cents").as("x"), col("mean_cents").as("mu"))
-        val first = !java.nio.file.Files.exists(
-          java.nio.file.Paths.get(stateDir))
-        val stepped =
-          if (first) b.select(col("event_type"),
-            expr("greatest(0L, x - mu)").as("s"),
-            expr("greatest(0L, x - mu)").as("best"),
-            when(expr("greatest(0L, x - mu)") > 0L, col("bd")).as("bestd"),
-            lit(1L).as("n_days"))
-          else s.read.parquet(stateDir)
-            .join(b, Seq("event_type"), "full_outer")
-            .select(col("event_type"),
-              when(col("x").isNull, col("s"))
-                .otherwise(expr("greatest(0L, coalesce(s, 0L) + x - mu)"))
-                .as("s"),
-              when(col("x").isNull, col("best")).otherwise(
-                greatest(coalesce(col("best"), lit(0L)),
-                  expr("greatest(0L, coalesce(s, 0L) + x - mu)")))
-                .as("best"),
-              when(col("x").isNull, col("bestd")).otherwise(
-                when(expr("greatest(0L, coalesce(s, 0L) + x - mu)") >
-                    coalesce(col("best"), lit(0L)), col("bd"))
-                  .otherwise(col("bestd"))).as("bestd"),
-              (coalesce(col("n_days"), lit(0L)) +
-                when(col("x").isNull, 0L).otherwise(1L)).as("n_days"))
-        // stage before overwriting the directory being read
-        graft.util.Checkpoints.cut(stepped)
-          .write.mode("overwrite").parquet(stateDir)
-      }.start()
-    try days.foreach { day =>
-      ms.addData(daily.filter(_._2 == day).toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
+    feedStream(s, days.map(day => daily.filter(_._2 == day))) { ms =>
+      ms.toDF("event_type", "d", "cents").writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val b = batch.join(broadcast(mean), Seq("event_type"))
+            .select(col("event_type"), col("d").as("bd"),
+              col("cents").as("x"), col("mean_cents").as("mu"))
+          val first = !java.nio.file.Files.exists(
+            java.nio.file.Paths.get(stateDir))
+          val stepped =
+            if (first) b.select(col("event_type"),
+              expr("greatest(0L, x - mu)").as("s"),
+              expr("greatest(0L, x - mu)").as("best"),
+              when(expr("greatest(0L, x - mu)") > 0L, col("bd")).as("bestd"),
+              lit(1L).as("n_days"))
+            else s.read.parquet(stateDir)
+              .join(b, Seq("event_type"), "full_outer")
+              .select(col("event_type"),
+                when(col("x").isNull, col("s"))
+                  .otherwise(expr("greatest(0L, coalesce(s, 0L) + x - mu)"))
+                  .as("s"),
+                when(col("x").isNull, col("best")).otherwise(
+                  greatest(coalesce(col("best"), lit(0L)),
+                    expr("greatest(0L, coalesce(s, 0L) + x - mu)")))
+                  .as("best"),
+                when(col("x").isNull, col("bestd")).otherwise(
+                  when(expr("greatest(0L, coalesce(s, 0L) + x - mu)") >
+                      coalesce(col("best"), lit(0L)), col("bd"))
+                    .otherwise(col("bestd"))).as("bestd"),
+                (coalesce(col("n_days"), lit(0L)) +
+                  when(col("x").isNull, 0L).otherwise(1L)).as("n_days"))
+          // stage before overwriting the directory being read
+          graft.util.Checkpoints.cut(stepped)
+            .write.mode("overwrite").parquet(stateDir)
+        }
+    }
     s.read.parquet(stateDir).join(broadcast(mean), Seq("event_type"))
       .select(col("event_type"), col("n_days"), col("mean_cents"),
         col("best").as("max_cusum"), col("s").as("final_cusum"),
@@ -8147,27 +7994,20 @@ object SparkEntry {
       .orderBy(col("event_type"))
   }
 
+  /** The streaming-quality run behind `stream_quality_monitor`: four
+    * additive counters over the whole transaction stream in complete
+    * mode; the final counter row unfolds into per-check metric rows. */
   private def streamQualityMonitor(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    val payloads = graft.sources.DataGen
-      .transactions(s, streamN, 42L, streamEpoch, eventsPerSecond = 1.0)
-      .select(to_json(struct(col("*"))).as("value"))
-      .collect().map(_.getString(0))
-    val ms = MemoryStream[String]
-    val counters = Ingest.parseTransactions(ms.toDF()).agg(
-      count(lit(1)).as("n"),
-      count(col("customer_id")).as("comp_cust"),
-      sum(when(col("amount") >= 100, 1L).otherwise(0L)).as("amt_ok"),
-      sum(when(col("status") === "Success", 1L).otherwise(0L)).as("st_ok"))
-    val q = counters.writeStream.outputMode("complete").format("memory")
-      .queryName("stream_quality_monitor_t")
-      .option("checkpointLocation", tempCkpt()).start()
-    try {
-      payloads.grouped(math.max(1, payloads.length / 4))
-        .foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+    feedStream(s, chunks(txPayloads(s), 4)) { ms =>
+      Ingest.parseTransactions(ms.toDF()).agg(
+          count(lit(1)).as("n"),
+          count(col("customer_id")).as("comp_cust"),
+          sum(when(col("amount") >= 100, 1L).otherwise(0L)).as("amt_ok"),
+          sum(when(col("status") === "Success", 1L).otherwise(0L)).as("st_ok"))
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("stream_quality_monitor_t")
+    }
     s.table("stream_quality_monitor_t")
       .select(explode(array(
         struct(lit("completeness:customer_id").as("check"),
@@ -8192,8 +8032,6 @@ object SparkEntry {
     * with earlier ones. The final pair set must equal the one-shot
     * incremental run over the whole new tenth. */
   private def streamDedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val docs = Tables.documents(s, dir)
     val indexDir = tempCkpt()
@@ -8202,27 +8040,21 @@ object SparkEntry {
       .write.mode("overwrite").parquet(indexDir)
     val newIds = docs.filter(col("doc_id") % 10 === 0)
       .select(col("doc_id")).orderBy(col("doc_id"))
-      .collect().map(_.getLong(0)) // bounded: a tenth of the corpus' IDS
-    val ms = MemoryStream[Long]
-    val q = ms.toDS().toDF("sid").writeStream
-      .option("checkpointLocation", tempCkpt())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val newDocs = batch.join(docs, batch("sid") === docs("doc_id"))
-          .select(col("doc_id"), col("text"))
-        graft.operators.Dedup.minhashCandidatesIncremental(
-            newDocs, s.read.parquet(indexDir))
-          .write.mode("append").parquet(pairsDir)
-        // grow the index AFTER the screen: append never disturbs the
-        // files the screen just read
-        graft.operators.Dedup.minhashBands(newDocs)
-          .write.mode("append").parquet(indexDir)
-      }
-      .start()
-    try {
-      newIds.grouped(math.max(1, newIds.length / 3)).foreach { ids =>
-        ms.addData(ids.toIndexedSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
+      .collect().map(_.getLong(0)).toSeq // bounded: a tenth of the corpus' IDS
+    feedStream(s, chunks(newIds, 3)) { ms =>
+      ms.toDF("sid").writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val newDocs = batch.join(docs, batch("sid") === docs("doc_id"))
+            .select(col("doc_id"), col("text"))
+          graft.operators.Dedup.minhashCandidatesIncremental(
+              newDocs, s.read.parquet(indexDir))
+            .write.mode("append").parquet(pairsDir)
+          // grow the index AFTER the screen: append never disturbs the
+          // files the screen just read
+          graft.operators.Dedup.minhashBands(newDocs)
+            .write.mode("append").parquet(indexDir)
+        }
+    }
     s.read.parquet(pairsDir).distinct()
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -8235,26 +8067,18 @@ object SparkEntry {
     * to a parquet sink. The union of batches must equal the one-shot
     * batch search over the same ten queries. */
   private def streamKnn(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
-    val ms = MemoryStream[Long]
     val outDir = tempCkpt()
-    val q = ms.toDS().toDF("id").writeStream
-      .option("checkpointLocation", tempCkpt())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val qs = batch.join(emb, batch("id") === emb("vec_id"))
-          .select(col("vec_id").as("q_id"), col("embedding"))
-        graft.operators.Similarity.bruteForceTopK(emb, qs, k = 5)
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
-    try {
-      Seq(0L until 4L, 4L until 7L, 7L until 10L).foreach { ids =>
-        ms.addData(ids.toIndexedSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
+    feedStream(s, Seq(0L until 4L, 4L until 7L, 7L until 10L)) { ms =>
+      ms.toDF("id").writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val qs = batch.join(emb, batch("id") === emb("vec_id"))
+            .select(col("vec_id").as("q_id"), col("embedding"))
+          graft.operators.Similarity.bruteForceTopK(emb, qs, k = 5)
+            .write.mode("append").parquet(outDir)
+        }
+    }
     s.read.parquet(outDir)
   }
 
@@ -8266,84 +8090,49 @@ object SparkEntry {
     * the final table is exactly one row per distinct transaction no
     * matter how many times a chunk is delivered. */
   private def streamUpsertTable(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    val payloads = graft.sources.DataGen
-      .transactions(s, streamN, 42L, streamEpoch, eventsPerSecond = 1.0)
-      .select(to_json(struct(col("*"))).as("value"))
-      .collect().map(_.getString(0))
-    val ms = MemoryStream[String]
     val outDir = tempCkpt() // reaped like every graded stream artifact
-    val q = Ingest.parseTransactions(ms.toDF())
-      .writeStream
-      .option("checkpointLocation", tempCkpt())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = batch
-          .withColumn("t_date", to_date(col("timestamp")))
-        if (!new java.io.File(outDir).exists()) {
-          rows.repartition(col("t_date"))
-            .write.mode("overwrite").partitionBy("t_date").parquet(outDir)
-        } else {
-          graft.operators.Merge.upsertPartitioned(
-            s, outDir, rows, Seq("transaction_id"), "t_date")
+    val feed = chunks(txPayloads(s), 4)
+    // the last chunk again is a replayed delivery: the upsert must absorb
+    // it without duplicates
+    feedStream(s, feed :+ feed.last) { ms =>
+      Ingest.parseTransactions(ms.toDF()).writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val rows = batch
+            .withColumn("t_date", to_date(col("timestamp")))
+          if (!new java.io.File(outDir).exists()) {
+            rows.repartition(col("t_date"))
+              .write.mode("overwrite").partitionBy("t_date").parquet(outDir)
+          } else {
+            graft.operators.Merge.upsertPartitioned(
+              s, outDir, rows, Seq("transaction_id"), "t_date")
+          }
         }
-      }
-      .start()
-    try {
-      val chunks = payloads.grouped(math.max(1, payloads.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-      // replayed delivery: the upsert must absorb it without duplicates
-      ms.addData(chunks.last.toIndexedSeq); q.processAllAvailable()
-    } finally q.stop()
+    }
     s.read.parquet(outDir)
       .groupBy(col("customer_id"),
         col("t_date").cast("string").as("transaction_date"))
       .agg(dsum(col("amount")).as("total_spent"))
   }
 
-  /** The streaming document-curation run behind `stream_doc_clean`:
-    * [[graft.streaming.DocumentPipeline.clean]] driven over the documents
-    * table as a MemoryStream (ingest_ts = a fixed epoch + doc_id seconds,
-    * so event time is integer-exact), four micro-batches plus the last
-    * chunk re-fed whole.
-    *
-    * The feed is batch-compacted first (min doc_id per fingerprint — the
-    * standard arrangement: [[graft.operators.Dedup.exact]] compacts the
-    * backlog, the stream dedups re-sends), so the only fingerprint
-    * collisions the stream ever sees are the re-fed byte-identical rows —
-    * the surviving-copy choice cannot affect the output at ANY scale
-    * factor. Without the compaction, an organic duplicate pair (present at
-    * sf0.1) would make the kept doc_id depend on partition order inside a
-    * micro-batch. The re-fed chunk is the newest data, so its fingerprints
-    * are still inside the watermark's dedup state regardless of the feed's
-    * total event-time span. No sentinel: dedup is not an aggregation, rows
-    * finalize on arrival in append mode. */
   /** Streaming register maintenance behind `stream_hll_registers`: the
     * documents fed in four micro-batches (one re-fed — max is idempotent),
     * shingled in-stream, registers kept in complete mode. The memory sink
     * REPLACES its table each complete-mode batch, so the final table is
     * exactly the register state — compared against the batch SQL build. */
   private def streamHllRegisters(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val rows = Tables.documents(s, dir)
       .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
-      .as[(Long, String)].collect()
-    val ms = MemoryStream[(Long, String)]
-    val sh = ms.toDF()
-      .select(explode(graft.operators.Dedup.wordShingles(col("_2"), 5)).as("sh"))
-    val reg = graft.operators.Sketch.hllBuild(sh, "sh", p = 10)
-    val ckpt = tempCkpt()
-    val q = reg.writeStream.outputMode("complete").format("memory")
-      .queryName("stream_hll_registers_t")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      val chunks = rows.grouped(math.max(1, rows.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-      ms.addData(chunks.head.toIndexedSeq); q.processAllAvailable()
-    } finally q.stop()
+      .as[(Long, String)].collect().toSeq
+    val feed = chunks(rows, 4)
+    feedStream(s, feed :+ feed.head) { ms =>
+      val sh = ms.toDF()
+        .select(explode(graft.operators.Dedup.wordShingles(col("_2"), 5)).as("sh"))
+      graft.operators.Sketch.hllBuild(sh, "sh", p = 10)
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("stream_hll_registers_t")
+    }
     s.table("stream_hll_registers_t")
   }
 
@@ -8354,27 +8143,20 @@ object SparkEntry {
     * register table against the BATCH exact counts, so the output relation
     * is the same one `ext_hll_groups` computes. */
   private def streamHllGroups(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val Sk = graft.operators.Sketch
     val rows = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("text")).orderBy(col("doc_id"))
-      .as[(Long, String, String)].collect()
-    val ms = MemoryStream[(Long, String, String)]
-    val sh = ms.toDF()
-      .select(col("_2").as("lang"),
-        explode(graft.operators.Dedup.wordShingles(col("_3"), 5)).as("sh"))
-    val reg = Sk.hllBuildGrouped(sh, "sh", Seq("lang"), p = 10)
-    val ckpt = tempCkpt()
-    val q = reg.writeStream.outputMode("complete").format("memory")
-      .queryName("stream_hll_groups_t")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      val chunks = rows.grouped(math.max(1, rows.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-      ms.addData(chunks.head.toIndexedSeq); q.processAllAvailable()
-    } finally q.stop()
+      .as[(Long, String, String)].collect().toSeq
+    val feed = chunks(rows, 4)
+    feedStream(s, feed :+ feed.head) { ms =>
+      val sh = ms.toDF()
+        .select(col("_2").as("lang"),
+          explode(graft.operators.Dedup.wordShingles(col("_3"), 5)).as("sh"))
+      Sk.hllBuildGrouped(sh, "sh", Seq("lang"), p = 10)
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("stream_hll_groups_t")
+    }
     // lineage cut: the estimate's summary CTEs self-join the register
     // relation — against the raw memory-sink table that resolves to
     // conflicting references (same unresolved relation on both sides)
@@ -8396,25 +8178,18 @@ object SparkEntry {
     * table must equal the change half of the batch SCD2 (x23's runs —
     * same lag-based oracle minus the interval close). */
   private def streamScd2(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val rows = Tables.events(s, dir)
       .select(col("user_id").cast("string").as("key"),
         unix_micros(col("ts")).as("ts"), col("event_type").as("attr"),
         col("event_id").as("id"))
       .orderBy(col("ts"), col("id"))
-      .as[graft.streaming.Scd2Stream.Ev].collect()
-    val ms = MemoryStream[graft.streaming.Scd2Stream.Ev]
-    val ckpt = tempCkpt()
-    val q = graft.streaming.Scd2Stream.changes(ms.toDS()).toDF()
-      .writeStream.outputMode("append").format("memory")
-      .queryName("stream_scd2_changes_t")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      val chunks = rows.grouped(math.max(1, rows.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+      .as[graft.streaming.Scd2Stream.Ev].collect().toSeq
+    feedStream(s, chunks(rows, 4)) { ms =>
+      graft.streaming.Scd2Stream.changes(ms).toDF()
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_scd2_changes_t")
+    }
     s.table("stream_scd2_changes_t")
       .select(col("key").cast("long").as("user_id"), col("attr").as("event_type"),
         col("valid_from"), col("version"))
@@ -8429,24 +8204,16 @@ object SparkEntry {
     * collocation monitoring at bounded memory. Graded by the same oracle
     * as the batch `ext_pmi_bigrams`. */
   private def streamPmiBigrams(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val rows = Tables.documents(s, dir)
       .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
-      .as[(Long, String)].collect()
-    val ms = MemoryStream[(Long, String)]
-    val counts = graft.operators.TextAnalysis.bigramPairs(
-        ms.toDF().toDF("doc_id", "text"))
-      .groupBy(col("l"), col("r")).agg(count(lit(1)).as("c_ab"))
-    val ckpt = tempCkpt()
-    val q = counts.writeStream.outputMode("complete").format("memory")
-      .queryName("stream_pmi_counts")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      val chunks = rows.grouped(math.max(1, rows.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+      .as[(Long, String)].collect().toSeq
+    feedStream(s, chunks(rows, 4)) { ms =>
+      graft.operators.TextAnalysis.bigramPairs(ms.toDF("doc_id", "text"))
+        .groupBy(col("l"), col("r")).agg(count(lit(1)).as("c_ab"))
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("stream_pmi_counts")
+    }
     graft.operators.TextAnalysis.pmiFromCounts(
       s.table("stream_pmi_counts"), minCount = 5, k = 50)
   }
@@ -8461,8 +8228,6 @@ object SparkEntry {
     * alert math replays exactly ([[graft.operators.Quality.psiDriftCounts]]).
     * Graded by the same oracle as the batch `ext_drift_psi`. */
   private def streamDriftPsi(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val docs = Tables.documents(s, dir)
     val ref = docs.filter(col("doc_id") % 2 === 0)
@@ -8470,28 +8235,18 @@ object SparkEntry {
       .groupBy(col("bucket")).agg(count(lit(1)).as("__ra"))
     val rows = docs.filter(col("doc_id") % 2 === 1)
       .select(col("doc_id"), col("n_chars")).orderBy(col("doc_id"))
-      .as[(Long, Long)].collect()
-    val ms = MemoryStream[(Long, Long)]
-    val cells = ms.toDF().toDF("doc_id", "n_chars")
-      .select(floor(col("n_chars") / lit(64)).cast("long").as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("__rb"))
-    val ckpt = tempCkpt()
-    val q = cells.writeStream.outputMode("complete").format("memory")
-      .queryName("stream_drift_psi_cells")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      val chunks = rows.grouped(math.max(1, rows.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+      .as[(Long, Long)].collect().toSeq
+    feedStream(s, chunks(rows, 4)) { ms =>
+      ms.toDF("doc_id", "n_chars")
+        .select(floor(col("n_chars") / lit(64)).cast("long").as("bucket"))
+        .groupBy(col("bucket")).agg(count(lit(1)).as("__rb"))
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("stream_drift_psi_cells")
+    }
     graft.operators.Quality.psiDriftCounts(ref, s.table("stream_drift_psi_cells"))
       .orderBy(col("bucket"))
   }
 
-  /** The run behind `stream_volume_anomaly`: events fed in 4 micro-batches,
-    * the stream maintaining ONLY the (event_type, day) counts (complete-mode
-    * additive aggregation — bounded state of keys x days counter rows); the
-    * rolling-band report is a stateless window projection over the final
-    * counts, so the alarm relation equals the batch row's exactly. */
   /** The live percentile monitor behind `stream_histogram_p99`: the stream
     * maintains ONLY the (key, bucket) counter table (complete mode — at
     * most keys x 256 additive counter rows of state, duplicates are new
@@ -8499,27 +8254,21 @@ object SparkEntry {
     * projection over the final counters — the same relation the batch
     * histogram computes, so the DuckDB rebuild oracle is shared. */
   private def streamHistogramQuantile(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val rows = Tables.events(s, dir)
       .select(col("event_id"), col("event_type"), col("value"))
       .filter(col("value").isNotNull)
       .orderBy(col("event_id"))
-      .as[(Long, String, Double)].collect()
-    val ms = MemoryStream[(Long, String, Double)]
-    // the SAME histogramCounts the batch row runs — one bucket function,
-    // one oracle; plain filter+groupBy+agg streams unchanged
-    val counts = graft.operators.Quality.histogramCounts(
-      ms.toDF().toDF("event_id", "event_type", "value"),
-      "event_type", "value", step = 4.0)
-    val q = counts.writeStream.outputMode("complete").format("memory")
-      .queryName("stream_histogram_p99_t")
-      .option("checkpointLocation", tempCkpt()).start()
-    try {
-      val chunks = rows.grouped(math.max(1, rows.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+      .as[(Long, String, Double)].collect().toSeq
+    feedStream(s, chunks(rows, 4)) { ms =>
+      // the SAME histogramCounts the batch row runs — one bucket function,
+      // one oracle; plain filter+groupBy+agg streams unchanged
+      graft.operators.Quality.histogramCounts(
+          ms.toDF("event_id", "event_type", "value"),
+          "event_type", "value", step = 4.0)
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("stream_histogram_p99_t")
+    }
     graft.operators.Quality.histogramQuantileReport(
         s.table("stream_histogram_p99_t"), Seq(0.5, 0.95, 0.99), step = 4.0)
       .select(col("key").as("event_type"), col("q"), col("total_n"),
@@ -8527,27 +8276,25 @@ object SparkEntry {
       .orderBy(col("event_type"), col("q"))
   }
 
+  /** The run behind `stream_volume_anomaly`: events fed in 4 micro-batches,
+    * the stream maintaining ONLY the (event_type, day) counts (complete-mode
+    * additive aggregation — bounded state of keys x days counter rows); the
+    * rolling-band report is a stateless window projection over the final
+    * counts, so the alarm relation equals the batch row's exactly. */
   private def streamVolumeAnomaly(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val rows = Tables.events(s, dir)
       .select(col("event_id"), col("event_type"), unix_micros(col("ts")).as("us"))
       .orderBy(col("event_id"))
-      .as[(Long, String, Long)].collect()
-    val ms = MemoryStream[(Long, String, Long)]
-    val daily = ms.toDF().toDF("event_id", "event_type", "us")
-      .groupBy(col("event_type").as("key"),
-        to_date(timestamp_micros(col("us"))).cast("string").as("d"))
-      .agg(count(lit(1)).as("n"))
-    val ckpt = tempCkpt()
-    val q = daily.writeStream.outputMode("complete").format("memory")
-      .queryName("stream_volume_anomaly_t")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      val chunks = rows.grouped(math.max(1, rows.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+      .as[(Long, String, Long)].collect().toSeq
+    feedStream(s, chunks(rows, 4)) { ms =>
+      ms.toDF("event_id", "event_type", "us")
+        .groupBy(col("event_type").as("key"),
+          to_date(timestamp_micros(col("us"))).cast("string").as("d"))
+        .agg(count(lit(1)).as("n"))
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("stream_volume_anomaly_t")
+    }
     graft.operators.Quality.volumeAnomalyReport(
         s.table("stream_volume_anomaly_t"))
       .select(col("key").as("event_type"), col("d"), col("n"), col("mu"),
@@ -8565,26 +8312,19 @@ object SparkEntry {
     * drop the entire re-fed chunk, so the streamed result equals the
     * batch dedup the DuckDB oracle computes. */
   private def streamBloomDedup(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val rows = Tables.documents(s, dir)
       .select(col("doc_id"),
         md5(graft.operators.Dedup.normalize(col("text")).cast("binary")).as("fp"))
       .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"), col("fp")).orderBy(col("doc_id"))
-      .as[graft.streaming.BloomDedup.Doc].collect()
-    val ms = MemoryStream[graft.streaming.BloomDedup.Doc]
-    val deduped = graft.streaming.BloomDedup.dedup(ms.toDS())
-    val ckpt = tempCkpt()
-    val q = deduped.toDF().writeStream.outputMode("append").format("memory")
-      .queryName("stream_bloom_dedup_t")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      val chunks = rows.grouped(math.max(1, rows.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-      ms.addData(chunks.head.toIndexedSeq); q.processAllAvailable()
-    } finally q.stop()
+      .as[graft.streaming.BloomDedup.Doc].collect().toSeq
+    val feed = chunks(rows, 4)
+    feedStream(s, feed :+ feed.head) { ms =>
+      graft.streaming.BloomDedup.dedup(ms).toDF()
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_bloom_dedup_t")
+    }
     s.table("stream_bloom_dedup_t")
   }
 
@@ -8598,33 +8338,26 @@ object SparkEntry {
     * the final table equals the batch rank selection, graded by the
     * sample half of ext_quantile_sample's oracle. */
   private def streamQuantileSample(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val Sa = graft.operators.Sampling
     val rows = Tables.lineitem(s, dir)
       .select(concat(col("l_orderkey").cast("string"), lit("-"),
         col("l_linenumber").cast("string")).as("id"), col("l_extendedprice").as("v"))
-      .orderBy(col("id")).as[(String, Double)].collect()
-    val ms = MemoryStream[(String, Double)]
+      .orderBy(col("id")).as[(String, Double)].collect().toSeq
     val qs = Seq(0.01, 0.25, 0.5, 0.75, 0.9, 0.99)
     val rank = floor(col("q") * (col("sample_n") - 1L).cast("double"))
-    val res = ms.toDF().toDF("id", "v")
-      .filter(Sa.hashBucket(col("id"), "qsample") < lit(Sa.hexThreshold(1.0 / 16)))
-      .agg(sort_array(collect_list(struct(col("v"), col("id")))).as("__sorted"),
-        count(lit(1)).as("sample_n"))
-      .select(col("__sorted"), col("sample_n"),
-        explode(array(qs.map(lit): _*)).as("q"))
-      .select(col("q"), col("sample_n"), rank.as("rank"),
-        element_at(col("__sorted"), (rank + 1L).cast("int")).getField("v").as("value"))
-    val ckpt = tempCkpt()
-    val q = res.writeStream.outputMode("complete").format("memory")
-      .queryName("stream_quantile_sample_t")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      val chunks = rows.grouped(math.max(1, rows.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+    feedStream(s, chunks(rows, 4)) { ms =>
+      ms.toDF("id", "v")
+        .filter(Sa.hashBucket(col("id"), "qsample") < lit(Sa.hexThreshold(1.0 / 16)))
+        .agg(sort_array(collect_list(struct(col("v"), col("id")))).as("__sorted"),
+          count(lit(1)).as("sample_n"))
+        .select(col("__sorted"), col("sample_n"),
+          explode(array(qs.map(lit): _*)).as("q"))
+        .select(col("q"), col("sample_n"), rank.as("rank"),
+          element_at(col("__sorted"), (rank + 1L).cast("int")).getField("v").as("value"))
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("stream_quantile_sample_t")
+    }
     s.table("stream_quantile_sample_t")
   }
 
@@ -8637,24 +8370,17 @@ object SparkEntry {
     * exactly-once delivery is what makes the streamed sketch equal the
     * batch build (the DuckDB rebuild oracle). */
   private def streamCountMinRegisters(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val rows = Tables.documents(s, dir)
       .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
-      .as[(Long, String)].collect()
-    val ms = MemoryStream[(Long, String)]
-    val toks = ms.toDF()
-      .select(explode(split(graft.operators.Dedup.normalize(col("_2")), " ")).as("tok"))
-    val reg = graft.operators.Sketch.countMinBuild(toks, "tok", depth = 4, width = 1024)
-    val ckpt = tempCkpt()
-    val q = reg.writeStream.outputMode("complete").format("memory")
-      .queryName("stream_countmin_registers_t")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      val chunks = rows.grouped(math.max(1, rows.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+      .as[(Long, String)].collect().toSeq
+    feedStream(s, chunks(rows, 4)) { ms =>
+      val toks = ms.toDF()
+        .select(explode(split(graft.operators.Dedup.normalize(col("_2")), " ")).as("tok"))
+      graft.operators.Sketch.countMinBuild(toks, "tok", depth = 4, width = 1024)
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("stream_countmin_registers_t")
+    }
     s.table("stream_countmin_registers_t")
   }
 
@@ -8666,26 +8392,19 @@ object SparkEntry {
     * relation the batch [[graft.operators.TextAnalysis.vocabTopK]] (and
     * its DuckDB oracle) computes. */
   private def streamVocabTopK(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val rows = Tables.documents(s, dir)
       .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
-      .as[(Long, String)].collect()
-    val ms = MemoryStream[(Long, String)]
-    val topk = ms.toDF()
-      .select(explode(graft.operators.TextAnalysis.tokens(lower(col("_2")))).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("token"))
-      .limit(100)
-    val ckpt = tempCkpt()
-    val q = topk.writeStream.outputMode("complete").format("memory")
-      .queryName("stream_vocab_topk_t")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      val chunks = rows.grouped(math.max(1, rows.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+      .as[(Long, String)].collect().toSeq
+    feedStream(s, chunks(rows, 4)) { ms =>
+      ms.toDF()
+        .select(explode(graft.operators.TextAnalysis.tokens(lower(col("_2")))).as("token"))
+        .groupBy(col("token")).agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("token"))
+        .limit(100)
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("stream_vocab_topk_t")
+    }
     s.table("stream_vocab_topk_t")
   }
 
@@ -8693,26 +8412,19 @@ object SparkEntry {
     * through [[graft.streaming.Transitions.pairs]]; the graded projection
     * re-counts the streamed pair multiset into x56's exact relation. */
   private def streamTransitions(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.expressions.Window
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val rows = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("ts_us"), col("event_id"))
       .orderBy(col("ts_us"), col("event_id"))
-      .as[(Long, String, Long, Long)].collect()
+      .as[(Long, String, Long, Long)].collect().toSeq
       .map { case (u, t, us, id) => graft.streaming.Transitions.Ev(u, t, us, id) }
-    val ms = MemoryStream[graft.streaming.Transitions.Ev]
-    val pairs = graft.streaming.Transitions.pairs(ms.toDS())
-    val ckpt = tempCkpt()
-    val q = pairs.toDF().writeStream.outputMode("append").format("memory")
-      .queryName("stream_transitions_t")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      val chunks = rows.grouped(math.max(1, rows.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+    feedStream(s, chunks(rows, 4)) { ms =>
+      graft.streaming.Transitions.pairs(ms).toDF()
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_transitions_t")
+    }
     s.table("stream_transitions_t")
       .groupBy(col("from_type"), col("to_type")).agg(count(lit(1)).as("n"))
       .withColumn("from_total",
@@ -8727,27 +8439,19 @@ object SparkEntry {
     * counts the streamed reach set into x19's exact step frame (a step
     * nobody reaches still emits its zero row, like the batch operator). */
   private def streamFunnel(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val steps = Seq("signup", "view", "click", "purchase")
     val rows = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("ts_us"), col("event_id"))
       .orderBy(col("ts_us"), col("event_id"))
-      .as[(Long, String, Long, Long)].collect()
+      .as[(Long, String, Long, Long)].collect().toSeq
       .map { case (u, t, us, id) => graft.streaming.FunnelStream.Ev(u, t, us, id) }
-    val ms = MemoryStream[graft.streaming.FunnelStream.Ev]
-    val reaches = graft.streaming.FunnelStream.reaches(ms.toDS(), steps,
-      windowSec = 86400L)
-    val ckpt = tempCkpt()
-    val q = reaches.toDF().writeStream.outputMode("append").format("memory")
-      .queryName("stream_funnel_t")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      val chunks = rows.grouped(math.max(1, rows.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+    feedStream(s, chunks(rows, 4)) { ms =>
+      graft.streaming.FunnelStream.reaches(ms, steps, windowSec = 86400L).toDF()
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_funnel_t")
+    }
     val stepFrame = steps.zipWithIndex
       .map { case (n, i) => (i + 1, n) }.toDF("step", "step_name")
       .select(col("step").cast("int").as("step"), col("step_name"))
@@ -8759,27 +8463,38 @@ object SparkEntry {
       .orderBy(col("step"))
   }
 
+  /** The streaming document-curation run behind `stream_doc_clean`:
+    * [[graft.streaming.DocumentPipeline.clean]] driven over the documents
+    * table as a MemoryStream (ingest_ts = a fixed epoch + doc_id seconds,
+    * so event time is integer-exact), four micro-batches plus the last
+    * chunk re-fed whole.
+    *
+    * The feed is batch-compacted first (min doc_id per fingerprint — the
+    * standard arrangement: [[graft.operators.Dedup.exact]] compacts the
+    * backlog, the stream dedups re-sends), so the only fingerprint
+    * collisions the stream ever sees are the re-fed byte-identical rows —
+    * the surviving-copy choice cannot affect the output at ANY scale
+    * factor. Without the compaction, an organic duplicate pair (present at
+    * sf0.1) would make the kept doc_id depend on partition order inside a
+    * micro-batch. The re-fed chunk is the newest data, so its fingerprints
+    * are still inside the watermark's dedup state regardless of the feed's
+    * total event-time span. No sentinel: dedup is not an aggregation, rows
+    * finalize on arrival in append mode. */
   private def docCleanStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val compacted = graft.operators.Dedup.exact(Tables.documents(s, dir))
     val rows = compacted
       .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
-      .as[(Long, String)].collect()
-    val ms = MemoryStream[(Long, String)]
-    val docs = ms.toDF().select(col("_1").as("doc_id"), col("_2").as("text"))
-      .withColumn("ingest_ts", timestamp_seconds(lit(streamEpoch) + col("doc_id")))
-    val out = graft.streaming.DocumentPipeline.clean(docs, watermark = "1 hour")
-      .select(col("doc_id"), col("fingerprint"), col("quality_score"))
-    val ckpt = tempCkpt()
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("stream_doc_clean_t").option("checkpointLocation", ckpt).start()
-    try {
-      val chunks = rows.grouped(math.max(1, rows.length / 4)).toSeq
-      chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-      ms.addData(chunks.last.toIndexedSeq); q.processAllAvailable()
-    } finally q.stop()
+      .as[(Long, String)].collect().toSeq
+    val feed = chunks(rows, 4)
+    feedStream(s, feed :+ feed.last) { ms =>
+      val docs = ms.toDF().select(col("_1").as("doc_id"), col("_2").as("text"))
+        .withColumn("ingest_ts", timestamp_seconds(lit(streamEpoch) + col("doc_id")))
+      graft.streaming.DocumentPipeline.clean(docs, watermark = "1 hour")
+        .select(col("doc_id"), col("fingerprint"), col("quality_score"))
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_doc_clean_t")
+    }
     s.table("stream_doc_clean_t")
   }
 
@@ -8794,9 +8509,7 @@ object SparkEntry {
     * literals, and the d2 arithmetic mirrors the batch operator term for
     * term, so the stream twin is bit-identical per row. */
   private def centroidAssignStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.functions.Vectors
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
     val cents = graft.operators.Similarity.labelCentroidVectors(emb)
@@ -8805,10 +8518,7 @@ object SparkEntry {
     val rows = emb
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>"))
-      .as[(Long, Int, Seq[Double])].collect()
-    val ms = MemoryStream[(Long, Int, Seq[Double])]
-    val stream = ms.toDF().select(col("_1").as("vec_id"),
-      col("_2").as("label_true"), col("_3").as("__e"))
+      .as[(Long, Int, Seq[Double])].collect().toSeq
     // same argmin the batch groupBy(min(struct(d2, label))) computes,
     // expressed per row: ascending struct sort, first element wins ties
     // by label — and the same (ee - 2*dot) + cc term order
@@ -8820,18 +8530,15 @@ object SparkEntry {
           + Vectors.dot(cl, cl)).as("d2"),
         lit(lbl).as("lbl"))
     }: _*)
-    val out = stream.select(col("vec_id"), col("label_true"),
-        element_at(array_sort(candidates), 1).as("__m"))
-      .select(col("vec_id"), col("label_true"),
-        col("__m.lbl").as("assigned_label"), col("__m.d2").as("d2"))
-    val ckpt = tempCkpt()
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("stream_centroid_assign_t")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      rows.grouped(math.max(1, rows.length / 4))
-        .foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
+    feedStream(s, chunks(rows, 4)) { ms =>
+      ms.toDF("vec_id", "label_true", "__e")
+        .select(col("vec_id"), col("label_true"),
+          element_at(array_sort(candidates), 1).as("__m"))
+        .select(col("vec_id"), col("label_true"),
+          col("__m.lbl").as("assigned_label"), col("__m.d2").as("d2"))
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_centroid_assign_t")
+    }
     s.table("stream_centroid_assign_t")
   }
 
@@ -8845,7 +8552,6 @@ object SparkEntry {
     * outer join's null-padded rows finalize (an unmatched purchase may only
     * emit once the view watermark proves no match can arrive). */
   private def intervalJoinStream(s: SparkSession, joinType: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = s.sqlContext
     import s.implicits._
     val rows = graft.sources.DataGen
@@ -8888,11 +8594,7 @@ object SparkEntry {
     try {
       // both sides advance across several batches; the final sentinel on
       // each side pushes both watermarks past every real event
-      val vChunks = vRows.map(_._2).grouped(math.max(1, vRows.length / 3))
-        .map(_.toIndexedSeq).toSeq
-      val pChunks = pRows.map(_._2).grouped(math.max(1, pRows.length / 3))
-        .map(_.toIndexedSeq).toSeq
-      vChunks.zipAll(pChunks, IndexedSeq.empty[String], IndexedSeq.empty[String])
+      chunks(vRows.map(_._2).toSeq, 3).zipAll(chunks(pRows.map(_._2).toSeq, 3), Nil, Nil)
         .foreach { case (vc, pc) =>
           if (vc.nonEmpty) vs.addData(vc)
           if (pc.nonEmpty) ps.addData(pc)

@@ -20,18 +20,9 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Exact {
   private val Money: DecimalType = DecimalType(18, 2)
-  /** Wide enough for products like price * (1 - discount). */
-  private val Wide: DecimalType = DecimalType(30, 8)
 
   /** Order-independent sum of a 2-dp double column, returned as double. */
   def dsum(c: Column): Column = sum(c.cast(Money)).cast("double")
-
-  /** Order-independent sum of an arbitrary-precision expression (e.g. a
-    * product of 2-dp columns), returned as double. */
-  def dsumWide(c: Column): Column = sum(c.cast(Wide)).cast("double")
-
-  /** Deterministic average: exact decimal sum, then one double division. */
-  def davg(c: Column): Column = (sum(c.cast(Money)).cast("double") / count(lit(1))).as("avg")
 
   /** Cast to the 2-dp money decimal (for building exact products). */
   def money(c: Column): Column = c.cast(Money)

@@ -122,10 +122,6 @@ object Similarity {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Attach the L2 norm (compute once per row, reuse across pairs). */
-  def withNorm(df: DataFrame, embCol: String = "embedding", normCol: String = "emb_norm"): DataFrame =
-    df.withColumn(normCol, Vectors.norm(col(embCol)))
-
   /** Exact top-k: score all corpus rows per query, rank, keep k.
     * Output: (q_id, vec_id, cosine, rank). */
   def bruteForceTopK(

@@ -98,13 +98,6 @@ object TextAnalysis {
     aggregate(tokens(lower(text)), lit(""),
       (acc, t) => md5(concat_ws("|", acc, t).cast("binary")))
 
-  /** Spark-only fast variant of [[rollingHash]]: a chained-xxhash64 fold
-    * (codegen'd, no per-token hex strings — a polynomial multiply would trip
-    * ANSI-mode overflow; chaining through the hash wraps safely and mixes
-    * better). Use when no cross-engine comparison is needed. */
-  def rollingHashFast(text: Column): Column =
-    aggregate(tokens(lower(text)), lit(0L), (acc, t) => xxhash64(acc, t))
-
   // ------------------------------------------------- repetition metrics
 
   /** Fraction of repeated tokens: 1 - distinct/total (0 for empty docs).

@@ -92,5 +92,34 @@ class SpendPropertiesSpec extends SparkSpec {
     val dot = spark.sql("SELECT graft_dot(a, b) AS d FROM graft_fn_test")
       .as[Double].head()
     assert(dot == 11.0)
+
+    // re-registration appends nothing: every rule/strategy stays listed once
+    graft.GraftExtensions.register(spark)
+    val xm = spark.sessionState.experimentalMethods
+    graft.GraftExtensions.rules.foreach(r =>
+      assert(xm.extraOptimizations.count(_ == r) == 1, r.ruleName))
+    graft.GraftExtensions.strategies.foreach(st =>
+      assert(xm.extraStrategies.count(_ == st) == 1, st.toString))
+
+    // the injected path lists the same functions as the late path
+    import org.apache.spark.sql.SparkSession
+    def graftFunctions(s: SparkSession): Set[String] =
+      s.catalog.listFunctions().collect().map(_.name)
+        .filter(_.startsWith("graft_")).toSet
+    val registered = graftFunctions(spark)
+    assert(registered == graft.GraftExtensions.functions.map(_._1).toSet)
+    val oldDefault = SparkSession.getDefaultSession
+    val oldActive = SparkSession.getActiveSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val injected = SparkSession.builder()
+      .withExtensions(new graft.GraftExtensions).getOrCreate()
+    try assert(graftFunctions(injected) == registered)
+    finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      oldDefault.foreach(SparkSession.setDefaultSession)
+      oldActive.foreach(SparkSession.setActiveSession)
+    }
   }
 }
