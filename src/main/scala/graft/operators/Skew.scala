@@ -5,87 +5,16 @@ import org.apache.spark.sql.functions._
 
 /** Skew mitigation for heavy-hitter keys.
   *
-  * AQE's skew-join handling covers joins; for aggregations over pathological
-  * key distributions (one customer with 10^9 events), a two-phase salted
-  * aggregate bounds any single task's share of a hot key to 1/saltBuckets.
-  * Phase 1 aggregates on (key, salt), phase 2 merges the per-salt partials —
-  * both hash aggregates with map-side partials, so the extra shuffle carries
-  * only saltBuckets rows per hot key.
+  * Spark 4 already handles a hot key in combinable aggregates (map-side
+  * partials emit one row per key per task) and in one-distinct aggregates
+  * (the planner exchanges on (key, value) first and ships partial counts),
+  * so those shapes stay plain `groupBy`. What remains here are the shapes
+  * the planner cannot split: a join whose hot key AQE's runtime skew split
+  * can't reach ([[saltedJoin]]), and windows partitioned by a hot key (the
+  * chunk and block decompositions below), plus [[keyProfile]], the
+  * diagnostic that finds the hot key.
   */
 object Skew {
-
-  /** Two-phase salted sum: groupBy(keys).agg(sum) with the heavy-hitter
-    * shuffle split across `saltBuckets`.
-    *
-    * `exact = true` treats the value column as 2-dp money (decimal
-    * aggregation — order-independent and identical to the direct decimal
-    * aggregation, but quantizing: non-monetary values round to 2 dp). Pass
-    * `exact = false` for raw double sums (FP reordering caveat applies).
-    *
-    * The salt is a deterministic hash of (input partition id, full row),
-    * NOT a row-index function: an indeterminate salt re-salts rows
-    * differently when a failed map stage recomputes, double-counting or
-    * dropping partials mid-shuffle. `spark_partition_id` is recompute-stable
-    * (a retried task re-reads the same partition) and spreads exact-duplicate
-    * rows of a hot key that land in different input partitions across salt
-    * buckets. Residual caveat: exact duplicates WITHIN one input partition
-    * still share a salt — if the hot key's rows are identical AND
-    * co-partitioned (e.g. a single-file table of repeated rows), carry a
-    * distinguishing column (a unique id) so the row hash separates them.
-    */
-  def saltedSum(
-      df: DataFrame,
-      keys: Seq[String],
-      valueCol: String,
-      resultCol: String,
-      saltBuckets: Int = 16,
-      exact: Boolean = true): DataFrame = {
-    val value = col(valueCol)
-    val partial: Column =
-      if (exact) sum(graft.functions.Exact.money(value)) else sum(value)
-    val salted = df.withColumn("__salt",
-      pmod(xxhash64((spark_partition_id() +: df.columns.map(col)).toIndexedSeq: _*),
-        lit(saltBuckets)))
-    val phase1 = salted
-      .groupBy((keys.map(col) :+ col("__salt")): _*)
-      .agg(partial.as("__partial"))
-    val merged = phase1
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col("__partial")).as("__total"))
-    if (exact) merged.withColumn(resultCol, col("__total").cast("double")).drop("__total")
-    else merged.withColumnRenamed("__total", resultCol)
-  }
-
-  /** Two-phase salted exact COUNT(DISTINCT value) per key. Unlike
-    * [[saltedSum]]'s row-hash salt, the salt here MUST be a function of the
-    * value alone: hash(value) % saltBuckets partitions the distinct-value
-    * space itself, so the per-(key, salt) partial distinct counts are over
-    * disjoint value sets and their sum is exact. (A row-hash salt would
-    * scatter copies of one value across buckets and over-count.)
-    *
-    * Scale note, RE-ADJUDICATED round 10: Spark 4's own one-distinct
-    * planning already exchanges on (key, value) and ships partial counts,
-    * so on THIS engine the plain form is the faster plan (idle 20M soak:
-    * plain 4.5 s vs salted 6.5 s — `skew_distinct_{plain,salted}_20m`
-    * re-measures every round). The verb stays for portability to engines
-    * whose distinct planning shuffles values by key alone, and as the
-    * manual form of [[graft.plans.AutoSalt]] (also off by default for the
-    * same measured reason).
-    */
-  def saltedDistinct(
-      df: DataFrame,
-      keys: Seq[String],
-      valueCol: String,
-      resultCol: String,
-      saltBuckets: Int = 16): DataFrame = {
-    val salted = df.withColumn("__salt",
-      pmod(xxhash64(col(valueCol)), lit(saltBuckets)))
-    salted
-      .groupBy((keys.map(col) :+ col("__salt")): _*)
-      .agg(count_distinct(col(valueCol)).as("__pd"))
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col("__pd")).as(resultCol))
-  }
 
   /** Salted join for a skew-keyed big side against a small-but-not-
     * broadcastable side: the big side's rows get a deterministic salt in
@@ -98,8 +27,19 @@ object Skew {
     *
     * Only join types where replicated unmatched small-side rows can't
     * surface are allowed (inner / left_outer / left_semi / left_anti —
-    * right/full would duplicate small-side null matches per salt). The salt
-    * is recompute-stable (same hash as [[saltedSum]]).
+    * right/full would duplicate small-side null matches per salt).
+    *
+    * The salt is a deterministic hash of (input partition id, full row),
+    * NOT a row-index function: an indeterminate salt re-salts rows
+    * differently when a failed map stage recomputes, so a stage retry can
+    * match a row under two salts (double-counting it) or under none.
+    * `spark_partition_id` is recompute-stable (a retried task re-reads the
+    * same partition) and spreads exact-duplicate rows of a hot key that
+    * land in different input partitions across salt buckets. Residual
+    * caveat: exact duplicates WITHIN one input partition share a salt, so
+    * a hot key made of identical co-partitioned rows (e.g. a single-file
+    * table of repeated rows) stays on one task — carry a distinguishing
+    * column (a unique id) so the row hash separates them.
     */
   def saltedJoin(
       big: DataFrame,
@@ -730,15 +670,6 @@ object Skew {
       .drop("__rblk", "__rtblk")
   }
 
-  /** Key-distribution profile — the DIAGNOSTIC that tells you whether the
-    * salted forms above are needed before a shuffle melts down: the top
-    * `topN` keys by row count, each with its corpus share in ppm and its
-    * skew factor vs the mean key (x1000, integer-exact: `n * 1000 *
-    * n_distinct_keys div total_rows`; 1000 = perfectly uniform, 60000 =
-    * this key is 60x the mean — salt it). One combinable count
-    * aggregation + a broadcast of the 2-value totals row; top-N via
-    * per-partition heads. Run it on the join/group keys of any stage that
-    * shows a straggler task. */
   /** Exact GLOBAL row_number over (value ASC|DESC, tie ASC) — and
     * optionally the matching running SUM of the value — without a
     * single-task global sort (r14, VERDICT r13 #3: the entity-ranked
@@ -863,6 +794,15 @@ object Skew {
     out.drop("__gvs", "__ghk", "__gbc", "__gbs", "__gwr")
   }
 
+  /** Key-distribution profile — the DIAGNOSTIC that tells you whether the
+    * salted join or the chunked windows above are needed before a shuffle
+    * melts down: the top `topN` keys by row count, each with its corpus
+    * share in ppm and its skew factor vs the mean key (x1000,
+    * integer-exact: `n * 1000 * n_distinct_keys div total_rows`; 1000 =
+    * perfectly uniform, 60000 = this key is 60x the mean). One combinable
+    * count aggregation + a broadcast of the 2-value totals row; top-N via
+    * per-partition heads. Run it on the join/window keys of any stage that
+    * shows a straggler task. */
   def keyProfile(df: DataFrame, keyCol: String, topN: Int = 20): DataFrame = {
     require(topN > 0, s"topN must be positive, got $topN")
     val counts = df.groupBy(col(keyCol)).agg(count(lit(1)).as("n"))

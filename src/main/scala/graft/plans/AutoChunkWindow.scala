@@ -22,8 +22,9 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   * decomposition — the automatic form of
   * [[graft.operators.Skew.runningAggChunked]].
   *
-  * The target pathology is real and measured (unlike the distinct-agg one
-  * [[AutoSalt]] was built for and honestly retired from): a running frame
+  * The target pathology is real and measured (unlike the one-distinct
+  * aggregate, whose hot key Spark 4's planner already spreads by
+  * exchanging on (key, value)): a running frame
   *
   *   sum(v) OVER (PARTITION BY k ORDER BY o ROWS UNBOUNDED PRECEDING)
   *

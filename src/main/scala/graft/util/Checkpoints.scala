@@ -61,13 +61,13 @@ object Checkpoints {
   def scoped[T](f: => T): T = {
     val buf = scala.collection.mutable.Buffer[org.apache.spark.rdd.RDD[_]]()
     try activeScope.withValue(Some(buf))(f)
-    finally buf.foreach(_.unpersist(blocking = false))
+    finally buf.foreach(RddBridge.release)
   }
 
   /** Release every session-globally tracked cut. Safe only between queries. */
   def releaseAll(): Unit = {
     val rs = synchronized { val v = tracked.values.toList; tracked.clear(); v }
-    rs.foreach(_.unpersist(blocking = false))
+    rs.foreach(RddBridge.release)
   }
 
   /** Number of currently-tracked (unreleased) session-global checkpoints. */

@@ -13,4 +13,12 @@ import org.apache.spark.sql.execution.LogicalRDD
 object RddBridge {
   def backingRdd(df: DataFrame): Option[RDD[_]] =
     df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
+
+  /** Drop a lineage cut's blocks without `RDD.unpersist`, which warns on
+    * every locally checkpointed RDD that its lineage "cannot be recomputed
+    * after unpersisting" — true, and exactly why a cut is released only
+    * after its consuming action. Goes through the private[spark]
+    * `SparkContext.unpersistRDD`, the call `unpersist` itself makes. */
+  def release(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

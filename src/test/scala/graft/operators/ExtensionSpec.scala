@@ -103,10 +103,33 @@ class ExtensionSpec extends SparkSpec {
     Dedup.nearDuplicates(docs, threshold = 0.3).count()
     Dedup.simhashPairs(docs, maxHamming = 3).count()
     assert(graft.util.Checkpoints.trackedCount > 0) // cuts actually happened
-    graft.util.Checkpoints.releaseAll()
+    // the release is routine, so it must not log RDD.unpersist's
+    // "was locally checkpointed ... cannot be recomputed" warning per cut
+    val logged = logMessagesDuring(graft.util.Checkpoints.releaseAll())
     assert(graft.util.Checkpoints.trackedCount == 0)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- foreign
     assert(leaked.isEmpty, s"leaked persistent RDDs: $leaked")
+    val floods = logged.filter(_.contains("was locally checkpointed"))
+    assert(floods.isEmpty, s"release warned: ${floods.take(3)}")
+  }
+
+  /** Messages the root logger receives, from any thread, while `f` runs. */
+  private def logMessagesDuring(f: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    try f finally { root.removeAppender(capture); capture.stop() }
+    scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala.toSeq
   }
 
   test("scoped{} releases only its own cuts, leaving outer cuts alive") {

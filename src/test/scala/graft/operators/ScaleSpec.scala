@@ -1,40 +1,11 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.Exact
-import org.apache.spark.sql.functions._
 
-/** Scale-machinery tests: salted aggregation equivalence and bucketed
-  * co-located joins (shuffle elimination visible in the physical plan). */
+/** Scale-machinery tests: salted-join equivalence and bucketed co-located
+  * joins (shuffle elimination visible in the physical plan). */
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
-
-  test("salted sum equals direct aggregation on a skewed distribution") {
-    // 90% of rows hit one key — the shape salting exists for
-    val rows = (0 until 20000).map { i =>
-      (if (i % 10 == 0) s"u${i % 50}" else "hot", (i % 997) / 100.0)
-    }
-    val df = rows.toDF("user_id", "value")
-    val direct = df.groupBy($"user_id").agg(Exact.dsum($"value").as("total"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val salted = Skew.saltedSum(df, Seq("user_id"), "value", "total")
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(salted == direct)
-  }
-
-  test("salted distinct equals direct COUNT(DISTINCT) on a skewed distribution") {
-    // hot key carries many distinct values AND repeated values across
-    // partitions — the repeats are what a row-hash salt would over-count
-    val rows = (0 until 20000).map { i =>
-      (if (i % 10 == 0) s"u${i % 50}" else "hot", (i % 2377).toLong)
-    }
-    val df = rows.toDF("user_id", "v").repartition(8)
-    val direct = df.groupBy($"user_id").agg(count_distinct($"v").as("d"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Skew.saltedDistinct(df, Seq("user_id"), "v", "d", saltBuckets = 7)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == direct)
-  }
 
   test("salted join equals the plain join on a skewed key distribution") {
     val big = (0 until 20000).map { i =>
