@@ -1,18 +1,12 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}. A warmup pass runs
   * first so JIT/codegen/page-cache costs don't land on the first query. */
 object Bench {
-
-  /** Recursive delete for soak-stage scratch dirs (hoisted — three soak
-    * blocks previously carried identical local copies). */
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(); ()
-  }
 
   /** One timed execution: elapsed seconds, wall-clock start, error if any. */
   private final case class Sample(sec: Double, atMs: Long, err: Option[String])
@@ -787,23 +781,20 @@ object Bench {
           !f("autochunk_on_20m") && !f("autochunk_off_20m"))) ("", "")
       else {
         val t = "graft_autochunk_soak"
-        val confs = Seq("spark.sql.cbo.enabled" -> "true")
-        val saved = (confs.map(_._1) :+ "spark.sql.statistics.histogram.enabled")
-          .map(k => k -> spark.conf.getOption(k))
-        try {
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          val loc = new java.io.File(
-            spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-          if (loc.exists()) rmTree(loc)
-          spark.range(20000000L).select(
-              when(pmod(col("id"), lit(10)) < 6, lit(0L))
-                .otherwise(pmod(xxhash64(col("id")), lit(999999L)) + 1L).as("k"),
-              col("id").as("o"),
-              pmod(xxhash64(col("id"), lit(5)), lit(100L)).as("v"))
-            .write.saveAsTable(t)
-          spark.conf.set("spark.sql.statistics.histogram.enabled", "true")
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+        FileUtils.deleteDirectory(new java.io.File(
+          spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t))
+        spark.range(20000000L).select(
+            when(pmod(col("id"), lit(10)) < 6, lit(0L))
+              .otherwise(pmod(xxhash64(col("id")), lit(999999L)) + 1L).as("k"),
+            col("id").as("o"),
+            pmod(xxhash64(col("id"), lit(5)), lit(100L)).as("v"))
+          .write.saveAsTable(t)
+        GraftSession.withConfs(spark,
+            "spark.sql.statistics.histogram.enabled" -> "true") {
           spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k, o")
-          confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        }
+        GraftSession.withConfs(spark, "spark.sql.cbo.enabled" -> "true") {
           val q = s"""SELECT k, o, sum(v) OVER (PARTITION BY k ORDER BY o
                      |ROWS UNBOUNDED PRECEDING) AS run FROM $t""".stripMargin
           val on = stage("autochunk_on_20m", perStage = true) {
@@ -814,15 +805,14 @@ object Bench {
             df.agg(org.apache.spark.sql.functions.max(col("run")))
               .collect()(0).getLong(0)
           }
-          spark.conf.set("spark.graft.autoChunk.enabled", "false")
-          val off = try stage("autochunk_off_20m", perStage = true) {
-            spark.sql(q).agg(org.apache.spark.sql.functions.max(col("run")))
-              .collect()(0).getLong(0)
-          } finally spark.conf.unset("spark.graft.autoChunk.enabled")
+          val off = GraftSession.withConfs(spark,
+              "spark.graft.autoChunk.enabled" -> "false") {
+            stage("autochunk_off_20m", perStage = true) {
+              spark.sql(q).agg(org.apache.spark.sql.functions.max(col("run")))
+                .collect()(0).getLong(0)
+            }
+          }
           (on, off)
-        } finally saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
         }
       }
 
@@ -844,20 +834,15 @@ object Bench {
         val loc = new java.io.File(
           spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
           "graft_keyed_census_soak").toString
-        rmTree(new java.io.File(loc))
-        // the rule conf is saved/restored like every other scoped conf
-        // (ADVICE r15: the old unset clobbered any pre-set value)
-        val confs = Seq("spark.graft.autoChunk.censusMinBytes" -> "1")
-        val saved = (confs.map(_._1) :+ "spark.graft.autoChunk.enabled")
-          .map(ck => ck -> spark.conf.getOption(ck))
-        try {
+        FileUtils.deleteDirectory(new java.io.File(loc))
+        try GraftSession.withConfs(spark,
+            "spark.graft.autoChunk.censusMinBytes" -> "1") {
           spark.range(20000000L).select(
               when(pmod(col("id"), lit(10)) < 6, lit(0L))
                 .otherwise(pmod(xxhash64(col("id")), lit(999999L)) + 1L).as("k"),
               col("id").as("o"),
               pmod(xxhash64(col("id"), lit(5)), lit(100L)).as("v"))
             .write.mode("overwrite").parquet(loc)
-          confs.foreach { case (ck, cv) => spark.conf.set(ck, cv) }
           import org.apache.spark.sql.expressions.Window
           def q = spark.read.parquet(loc).withColumn("run",
             fsum(col("v")).over(Window.partitionBy(col("k")).orderBy(col("o"))
@@ -882,8 +867,8 @@ object Bench {
             q.agg(org.apache.spark.sql.functions.max(col("run")))
               .collect()(0).getLong(0)
           }
-          spark.conf.set("spark.graft.autoChunk.enabled", "false")
-          val (off, offWarm) = try {
+          val (off, offWarm) = GraftSession.withConfs(spark,
+              "spark.graft.autoChunk.enabled" -> "false") {
             val c = stage("keyed_census_off_20m", perStage = true) {
               q.agg(org.apache.spark.sql.functions.max(col("run")))
                 .collect()(0).getLong(0)
@@ -893,11 +878,6 @@ object Bench {
                 .collect()(0).getLong(0)
             }
             (c, wm)
-          } finally saved.collectFirst {
-            case ("spark.graft.autoChunk.enabled", prior) => prior
-          }.foreach {
-            case Some(cv) => spark.conf.set("spark.graft.autoChunk.enabled", cv)
-            case None => spark.conf.unset("spark.graft.autoChunk.enabled")
           }
           // fragments join comma-separated like the outer soak list
           // (either half may be "" under a stage filter)
@@ -905,11 +885,7 @@ object Bench {
             Seq(a, b).filter(_.nonEmpty).mkString(",")
           (plan, j(on, onWarm), j(off, offWarm))
         } finally {
-          saved.foreach {
-            case (ck, Some(cv)) => spark.conf.set(ck, cv)
-            case (ck, None) => spark.conf.unset(ck)
-          }
-          rmTree(new java.io.File(loc)) // ADVICE r15: scratch dir cleanup
+          FileUtils.deleteDirectory(new java.io.File(loc)) // ADVICE r15: scratch dir cleanup
         }
       }
 
@@ -1488,9 +1464,7 @@ object Bench {
     val t0 = System.nanoTime()
     try {
       val d = run("default")
-      GraftSession.enableRocksDbState(spark)
-      val r = try run("rocksdb")
-      finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      val r = GraftSession.withConfs(spark, GraftSession.RocksDbState)(run("rocksdb"))
       val sec = math.round((System.nanoTime() - t0) / 1e9 * 1000) / 1000.0
       s""""stream_state_1m":{"sec":$sec,"events":${batches * perBatch},"batches":$batches,$d,$r}"""
     } catch { case t: Throwable =>
@@ -1596,8 +1570,7 @@ object Bench {
     try {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
-      GraftSession.enableRocksDbState(spark)
-      try {
+      GraftSession.withConfs(spark, GraftSession.RocksDbState) {
         val ms = MemoryStream[String]
         val parsed = graft.operators.Ingest.parseTransactions(ms.toDF())
         val ev = parsed.withWatermark("timestamp", "5 minutes")
@@ -1636,7 +1609,7 @@ object Bench {
           s""""timers_registered":${timersReg.result().mkString("[", ",", "]")},""" +
           s""""timers_expired":${timersExp.result().mkString("[", ",", "]")},""" +
           s""""sessions_emitted":${emitted.result().mkString("[", ",", "]")}}"""
-      } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
     } catch { case t: Throwable =>
       s""""session_tws_1m":{"err":"${graft.util.Json.escape(t.toString, maxLen = 300)}"}"""
     }

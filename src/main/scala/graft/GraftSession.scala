@@ -46,13 +46,26 @@ object GraftSession {
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[graft.util.ForkFreeLocalFs].getName)
 
-  /** Switch streaming state to RocksDB — the production state backend:
-    * state spills to local disk instead of living on the executor heap, so
-    * high-cardinality dedup/window state survives at scale. Affects queries
-    * started after the call (session-wide conf). */
-  def enableRocksDbState(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  /** The conf that puts streaming state on RocksDB — the production state
+    * backend: state spills to local disk instead of living on the executor
+    * heap, so high-cardinality dedup/window state survives at scale. Set
+    * it with [[withConfs]] around the queries it should start. */
+  val RocksDbState: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `body` with the session confs `kvs` set, then put every one of
+    * them back as it was: the prior value, or unset when there was none. */
+  def withConfs[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   /** Local session for tests / bench, with graft's SQL functions and
     * optimizer rules registered (production parity — the driver harness

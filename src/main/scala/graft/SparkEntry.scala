@@ -3,6 +3,8 @@ package graft
 import graft.functions.Exact._
 import graft.operators.{Ingest, Spend}
 import graft.sources.Tables
+import java.io.File
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -867,7 +869,7 @@ object SparkEntry {
     "s8_csv_corrupt" -> ((s, dir) => {
       val csvDir = sys.props("java.io.tmpdir") + "/graft-csv-" +
         math.abs(dir.hashCode)
-      deleteRecursively(csvDir)
+      FileUtils.deleteDirectory(new File(csvDir))
       val amount = when(col("event_id") % 20 === 0, lit("###"))
         .otherwise(format_string("%.2f", col("value")))
       Tables.events(s, dir)
@@ -1200,35 +1202,15 @@ object SparkEntry {
     // Asserts the rewrite FIRED; the oracle is the plain window — the
     // re-plan must be invisible in the answer.
     "ext_autochunk_window" -> ((s, dir) => {
-      import s.implicits._
-      val t = "graft_autochunk_events"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t).toString)
-      Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .write.saveAsTable(t)
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k, event_id")
-      val scoped = Seq("spark.sql.cbo.enabled" -> "true",
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "10",
-        "spark.graft.autoChunk.chunks" -> "8")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      val src = Tables.events(s, dir).select(col("event_id"),
+        col("user_id").as("k"), round(col("value") * 100).cast("long").as("cents"))
+      autoChunkRow(s, "graft_autochunk_events", src, Seq("k", "event_id")) { t =>
         import org.apache.spark.sql.expressions.Window
-        val df = s.table(t).withColumn("run_cents", sum(col("cents")).over(
-          Window.partitionBy(col("k")).orderBy(col("event_id"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        require(df.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
-          "AutoChunkWindow did not fire — this row must grade the re-plan")
-        df.select(col("event_id"), col("k").as("user_id"), col("run_cents"))
-          .orderBy(col("event_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-          .toDF("event_id", "user_id", "run_cents")
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+        t.withColumn("run_cents", sum(col("cents")).over(
+            Window.partitionBy(col("k")).orderBy(col("event_id"))
+              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .select(col("event_id"), col("k").as("user_id"), col("run_cents"))
+          .orderBy(col("event_id"))
       }
     }),
 
@@ -1239,22 +1221,10 @@ object SparkEntry {
     // (the range where the rewrite is bit-identical to the serial window).
     // The oracle is the plain SQL window — the re-plan must be invisible.
     "ext_autochunk_multi" -> ((s, dir) => {
-      import s.implicits._
-      val t = "graft_autochunk_multi_events"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t).toString)
-      Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .write.saveAsTable(t)
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k, event_id, cents")
-      val scoped = Seq("spark.sql.cbo.enabled" -> "true",
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "10",
-        "spark.graft.autoChunk.chunks" -> "8")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      val src = Tables.events(s, dir).select(col("event_id"),
+        col("user_id").as("k"), round(col("value") * 100).cast("long").as("cents"))
+      autoChunkRow(s, "graft_autochunk_multi_events", src,
+          Seq("k", "event_id", "cents")) { t =>
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col("k")).orderBy(col("event_id"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1265,8 +1235,7 @@ object SparkEntry {
         // row_number, lag, lead, and the r12 sliding sum) land in ONE
         // node and one rewrite
         val wBare = Window.partitionBy(col("k")).orderBy(col("event_id"))
-        val df = s.table(t)
-          .withColumn("run_cents", sum(col("cents")).over(w))
+        t.withColumn("run_cents", sum(col("cents")).over(w))
           .withColumn("n_run", count(col("cents")).over(w))
           .withColumn("peak_cents", max(col("cents")).over(w))
           .withColumn("avg_cents", avg(col("cents")).over(w))
@@ -1275,23 +1244,10 @@ object SparkEntry {
           .withColumn("next_cents", lead(col("cents"), 1).over(wBare))
           .withColumn("roll_cents", sum(col("cents")).over(
             wBare.rowsBetween(-5, 0)))
-        require(df.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
-          "AutoChunkWindow did not fire on the multi-expression node")
-        // distributed end to end (VERDICT r11 #5: the old driver-side
-        // collect-and-retype was the registry's largest materialization).
-        // EAGER localCheckpoint, not lazy return: the conf overrides are
-        // restored in the finally below, and a lazy DataFrame would
-        // re-optimize WITHOUT the rule at write time — the checkpoint
-        // executes the require()'d chunked plan here and pins its result
-        // as executor-local blocks, no driver round-trip
-        df.select(col("event_id"), col("k").as("user_id"), col("run_cents"),
+          .select(col("event_id"), col("k").as("user_id"), col("run_cents"),
             col("n_run"), col("peak_cents"), col("avg_cents"), col("rn"),
             col("prev_cents"), col("next_cents"), col("roll_cents"))
           .orderBy(col("event_id"))
-          .localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     }),
 
@@ -1308,34 +1264,16 @@ object SparkEntry {
     // re-plan FIRED; eager localCheckpoint pins the chunked execution
     // before the conf scope closes. The oracle is the plain window.
     "ext_autochunk_sliding" -> ((s, dir) => {
-      val t = "graft_autochunk_slide_events"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t).toString)
-      Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
-          round(col("value") * 100).cast("long").as("cents"), col("value"))
-        .write.saveAsTable(t)
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k, event_id")
-      val scoped = Seq("spark.sql.cbo.enabled" -> "true",
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "10",
-        "spark.graft.autoChunk.chunks" -> "8")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val df = s.sql(
-          s"""SELECT event_id, k AS user_id,
-             |  sum(cents) OVER (PARTITION BY k ORDER BY event_id
-             |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS roll_cents,
-             |  min(value) OVER (PARTITION BY k ORDER BY event_id
-             |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS low_value
-             |FROM $t""".stripMargin)
-        require(df.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
-          "AutoChunkWindow did not fire on the sliding-frame node")
-        df.orderBy(col("event_id")).localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+      val src = Tables.events(s, dir).select(col("event_id"),
+        col("user_id").as("k"), round(col("value") * 100).cast("long").as("cents"),
+        col("value"))
+      autoChunkRow(s, "graft_autochunk_slide_events", src, Seq("k", "event_id")) {
+        _.selectExpr("event_id", "k AS user_id",
+            """sum(cents) OVER (PARTITION BY k ORDER BY event_id
+              |  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS roll_cents""".stripMargin,
+            """min(value) OVER (PARTITION BY k ORDER BY event_id
+              |  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS low_value""".stripMargin)
+          .orderBy(col("event_id"))
       }
     }),
 
@@ -1417,34 +1355,15 @@ object SparkEntry {
     // Asserts the re-plan FIRED; eager localCheckpoint pins the chunked
     // execution.
     "ext_autochunk_range" -> ((s, dir) => {
-      val t = "graft_autochunk_range_events"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t).toString)
-      Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .write.saveAsTable(t)
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k, event_id")
-      val scoped = Seq("spark.sql.cbo.enabled" -> "true",
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "10",
-        "spark.graft.autoChunk.chunks" -> "8")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val df = s.sql(
-          s"""SELECT event_id, k AS user_id,
-             |  sum(cents) OVER (PARTITION BY k ORDER BY event_id
-             |    RANGE BETWEEN 500 PRECEDING AND CURRENT ROW) AS roll_cents,
-             |  min(cents) OVER (PARTITION BY k ORDER BY event_id
-             |    RANGE BETWEEN 500 PRECEDING AND CURRENT ROW) AS low_cents
-             |FROM $t""".stripMargin)
-        require(df.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
-          "AutoChunkWindow did not fire on the RANGE-frame node")
-        df.orderBy(col("event_id")).localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+      val src = Tables.events(s, dir).select(col("event_id"),
+        col("user_id").as("k"), round(col("value") * 100).cast("long").as("cents"))
+      autoChunkRow(s, "graft_autochunk_range_events", src, Seq("k", "event_id")) {
+        _.selectExpr("event_id", "k AS user_id",
+            """sum(cents) OVER (PARTITION BY k ORDER BY event_id
+              |  RANGE BETWEEN 500 PRECEDING AND CURRENT ROW) AS roll_cents""".stripMargin,
+            """min(cents) OVER (PARTITION BY k ORDER BY event_id
+              |  RANGE BETWEEN 500 PRECEDING AND CURRENT ROW) AS low_cents""".stripMargin)
+          .orderBy(col("event_id"))
       }
     }),
 
@@ -1457,37 +1376,19 @@ object SparkEntry {
     // TESTDATA ns-vs-us hazard): it orders by event_id, which induces
     // the identical per-key order and peer groups.
     "ext_autochunk_ts" -> ((s, dir) => {
-      val t = "graft_autochunk_ts_events"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t).toString)
-      Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
-          timestamp_seconds(lit(1704060000L) + col("event_id")).as("etime"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .write.saveAsTable(t)
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k, etime")
-      val scoped = Seq("spark.sql.cbo.enabled" -> "true",
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "10",
-        "spark.graft.autoChunk.chunks" -> "8")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      val src = Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
+        timestamp_seconds(lit(1704060000L) + col("event_id")).as("etime"),
+        round(col("value") * 100).cast("long").as("cents"))
+      autoChunkRow(s, "graft_autochunk_ts_events", src, Seq("k", "etime")) { t =>
         import org.apache.spark.sql.expressions.Window
         val wb = Window.partitionBy(col("k")).orderBy(col("etime"))
-        val df = s.table(t)
-          .withColumn("run_cents", sum(col("cents")).over(
+        t.withColumn("run_cents", sum(col("cents")).over(
             wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .withColumn("rn", row_number().over(wb))
           .withColumn("prev_cents", lag(col("cents"), 2).over(wb))
-        require(df.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
-          "AutoChunkWindow did not fire on the timestamp-ord node")
-        df.select(col("event_id"), col("k").as("user_id"), col("run_cents"),
+          .select(col("event_id"), col("k").as("user_id"), col("run_cents"),
             col("rn"), col("prev_cents"))
-          .orderBy(col("event_id")).localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+          .orderBy(col("event_id"))
       }
     }),
 
@@ -1497,36 +1398,18 @@ object SparkEntry {
     // mirrored chunk function (negated ord, nulls to the LAST chunk)
     // re-plans the whole node; running sum + lag ride the same rewrite.
     "ext_autochunk_desc" -> ((s, dir) => {
-      val t = "graft_autochunk_desc_events"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t).toString)
-      Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .write.saveAsTable(t)
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k, event_id")
-      val scoped = Seq("spark.sql.cbo.enabled" -> "true",
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "10",
-        "spark.graft.autoChunk.chunks" -> "8")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      val src = Tables.events(s, dir).select(col("event_id"),
+        col("user_id").as("k"), round(col("value") * 100).cast("long").as("cents"))
+      autoChunkRow(s, "graft_autochunk_desc_events", src, Seq("k", "event_id")) { t =>
         import org.apache.spark.sql.expressions.Window
         val wb = Window.partitionBy(col("k")).orderBy(col("event_id").desc)
-        val df = s.table(t)
-          .withColumn("rn", row_number().over(wb))
+        t.withColumn("rn", row_number().over(wb))
           .withColumn("run_back", sum(col("cents")).over(
             wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .withColumn("newer", lag(col("cents"), 1).over(wb))
-        require(df.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
-          "AutoChunkWindow did not fire on the DESC node")
-        df.select(col("event_id"), col("k").as("user_id"), col("rn"),
+          .select(col("event_id"), col("k").as("user_id"), col("rn"),
             col("run_back"), col("newer"))
-          .orderBy(col("event_id")).localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+          .orderBy(col("event_id"))
       }
     }),
 
@@ -1539,35 +1422,17 @@ object SparkEntry {
     // the rule stays out there by explicit guard; the UNFILTERED
     // per-event form here is the shape only the chunk rewrite can spread.
     "ext_autochunk_latest" -> ((s, dir) => {
-      val t = "graft_autochunk_latest_events"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t).toString)
-      Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
-          timestamp_seconds(lit(1704060000L) + col("event_id")).as("etime"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .write.saveAsTable(t)
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k, etime")
-      val scoped = Seq("spark.sql.cbo.enabled" -> "true",
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "10",
-        "spark.graft.autoChunk.chunks" -> "8")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      val src = Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
+        timestamp_seconds(lit(1704060000L) + col("event_id")).as("etime"),
+        round(col("value") * 100).cast("long").as("cents"))
+      autoChunkRow(s, "graft_autochunk_latest_events", src, Seq("k", "etime")) { t =>
         import org.apache.spark.sql.expressions.Window
         val wd = Window.partitionBy(col("k")).orderBy(col("etime").desc)
-        val df = s.table(t)
-          .withColumn("latest_cents", first_value(col("cents")).over(wd))
+        t.withColumn("latest_cents", first_value(col("cents")).over(wd))
           .withColumn("rn_desc", row_number().over(wd))
-        require(df.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
-          "AutoChunkWindow did not fire on the DESC-timestamp node")
-        df.select(col("event_id"), col("k").as("user_id"),
+          .select(col("event_id"), col("k").as("user_id"),
             col("latest_cents"), col("rn_desc"))
-          .orderBy(col("event_id")).localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+          .orderBy(col("event_id"))
       }
     }),
 
@@ -1576,35 +1441,17 @@ object SparkEntry {
     // idiom — without a row_number filter. Both directions in one query;
     // event_id unique makes the serial pick deterministic.
     "ext_autochunk_first" -> ((s, dir) => {
-      val t = "graft_autochunk_first_events"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t).toString)
-      Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .write.saveAsTable(t)
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k, event_id")
-      val scoped = Seq("spark.sql.cbo.enabled" -> "true",
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "10",
-        "spark.graft.autoChunk.chunks" -> "8")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      val src = Tables.events(s, dir).select(col("event_id"),
+        col("user_id").as("k"), round(col("value") * 100).cast("long").as("cents"))
+      autoChunkRow(s, "graft_autochunk_first_events", src, Seq("k", "event_id")) { t =>
         import org.apache.spark.sql.expressions.Window
         val asc = Window.partitionBy(col("k")).orderBy(col("event_id"))
         val desc = Window.partitionBy(col("k")).orderBy(col("event_id").desc)
-        val df = s.table(t)
-          .withColumn("earliest_cents", first_value(col("cents")).over(asc))
+        t.withColumn("earliest_cents", first_value(col("cents")).over(asc))
           .withColumn("latest_cents", first_value(col("cents")).over(desc))
-        require(df.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
-          "AutoChunkWindow did not fire on the first_value nodes")
-        df.select(col("event_id"), col("k").as("user_id"),
+          .select(col("event_id"), col("k").as("user_id"),
             col("earliest_cents"), col("latest_cents"))
-          .orderBy(col("event_id")).localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+          .orderBy(col("event_id"))
       }
     }),
 
@@ -1615,34 +1462,18 @@ object SparkEntry {
     // Decimal addition is exact and order-free, so the oracle-facing
     // output is the running sum converted losslessly to integer cents.
     "ext_autochunk_decimal" -> ((s, dir) => {
-      val t = "graft_autochunk_dec_events"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t).toString)
-      Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
-          (round(col("value") * 100).cast("long").cast("decimal(12,2)") / 100)
-            .cast("decimal(12,2)").as("amount"))
-        .write.saveAsTable(t)
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k, event_id, amount")
-      val scoped = Seq("spark.sql.cbo.enabled" -> "true",
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "10",
-        "spark.graft.autoChunk.chunks" -> "8")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      val src = Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
+        (round(col("value") * 100).cast("long").cast("decimal(12,2)") / 100)
+          .cast("decimal(12,2)").as("amount"))
+      autoChunkRow(s, "graft_autochunk_dec_events", src,
+          Seq("k", "event_id", "amount")) { t =>
         import org.apache.spark.sql.expressions.Window
-        val df = s.table(t).withColumn("run_amt", sum(col("amount")).over(
-          Window.partitionBy(col("k")).orderBy(col("event_id"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        require(df.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
-          "AutoChunkWindow did not fire on the decimal-sum node")
-        df.select(col("event_id"), col("k").as("user_id"),
+        t.withColumn("run_amt", sum(col("amount")).over(
+            Window.partitionBy(col("k")).orderBy(col("event_id"))
+              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .select(col("event_id"), col("k").as("user_id"),
             (col("run_amt") * 100).cast("long").as("run_cents"))
-          .orderBy(col("event_id")).localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+          .orderBy(col("event_id"))
       }
     }),
 
@@ -1655,36 +1486,21 @@ object SparkEntry {
     // the node decomposes. The require() asserts the fire; the oracle is
     // the plain serial window — the re-plan must be invisible.
     "ext_autochunk_global" -> ((s, dir) => {
-      val loc = new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-        "graft_autochunk_global_parquet").toString
-      deleteRecursively(loc)
-      Tables.events(s, dir).select(col("event_id"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .write.mode("overwrite").parquet(loc)
-      val scoped = Seq(
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "1000",
-        "spark.graft.autoChunk.censusMinBytes" -> "1",
-        "spark.graft.autoChunk.chunks" -> "8")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      val src = Tables.events(s, dir).select(col("event_id"),
+        round(col("value") * 100).cast("long").as("cents"))
+      autoChunkRow(s, "graft_autochunk_global_parquet", src, Nil, Seq(
+          "spark.graft.autoChunk.minRows" -> "1000",
+          "spark.graft.autoChunk.perKeyRows" -> "1000",
+          "spark.graft.autoChunk.censusMinBytes" -> "1",
+          "spark.graft.autoChunk.chunks" -> "8")) { t =>
         import org.apache.spark.sql.expressions.Window
         val w = Window.orderBy(col("event_id"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val df = s.read.parquet(loc)
-          .withColumn("run_cents", sum(col("cents")).over(w))
+        t.withColumn("run_cents", sum(col("cents")).over(w))
           .withColumn("rn", row_number().over(Window.orderBy(col("event_id"))))
           .withColumn("avg_cents", avg(col("cents")).over(w))
-        require(df.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
-          "AutoChunkWindow's census global arm did not fire on bare parquet")
-        df.select(col("event_id"), col("run_cents"), col("rn"),
-            col("avg_cents"))
-          .orderBy(col("event_id")).localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+          .select(col("event_id"), col("run_cents"), col("rn"), col("avg_cents"))
+          .orderBy(col("event_id"))
       }
     }),
 
@@ -1695,39 +1511,21 @@ object SparkEntry {
     // chunk-driving FIRST key is ANALYZE'd. The require pins the fire;
     // the oracle is the plain serial multi-key window.
     "ext_autochunk_multiord" -> ((s, dir) => {
-      val t = "graft_autochunk_multiord_events"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t).toString)
-      Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
-          (col("event_id") % 97).as("o1"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .write.saveAsTable(t)
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k, o1")
-      val scoped = Seq("spark.sql.cbo.enabled" -> "true",
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "10",
-        "spark.graft.autoChunk.chunks" -> "8")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      val src = Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
+        (col("event_id") % 97).as("o1"),
+        round(col("value") * 100).cast("long").as("cents"))
+      autoChunkRow(s, "graft_autochunk_multiord_events", src, Seq("k", "o1")) { t =>
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col("k"))
           .orderBy(col("o1"), col("event_id").desc)
-        val df = s.table(t)
-          .withColumn("run_cents", sum(col("cents")).over(
+        t.withColumn("run_cents", sum(col("cents")).over(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .withColumn("rn", row_number().over(w))
           .withColumn("rk", rank().over(w))
           .withColumn("dr", dense_rank().over(w))
-        require(df.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
-          "AutoChunkWindow's multi-ord arm did not fire")
-        df.select(col("event_id"), col("k").as("user_id"), col("run_cents"),
+          .select(col("event_id"), col("k").as("user_id"), col("run_cents"),
             col("rn"), col("rk"), col("dr"))
-          .orderBy(col("event_id")).localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+          .orderBy(col("event_id"))
       }
     }),
 
@@ -1742,29 +1540,17 @@ object SparkEntry {
     // make yields the same value. The require pins that NO plain Window
     // survives; the oracle is DuckDB's native NULLS LAST serial window.
     "ext_autochunk_anchor_off" -> ((s, dir) => {
-      val t = "graft_autochunk_anchor_events"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t).toString)
-      Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
-          when(col("event_id") % 13 === 0, lit(null).cast("long"))
-            .otherwise(col("event_id")).as("o"),
-          when(col("event_id") % 13 === 0 || col("event_id") % 7 === 0,
-              lit(null).cast("long"))
-            .otherwise(round(col("value") * 100).cast("long")).as("cents"))
-        .write.saveAsTable(t)
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k, o")
-      val scoped = Seq("spark.sql.cbo.enabled" -> "true",
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "10",
-        "spark.graft.autoChunk.chunks" -> "8")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      val src = Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
+        when(col("event_id") % 13 === 0, lit(null).cast("long"))
+          .otherwise(col("event_id")).as("o"),
+        when(col("event_id") % 13 === 0 || col("event_id") % 7 === 0,
+            lit(null).cast("long"))
+          .otherwise(round(col("value") * 100).cast("long")).as("cents"))
+      autoChunkRow(s, "graft_autochunk_anchor_events", src, Seq("k", "o")) { t =>
         import org.apache.spark.sql.expressions.Window
         val wa = Window.partitionBy(col("k")).orderBy(col("o").asc_nulls_last)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val df = s.table(t)
+        val df = t
           .withColumn("fv_nl", first(col("cents")).over(wa))
           .withColumn("fnn_nl", first(col("cents"), ignoreNulls = true).over(wa))
           .withColumn("fill_nl", last(col("cents"), ignoreNulls = true).over(wa))
@@ -1777,10 +1563,7 @@ object SparkEntry {
           "an off-default anchor window stayed plain — this row must grade both re-plans")
         df.select(col("event_id"), col("k").as("user_id"), col("fv_nl"),
             col("fnn_nl"), col("fill_nl"))
-          .orderBy(col("event_id")).localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+          .orderBy(col("event_id"))
       }
     }),
 
@@ -1798,43 +1581,28 @@ object SparkEntry {
     // both the fire and the split; the oracle is the plain serial
     // window — the re-plan must stay invisible in the output.
     "ext_autochunk_keyed_census" -> ((s, dir) => {
-      val loc = new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-        "graft_autochunk_keyed_parquet").toString
-      deleteRecursively(loc)
-      Tables.events(s, dir).select(col("event_id"),
-          when(col("event_id") % 10 < 6, lit(0L))
-            .otherwise(col("user_id")).as("k"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .write.mode("overwrite").parquet(loc)
-      val scoped = Seq(
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "1000000000",
-        "spark.graft.autoChunk.hotSplitMinRows" -> "200",
-        "spark.graft.autoChunk.censusMinBytes" -> "1",
-        "spark.graft.autoChunk.chunks" -> "8")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      val src = Tables.events(s, dir).select(col("event_id"),
+        when(col("event_id") % 10 < 6, lit(0L)).otherwise(col("user_id")).as("k"),
+        round(col("value") * 100).cast("long").as("cents"))
+      autoChunkRow(s, "graft_autochunk_keyed_parquet", src, Nil, Seq(
+          "spark.graft.autoChunk.minRows" -> "1000",
+          "spark.graft.autoChunk.perKeyRows" -> "1000000000",
+          "spark.graft.autoChunk.hotSplitMinRows" -> "200",
+          "spark.graft.autoChunk.censusMinBytes" -> "1",
+          "spark.graft.autoChunk.chunks" -> "8")) { t =>
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col("k")).orderBy(col("event_id"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val df = s.read.parquet(loc)
+        val df = t
           .withColumn("run_cents", sum(col("cents")).over(w))
           .withColumn("rn", row_number().over(
             Window.partitionBy(col("k")).orderBy(col("event_id"))))
-        val plan = df.queryExecution.optimizedPlan
-        require(plan.toString.contains("__graft_chunk"),
-          "AutoChunkWindow's keyed census probe did not fire on bare parquet")
-        require(plan.collect {
+        require(df.queryExecution.optimizedPlan.collect {
             case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
           }.nonEmpty,
           "the hot-key split did not fire — the tail must ride the plain window")
         df.select(col("event_id"), col("k"), col("run_cents"), col("rn"))
-          .orderBy(col("event_id")).localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+          .orderBy(col("event_id"))
       }
     }),
 
@@ -1845,24 +1613,14 @@ object SparkEntry {
     // optimized plan (the require pins that). avg fires under the
     // ANALYZE'd 2^53 proof. The oracle is the plain serial window.
     "ext_autochunk_full" -> ((s, dir) => {
-      val t = "graft_autochunk_full_events"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t).toString)
-      Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
-          when(col("event_id") % 7 === 0, lit(null).cast("long"))
-            .otherwise(round(col("value") * 100).cast("long")).as("cents"))
-        .write.saveAsTable(t)
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k, event_id, cents")
-      val scoped = Seq("spark.sql.cbo.enabled" -> "true",
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "10")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      val src = Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
+        when(col("event_id") % 7 === 0, lit(null).cast("long"))
+          .otherwise(round(col("value") * 100).cast("long")).as("cents"))
+      autoChunkRow(s, "graft_autochunk_full_events", src,
+          Seq("k", "event_id", "cents")) { t =>
         import org.apache.spark.sql.expressions.Window
         val wk = Window.partitionBy(col("k"))
-        val df = s.table(t)
+        val df = t
           .withColumn("tot_cents", sum(col("cents")).over(wk))
           .withColumn("n_vals", count(col("cents")).over(wk))
           .withColumn("hi_cents", max(col("cents")).over(wk))
@@ -1873,10 +1631,7 @@ object SparkEntry {
           "AutoChunkWindow's full-frame arm did not fire")
         df.select(col("event_id"), col("k").as("user_id"), col("tot_cents"),
             col("n_vals"), col("hi_cents"), col("avg_cents"))
-          .orderBy(col("event_id")).localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+          .orderBy(col("event_id"))
       }
     }),
 
@@ -1888,38 +1643,20 @@ object SparkEntry {
     // ext_window_forward_fill; this row grades the AUTOMATIC path. The
     // oracle is DuckDB's native IGNORE NULLS window.
     "ext_autochunk_ffill" -> ((s, dir) => {
-      val t = "graft_autochunk_ffill_events"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t).toString)
-      Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
-          when(col("event_id") % 3 === 0, lit(null).cast("long"))
-            .otherwise(round(col("value") * 100).cast("long")).as("cents"))
-        .write.saveAsTable(t)
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS k, event_id")
-      val scoped = Seq("spark.sql.cbo.enabled" -> "true",
-        "spark.graft.autoChunk.minRows" -> "1000",
-        "spark.graft.autoChunk.perKeyRows" -> "10",
-        "spark.graft.autoChunk.chunks" -> "8")
-      val old = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      val src = Tables.events(s, dir).select(col("event_id"), col("user_id").as("k"),
+        when(col("event_id") % 3 === 0, lit(null).cast("long"))
+          .otherwise(round(col("value") * 100).cast("long")).as("cents"))
+      autoChunkRow(s, "graft_autochunk_ffill_events", src, Seq("k", "event_id")) { t =>
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col("k")).orderBy(col("event_id"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val df = s.table(t)
-          .withColumn("filled_cents",
+        t.withColumn("filled_cents",
             last(col("cents"), ignoreNulls = true).over(w))
           .withColumn("first_nn_cents",
             first(col("cents"), ignoreNulls = true).over(w))
-        require(df.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
-          "AutoChunkWindow did not fire on the IGNORE-NULLS node")
-        df.select(col("event_id"), col("k").as("user_id"),
+          .select(col("event_id"), col("k").as("user_id"),
             col("filled_cents"), col("first_nn_cents"))
-          .orderBy(col("event_id")).localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+          .orderBy(col("event_id"))
       }
     }),
 
@@ -2231,7 +1968,7 @@ object SparkEntry {
       import s.implicits._
       val tableDir = sys.props("java.io.tmpdir") + "/graft-increll-stream-" +
         math.abs(dir.hashCode)
-      deleteRecursively(tableDir) // stale partitions from a prior gate run
+      FileUtils.deleteDirectory(new File(tableDir)) // stale partitions from a prior gate run
       val rows = Tables.events(s, dir)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_type"), col("value"))
@@ -2347,7 +2084,7 @@ object SparkEntry {
     "x52_change_feed" -> ((s, dir) => {
       val base = sys.props("java.io.tmpdir") + "/graft-cdf-" +
         math.abs(dir.hashCode)
-      deleteRecursively(base)
+      FileUtils.deleteDirectory(new File(base))
       val rel = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"),
           to_date(col("ts")).cast("string").as("event_date"))
@@ -2375,7 +2112,7 @@ object SparkEntry {
     "x48_time_travel" -> ((s, dir) => {
       val base = sys.props("java.io.tmpdir") + "/graft-versioned-" +
         math.abs(dir.hashCode)
-      deleteRecursively(base)
+      FileUtils.deleteDirectory(new File(base))
       val rel = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"),
           to_date(col("ts")).cast("string").as("event_date"))
@@ -2407,7 +2144,7 @@ object SparkEntry {
     "x63_rollback" -> ((s, dir) => {
       val base = sys.props("java.io.tmpdir") + "/graft-rollback-" +
         math.abs(dir.hashCode)
-      deleteRecursively(base)
+      FileUtils.deleteDirectory(new File(base))
       val rel = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"),
           to_date(col("ts")).cast("string").as("event_date"))
@@ -2442,7 +2179,7 @@ object SparkEntry {
     "x68_ivm_retract" -> ((s, dir) => {
       val base = sys.props("java.io.tmpdir") + "/graft-ivm-" +
         math.abs(dir.hashCode)
-      deleteRecursively(base)
+      FileUtils.deleteDirectory(new File(base))
       val rel = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"),
           to_date(col("ts")).cast("string").as("event_date"))
@@ -2482,7 +2219,7 @@ object SparkEntry {
         math.abs(dir.hashCode)
       val dst = sys.props("java.io.tmpdir") + "/graft-clone-dst-" +
         math.abs(dir.hashCode)
-      deleteRecursively(base); deleteRecursively(dst)
+      FileUtils.deleteDirectory(new File(base)); FileUtils.deleteDirectory(new File(dst))
       val rel = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"),
           to_date(col("ts")).cast("string").as("event_date"))
@@ -3978,7 +3715,7 @@ object SparkEntry {
     "x73_tpch_refresh" -> ((s, dir) => {
       val base = sys.props("java.io.tmpdir") + "/graft-rf-" +
         math.abs(dir.hashCode)
-      deleteRecursively(base)
+      FileUtils.deleteDirectory(new File(base))
       // YEAR partitions: the RF deltas are key-sampled, so they touch
       // every partition — commitUpsert/commitDelete cost one job per
       // touched partition, and month granularity made that 84 jobs per
@@ -7166,30 +6903,55 @@ object SparkEntry {
   private val ckptsToReap = scala.collection.mutable.Buffer.empty[String]
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      ckptsToReap.synchronized { ckptsToReap.foreach(deleteRecursively) }))
-  }
-
-  private def deleteRecursively(path: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val root = Paths.get(path)
-    if (Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      val s = Files.walk(root)
-      val files = try s.iterator().asScala.toSeq finally s.close()
-      files.reverseIterator.foreach(p => Files.deleteIfExists(p))
-    }
+      ckptsToReap.synchronized {
+        ckptsToReap.foreach(d => FileUtils.deleteQuietly(new File(d)))
+      }))
   }
 
   /** Run `body` on RocksDB streaming state (transformWithState refuses the
     * default provider), then restore the session's provider so the other
     * graded stream rows keep their recorded backend. */
-  private def withRocksDbState[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    GraftSession.enableRocksDbState(s)
-    try body finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
+  private def withRocksDbState[A](s: SparkSession)(body: => A): A =
+    GraftSession.withConfs(s, GraftSession.RocksDbState)(body)
+
+  /** The confs every catalog-table [[autoChunkRow]] runs under: CBO on so
+    * the optimizer sees the ANALYZE statistics, and thresholds sized so
+    * the gate-scale tables count as hot. */
+  private val autoChunkTableConfs = Seq("spark.sql.cbo.enabled" -> "true",
+    "spark.graft.autoChunk.minRows" -> "1000",
+    "spark.graft.autoChunk.perKeyRows" -> "10",
+    "spark.graft.autoChunk.chunks" -> "8")
+
+  /** One graded [[graft.plans.AutoChunkWindow]] row. `src` is written
+    * fresh under the warehouse as `name`: a catalog table ANALYZEd for
+    * the `analyze` columns, or, with none, bare parquet (the state the
+    * census arms read). `query` builds the row over it, and runs under the
+    * scoped `confs`. The row fails unless the rule fired. The result is an
+    * eager localCheckpoint taken inside the conf scope: a lazy frame would
+    * re-optimize WITHOUT the rule once the confs are restored, and the
+    * checkpoint keeps the result distributed, with no driver round-trip. */
+  private def autoChunkRow(s: SparkSession, name: String, src: DataFrame,
+      analyze: Seq[String], confs: Seq[(String, String)] = autoChunkTableConfs)(
+      query: DataFrame => DataFrame): DataFrame = {
+    val loc = new File(
+      s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name)
+    if (analyze.nonEmpty) s.sql(s"DROP TABLE IF EXISTS $name")
+    FileUtils.deleteDirectory(loc)
+    val input =
+      if (analyze.isEmpty) {
+        src.write.parquet(loc.toString)
+        s.read.parquet(loc.toString)
+      } else {
+        src.write.saveAsTable(name)
+        s.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS FOR COLUMNS " +
+          analyze.mkString(", "))
+        s.table(name)
+      }
+    GraftSession.withConfs(s, confs: _*) {
+      val df = query(input)
+      require(df.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
+        s"AutoChunkWindow did not fire — $name must grade the re-plan")
+      df.localCheckpoint(true)
     }
   }
 
@@ -7619,7 +7381,7 @@ object SparkEntry {
     import s.implicits._
     val stateDir = sys.props("java.io.tmpdir") + "/graft-ewma-stream-" +
       math.abs(dir.hashCode)
-    deleteRecursively(stateDir)
+    FileUtils.deleteDirectory(new File(stateDir))
     val daily = Tables.events(s, dir)
       .groupBy(col("user_id"), to_date(col("ts")).as("d"))
       .agg((sum(money(col("value"))) * 100).cast("long").as("cents"))
@@ -7663,7 +7425,7 @@ object SparkEntry {
     import s.implicits._
     val outDir = sys.props("java.io.tmpdir") + "/graft-conc-stream-" +
       math.abs(dir.hashCode)
-    deleteRecursively(outDir)
+    FileUtils.deleteDirectory(new File(outDir))
     val rows = Tables.events(s, dir)
       .select(col("user_id"), to_date(col("ts")).cast("string").as("d"),
         unix_micros(col("ts")).as("ts_us"))
@@ -7704,7 +7466,7 @@ object SparkEntry {
     import s.implicits._
     val stateDir = sys.props("java.io.tmpdir") + "/graft-skyline-stream-" +
       math.abs(dir.hashCode)
-    deleteRecursively(stateDir)
+    FileUtils.deleteDirectory(new File(stateDir))
     val rows = Tables.part(s, dir)
       .select(col("p_partkey"),
         (money(col("p_retailprice")) * 100).cast("long").as("price_cents"),
@@ -7741,7 +7503,7 @@ object SparkEntry {
       math.abs(dir.hashCode)
     val stateDir = base + "/state"
     val outDir = base + "/rows"
-    deleteRecursively(base)
+    FileUtils.deleteDirectory(new File(base))
     val uw = Tables.events(s, dir)
       .select(col("user_id"),
         date_trunc("week", col("ts")).cast("date").cast("string").as("w"))
@@ -7841,7 +7603,7 @@ object SparkEntry {
     import s.implicits._
     val base = sys.props("java.io.tmpdir") + "/graft-basket-stream-" +
       math.abs(dir.hashCode)
-    deleteRecursively(base)
+    FileUtils.deleteDirectory(new File(base))
     val bi = Tables.lineitem(s, dir)
       .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("b"), col("p_brand").as("i")).distinct()
@@ -7905,7 +7667,7 @@ object SparkEntry {
     import s.implicits._
     val stateDir = sys.props("java.io.tmpdir") + "/graft-cusum-stream-" +
       math.abs(dir.hashCode)
-    deleteRecursively(stateDir)
+    FileUtils.deleteDirectory(new File(stateDir))
     val dailyDf = Tables.events(s, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("d"))
       .agg((sum(money(col("value"))) * 100).cast("long").as("cents"))

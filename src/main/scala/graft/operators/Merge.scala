@@ -36,14 +36,12 @@ object Merge {
       updates: DataFrame,
       keyCols: Seq[String],
       partCol: String): Unit = {
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
     // cached OUTSIDE the try so the finally can always release it: an
     // unpersist only on the success path would leak the cached delta in
     // the block manager for the session lifetime if the staged write threw
     val u = updates.cache()
-    try {
+    try graft.GraftSession.withConfs(spark,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       // partition pruning: the IN-list of affected partition values keeps
       // the current-rows scan directory-scoped (a handful of dirs, not the
       // table). collect() here is bounded by the number of AFFECTED
@@ -61,12 +59,6 @@ object Merge {
         survivors.unionByName(u.select(survivors.columns.map(col): _*)))
       staged.repartition(col(partCol))
         .write.mode("overwrite").partitionBy(partCol).parquet(dir)
-    } finally {
-      u.unpersist()
-      prev match {
-        case Some(v) => spark.conf.set(modeKey, v)
-        case None    => spark.conf.unset(modeKey)
-      }
-    }
+    } finally u.unpersist()
   }
 }

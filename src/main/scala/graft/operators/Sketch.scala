@@ -667,8 +667,11 @@ object Sketch {
     // slice collapse to one NULL key whose count REPROVES the below-rank
     // total through the same pure function (no dependence on the driver's
     // running sums), rows above are dropped by the same integer predicate
-    val cfgDf = broadcast(cfg.toDF("q", "rank", "b1", "b2"))
-    val keyed = vals.crossJoin(cfgDf)
+    // the broadcast hint goes on the crossJoin's build side only: cfgDf is
+    // also the preserved side of the left_outer join below, which Spark
+    // cannot build (the hint there only logs a warning per call)
+    val cfgDf = cfg.toDF("q", "rank", "b1", "b2")
+    val keyed = vals.crossJoin(broadcast(cfgDf))
       .filter(i1 < col("b1") ||
         (i1 === col("b1") && (col("b2") === -1 || i2 <= col("b2"))))
       .select(col("q"), col("rank"),
@@ -808,8 +811,10 @@ object Sketch {
       // driven from the TARGET list (fresh DF, so no shared-lineage
       // ambiguity with picks) and a target whose rank drifted out of its
       // refined slice raises in-plan instead of vanishing from the answer
-      val targetDf = broadcast(r1.map { case (k, q, n, r, _) =>
-        (k, q, n, r) }.toDF("k", "q", "n", "rank"))
+      // no broadcast hint: the preserved side of a left_outer join cannot
+      // be built
+      val targetDf = r1.map { case (k, q, n, r, _) =>
+        (k, q, n, r) }.toDF("k", "q", "n", "rank")
       targetDf.join(picks, Seq("k", "q"), "left_outer")
         .select(col("k"), col("q"), col("n"), col("rank"),
           when(col("value").isNotNull, col("value"))

@@ -85,7 +85,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   *  - hotness: rowCount / ndv(keys) >= `perKeyRows` (default 1M — the
   *    average key alone overwhelms one task; covers the no-keys global
   *    window with ndv = 1), OR a single-key equi-height histogram shows
-  *    one value holding >= `hotShare` (default 0.2) of the rows;
+  *    one value holding >= [[HotShare]] (20%) of the rows;
   *  - EVERY window expression in the node decomposes (one
   *    non-decomposable expression leaves the whole node plain — a
   *    half-rewritten node would window twice for nothing):
@@ -96,9 +96,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   *       overflow proof (decimal addition is exact and order-free — r13):
   *       the decomposition re-associates addition, so a Float/Double sum
   *       could differ from the serial window in the last ulps — a
-  *       default-ON rule must never alter an answer. FP
-  *       sums opt in via `spark.graft.autoChunk.allowFloat` (default
-  *       false) with that documented last-ulps tolerance. Min/max never
+  *       default-ON rule must never alter an answer, so FP sums always
+  *       stay plain. Min/max never
   *       re-combine values into new ones, so any analyzed numeric type is
   *       safe there; count re-combines exact longs. AVG decomposes into
   *       an exact running SUM + COUNT and replays Average's own
@@ -163,8 +162,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   * the gates mirror the running arm's re-association stance: integral
   * sums wrap identically, decimal sums are exact order-free with the
   * serial window's own final overflow check (single total — no proof
-  * needed), min/max/count are order-free, FP sums need `allowFloat`,
-  * avg needs the 2^53 proof. Hotness gates and the census are shared
+  * needed), min/max/count are order-free, FP sums stay plain, avg
+  * needs the 2^53 proof. Hotness gates and the census are shared
   * with the running arms (no ord required — the census counts only).
   *
   * LAG/LEAD AND SLIDING FRAMES — the single-evaluation block stage (r12;
@@ -201,8 +200,9 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   * parquet, derived aggregates — the default state of every real
   * pipeline that never ran ANALYZE), `child.stats.sizeInBytes >=
   * censusMinBytes` (default 1 GiB — below that the serial window is the
-  * right plan and the census would cost more than it saves), and
-  * `spark.graft.autoChunk.census` is on (default true), the rule runs
+  * right plan and the census would cost more than it saves; a value
+  * past every size estimate, e.g. 10^30, switches the census off — not
+  * Long.MaxValue, which an unknown size estimate equals), the rule runs
   * ONE scan-parallel census over the child — count(1), min/max of the
   * ORDER column, and min/max of any value column the avg/decimal proofs
   * need — and fires off those exact numbers. The census is an extra
@@ -211,10 +211,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   * canonicalized child plan (same freshness stance as ANALYZE: the
   * correctness-bearing proofs keep their 2x headroom, and a table that
   * doubles under a cached census needs the cache dropped exactly as a
-  * stale catalog needs re-ANALYZE). Cache lifetime is the JVM's by
-  * default; long-lived services over growing tables set
-  * `spark.graft.autoChunk.censusTtlSec` > 0 (entries re-census once
-  * older than the TTL) or call [[invalidateCensus]] explicitly
+  * stale catalog needs re-ANALYZE). Cache lifetime is the JVM's;
+  * long-lived services over growing tables call [[invalidateCensus]]
   * (VERDICT r14 #3). Every census launch is logged at INFO — an eager
   * scan job inside the optimizer should never be silent. Streaming
   * children never census (no batch to scan), and a census that
@@ -227,9 +225,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   * window's hotness needs per-key statistics no plain scan can give
   * exactly — but SKETCHES give it in the same one pass. When a keyed
   * window meets the census preconditions above (no catalog stats, size
-  * >= censusMinBytes, census on) and `spark.graft.autoChunk.keyedCensus`
-  * is on (default true; its own kill switch because keyed shapes are far
-  * more common than global ones), the census scan carries two extra
+  * >= censusMinBytes), the census scan carries two extra
   * sketch aggregates over ONE 64-bit hash of the partition keys
   * ([[org.apache.spark.sql.catalyst.expressions.XxHash64]] — null-safe,
   * any key types, collisions only ever OVERSTATE hotness, which is a
@@ -241,7 +237,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   *  - [[org.apache.spark.sql.catalyst.expressions.aggregate
   *    .ApproxTopK]] (a DataSketches frequent-items sketch, 10k tracked
   *    items) estimates the heaviest key's row count — the heavy-hitter
-  *    signal `topCount / rows >= hotShare`, i.e. the
+  *    signal `topCount / rows >= HotShare`, i.e. the
   *    latest-record-per-hot-key ingest straggler, now provable on bare
   *    parquet without ANALYZE.
   *
@@ -268,10 +264,10 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   * the chunk decomposition and leaves the tail on the ORIGINAL plain
   * window, unioning the legs. Answer-neutral by construction — the
   * predicate is a pure function of the partition keys, each key lands
-  * whole on exactly one exact leg. `spark.graft.autoChunk.hotSplit`
-  * (default true) reverts to whole-relation chunking when off; avg-hot
-  * relations always chunk whole (there the typical key IS the problem
-  * and a split would only add a second scan).
+  * whole on exactly one exact leg. `hotSplitMinRows = Long.MaxValue`
+  * names no key hot enough and so reverts to whole-relation chunking;
+  * avg-hot relations always chunk whole (there the typical key IS the
+  * problem and a split would only add a second scan).
   *
   * The emitted aliases reuse the original ExprIds, so parents resolve
   * unchanged. Fixed point: every plan this rule emits carries a
@@ -297,6 +293,10 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
 object AutoChunkWindow extends Rule[LogicalPlan] {
 
   private val C_NAME = "__graft_chunk"
+
+  /** The heavy-hitter signal: one key holding at least this share of the
+    * rows is hot, whatever the average key. */
+  private val HotShare = 0.2
 
   /** One decomposable window expression, destructured. `ae` is the
     * original AggregateExpression where one exists (replayed verbatim in
@@ -430,12 +430,8 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
       conf.getConfString("spark.graft.autoChunk.minRows", "10000000").toLong
     val perKeyRows =
       conf.getConfString("spark.graft.autoChunk.perKeyRows", "1000000").toLong
-    val hotShare =
-      conf.getConfString("spark.graft.autoChunk.hotShare", "0.2").toDouble
     val chunks =
       conf.getConfString("spark.graft.autoChunk.chunks", "32").toInt
-    val allowFloat =
-      conf.getConfString("spark.graft.autoChunk.allowFloat", "false").toBoolean
     // PRE-InferWindowGroupLimit rank-limit shapes (r14, ADVICE r13): on
     // the injectOptimizerRule path this rule runs before Spark's group-
     // limit inference, so the `Filter(rn <= k, Window(row_number))`
@@ -478,14 +474,14 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
             case a: AttributeReference => a.name.startsWith(C_NAME)
             case _ => false
           } =>
-        decomposeAll(exprs, allowFloat) match {
+        decomposeAll(exprs) match {
           case Some(ds) if ds.forall(_.v.deterministic) &&
               ordTypeOk(ds.head.ord.dataType) &&
               ds.head.partSpec.forall(_.isInstanceOf[AttributeReference]) =>
             val pk = ds.head.partSpec.map(_.asInstanceOf[AttributeReference])
-            gateFor(ds, ds.head.ord, pk, child, perKeyRows, hotShare) match {
+            gateFor(ds, ds.head.ord, pk, child, perKeyRows) match {
               case Some(g) if g.rows >= BigInt(minRows) &&
-                  ds.forall(d => avgExact(d.kind, d.v, g, allowFloat)) &&
+                  ds.forall(d => avgExact(d.kind, d.v, g)) &&
                   ds.forall(decimalExact(_, g)) &&
                   rangeCompatible(ds, g) =>
                 g.hotHashes.filter(_ => pk.nonEmpty) match {
@@ -499,19 +495,19 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
             // partition — the per-group-total / grand-total idiom, which
             // WindowExec still runs one task per key. Same hotness gates;
             // the rewrite is Aggregate + broadcast-sized join back.
-            decomposeFull(exprs, allowFloat) match {
+            decomposeFull(exprs) match {
               case Some(fs) if fs.forall(_.v.deterministic) &&
                   fs.head.partSpec.forall(_.isInstanceOf[AttributeReference]) =>
                 val pk = fs.head.partSpec.map(_.asInstanceOf[AttributeReference])
                 val proofs = fs.collect { case d if d.kind == "avg" => d.v }
-                (catalogGate(None, pk, child, perKeyRows, hotShare) match {
+                (catalogGate(None, pk, child, perKeyRows) match {
                   case CatalogFire(g) => Some(g)
                   case CatalogCold => None
                   case CatalogSilent =>
-                    censusGate(proofs, None, pk, child, perKeyRows, hotShare)
+                    censusGate(proofs, None, pk, child, perKeyRows)
                 }) match {
                   case Some(g) if g.rows >= BigInt(minRows) &&
-                      fs.forall(d => avgExact(d.kind, d.v, g, allowFloat)) =>
+                      fs.forall(d => avgExact(d.kind, d.v, g)) =>
                     rewriteFull(child, fs, pk)
                   case _ => w
                 }
@@ -529,7 +525,7 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
     * integral sums wrap identically, DECIMAL sums are exact order-free
     * with the same final overflow check as the serial window (no proof
     * needed — a single total never re-widens), min/max/count are
-    * order-free, FP sums need allowFloat, avg needs the 2^53 proof for
+    * order-free, FP sums stay plain, avg needs the 2^53 proof for
     * its double accumulation. */
   private case class FullD(alias: Alias, ae: Option[AggregateExpression],
       kind: String, v: Expression, partSpec: Seq[Expression],
@@ -583,8 +579,7 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
 
   private val fullStructKinds = Set("first", "firstig", "last", "lastig")
 
-  private def decomposeFull(
-      exprs: Seq[NamedExpression], allowFloat: Boolean): Option[Seq[FullD]] = {
+  private def decomposeFull(exprs: Seq[NamedExpression]): Option[Seq[FullD]] = {
     val ds = exprs.map {
       case alias @ Alias(WindowExpression(fn,
             WindowSpecDefinition(partSpec, orderSpec,
@@ -594,8 +589,7 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
           if partSpec.forall(_.isInstanceOf[AttributeReference]) =>
         fn match {
           case ae: AggregateExpression
-              if fullKind(ae).exists { case (k, v) =>
-                typeOk(k, v, allowFloat) } =>
+              if fullKind(ae).exists { case (k, v) => typeOk(k, v) } =>
             val (k, v) = fullKind(ae).get
             Some(FullD(alias, Some(ae), k, v, partSpec))
           case _ => (structFullKind(fn), orderSpec) match {
@@ -736,8 +730,7 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
     * must share the partition keys and the ORDER attribute — Spark groups
     * expressions into one Window node by (partitionSpec, orderSpec), so
     * this holds for planner-built nodes; hand-built ones get checked). */
-  private def decomposeAll(
-      exprs: Seq[NamedExpression], allowFloat: Boolean): Option[Seq[Decomposed]] = {
+  private def decomposeAll(exprs: Seq[NamedExpression]): Option[Seq[Decomposed]] = {
     val ds = exprs.map {
       case alias @ Alias(WindowExpression(
             ae: AggregateExpression,
@@ -745,7 +738,7 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
               frame @ SpecifiedWindowFrame(_, UnboundedPreceding, CurrentRow))),
             _)
           if aggArg(ae).exists { case (kind, v) =>
-            typeOk(kind, v, allowFloat) &&
+            typeOk(kind, v) &&
               // the anchor kinds' struct combine encodes ONE key's
               // direction/placement — trailing sort keys keep them plain
               (rest.isEmpty || !Set("first", "firstig", "lastig")(kind)) } &&
@@ -1041,15 +1034,13 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
     * (r13, VERDICT r12 #6 — decimal addition is exact and order-free, so
     * the DECIMAL(12,2) money columns SURVEY §1.3 names as the principled
     * upgrade decompose exactly; [[combineLeg]] handles the widened
-    * intermediate). `allowFloat` opts Float/Double sums in with a
-    * documented last-ulps tolerance. Min and max never re-combine values
+    * intermediate). Min and max never re-combine values
     * into new ones, so any analyzed (hence orderable) type is safe.
     * (Sliding frames bypass this gate entirely — they re-associate
     * nothing.) */
-  private def typeOk(kind: String, v: Expression, allowFloat: Boolean): Boolean =
+  private def typeOk(kind: String, v: Expression): Boolean =
     (kind != "sum" && kind != "avg") || integral(v.dataType) ||
-      (kind == "sum" && v.dataType.isInstanceOf[DecimalType]) ||
-      (allowFloat && numeric(v.dataType))
+      (kind == "sum" && v.dataType.isInstanceOf[DecimalType])
 
   /** Integral running AVG needs one proof sum/count don't: the serial
     * window's Average accumulates its sum in a DOUBLE buffer (`sum +
@@ -1060,8 +1051,7 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
     * `sum/count` division then matches bit for bit). Every partial sum is
     * bounded by `rowCount * max(|min|, |max|)`, so column stats can PROVE
     * the bound; no proof (missing stats, non-attribute argument, or a
-    * bound over the threshold) means no rewrite — unless `allowFloat`
-    * already accepted a last-ulps tolerance.
+    * bound over the threshold) means no rewrite.
     *
     * FRESHNESS (ADVICE r11): unlike the hotness/chunk-range uses of
     * statistics — where staleness only unbalances — this gate is
@@ -1071,10 +1061,9 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
     * has grown by less than 2x since ANALYZE still satisfies the real
     * bound. The documented operating assumption for default-ON avg is
     * "re-ANALYZE before the table doubles" — beyond that, disable the
-    * rule or accept allowFloat's ulps tolerance explicitly. */
-  private def avgExact(
-      kind: String, v: Expression, gate: Gate, allowFloat: Boolean): Boolean =
-    kind != "avg" || allowFloat || (v match {
+    * rule. */
+  private def avgExact(kind: String, v: Expression, gate: Gate): Boolean =
+    kind != "avg" || (v match {
       case a: AttributeReference =>
         gate.colRange(a).exists { case (mn, mx) =>
           BigDecimal(gate.rows) * mn.abs.max(mx.abs) < BigDecimal(2).pow(52)
@@ -1120,8 +1109,8 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
     * (ANALYZE path) — set ONLY when the fire was heavy-hitter-driven
     * (the AVERAGE key is cold). It selects the hot-key-split hybrid:
     * route only those keys through the chunk decomposition, leave the
-    * lukewarm tail on the plain window. None (avg-hot, split disabled,
-    * hot set not nameable) = chunk the whole relation. */
+    * lukewarm tail on the plain window. None (avg-hot, no key reaching
+    * hotSplitMinRows, hot set not nameable) = chunk the whole relation. */
   private case class Gate(
       rows: BigInt, ordLo: Double, ordHi: Double,
       colRange: AttributeReference => Option[(BigDecimal, BigDecimal)],
@@ -1138,13 +1127,12 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
   private def gateFor(
       ds: Seq[Decomposed], ord: AttributeReference,
       pk: Seq[AttributeReference], child: LogicalPlan,
-      perKeyRows: Long, hotShare: Double): Option[Gate] =
-    catalogGate(Some(ord), pk, child, perKeyRows, hotShare) match {
+      perKeyRows: Long): Option[Gate] =
+    catalogGate(Some(ord), pk, child, perKeyRows) match {
       case CatalogFire(g) => Some(g)
       case CatalogCold => None
       case CatalogSilent =>
-        censusGate(proofAttrsOf(ds), Some(ord), pk, child, perKeyRows,
-          hotShare)
+        censusGate(proofAttrsOf(ds), Some(ord), pk, child, perKeyRows)
     }
 
   /** The value attributes whose ranges the avg/decimal-sum proofs will
@@ -1172,8 +1160,7 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
 
   private def catalogGate(
       ordOpt: Option[AttributeReference], pk: Seq[AttributeReference],
-      child: LogicalPlan, perKeyRows: Long,
-      hotShare: Double): CatalogVerdict = {
+      child: LogicalPlan, perKeyRows: Long): CatalogVerdict = {
     val st = child.stats
     val rows = st.rowCount.getOrElse(return CatalogSilent)
     // hotness, signal 1: the AVERAGE key already overwhelms one task
@@ -1184,14 +1171,14 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
     }
     val avgHot = ndv.exists(d => d > 0 && BigInt(rows.toLong) / d >= perKeyRows)
     // hotness, signal 2: a single-key equi-height histogram names a value
-    // holding >= hotShare of the rows (a heavy hitter shows up as repeated
+    // holding >= HotShare of the rows (a heavy hitter shows up as repeated
     // single-point bins: lo == hi == the value)
     lazy val histHot = pk match {
       case Seq(k) => st.attributeStats.get(k).flatMap(_.histogram).exists { h =>
         val pointBins = h.bins.filter(b => b.lo == b.hi)
           .groupBy(_.lo).view.mapValues(_.length).values
         pointBins.nonEmpty &&
-          pointBins.max * h.height / rows.toDouble >= hotShare
+          pointBins.max * h.height / rows.toDouble >= HotShare
       }
       case _ => false
     }
@@ -1212,10 +1199,7 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
     // caution an unhashable hot set falls back to whole-relation chunking
     // (the r15/r16 avg-hot shape).
     val hotHashes: Option[Set[Long]] =
-      if (!avgHot && conf.getConfString(
-          "spark.graft.autoChunk.hotSplit", "true").toBoolean)
-        histogramHotHashes(pk, st, perKeyRows)
-      else None
+      if (!avgHot) histogramHotHashes(pk, st, perKeyRows) else None
     // hot by catalog — the chunk function still needs the ORDER column's
     // real range (the full-frame arm has no ord — its Gate carries a
     // degenerate range); a hot verdict with no ord stats falls through to
@@ -1301,7 +1285,7 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
     * scan censuses once per JVM). Bounded: past [[cacheMax]] entries the
     * OLDEST entry is evicted (r16, VERDICT r15 #2 — the r15 clear-all
     * re-censused an entire 129-plan workload on overflow). `atNanos` is
-    * the insert time the TTL compares against. */
+    * the insert time eviction orders by. */
   private case class Census(
       rows: BigInt, byPos: Map[Int, Option[(BigDecimal, BigDecimal)]],
       keyStats: Map[Seq[Int], (BigInt, Seq[(Long, BigInt)])], atNanos: Long)
@@ -1326,7 +1310,7 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
     new java.util.concurrent.ConcurrentHashMap[LogicalPlan, Census]()
 
   /** Census SCAN JOBS actually launched (cache misses) — observability
-    * for the TTL/invalidation contract; the spec pins re-census behavior
+    * for the caching/invalidation contract; the spec pins re-census behavior
     * on it without racing the async listener bus. */
   private[plans] val censusRuns = new java.util.concurrent.atomic.AtomicLong
 
@@ -1335,12 +1319,12 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
     * under the table, a key type the hash rejects at runtime) would
     * re-launch the full-table scan that fails again — a dashboard
     * issuing many keyed-window compiles would pay one doomed cluster job
-    * each. Failures are remembered for AT MOST 10 minutes — capped
-    * independently of censusTtlSec (r16, ADVICE r15: a daily-refresh TTL
-    * must not turn one transient scan hiccup into a day-long rewrite
-    * outage) — and cleared by [[invalidateCensus]]. */
+    * each. Failures are remembered for [[FailCooldownNanos]] (10 minutes,
+    * so one transient scan hiccup never becomes a lasting rewrite outage)
+    * and cleared by [[invalidateCensus]]. */
   private val censusFail =
     new java.util.concurrent.ConcurrentHashMap[LogicalPlan, Long]()
+  private val FailCooldownNanos = 600L * 1000000000L
 
   /** Drop every cached census — successes AND remembered failures
     * (VERDICT r14 #3): the explicit freshness hook for long-lived JVMs
@@ -1352,16 +1336,11 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
   private def censusGate(
       proofExprs: Seq[Expression], ordOpt: Option[AttributeReference],
       pk: Seq[AttributeReference], child: LogicalPlan,
-      perKeyRows: Long, hotShare: Double): Option[Gate] = {
+      perKeyRows: Long): Option[Gate] = {
     if (child.isStreaming) return None
-    if (!conf.getConfString("spark.graft.autoChunk.census", "true").toBoolean)
-      return None
     // KEYED windows (r15, VERDICT r14 #1): hotness comes from the sketch
-    // probe in the same scan — its own kill switch on top of the census
-    // one, because keyed shapes are far more common than global ones
+    // probe in the same scan
     val keyed = pk.nonEmpty
-    if (keyed && !conf.getConfString(
-        "spark.graft.autoChunk.keyedCensus", "true").toBoolean) return None
     val minBytes = BigInt(conf.getConfString(
       "spark.graft.autoChunk.censusMinBytes", "1073741824"))
     if (child.stats.sizeInBytes < minBytes) return None
@@ -1379,30 +1358,21 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
     val keyPos = pk.map(a => child.output.indexWhere(_.exprId == a.exprId))
     if (keyPos.contains(-1)) return None
     val need = (ordPos.toSeq ++ proofAttrs).distinct.sorted
-    val ttlNanos = conf.getConfString(
-      "spark.graft.autoChunk.censusTtlSec", "0").toLong * 1000000000L
     val key = child.canonicalized
     val cached = Option(censusCache.get(key)).filter(c =>
-      need.forall(c.byPos.contains) &&
-        (!keyed || c.keyStats.contains(keyPos)) &&
-        (ttlNanos <= 0 || System.nanoTime() - c.atNanos < ttlNanos))
+      need.forall(c.byPos.contains) && (!keyed || c.keyStats.contains(keyPos)))
     // the census is a best-effort GATE, never a correctness dependency:
     // any failure of the scan job (an exotic key type the hash rejects,
     // a file deleted between analysis and planning, an interrupted job)
     // must degrade to the plain serial window, not crash PLANNING — and
     // the failure is negatively cached so repeated compiles over the
     // same doomed child don't re-launch the scan each time
-    // transient failures recover on the 10-minute scale regardless of the
-    // success-cache TTL (ADVICE r15: min, not reuse)
-    val failCooldown =
-      if (ttlNanos > 0) math.min(ttlNanos, 600L * 1000000000L)
-      else 600L * 1000000000L
     Option(censusFail.get(key)).foreach { t =>
-      if (System.nanoTime() - t < failCooldown) return None
+      if (System.nanoTime() - t < FailCooldownNanos) return None
       censusFail.remove(key)
     }
     val census = try censusOrScan(cached, keyed, need, keyPos, ordOpt,
-      pk, child, key, ttlNanos, spark)
+      pk, child, key, spark)
     catch {
       case scala.util.control.NonFatal(e) =>
         logWarning(s"AutoChunkWindow: census scan failed — leaving the " +
@@ -1415,13 +1385,13 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
     if (keyed) {
       // mirror catalogGate's two hotness signals, sketch-estimated: the
       // AVERAGE key overwhelms one task, or one heavy hitter holds >=
-      // hotShare of the rows. Heuristics, not proofs — sketch error only
+      // HotShare of the rows. Heuristics, not proofs — sketch error only
       // shifts the fire threshold, never the answer.
       val (ndv, items) = census.keyStats(keyPos)
       val top = items.headOption.map(_._2).getOrElse(BigInt(0))
       val avgHot = ndv > 0 && census.rows / ndv >= BigInt(perKeyRows)
       val topHot = census.rows > 0 &&
-        BigDecimal(top) >= BigDecimal(hotShare) * BigDecimal(census.rows)
+        BigDecimal(top) >= BigDecimal(HotShare) * BigDecimal(census.rows)
       if (!(avgHot || topHot)) return None
       // HOT-KEY SPLIT (r16, VERDICT r15 #1): when the fire is heavy-
       // hitter-driven — the AVERAGE key is cold, so the ~everything-else
@@ -1434,8 +1404,7 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
       // second scan. Sketch under-estimates can only demote a hot key to
       // the plain leg and collisions promote a lukewarm one — both legs
       // are exact, so either error is performance-only.
-      if (!avgHot && conf.getConfString(
-          "spark.graft.autoChunk.hotSplit", "true").toBoolean) {
+      if (!avgHot) {
         val splitMin = BigInt(conf.getConfString(
           "spark.graft.autoChunk.hotSplitMinRows", perKeyRows.toString))
         val hs = items.takeWhile(_._2 >= splitMin).map(_._1).toSet
@@ -1461,14 +1430,14 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
   }
 
 
-  /** The census itself: answer from a fresh-enough cache entry or run
+  /** The census itself: answer from the cache entry or run
     * the ONE scan job and cache the result. Pulled out of [[censusGate]]
     * so the caller can wrap the scan in a non-fatal guard. */
   private def censusOrScan(
       cached: Option[Census], keyed: Boolean, need: Seq[Int],
       keyPos: Seq[Int], ordOpt: Option[AttributeReference],
       pk: Seq[AttributeReference], child: LogicalPlan, key: LogicalPlan,
-      ttlNanos: Long, spark: org.apache.spark.sql.SparkSession): Census =
+      spark: org.apache.spark.sql.SparkSession): Census =
     cached.getOrElse {
       import org.apache.spark.sql.catalyst.expressions.XxHash64
       import org.apache.spark.sql.catalyst.expressions.aggregate.{
@@ -1510,8 +1479,7 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
       logInfo(s"AutoChunkWindow: launching one-scan census " +
         s"(${if (keyed) "keyed sketch probe" else "global"}, " +
         s"${need.length} column range(s)) over ${child.nodeName} of " +
-        s"~${child.stats.sizeInBytes} bytes — cache with " +
-        s"spark.graft.autoChunk.censusTtlSec / invalidateCensus()")
+        s"~${child.stats.sizeInBytes} bytes — cached until invalidateCensus()")
       censusRuns.incrementAndGet()
       val row = org.apache.spark.sql.graft.ColumnBridge
         .ofRows(spark, Aggregate(Nil, aggs, child)).collect()(0)
@@ -1541,12 +1509,10 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
           }
           Map(keyPos -> ((ndv, items)))
         }
-      // merge a still-fresh prior entry's stats: a second window over the
-      // same child with a DIFFERENT key set (or extra proof columns)
-      // re-censuses once and keeps both, instead of ping-ponging the
-      // cache between key sets (same staleness contract as the cache)
-      val prev = Option(censusCache.get(key)).filter(p =>
-        ttlNanos <= 0 || System.nanoTime() - p.atNanos < ttlNanos)
+      // merge a prior entry's stats: a second window over the same child
+      // with a DIFFERENT key set (or extra proof columns) re-censuses once
+      // and keeps both, instead of ping-ponging the cache between key sets
+      val prev = Option(censusCache.get(key))
       val c = Census(BigInt(row.getLong(0)),
         prev.map(_.byPos).getOrElse(Map.empty) ++ byPos,
         prev.map(_.keyStats).getOrElse(Map.empty) ++ keyStats,

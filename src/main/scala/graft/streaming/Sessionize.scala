@@ -108,7 +108,7 @@ object Sessionize {
     * code (spec-pinned in SpendingPipelineSpec).
     *
     * Requires the RocksDB state store provider
-    * (`GraftSession.enableRocksDbState`) — transformWithState refuses the
+    * (`GraftSession.RocksDbState`) — transformWithState refuses the
     * default HDFS-backed provider by design.
     *
     * Input must be watermarked on `timestamp` before calling. Output mode:

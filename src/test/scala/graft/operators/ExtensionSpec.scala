@@ -113,25 +113,6 @@ class ExtensionSpec extends SparkSpec {
     assert(floods.isEmpty, s"release warned: ${floods.take(3)}")
   }
 
-  /** Messages the root logger receives, from any thread, while `f` runs. */
-  private def logMessagesDuring(f: => Unit): Seq[String] = {
-    import org.apache.logging.log4j.LogManager
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new AbstractAppender("graft-capture", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        seen.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
-    val root = LogManager.getRootLogger.asInstanceOf[Logger]
-    root.addAppender(capture)
-    try f finally { root.removeAppender(capture); capture.stop() }
-    scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala.toSeq
-  }
-
   test("scoped{} releases only its own cuts, leaving outer cuts alive") {
     val docs = spark.read.parquet(s"$sf/documents.parquet").limit(100)
     graft.util.Checkpoints.releaseAll()

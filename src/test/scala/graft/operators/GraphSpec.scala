@@ -260,14 +260,14 @@ class GraphSpec extends SparkSpec {
       "— identical answers on every path") {
     val star = Seq((1L, 9L), (2L, 9L), (3L, 9L), (4L, 9L)).toDF("src", "dst")
     val k = "spark.graft.hits.eagerCutMaxEdges"
-    val old = spark.conf.getOption(k)
-    def run(): Map[Long, (Long, Long)] =
-      Graph.hitsFixedPoint(star, iters = 3, scale = 1000000L)
-        .as[(Long, Long, Long)].collect().map(t => t._1 -> (t._2, t._3)).toMap
-    try {
-      spark.conf.set(k, "0") // eager path disabled: the r15 lazy shape
-      val lazyR = run()
-      spark.conf.set(k, "1000000") // 4 edges << threshold: per-round cuts
+    def run(maxEdges: String): Map[Long, (Long, Long)] =
+      graft.GraftSession.withConfs(spark, k -> maxEdges) {
+        Graph.hitsFixedPoint(star, iters = 3, scale = 1000000L)
+          .as[(Long, Long, Long)].collect().map(t => t._1 -> (t._2, t._3)).toMap
+      }
+    val lazyR = run("0") // eager path disabled: the r15 lazy shape
+    // 4 edges << threshold: per-round cuts
+    graft.GraftSession.withConfs(spark, k -> "1000000") {
       val eagerDf = Graph.hitsFixedPoint(star, iters = 3, scale = 1000000L)
       // the eager path's returned plan roots at materialized cuts — the
       // exponential lazy prefix is gone from the final query
@@ -277,12 +277,9 @@ class GraphSpec extends SparkSpec {
       val eagerR = eagerDf
         .as[(Long, Long, Long)].collect().map(t => t._1 -> (t._2, t._3)).toMap
       assert(eagerR == lazyR, "cut cadence changed the HITS answer")
-      spark.conf.set(k, "2") // 4 edges > threshold: lazy again
-      assert(run() == lazyR, "above-threshold path changed the answer")
-    } finally old match {
-      case Some(v) => spark.conf.set(k, v)
-      case None => spark.conf.unset(k)
     }
+    // 4 edges > threshold: lazy again
+    assert(run("2") == lazyR, "above-threshold path changed the answer")
   }
 
   test("degreeAssortativity: star is perfectly disassortative, clique NaN") {

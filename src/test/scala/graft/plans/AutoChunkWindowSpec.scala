@@ -10,25 +10,13 @@ import org.apache.spark.sql.functions._
 class AutoChunkWindowSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
-    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit =
+    graft.GraftSession.withConfs(spark, kvs: _*)(body)
 
   private def freshTable(t: String)(writer: => Unit): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    val loc = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    if (loc.exists()) rm(loc)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t))
     writer
   }
 
@@ -92,8 +80,7 @@ class AutoChunkWindowSpec extends SparkSpec {
     withConfs(
       "spark.sql.cbo.enabled" -> "true",
       "spark.graft.autoChunk.minRows" -> "1000",
-      "spark.graft.autoChunk.perKeyRows" -> "1000000", // avg signal OFF
-      "spark.graft.autoChunk.hotShare" -> "0.2") {
+      "spark.graft.autoChunk.perKeyRows" -> "1000000") { // avg signal OFF
       val df = runSum(t)
       assert(chunked(df),
         s"histogram heavy hitter must fire:\n${df.queryExecution.optimizedPlan}")
@@ -552,7 +539,7 @@ class AutoChunkWindowSpec extends SparkSpec {
       // Set[Row] equality is bitwise on doubles — nothing re-associates in
       // a sliding frame, so exact equality IS the claim
       assert(q.collect().toSet == want, "sliding rewrite changed the answer")
-      // DOUBLE sliding sum fires too — same reasoning, no allowFloat needed
+      // DOUBLE sliding sum fires too — same reasoning, no FP gate
       val fp = "graft_autochunk_fp_slide"
       freshTable(fp) {
         spark.range(10000L).select(
@@ -768,34 +755,21 @@ class AutoChunkWindowSpec extends SparkSpec {
       "spark.graft.autoChunk.minRows" -> "1000",
       "spark.graft.autoChunk.perKeyRows" -> "1000",
       "spark.graft.autoChunk.chunks" -> "8") {
-      // default config: the rewrite re-associates addition, so a Float/
-      // Double sum must NOT be touched — an optimizer rule can never
-      // change an answer, even in ulps
-      assert(!chunked(runSum(t)), "double sum must stay plain by default")
+      // the rewrite re-associates addition, so a Float/Double sum must
+      // NOT be touched — an optimizer rule can never change an answer,
+      // even in ulps. FP sums have no opt-in: setting the old allowFloat
+      // key changes nothing.
+      assert(!chunked(runSum(t)), "double sum must stay plain")
+      withConfs("spark.graft.autoChunk.allowFloat" -> "true") {
+        assert(!chunked(runSum(t)),
+          "double sum must stay plain even with allowFloat=true set")
+      }
       // min/max never re-combine values — they fire on doubles regardless
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("k")).orderBy(col("o"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val mx = spark.table(t).withColumn("run", max(col("v")).over(w))
       assert(chunked(mx), "double max must still fire")
-      withConfs("spark.graft.autoChunk.allowFloat" -> "true") {
-        val df = runSum(t)
-        assert(chunked(df), "allowFloat=true must let the double sum fire")
-        // documented tolerance: last-ulps reassociation only
-        var want: Map[Long, Double] = null
-        withConfs("spark.graft.autoChunk.enabled" -> "false") {
-          want = runSum(t).select(col("o"), col("run"))
-            .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        }
-        val got = df.select(col("o"), col("run"))
-          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        assert(got.keySet == want.keySet)
-        val maxRel = got.map { case (o, g) =>
-          val w0 = want(o)
-          if (w0 == 0.0) math.abs(g) else math.abs(g - w0) / math.abs(w0)
-        }.max
-        assert(maxRel < 1e-9, s"FP drift beyond reassociation ulps: $maxRel")
-      }
     }
   }
 
@@ -1150,8 +1124,7 @@ class AutoChunkWindowSpec extends SparkSpec {
       assert(q.collect().toSet == want, "census rewrite changed the answer")
       // KEYED window on the same bare parquet (r15, VERDICT r14 #1):
       // the sketch probe in the census scan proves avg-hotness (4 keys
-      // x 5000 rows vs perKeyRows=1000) — fires without ANALYZE; with
-      // the keyed probe switched off it stays ANALYZE-gated as in r14
+      // x 5000 rows vs perKeyRows=1000) — fires without ANALYZE
       def keyed = t.withColumn("run", sum(col("v")).over(
         Window.partitionBy(col("k")).orderBy(col("o"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -1163,15 +1136,6 @@ class AutoChunkWindowSpec extends SparkSpec {
       }
       assert(keyed.collect().toSet == wantK,
         "keyed census rewrite changed the answer")
-      withConfs("spark.graft.autoChunk.keyedCensus" -> "false") {
-        assert(!chunked(keyed),
-          "keyedCensus=false must keep keyed windows ANALYZE-gated")
-      }
-      // census switched off -> plain
-      withConfs("spark.graft.autoChunk.census" -> "false") {
-        assert(!chunked(t.withColumn("run", sum(col("v")).over(wg))),
-          "census=false must keep the global window plain")
-      }
       // size threshold not met -> plain (no census job either)
       withConfs("spark.graft.autoChunk.censusMinBytes" -> "1099511627776") {
         assert(!chunked(t.withColumn("run", sum(col("v")).over(wg))),
@@ -1188,7 +1152,7 @@ class AutoChunkWindowSpec extends SparkSpec {
     // 20k rows: 60% land on key 0, the rest spread over ~8000 distinct
     // keys — rows/ndv ~ 2.5, so the avg-hot signal CANNOT fire under
     // perKeyRows=1e6 and ONLY the ApproxTopK heavy-hitter estimate can
-    // (key 0's share 0.6 >= hotShare 0.2). This is THE latest-record-
+    // (key 0's share 0.6 >= the 0.2 HotShare). This is THE latest-record-
     // per-hot-key ingest shape on bare, never-ANALYZEd parquet.
     spark.range(20000L).select(
         when(col("id") % 10 < 6, lit(0L)).otherwise(col("id")).as("k"),
@@ -1321,20 +1285,11 @@ class AutoChunkWindowSpec extends SparkSpec {
         "first planning must census once")
       assert(chunked(q))
       assert(AutoChunkWindow.censusRuns.get == r0 + 1,
-        "same plan, default TTL: the cache must answer without a scan")
+        "same plan: the cache must answer without a scan")
       AutoChunkWindow.invalidateCensus()
       assert(chunked(q))
       assert(AutoChunkWindow.censusRuns.get == r0 + 2,
         "invalidateCensus() must force a re-census on next planning")
-      withConfs("spark.graft.autoChunk.censusTtlSec" -> "1") {
-        Thread.sleep(1200) // the r0+2 entry is now older than the TTL
-        assert(chunked(q))
-        assert(AutoChunkWindow.censusRuns.get == r0 + 3,
-          "an entry older than censusTtlSec must re-census")
-        assert(chunked(q))
-        assert(AutoChunkWindow.censusRuns.get == r0 + 3,
-          "a fresh entry inside the TTL must be served from cache")
-      }
     }
   }
 
@@ -1479,7 +1434,7 @@ class AutoChunkWindowSpec extends SparkSpec {
         }
         assert(g.collect().toSet == wantG, "grand-total rewrite changed the answer")
       }
-      // gated kind: a double sum without allowFloat stays plain
+      // gated kind: a double sum stays plain
       val fp = spark.table(t).withColumn("tot",
         sum(col("v").cast("double")).over(wk))
       assert(!windowless(fp), "FP full-frame sum must stay plain")
@@ -1595,13 +1550,14 @@ class AutoChunkWindowSpec extends SparkSpec {
         want = q.collect().toSet
       }
       assert(q.collect().toSet == want, "hot-key split changed the answer")
-      // kill switch: whole-relation chunking, no Union (the r15 shape)
-      withConfs("spark.graft.autoChunk.hotSplit" -> "false") {
+      // no key reaches hotSplitMinRows: whole-relation chunking, no Union
+      // (the r15 shape)
+      withConfs("spark.graft.autoChunk.hotSplitMinRows" -> Long.MaxValue.toString) {
         val p2 = q.queryExecution.optimizedPlan
         assert(p2.collect {
             case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
           }.isEmpty && p2.toString.contains("__graft_chunk"),
-          s"hotSplit=false must chunk the whole relation:\n$p2")
+          s"hotSplitMinRows=Long.MaxValue must chunk the whole relation:\n$p2")
         assert(q.collect().toSet == want,
           "whole-relation chunking changed the answer")
       }
@@ -1754,7 +1710,6 @@ class AutoChunkWindowSpec extends SparkSpec {
       "spark.sql.cbo.enabled" -> "true",
       "spark.graft.autoChunk.minRows" -> "1000",
       "spark.graft.autoChunk.perKeyRows" -> "1000000", // avg signal OFF
-      "spark.graft.autoChunk.hotShare" -> "0.2",
       "spark.graft.autoChunk.hotSplitMinRows" -> "1000", // key 0: ~3000
       "spark.graft.autoChunk.censusMinBytes" -> "1", // census WOULD be allowed
       "spark.graft.autoChunk.chunks" -> "8") {
@@ -1791,13 +1746,14 @@ class AutoChunkWindowSpec extends SparkSpec {
         want = q.collect().toSet
       }
       assert(q.collect().toSet == want, "catalog hot split changed the answer")
-      // kill switch: whole-relation chunking, no Union (the r16 shape)
-      withConfs("spark.graft.autoChunk.hotSplit" -> "false") {
+      // no key reaches hotSplitMinRows: whole-relation chunking, no Union
+      // (the r16 shape)
+      withConfs("spark.graft.autoChunk.hotSplitMinRows" -> Long.MaxValue.toString) {
         val p2 = q.queryExecution.optimizedPlan
         assert(p2.collect {
             case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
           }.isEmpty && p2.toString.contains("__graft_chunk"),
-          s"hotSplit=false must chunk the whole relation:\n$p2")
+          s"hotSplitMinRows=Long.MaxValue must chunk the whole relation:\n$p2")
         assert(q.collect().toSet == want,
           "whole-relation chunking changed the answer")
       }

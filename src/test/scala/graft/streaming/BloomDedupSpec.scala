@@ -12,17 +12,14 @@ class BloomDedupSpec extends SparkSpec {
 
   private def runDedup(batches: Seq[Seq[Doc]], nShards: Int = 8,
       mBits: Int = 1 << 14): (Seq[(Long, String)], Seq[Long]) = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    graft.GraftSession.enableRocksDbState(spark)
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val ms = MemoryStream[Doc]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-bloomdedup").toString
-    val q = BloomDedup.dedup(ms.toDS(), nShards = nShards, mBits = mBits)
-      .toDF().writeStream.outputMode("append").format("memory")
-      .queryName("bloom_dedup_spec_t").option("checkpointLocation", ckpt).start()
-    try {
+    graft.GraftSession.withConfs(spark, graft.GraftSession.RocksDbState) {
+      implicit val sqlCtx = spark.sqlContext
+      import spark.implicits._
+      val ms = MemoryStream[Doc]
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-bloomdedup").toString
+      val q = BloomDedup.dedup(ms.toDS(), nShards = nShards, mBits = mBits)
+        .toDF().writeStream.outputMode("append").format("memory")
+        .queryName("bloom_dedup_spec_t").option("checkpointLocation", ckpt).start()
       val stateRows = try {
         batches.map { b =>
           ms.addData(b.toIndexedSeq)
@@ -33,9 +30,6 @@ class BloomDedupSpec extends SparkSpec {
       val out = spark.table("bloom_dedup_spec_t")
         .as[(Long, String)].collect().toSeq.sorted
       (out, stateRows)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 

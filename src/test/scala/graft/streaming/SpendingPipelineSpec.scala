@@ -318,10 +318,7 @@ class SpendingPipelineSpec extends SparkSpec {
       SessionEvent(c, java.sql.Timestamp.valueOf(t), a)
     // transformWithState refuses the default HDFS provider; run this query
     // under RocksDB and restore the session's backend afterwards
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    graft.GraftSession.enableRocksDbState(spark)
-    try {
+    graft.GraftSession.withConfs(spark, graft.GraftSession.RocksDbState) {
       val ms = MemoryStream[SessionEvent]
       val sessions = Sessionize.transformWithStateStreaming(
         ms.toDS().withWatermark("timestamp", "10 minutes"))
@@ -352,9 +349,6 @@ class SpendingPipelineSpec extends SparkSpec {
         .map(s => (s.customer_id, s.total_spent, s.n_events)).toSet
       assert(got == Set(("1", 20.0, 4), ("2", 4.0, 1)),
         "late 11:00 row dropped; in-watermark out-of-order 12:05 merged")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 
@@ -383,10 +377,7 @@ class SpendingPipelineSpec extends SparkSpec {
             emitted((s.customer_id, s.session_start.getTime)) = (s.total_spent, s.n_events)))
         .start()
     }
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    graft.GraftSession.enableRocksDbState(spark)
-    try {
+    graft.GraftSession.withConfs(spark, graft.GraftSession.RocksDbState) {
       writeFile("a.json", Seq(
         tx("t1", "1", "2025-03-10T12:00:00Z", 10.0),
         tx("t2", "1", "2025-03-10T12:10:00Z", 5.0)))
@@ -403,9 +394,6 @@ class SpendingPipelineSpec extends SparkSpec {
       val startMs = java.time.Instant.parse("2025-03-10T12:00:00Z").toEpochMilli
       assert(emitted.toMap == Map(("1", startMs) -> ((17.0, 3))),
         s"restart broke TWS state recovery: $emitted")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 
@@ -505,14 +493,13 @@ class SpendingPipelineSpec extends SparkSpec {
   }
 
   test("checkpoint recovery under the RocksDB state store backend") {
-    graft.GraftSession.enableRocksDbState(spark)
-    try recoveryRoundTrip("rocks")
-    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    graft.GraftSession.withConfs(spark, graft.GraftSession.RocksDbState) {
+      recoveryRoundTrip("rocks")
+    }
   }
 
   test("golden B under the RocksDB state store backend") {
-    graft.GraftSession.enableRocksDbState(spark)
-    try {
+    graft.GraftSession.withConfs(spark, graft.GraftSession.RocksDbState) {
       val source = streamOf(Seq(
         tx("t1", "1", "2025-03-10T12:01:00Z", 100.0),
         tx("t1", "1", "2025-03-10T12:01:00Z", 100.0), // duplicate
@@ -523,8 +510,6 @@ class SpendingPipelineSpec extends SparkSpec {
       val got = spark.table("rocksdb_b").collect()
         .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
       assert(got == Set(("1", "2025-03-10", 100.0), ("2", "2025-03-10", 50.0)))
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
