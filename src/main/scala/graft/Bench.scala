@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
 
   /** One timed execution: elapsed seconds, wall-clock start, error if any. */
-  private final case class Sample(sec: Double, atMs: Long, err: Option[String])
+  private[graft] final case class Sample(sec: Double, atMs: Long, err: Option[String])
 
   /** Task-metrics accumulator for the soak stages: total shuffle bytes
     * written/read, spill, and the peak single-task execution memory — the
@@ -79,17 +79,10 @@ object Bench {
     soakOn = sys.env.getOrElse("SPARK_GRAFT_SOAK", "1") != "0",
     outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json"))
 
-  /** The bench body, callable in-process (see [[Gate]]); `main` maps the
-    * SPARK_GRAFT_* env recipe onto these parameters. */
-  def run(sfDir: String, cpus: Int, soakOnly: Boolean, soakOn: Boolean,
-      outPath: String): Unit = {
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), shufflePartitions = cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark) // production parity: rules + SQL fns on
-
-    // warmup: touch every table + JIT the scan/agg paths
+  /** Warm-up shared with [[TimeQueries]]: touch every table + JIT the
+    * scan/agg paths, so JIT/codegen/page-cache costs don't land on the
+    * first timed query. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
     graft.sources.Tables.all.foreach { t =>
       try {
         val df = if (t == "events") graft.sources.Tables.events(spark, sfDir)
@@ -99,26 +92,37 @@ object Bench {
     }
     try SparkEntry.queries("q1_lineitem_agg")(spark, sfDir).count()
     catch { case _: Throwable => () }
+  }
 
-    def runOnceIn(fn: (SparkSession, String) => DataFrame, dir: String): Sample = {
-      val atMs = System.currentTimeMillis()
-      val t0 = System.nanoTime()
-      // noop sink materializes every output column — a count() would let
-      // Catalyst prune the very expressions being benchmarked. scoped{}
-      // releases the query's lineage-cut checkpoint blocks right after the
-      // action (dozens of queries in one session would otherwise
-      // accumulate dead blocks); the non-blocking release is noise-level
-      // inside the timed region.
-      val err = try {
-        graft.util.Checkpoints.scoped {
-          fn(spark, dir).write.mode("overwrite").format("noop").save()
-        }
-        None
-      } catch { case t: Throwable => Some(t.toString) }
-      Sample((System.nanoTime() - t0) / 1e9, atMs, err)
-    }
+  /** One timed execution of a registered query, shared with
+    * [[TimeQueries]]. The noop sink materializes every output column — a
+    * count() would let Catalyst prune the very expressions being
+    * benchmarked. scoped{} releases the query's lineage-cut checkpoint
+    * blocks right after the action (dozens of queries in one session would
+    * otherwise accumulate dead blocks); the non-blocking release is
+    * noise-level inside the timed region. */
+  private[graft] def timeNoop(spark: SparkSession,
+      fn: (SparkSession, String) => DataFrame, dir: String): Sample = {
+    val atMs = System.currentTimeMillis()
+    val t0 = System.nanoTime()
+    val err = try {
+      graft.util.Checkpoints.scoped {
+        fn(spark, dir).write.mode("overwrite").format("noop").save()
+      }
+      None
+    } catch { case t: Throwable => Some(t.toString) }
+    Sample((System.nanoTime() - t0) / 1e9, atMs, err)
+  }
+
+  /** The bench body, callable in-process (see [[Gate]]); `main` maps the
+    * SPARK_GRAFT_* env recipe onto these parameters. */
+  def run(sfDir: String, cpus: Int, soakOnly: Boolean, soakOn: Boolean,
+      outPath: String): Unit = {
+    val spark = GraftSession.local(cpus)
+    warmUp(spark, sfDir)
+
     def runOnce(fn: (SparkSession, String) => DataFrame): Sample =
-      runOnceIn(fn, sfDir)
+      timeNoop(spark, fn, sfDir)
 
     // Contention-proof timing (two rounds of misgraded records taught this):
     // consecutive samples of one query share a machine-contention window, so
@@ -320,7 +324,7 @@ object Bench {
           // r12: the RANGE rolling window (ord-block stage, no sequence
           // machinery) — the time-window face's scaling evidence
           "ext_window_chunked_range").flatMap(n => SparkEntry.queries.get(n).map(n -> _))
-        def pass(dir: String) = core.map { case (n, fn) => n -> runOnceIn(fn, dir) }
+        def pass(dir: String) = core.map { case (n, fn) => n -> timeNoop(spark, fn, dir) }
         val small = pass(smallDir) ++ pass(smallDir)
         val big = pass(sfDir) ++ pass(sfDir)
         def best(ss: Seq[(String, Sample)]): Map[String, Double] =
@@ -420,20 +424,16 @@ object Bench {
       // rule executed, not just stated; AQE's coalescing is paused for the
       // stage because its 64 MB advisory target would re-merge the
       // partitions right back into the spilling regime.
-      val partsKey = "spark.sql.shuffle.partitions"
-      val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-      val parts0 = spark.conf.get(partsKey)
-      val coalesce0 = spark.conf.get(coalesceKey)
-      spark.conf.set(partsKey, "128")
-      spark.conf.set(coalesceKey, "false")
-      val s1 = stage("pipeline_20m", perStage = true) {
-        // generate -> wire-encode -> parse -> dedup -> daily rollup, 100x
-        // the graded s7 volume; count() is the single materializing action
-        Spend.dailySpend(Spend.dedupe(Ingest.wellFormed(Ingest.parseTransactions(
-          DataGen.transactionsJson(spark, 20000000L))))).count()
+      val wide128 = Seq("spark.sql.shuffle.partitions" -> "128",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+      val s1 = GraftSession.withConfs(spark, wide128: _*) {
+        stage("pipeline_20m", perStage = true) {
+          // generate -> wire-encode -> parse -> dedup -> daily rollup, 100x
+          // the graded s7 volume; count() is the single materializing action
+          Spend.dailySpend(Spend.dedupe(Ingest.wellFormed(Ingest.parseTransactions(
+            DataGen.transactionsJson(spark, 20000000L))))).count()
+        }
       }
-      spark.conf.set(partsKey, parts0)
-      spark.conf.set(coalesceKey, coalesce0)
       val s2 = stage("dedup_cc_100k") {
         // 100k docs in 5-doc near-dup groups: banded candidates -> CC
         // clusters -> canonical keep; ~80k losers dropped if recall holds
@@ -691,11 +691,6 @@ object Bench {
         (col("id") % 97).cast("double").as("amount"))
       def dimTable = spark.range(1000000L).select(col("id").as("key"),
         md5(col("id").cast("string")).as("dim_tag"))
-      val bcastKey = "spark.sql.autoBroadcastJoinThreshold"
-      val skewKey = "spark.sql.adaptive.skewJoin.enabled"
-      val bcast0 = spark.conf.get(bcastKey)
-      val skew0 = spark.conf.get(skewKey)
-      spark.conf.set(bcastKey, "-1")
       // plain and salted run at 128-way parallelism with AQE's skew split
       // AND partition coalescing off (the shapes AQE can't touch; coalescing
       // would merge the salted probe's partitions straight back into the
@@ -705,35 +700,34 @@ object Bench {
       // key no matter the partition count (one task still holds 60% of the
       // probe rows), while salting spreads that key over 32 salts. The aqe
       // stage keeps stock session settings — its point is what AQE does on
-      // its own.
-      spark.conf.set(skewKey, "false")
-      spark.conf.set(partsKey, "128")
-      spark.conf.set(coalesceKey, "false")
-      val s4 = stage("skew_join_plain_20m", perStage = true) {
-        bigSkewed.join(dimTable, "key").count()
+      // its own. No stage may broadcast the dim side.
+      val (s4, s5, s6) = GraftSession.withConfs(spark,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val noSkewSplit = wide128 :+ ("spark.sql.adaptive.skewJoin.enabled" -> "false")
+        val plainJoin = GraftSession.withConfs(spark, noSkewSplit: _*) {
+          stage("skew_join_plain_20m", perStage = true) {
+            bigSkewed.join(dimTable, "key").count()
+          }
+        }
+        val aqeJoin = GraftSession.withConfs(spark,
+            "spark.sql.adaptive.skewJoin.enabled" -> "true") {
+          stage("skew_join_aqe_20m", perStage = true) {
+            bigSkewed.join(dimTable, "key").count()
+          }
+        }
+        val saltedJoin = GraftSession.withConfs(spark, noSkewSplit: _*) {
+          stage("skew_join_salted_20m", perStage = true) {
+            // dim side spread over 128 partitions BEFORE the 32x replication
+            // explode: otherwise the handful of replication map tasks (1M rows
+            // in, 32M out across 32 tasks) become the stage's max task and bury
+            // the reduce-side skew signal this stage exists to measure
+            graft.operators.Skew.saltedJoin(
+                bigSkewed, dimTable.repartition(128), Seq("key"), saltBuckets = 32)
+              .count()
+          }
+        }
+        (plainJoin, aqeJoin, saltedJoin)
       }
-      spark.conf.set(partsKey, parts0)
-      spark.conf.set(coalesceKey, coalesce0)
-      spark.conf.set(skewKey, "true")
-      val s5 = stage("skew_join_aqe_20m", perStage = true) {
-        bigSkewed.join(dimTable, "key").count()
-      }
-      spark.conf.set(skewKey, "false")
-      spark.conf.set(partsKey, "128")
-      spark.conf.set(coalesceKey, "false")
-      val s6 = stage("skew_join_salted_20m", perStage = true) {
-        // dim side spread over 128 partitions BEFORE the 32x replication
-        // explode: otherwise the handful of replication map tasks (1M rows
-        // in, 32M out across 32 tasks) become the stage's max task and bury
-        // the reduce-side skew signal this stage exists to measure
-        graft.operators.Skew.saltedJoin(
-            bigSkewed, dimTable.repartition(128), Seq("key"), saltBuckets = 32)
-          .count()
-      }
-      spark.conf.set(partsKey, parts0)
-      spark.conf.set(coalesceKey, coalesce0)
-      spark.conf.set(skewKey, skew0)
-      spark.conf.set(bcastKey, bcast0)
 
       // ---- window skew: the pathology AQE can't touch. A running sum
       // PARTITION BY key puts a 60%-hot key's 12M rows on ONE task (sort +

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the executed plan of registered queries.
   *
   * `runMain graft.Explain <sfDir> <name>[,<name>...]` — the fast way to
@@ -21,11 +19,7 @@ object Explain {
     val sfDir = args(0)
     val names = args(1)
     val out = if (args.length >= 4) Some((args(2), args(3))) else None
-    val spark = GraftSession.configure(
-      SparkSession.builder().master("local[8]"), shufflePartitions = 8)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.local(8)
     names.split(",").map(_.trim).foreach { n =>
       println(s"===== $n =====")
       try {

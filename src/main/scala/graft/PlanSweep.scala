@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, JsonToStructs}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -46,11 +45,7 @@ object PlanSweep extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outFile = args(1)
-    val spark = GraftSession.configure(
-      SparkSession.builder().master("local[8]"), shufflePartitions = 8)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.local(8)
 
     def count(hay: String, needle: String): Int = {
       var n = 0; var i = hay.indexOf(needle)

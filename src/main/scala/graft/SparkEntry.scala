@@ -1169,9 +1169,11 @@ object SparkEntry {
     // .runningSumChunked]]): the WINDOW-shape skew fix — a hot partition
     // key serializes `sum() OVER (PARTITION BY key ORDER BY ord)` on one
     // task, the one skew pathology neither AQE nor partial aggregation
-    // touches; the decomposition (per-(key, chunk) totals -> exclusive
-    // chunk prefix -> local window + offset) must be indistinguishable
-    // from the plain window — the oracle IS the plain window
+    // touches. The verb builds that plain window and AutoChunkWindow's
+    // forced running arm decomposes it (per-(key, chunk) totals ->
+    // exclusive chunk prefix -> local window + offset); the answer must be
+    // indistinguishable from the plain window — the oracle IS the plain
+    // window
     "ext_window_chunked_sum" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
         round(col("value") * 100).cast("long").as("cents"))
@@ -1182,9 +1184,10 @@ object SparkEntry {
     }),
 
     // the min/max face of the same decomposition ([[graft.operators.Skew
-    // .runningAggChunked]]): running peak spend per user — prior-chunk
-    // offsets combine with greatest() and the FIRST chunk of each key has
-    // no offset at all (null-combining keeps it exact, no sentinel)
+    // .runningAggChunked]], the rule's forced running arm): running peak
+    // spend per user — prior-chunk offsets combine with greatest() and the
+    // FIRST chunk of each key has no offset at all (null-combining keeps
+    // it exact, no sentinel)
     "ext_window_chunked_max" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
         round(col("value") * 100).cast("long").as("cents"))
@@ -1277,15 +1280,15 @@ object SparkEntry {
       }
     }),
 
-    // chunk-parallel LAG/LEAD (r11, single-evaluation block form r12):
-    // navigation functions pay the same single-task hot-key SORT as
-    // running aggregates; laggedChunked gets the per-key sequence number
-    // from the chunk-parallel running count, assigns fixed-size sequence
-    // blocks, and duplicates each block's boundary rows into the neighbor
-    // block as donor context (ONE generator pass — no self-join, no
-    // second evaluation), so lag/lead re-run verbatim over (key, block)
-    // with every task bounded at B + n rows however hot the key. Oracle
-    // is the plain SQL lag/lead window.
+    // chunk-parallel LAG/LEAD: navigation functions pay the same
+    // single-task hot-key SORT as running aggregates. laggedChunked builds
+    // the plain lag/lead window and AutoChunkWindow's forced block arm
+    // takes it: the per-key sequence number from the chunked running
+    // count, fixed-size sequence blocks, and each block's boundary rows
+    // copied into the neighbor block as donor context (ONE Expand — no
+    // self-join, no second evaluation), so lag/lead re-run verbatim over
+    // (key, block) with every task bounded at B + n rows however hot the
+    // key. Oracle is the plain SQL lag/lead window.
     "ext_window_chunked_lag" -> ((s, dir) => {
       val base = Tables.events(s, dir).select(col("event_id"),
         col("user_id").as("k"), round(col("value") * 100).cast("long").as("cents"))
@@ -1299,16 +1302,17 @@ object SparkEntry {
         .orderBy(col("event_id"))
     }),
 
-    // chunk-parallel SLIDING FRAME (r12): `agg OVER (... ROWS BETWEEN k
+    // chunk-parallel SLIDING FRAME: `agg OVER (... ROWS BETWEEN k
     // PRECEDING AND CURRENT ROW)` — the rolling-feature window (rolling
     // spend over the last k events per user) — is the one window shape
     // the prefix decomposition can't touch (a sliding frame isn't a
     // prefix, and min/max have no prefix-difference form at all). The
-    // block machinery covers it: every row's whole frame is present
-    // inside its extended block (previous block's last k rows copied in
-    // as donors), so the aggregate re-runs verbatim, bit-identical for
-    // every type — nothing re-associates. Oracle is the plain SQL
-    // sliding window. Two aggs chained: exact sum (k=5) and min (k=3).
+    // rule's forced block arm covers it: every row's whole frame is
+    // present inside its extended block (previous block's last k rows
+    // copied in as donors), so the aggregate re-runs verbatim,
+    // bit-identical for every type — nothing re-associates. Oracle is the
+    // plain SQL sliding window. Two aggs chained: exact sum (k=5) and min
+    // (k=3).
     "ext_window_chunked_sliding" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
         round(col("value") * 100).cast("long").as("cents"))
@@ -1323,14 +1327,14 @@ object SparkEntry {
         .orderBy(col("event_id"))
     }),
 
-    // chunk-parallel RANGE FRAME (r12): the TIME-BASED rolling window —
+    // chunk-parallel RANGE FRAME: the TIME-BASED rolling window —
     // `sum OVER (... RANGE BETWEEN k PRECEDING AND CURRENT ROW)` over a
     // numeric ord (rolling last-500-event-ids spend per user here;
-    // rolling 24h spend over epoch seconds in production). Value-based
-    // frames block by ord RANGES directly (no sequence numbers), donors
-    // are the adjacent bands, extra donors are harmless, and ord ties
-    // are safe by construction (peers share a block). Oracle is the
-    // plain SQL RANGE window.
+    // rolling 24h spend over epoch seconds in production). The rule's
+    // forced ord-block arm blocks by ord RANGES directly (no sequence
+    // numbers), donors are the adjacent bands, extra donors are harmless,
+    // and ord ties are safe by construction (peers share a block). Oracle
+    // is the plain SQL RANGE window.
     "ext_window_chunked_range" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
         round(col("value") * 100).cast("long").as("cents"))
@@ -1663,8 +1667,9 @@ object SparkEntry {
     // chunk-parallel LAG ... IGNORE NULLS (r13): the forward-fill /
     // last-observation idiom. The nearest non-null can sit arbitrarily
     // far back — beyond any bounded donor band — so the BLOCK form can't
-    // express it; the NON-NULL SEQUENCE decomposition can: the chunked
-    // running count of the value column (count skips nulls) is each
+    // express it and the rule has no arm for it; the verb's own NON-NULL
+    // SEQUENCE decomposition can: the chunked running count of the value
+    // column (count skips nulls; the rule's forced running arm) is each
     // non-null row's index, and one (key, index) equi-join fetches the
     // n-th previous/next non-null — a hot key's rows spread across tasks
     // by (key, index) hash. Oracle is the plain IGNORE NULLS window.
@@ -1685,7 +1690,7 @@ object SparkEntry {
 
     // FORWARD FILL (r13): `last_value(v) IGNORE NULLS OVER (... ROWS
     // UNBOUNDED PRECEDING AND CURRENT ROW)` — THE imputation idiom for
-    // sparse feature columns — composes from the same machinery:
+    // sparse feature columns — composes from laggedIgnoreNullsChunked:
     // coalesce(v, lag(v, 1) IGNORE NULLS) is value-identical (a non-null
     // row fills with itself; a null row with the last non-null strictly
     // before it), so the hot key never pays a one-task sort here either.
@@ -1701,10 +1706,11 @@ object SparkEntry {
         .orderBy(col("event_id"))
     }),
 
-    // the MANUAL decimal leg of the same family (r13): runningAggChunked
-    // over a DECIMAL(12,2) money column — the verb casts the combined
-    // result back to the serial window's DECIMAL(22,2), and the chunk
-    // decomposition is exact because decimal addition is order-free
+    // the decimal leg of the same family (r13): runningAggChunked over a
+    // DECIMAL(12,2) money column — the rule's forced running arm fires
+    // once its stats scan proves no partial sum can overflow, casts the
+    // combined result back to the serial window's DECIMAL(22,2), and is
+    // exact because decimal addition is order-free
     "ext_window_chunked_decimal" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
         (round(col("value") * 100).cast("long").cast("decimal(12,2)") / 100)
@@ -1716,14 +1722,12 @@ object SparkEntry {
         .orderBy(col("event_id"))
     }),
 
-    // chunk-parallel RANK FAMILY (r11): under the unique-ord contract
-    // (event_id), row_number/percent_rank/cume_dist/ntile collapse to
-    // chunk-parallel sequence numbers + one per-key total — no task ever
-    // sorts a whole hot partition. r14: the AUTOMATIC twin exists too —
-    // AutoChunkWindow's rank-family arms are tie-EXACT (chunk-local
-    // replay of the original functions; peers never straddle chunks), so
-    // the old "stats can't prove tie-freeness" blocker is gone. The
-    // manual verb stays for stats-less pipelines that know their ords.
+    // chunk-parallel RANK FAMILY: row_number/percent_rank/cume_dist/
+    // ntile through AutoChunkWindow's forced rank arms — prior-chunk
+    // counts plus a chunk-local replay of each function and one per-key
+    // total, so no task ever sorts a whole hot partition; tie-EXACT
+    // (peers never straddle chunks). The verb serves stats-less pipelines
+    // that know their keys are hot.
     "ext_window_chunked_rank" -> ((s, dir) =>
       graft.operators.Skew.rankFamilyChunked(
           Tables.events(s, dir).select(col("event_id"),
@@ -1733,9 +1737,10 @@ object SparkEntry {
           col("percent_rank"), col("cume_dist"), col("ntile"))
         .orderBy(col("event_id"))),
 
-    // chunk-parallel FIRST/LAST VALUE (r11): the anchor-value face —
-    // values at sequence 1 and sequence n, two one-row-per-key donor
-    // joins instead of the hot key's one-task sort
+    // chunk-parallel FIRST/LAST VALUE: the anchor-value face — the rule's
+    // forced full-frame arm takes a per-key min/max of struct(ord, v)
+    // (partial-aggregated, no sort) and joins it back, instead of the hot
+    // key's one-task sort
     "ext_window_chunked_anchor" -> ((s, dir) =>
       graft.operators.Skew.anchorValuesChunked(
           Tables.events(s, dir).select(col("event_id"),
@@ -6453,8 +6458,8 @@ object SparkEntry {
     // state still live, making the drop GUARANTEED (the operator's
     // contract is one-sided — only within-watermark duplicates are
     // promised dropped). The batch half is the hot-key-safe latest-record
-    // step: chunk-parallel sequence numbers (rankFamilyChunked), latest =
-    // cume_dist 1.0 — no single task ever sorts a whole hot customer.
+    // step: rankFamilyChunked (AutoChunkWindow's forced rank arms), latest
+    // = cume_dist 1.0 — no single task ever sorts a whole hot customer.
     "stream_latest_record" -> ((s, dir) => {
       val deduped = runStream(s, "stream_latest_record_t", df =>
         df.withWatermark("timestamp", "4 hours")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time a SUBSET of registered queries with Bench's exact
   * methodology (noop sink so every output column materializes, scoped
   * lineage-cut release, min across interleaved passes) — the isolated
@@ -19,46 +17,24 @@ object TimeQueries {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).toSeq
     val passes = if (args.length >= 3) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), shufflePartitions = cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // A/B hook: SPARK_GRAFT_SET="k=v;k2=v2" sets session confs before the
     // passes — the toggle for conf-gated paths without a rebuild
     sys.env.get("SPARK_GRAFT_SET").foreach(_.split(";").filter(_.nonEmpty)
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
       })
-    // same warmup as Bench: touch every table + JIT the scan/agg paths
-    graft.sources.Tables.all.foreach { t =>
-      try {
-        val df = if (t == "events") graft.sources.Tables.events(spark, sfDir)
-        else graft.sources.Tables(spark, sfDir, t)
-        df.count()
-      } catch { case _: Throwable => () }
-    }
-    try SparkEntry.queries("q1_lineitem_agg")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    Bench.warmUp(spark, sfDir)
 
     val best = scala.collection.mutable.Map[String, Double]()
     for (p <- 1 to passes; n <- names) {
       spark.sparkContext.setJobDescription(s"time:$n pass $p")
-      val t0 = System.nanoTime()
-      val err = try {
-        graft.util.Checkpoints.scoped {
-          SparkEntry.queries(n)(spark, sfDir)
-            .write.mode("overwrite").format("noop").save()
-        }
-        None
-      } catch { case t: Throwable => Some(t.toString.take(200)) }
-      val sec = (System.nanoTime() - t0) / 1e9
-      err match {
-        case Some(e) => println(f"[pass $p] $n%-30s FAILED: $e")
+      val sample = Bench.timeNoop(spark, SparkEntry.queries(n)(_, _), sfDir)
+      sample.err match {
+        case Some(e) => println(f"[pass $p] $n%-30s FAILED: ${e.take(200)}")
         case None =>
-          println(f"[pass $p] $n%-30s $sec%8.3f s")
-          best(n) = math.min(best.getOrElse(n, Double.MaxValue), sec)
+          println(f"[pass $p] $n%-30s ${sample.sec}%8.3f s")
+          best(n) = math.min(best.getOrElse(n, Double.MaxValue), sample.sec)
       }
     }
     println(names.flatMap(n => best.get(n).map(s => f"$n=$s%.3f"))

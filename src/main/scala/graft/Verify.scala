@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,11 +15,7 @@ object Verify {
   /** The correctness-dump body, callable in-process (see [[Gate]]). */
   def run(sfDir: String, outDir: String, only: Option[Set[String]] = None,
       cpus: Int = 32): Unit = {
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark) // production parity: rules + SQL fns on
+    val spark = GraftSession.local(cpus) // production parity: rules + SQL fns on
     new java.io.File(outDir).mkdirs()
     val selected = only match {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))

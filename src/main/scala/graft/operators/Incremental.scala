@@ -21,9 +21,10 @@ import org.apache.spark.sql.types.DecimalType
   *  - reading back "the touched partitions" is a broadcast join against the
   *    increment's distinct dates on the PARTITION column — dynamic partition
   *    pruning skips every untouched directory at the scan;
-  *  - `partitionOverwriteMode=dynamic` makes the rewrite atomic per touched
-  *    partition: untouched `d=...` directories are never listed, read, or
-  *    rewritten.
+  *  - the `partitionOverwriteMode=dynamic` write option (scoped to the
+  *    one write; the session conf is untouched) makes the rewrite atomic
+  *    per touched partition: untouched `d=...` directories are never
+  *    listed, read, or rewritten.
   *
   * The aggregate columns follow the Exact rules (decimal sums, cast to
   * double only on serve) so the incremental path is bit-identical to a full
@@ -74,11 +75,9 @@ object Incremental {
     val merged = old.unionByName(inc)
       .groupBy(col("d"), col("event_type"))
       .agg(sum(col("n")).as("n"), sum(col("val_sum")).cast(Money).as("val_sum"))
-    val conf = spark.conf
-    val prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode(SaveMode.Overwrite).partitionBy("d").parquet(tableDir)
-    finally conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    merged.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("d").parquet(tableDir)
   }
 
   /** Serve the materialized rollup in oracle-comparable form. */

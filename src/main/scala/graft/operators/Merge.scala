@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   *
   * The 100 TB property is partition confinement: the merge touches ONLY
   * the partitions the update batch lands in. Implementation: dynamic
-  * partition overwrite (`partitionOverwriteMode=dynamic`) — the job reads
-  * the affected partitions' current rows (partition pruning makes that a
-  * directory-scoped scan), anti-joins the update keys (updates win), unions
+  * partition overwrite (the `partitionOverwriteMode=dynamic` write
+  * option) — the job reads the affected partitions' current rows
+  * (partition pruning makes that a directory-scoped scan), anti-joins the
+  * update keys (updates win), unions
   * the updates, and overwrites just those directories; every untouched
   * partition's files are left byte-identical on disk (spec-pinned via file
   * mtimes). A whole-table read-modify-rewrite would be correct and
@@ -40,8 +41,7 @@ object Merge {
     // unpersist only on the success path would leak the cached delta in
     // the block manager for the session lifetime if the staged write threw
     val u = updates.cache()
-    try graft.GraftSession.withConfs(spark,
-        "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+    try {
       // partition pruning: the IN-list of affected partition values keeps
       // the current-rows scan directory-scoped (a handful of dirs, not the
       // table). collect() here is bounded by the number of AFFECTED
@@ -57,8 +57,11 @@ object Merge {
       // The cut holds only the affected partitions' rows — delta-sized.
       val staged = graft.util.Checkpoints.cut(
         survivors.unionByName(u.select(survivors.columns.map(col): _*)))
+      // dynamic overwrite as a write option: scoped to this one write,
+      // the session conf is never touched
       staged.repartition(col(partCol))
-        .write.mode("overwrite").partitionBy(partCol).parquet(dir)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partCol).parquet(dir)
     } finally u.unpersist()
   }
 }

@@ -1,6 +1,8 @@
 package graft.operators
 
+import graft.plans.AutoChunkWindow.forceChunks
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for heavy-hitter keys.
@@ -10,9 +12,17 @@ import org.apache.spark.sql.functions._
   * (the planner exchanges on (key, value) first and ships partial counts),
   * so those shapes stay plain `groupBy`. What remains here are the shapes
   * the planner cannot split: a join whose hot key AQE's runtime skew split
-  * can't reach ([[saltedJoin]]), and windows partitioned by a hot key (the
-  * chunk and block decompositions below), plus [[keyProfile]], the
-  * diagnostic that finds the hot key.
+  * can't reach ([[saltedJoin]]), and windows partitioned by a hot key, plus
+  * [[keyProfile]], the diagnostic that finds the hot key.
+  *
+  * The window verbs (`*Chunked`) have ONE implementation: each builds the
+  * plain Spark window it documents and hands it to
+  * [[graft.plans.AutoChunkWindow]]'s forced entry, which decomposes it
+  * with the caller's `chunks` — the optimizer rule's own algebra, without
+  * its hotness gates. A shape the rule cannot decompose exactly stays the
+  * plain window. Only [[laggedIgnoreNullsChunked]] keeps code of its own
+  * (the rule has no IGNORE NULLS lag arm); its running count comes
+  * through the rule too.
   */
 object Skew {
 
@@ -66,30 +76,23 @@ object Skew {
     *
     * puts EVERY row of a hot key on one task — the task sorts and scans
     * the key's entire history serially, and at 100 TB the hottest
-    * customer IS the stage's wall clock. This verb decomposes the prefix
-    * sum exactly, because addition is associative:
+    * customer IS the stage's wall clock. This verb builds exactly that
+    * plain window and hands it to [[graft.plans.AutoChunkWindow]]'s
+    * forced entry, which decomposes the prefix sum over `chunks` ord
+    * ranges per key (per-(key, chunk) totals, their exclusive prefix, and
+    * a chunk-local running sum plus the chunk's offset) — the rule's
+    * running arm, with the hotness gates skipped and ONE exact stats scan
+    * of the input (row count and ord range) in their place.
     *
-    *  1. chunk each key's rows by a MONOTONE function of `ord` (fixed
-    *     [lo, hi] range split into `chunks` slices; monotone in ord is the
-    *     only requirement — balance only affects speed, never the answer);
-    *  2. per-(key, chunk) totals — one parallel hash aggregate;
-    *  3. exclusive prefix of the totals per key — a window over at most
-    *     `chunks` ROWS per key, thousands of times smaller than the data;
-    *  4. local running sum within each (key, chunk) — the big window, now
-    *     partitioned by (key, chunk), so a hot key spreads over `chunks`
-    *     tasks — plus the chunk's offset from step 3.
+    * Exact for integral values; a DECIMAL sum decomposes when the stats
+    * scan proves no partial sum can overflow the serial window's
+    * accumulator. A Float/Double sum stays the plain window (addition
+    * re-associated across chunks could move the last ulps), as does any
+    * ord the chunk function cannot read (not numeric or timestamp) and an
+    * all-null ord column. Determinism contract: `ord` unique within each
+    * key (the same as the as-of and top-k tie rules).
     *
-    * result = local prefix + exclusive chunk offset, exact for any
-    * integer-typed value column (longs end to end; no float reassociation).
-    * Determinism contract: `ord` unique within each key (same as the as-of
-    * and top-k tie rules); `ord` must be numeric (cast timestamps to
-    * epoch first). Driver state: ONE (min, max) row — the same bounded
-    * two-scalar collect the exact-quantile refinement documents.
-    *
-    * Output: the input columns plus `resultCol`. Not a drop-in for every
-    * frame — UNBOUNDED PRECEDING running frames only (the decomposable
-    * case); sliding frames keep the plain window.
-    */
+    * Output: the input columns plus `resultCol`. */
   def runningSumChunked(
       df: DataFrame,
       keyCol: String,
@@ -100,12 +103,10 @@ object Skew {
     runningAggChunked(df, keyCol, ordCol, valueCol, resultCol, "sum", chunks)
 
   /** The general form of [[runningSumChunked]] for any ASSOCIATIVE running
-    * aggregate — `agg` one of `sum`, `min`, `max`, `count` (the
-    * decomposable UNBOUNDED-PRECEDING frames; min/max offsets combine with
-    * least/greatest instead of `+`, and the first chunk of each key has no
-    * offset at all — a null-combining least/greatest keeps it exact;
-    * count's chunk totals re-combine by SUM, and a running count is never
-    * null, so only the absent first-chunk offset needs a coalesce). */
+    * aggregate — `agg` one of `sum`, `min`, `max`, `count` over the
+    * UNBOUNDED-PRECEDING frame, decomposed by the same rule arm (min/max
+    * offsets combine with least/greatest, count's chunk totals re-combine
+    * by sum; the window aggregate's null discipline is kept). */
   def runningAggChunked(
       df: DataFrame,
       keyCol: String,
@@ -113,178 +114,32 @@ object Skew {
       valueCol: String,
       resultCol: String,
       agg: String = "sum",
-      chunks: Int = 32): DataFrame =
-    runningAggChunkedWithTotal(df, keyCol, ordCol, valueCol, resultCol, agg,
-      chunks)._1
-
-  /** [[runningAggChunked]] plus the input's ROW COUNT, read off the SAME
-    * one-row stats job the chunk range already runs (min, max, count in
-    * one scan — zero extra jobs). The block verbs below size B from it,
-    * so they no longer pay a separate `df.count()` scan on top of the
-    * chunk machinery's two (VERDICT r12 #2/#4 — cosmetic at sf0.1, a
-    * full extra pass of the input at 100 TB). */
-  private def runningAggChunkedWithTotal(
-      df: DataFrame,
-      keyCol: String,
-      ordCol: String,
-      valueCol: String,
-      resultCol: String,
-      agg: String = "sum",
-      chunks: Int = 32): (DataFrame, Long) = {
-    require(chunks >= 2 && chunks <= 4096, s"chunks out of range: $chunks")
+      chunks: Int = 32): DataFrame = {
+    requireChunks(chunks)
     require(Set("sum", "min", "max", "count")(agg),
       s"runningAggChunked supports sum/min/max/count, got '$agg'")
-    Seq(keyCol, ordCol, valueCol).foreach(c => require(df.columns.contains(c),
-      s"column '$c' not found in ${df.columns.mkString("[", ",", "]")}"))
-    Seq("__chunk", "__sk", "__ok", "__oc", "__ct", "__off", "__loc").foreach(h =>
-      require(!df.columns.contains(h),
-        s"input already carries the internal column '$h'"))
-    import org.apache.spark.sql.expressions.Window
-    val aggFn: Column => Column = agg match {
-      case "sum" => sum(_)
-      case "min" => min(_)
-      case "max" => max(_)
-      case _ => count(_)
-    }
-    // the offset side re-combines CHUNK TOTALS, which for count means
-    // adding counts — SUM of the per-chunk counts, not a count of them
-    val offFn: Column => Column = if (agg == "count") sum(_) else aggFn
-    // combine a local prefix with the (possibly absent) prior-chunk
-    // offset. NULL discipline mirrors the window aggregate's: a running
-    // frame whose values so far are ALL null yields null, any non-null
-    // value makes it concrete. For sum that means null propagates only
-    // when BOTH sides are null (a bare `loc + off` would null out a row
-    // whose chunk-local prefix is all-null even though earlier chunks
-    // carried real values); least/greatest are natively null-skipping,
-    // so they compose correctly as-is; a running count is never null, so
-    // only the first chunk's absent offset needs a zero.
-    def combine(loc: Column, off: Column): Column = agg match {
-      case "sum" => when(loc.isNull && off.isNull, lit(null))
-        .otherwise(coalesce(loc, lit(0L)) + coalesce(off, lit(0L)))
-      case "min" => least(loc, off)
-      case "max" => greatest(loc, off)
-      case _ => loc + coalesce(off, lit(0L))
-    }
-    val stats = df.agg(min(col(ordCol).cast("double")).as("lo"),
-      max(col(ordCol).cast("double")).as("hi"),
-      count(lit(1)).as("n")).collect()(0)
-    val total = stats.getLong(2)
-    if (stats.isNullAt(0)) // all-null/empty ords: plain window, no chunking
-      return (df.withColumn(resultCol, aggFn(col(valueCol)).over(
-        Window.partitionBy(col(keyCol)).orderBy(col(ordCol))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))), total)
-    val (lo, hi) = (stats.getDouble(0), stats.getDouble(1))
-    // monotone in ord by construction: (x - lo) / span is IEEE-monotone
-    // for span > 0, floor and clamp preserve it; a degenerate range
-    // (lo == hi) puts everything in chunk 0 = the plain per-key window
-    val span = if (hi > lo) (hi - lo) / chunks else 1.0
-    val chunk = least(greatest(
-      floor((col(ordCol).cast("double") - lit(lo)) / lit(span)).cast("int"),
-      lit(0)), lit(chunks - 1)).as("__chunk")
-    // __sk wraps the key in a 1-field struct: struct equality is null-safe
-    // field-wise (a NULL key is a normal window partition and must survive
-    // the chunk join), and UNLIKE `<=>` on the bare key it keeps the join
-    // an ordinary equi-join — so the big side's (sk, chunk) hash
-    // partitioning and (sk, chunk, ord) sort from the local window satisfy
-    // the sort-merge join's requirements AS-IS. The r11 form joined with
-    // `key <=> __k`, whose wrapped join keys forced a full re-exchange +
-    // re-sort of the 20M-row windowed side (a measured 205 MB extra
-    // shuffle at the 20M soak); only the tiny offsets side moves now.
-    val base = df.withColumn("__sk", struct(col(keyCol)))
-      .withColumn("__chunk", chunk)
-    // a DECIMAL(p, s) running sum (r13, VERDICT r12 #6 — the money-column
-    // upgrade SURVEY §1.3 names): decimal addition is exact and
-    // order-free, so the decomposition is exact; the one divergence
-    // channel is overflow NULLING POINTS. r14 (ADVICE r13): the verb now
-    // nulls EXACTLY where the serial window does — every intermediate
-    // (chunk-local prefixes, chunk totals, offset re-sums) accumulates in
-    // types widened PAST the serial accumulator (the value is pre-cast to
-    // bounded(p+10, s), so Sum buffers at bounded(p+20, s) and the
-    // offset re-sum at bounded(p+30, s), capped at 38), and the single
-    // final cast back to the serial window's bounded(p+10, s) is the only
-    // place a null can appear — precisely when the true prefix value
-    // exceeds the serial accumulator's capacity, which is when the serial
-    // window nulls. (The r13 form let a chunk-local prefix or chunk total
-    // overflow its own narrower type near capacity, which a both-null
-    // combine then read as zero — a value where the serial window nulls.)
-    // Residual bound: an intermediate past 10^(p+30-s) — reachable only
-    // through >=10^20x mixed-sign cancellation — would null early; stated
-    // contract, same class as the engine's 2^53 envelope.
-    val sumType = df.schema(valueCol).dataType match {
-      case d: org.apache.spark.sql.types.DecimalType if agg == "sum" =>
-        Some(org.apache.spark.sql.types.DecimalType(
-          math.min(38, d.precision + 10), d.scale))
-      case _ => None
-    }
-    val aggInput = sumType.map(t => col(valueCol).cast(t)).getOrElse(col(valueCol))
-    val offsets = base
-      .groupBy(col("__sk").as("__ok"), col("__chunk").as("__oc"))
-      .agg(aggFn(aggInput).as("__ct"))
-      .withColumn("__off",
-        offFn(col("__ct")).over(Window.partitionBy(col("__ok"))
-          .orderBy(col("__oc"))
-          .rowsBetween(Window.unboundedPreceding, -1)))
-      // fresh names: offsets derives FROM base, so reusing base's attrs
-      // in the join condition would be a same-lineage ambiguity
-      .select(col("__ok"), col("__oc"), col("__off"))
-    val localW = Window.partitionBy(col("__sk"), col("__chunk"))
-      .orderBy(col(ordCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val res = base
-      .withColumn("__loc", aggFn(aggInput).over(localW))
-      .join(offsets, col("__sk") === col("__ok") && col("__chunk") === col("__oc"))
-      .withColumn(resultCol, sumType match {
-        case Some(t) => combine(col("__loc"), col("__off")).cast(t)
-        case None => combine(col("__loc"), col("__off"))
-      })
-      .drop("__sk", "__ok", "__oc", "__chunk", "__loc", "__off")
-    (res, total)
+    forceChunks(df.withColumn(resultCol, aggFn(agg)(col(valueCol)).over(
+      byKey(keyCol, ordCol)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))), chunks)
   }
 
   /** Exact skew-free LAG/LEAD — the NAVIGATION-function face of the same
-    * hot-key pathology: `lag(v, n) OVER (PARTITION BY key ORDER BY ord)`
-    * doesn't scan history like a running sum, but it still pays the
-    * single-task SORT of the hot key's whole partition. Decomposition
-    * (SINGLE-EVALUATION block form, r12 — replaces the r11 donor
-    * self-join, which evaluated the sequence-numbered subtree twice:
-    * 2x the scan + 5.5x the shuffle measured at 20M, and under tied ords
-    * the two evaluations could disagree):
+    * hot-key pathology: `lag(v, n, default) OVER (PARTITION BY key ORDER
+    * BY ord)` doesn't scan history like a running sum, but it still pays
+    * the single-task SORT of the hot key's whole partition. The rule's
+    * block arm takes it: the per-key sequence number from the chunked
+    * running count, blocks of B >= n rows of that sequence, and ONE
+    * [[org.apache.spark.sql.catalyst.plans.logical.Expand]] that copies
+    * each block's boundary rows into the neighbor block as donors, so the
+    * original lag/lead re-runs verbatim over (key, block) — no task holds
+    * more than B + n rows of a key, however hot. `default` is the SQL
+    * default-value argument; it surfaces exactly where the serial
+    * window's does. `n` must be >= 1.
     *
-    *  1. per-key sequence number via the chunk-parallel running COUNT
-    *     ([[runningAggChunked]] — the hot key's sort spreads over
-    *     `chunks` tasks);
-    *  2. block = (seq - 1) div B for a fixed block size B >= n: blocks
-    *     partition each key's sequence space contiguously, every
-    *     non-last block of a key holds EXACTLY B rows;
-    *  3. boundary DONOR COPIES via one generator (no self-join): for lag,
-    *     the last n rows of each block are emitted a second time into
-    *     block + 1 (for lead, the first n into block - 1). Both copies of
-    *     a row are produced from ONE evaluated row in one pass, so the
-    *     sequence numbers they carry agree by construction;
-    *  4. `lag(v, n)` is now a plain positional window over
-    *     (key, block) ORDER BY seq — donors fill the first n positions
-    *     of the extended block, so every native row's n-back neighbor is
-    *     present, and no task ever holds more than B + n rows of a key,
-    *     no matter how hot. Donor copies are filtered out afterwards.
-    *
-    * Positional exactness: natives of block b carry seqs (bB, (b+1)B];
-    * lag donors carry (bB-n, bB] — exactly the n rows preceding the
-    * block (the previous block is full whenever a next block exists), so
-    * position p - n in the extended block IS sequence s - n. Rows with
-    * s <= n sit in block 0 (no donors) and get the SQL null.
-    *
-    * Exact under the standing contract (`ord` unique within key — without
-    * it lag itself is nondeterministic; with ties this form stays inside
-    * the serial window's arbitrariness class, because the one sequence
-    * evaluation feeds both copies). `n` must be >= 1. B is sized
-    * max(n, ceil(rows / chunks)) — the row count rides the chunk range's
-    * own (min, max, count) stats job, so the verb makes NO extra scan
-    * beyond the chunk machinery's two (VERDICT r12 #2). `default` (r13)
-    * is the SQL default-value argument — the value rows with fewer than
-    * `n` neighbors get instead of null; the block window replays it
-    * verbatim, surfacing it exactly where the serial window would (a
-    * key's first n rows for lag, last n for lead). Output: input columns
-    * plus `resultCol` carrying the lagged/led `valueCol`. */
+    * Same contract as the family: `ord` unique within key (with ties lag
+    * itself is nondeterministic; this form stays inside the serial
+    * window's arbitrariness class). Output: input columns plus
+    * `resultCol` carrying the lagged/led `valueCol`. */
   def laggedChunked(
       df: DataFrame,
       keyCol: String,
@@ -296,38 +151,11 @@ object Skew {
       chunks: Int = 32,
       default: Any = null): DataFrame = {
     require(n >= 1, s"lag/lead offset must be >= 1, got $n")
-    Seq("__ridx", "__one", "__blk", "__tblk").foreach(h =>
-      require(!df.columns.contains(h),
-        s"input already carries the internal column '$h'"))
-    import org.apache.spark.sql.expressions.Window
-    // count a CONSTANT, not ordCol: count skips nulls, and a null ord row
-    // (legal — it sorts first) must still occupy a sequence slot
-    val (seqd0, total) = runningAggChunkedWithTotal(
-      df.withColumn("__one", lit(1L)),
-      keyCol, ordCol, "__one", "__ridx", "count", chunks)
-    val seqd = seqd0.drop("__one")
-    val bSize = math.max(n.toLong, (total + chunks - 1) / chunks.toLong) max 1L
-    val base = seqd.withColumn("__blk", expr(s"(__ridx - 1L) div ${bSize}L"))
-    // donor membership is pure per-row arithmetic on the one evaluated
-    // sequence number — boundary rows explode into (self, donor) copies,
-    // everything else into (self) alone
-    val copies =
-      if (lead)
-        when(pmod(col("__ridx") - 1L, lit(bSize)) < n && col("__blk") > 0,
-          array(col("__blk"), col("__blk") - 1L))
-          .otherwise(array(col("__blk")))
-      else
-        when(pmod(col("__ridx") - 1L, lit(bSize)) >= bSize - n,
-          array(col("__blk"), col("__blk") + 1L))
-          .otherwise(array(col("__blk")))
-    val extended = base.withColumn("__tblk", explode(copies))
-    val w = Window.partitionBy(col(keyCol), col("__tblk")).orderBy(col("__ridx"))
+    requireChunks(chunks)
     val nav =
       if (lead) org.apache.spark.sql.functions.lead(col(valueCol), n, default)
       else org.apache.spark.sql.functions.lag(col(valueCol), n, default)
-    extended.withColumn(resultCol, nav.over(w))
-      .filter(col("__tblk") === col("__blk"))
-      .drop("__ridx", "__blk", "__tblk")
+    forceChunks(df.withColumn(resultCol, nav.over(byKey(keyCol, ordCol))), chunks)
   }
 
   /** Exact skew-free LAG/LEAD ... IGNORE NULLS — the forward-fill /
@@ -337,9 +165,9 @@ object Skew {
     * arbitrarily far back, beyond any bounded donor band — but the
     * NON-NULL SEQUENCE decomposes it exactly (r13, VERDICT r12 #7):
     *
-    *  1. per-key running count of NON-NULL `valueCol` via the
-    *     chunk-parallel running count (count(v) skips nulls natively) —
-    *     a non-null row's own count IS its non-null index;
+    *  1. per-key running count of NON-NULL `valueCol` via
+    *     [[runningAggChunked]] (count(v) skips nulls natively) — a
+    *     non-null row's own count IS its non-null index;
     *  2. the answer for row r is the value at non-null index
     *     `t = c_r - n + (v_r null ? 1 : 0)` for lag (the n-th most
     *     recent non-null strictly before r) and `t = c_r + n` for lead
@@ -387,37 +215,20 @@ object Skew {
       .drop("__nnidx", "__t", "__dk", "__di", "__dv")
   }
 
+
   /** Exact skew-free SLIDING-FRAME aggregate — `agg(v) OVER (PARTITION BY
-    * key ORDER BY ord ROWS BETWEEN k PRECEDING AND CURRENT ROW)`, the
-    * rolling-feature window (rolling 24h spend per customer) that pays
-    * the same hot-key one-task sort as the running forms. The chunk
-    * machinery of [[runningAggChunked]] can't decompose it (a sliding
-    * frame isn't a prefix), but the BLOCK form of [[laggedChunked]] can:
-    * the frame of any row spans at most k rows back, so with blocks of
-    * B >= k rows plus the previous block's last k rows copied in as
-    * donors, every row's whole frame is PRESENT inside its extended
-    * block — the sliding window re-runs verbatim over (key, block),
-    * bounded at B + k rows per task, and donor copies are filtered out
-    * afterwards.
-    *
-    * Unlike the running decomposition, NOTHING re-associates here: the
-    * chunk-local window evaluates the same aggregate over the same frame
-    * rows in the same order as the serial plan (Spark rebuilds a sliding
-    * frame's buffer per row), so the result is bit-identical for EVERY
-    * input type — doubles and decimals included, and avg needs no 2^53
-    * proof. `agg` one of sum/min/max/count/avg.
-    *
-    * `following` (default 0 = ..CURRENT ROW) extends the frame to
-    * `BETWEEN k PRECEDING AND following FOLLOWING` — the centered /
-    * lookahead rolling window (feature smoothing, next-j-events context):
-    * donor copies flow BOTH ways (the last k rows of a block into the
-    * next, the first `following` rows into the previous). Frames clip at
-    * the partition edges exactly as the serial frame does (block 0 has no
-    * back donors; a key's last block no forward donors). Same contracts
-    * as the family: `ord` unique within key;
-    * B = max(k, following, ceil(rows / chunks)) with the row count read
-    * off the chunk machinery's own stats job — no extra scan (VERDICT
-    * r12 #2). Output: the input columns plus `resultCol`. */
+    * key ORDER BY ord ROWS BETWEEN k PRECEDING AND following FOLLOWING)`,
+    * the rolling-feature window (rolling spend over the last k events per
+    * customer; `following` > 0 gives the centered / lookahead frame) that
+    * pays the same hot-key one-task sort as the running forms. A sliding
+    * frame isn't a prefix, but the rule's block arm (see
+    * [[laggedChunked]]) covers it: every row's whole frame is present
+    * inside its extended block, so the aggregate re-runs verbatim over
+    * (key, block) — the same frame rows in the same order as the serial
+    * plan, hence bit-identical for EVERY input type, doubles included.
+    * `agg` one of sum/min/max/count/avg; `k`, `following` >= 0, at least
+    * one positive. Same contract: `ord` unique within key. Output: the
+    * input columns plus `resultCol`. */
   def slidingAggChunked(
       df: DataFrame,
       keyCol: String,
@@ -432,68 +243,20 @@ object Skew {
       s"frame must reach at least one neighbor: k=$k following=$following")
     require(Set("sum", "min", "max", "count", "avg")(agg),
       s"slidingAggChunked supports sum/min/max/count/avg, got '$agg'")
-    Seq("__ridx", "__one", "__blk", "__tblk").foreach(h =>
-      require(!df.columns.contains(h),
-        s"input already carries the internal column '$h'"))
-    import org.apache.spark.sql.expressions.Window
-    val aggFn: Column => Column = agg match {
-      case "sum" => sum(_)
-      case "min" => min(_)
-      case "max" => max(_)
-      case "avg" => avg(_)
-      case _ => count(_)
-    }
-    val (seqd0, total) = runningAggChunkedWithTotal(
-      df.withColumn("__one", lit(1L)),
-      keyCol, ordCol, "__one", "__ridx", "count", chunks)
-    val seqd = seqd0.drop("__one")
-    val bSize = Seq(k.toLong, following.toLong,
-      (total + chunks - 1) / chunks.toLong, 1L).max
-    val base = seqd.withColumn("__blk", expr(s"(__ridx - 1L) div ${bSize}L"))
-    val pos = pmod(col("__ridx") - 1L, lit(bSize))
-    val none = lit(Array.empty[Long])
-    val toNext = if (k == 0) none
-      else when(pos >= bSize - k, array(col("__blk") + 1L)).otherwise(none)
-    val toPrev = if (following == 0) none
-      else when(pos < following && col("__blk") > 0, array(col("__blk") - 1L))
-        .otherwise(none)
-    val extended = base.withColumn("__tblk",
-      explode(concat(array(col("__blk")), toNext, toPrev)))
-    val w = Window.partitionBy(col(keyCol), col("__tblk")).orderBy(col("__ridx"))
-      .rowsBetween(-k.toLong, following.toLong)
-    extended.withColumn(resultCol, aggFn(col(valueCol)).over(w))
-      .filter(col("__tblk") === col("__blk"))
-      .drop("__ridx", "__blk", "__tblk")
+    requireChunks(chunks)
+    forceChunks(df.withColumn(resultCol, aggFn(agg)(col(valueCol)).over(
+      byKey(keyCol, ordCol).rowsBetween(-k.toLong, following.toLong))), chunks)
   }
 
-  /** Exact skew-free RANK FAMILY — row_number / rank / dense_rank /
-    * percent_rank / cume_dist / ntile over a hot partition key, all of
-    * which pay the same single-task partition sort. Under this engine's
-    * standing uniqueness contract (`ord` unique within each key — the
-    * same contract as [[laggedChunked]], the as-of joins and top-k), the
-    * whole family collapses to two parallel primitives:
-    *
-    *  1. the per-key sequence number via the chunk-parallel running count
-    *     (ties impossible, so row_number = rank = dense_rank = seq);
-    *  2. one per-key TOTAL `n` (a combinable count aggregate, broadcast-
-    *     friendly one row per key) joined back null-safely:
-    *     percent_rank = (seq-1)/(n-1) (0.0 for n = 1, Spark's own rule),
-    *     cume_dist = seq/n, ntile(k) = the standard first-(n%k)-buckets-
-    *     get-one-extra assignment in exact integer arithmetic.
-    *
-    * Both divisions divide the same exact integers the serial window
-    * divides, so doubles match bit for bit.
-    *
-    * WHY THERE IS NO AUTOMATIC [[graft.plans.AutoChunkWindow]] ARM for
-    * rank/percent_rank/cume_dist/ntile: with tied ords the serial answers
-    * differ from the sequence-number forms, so an automatic rewrite would
-    * need to PROVE tie-freeness — and ANALYZE's distinctCount is a
-    * HyperLogLog estimate (spark.sql.statistics.ndv.maxError), so
-    * `ndv(ord) == rowCount` proves nothing. A default-ON optimizer rule
-    * must never change an answer, so the family stays manual, behind this
-    * verb's documented contract. (row_number IS in the rule: with ties it
-    * is nondeterministic-within-peers in the serial window too, so no
-    * answer an engine promises can change.)
+  /** Exact skew-free RANK FAMILY — row_number / percent_rank / cume_dist /
+    * ntile over a hot partition key, all of which pay the same
+    * single-task partition sort. The plain windows go to the rule's rank
+    * arms: row_number is the chunked running count of a constant; the
+    * other three are closed forms of the prior-chunk row count, a
+    * chunk-local replay of the original function, and the per-key total
+    * carried on the offset window. Peers never straddle chunks (the chunk
+    * is monotone in `ord`), so the tie behavior is the original
+    * functions' own — exact with or without ties.
     *
     * Output: the input columns plus `<prefix>row_number` (int),
     * `<prefix>percent_rank`, `<prefix>cume_dist` (double), and — when
@@ -506,49 +269,30 @@ object Skew {
       ntile: Int = 0,
       chunks: Int = 32): DataFrame = {
     require(ntile == 0 || ntile >= 2, s"ntile must be 0 (off) or >= 2, got $ntile")
-    val outCols = Seq("row_number", "percent_rank", "cume_dist") ++
-      (if (ntile >= 2) Seq("ntile") else Nil)
-    (outCols.map(prefix + _) ++ Seq("__ridx", "__one", "__nk", "__n")).foreach(h =>
-      require(!df.columns.contains(h),
-        s"input already carries the column '$h'"))
-    val seqd = runningAggChunked(df.withColumn("__one", lit(1L)),
-      keyCol, ordCol, "__one", "__ridx", "count", chunks).drop("__one")
-    val totals = df.groupBy(col(keyCol).as("__nk")).agg(count(lit(1)).as("__n"))
-    val base = seqd.join(totals, col(keyCol) <=> col("__nk"), "left")
-      .withColumn(prefix + "row_number", col("__ridx").cast("int"))
-      // Spark's PercentRank: (rank - 1) / (n - 1), and 0.0 when n = 1
-      .withColumn(prefix + "percent_rank",
-        when(col("__n") > 1, (col("__ridx") - 1).cast("double") /
-          (col("__n") - 1).cast("double")).otherwise(lit(0.0)))
-      .withColumn(prefix + "cume_dist",
-        col("__ridx").cast("double") / col("__n").cast("double"))
-    val ranked =
-      if (ntile < 2) base
-      else base.withColumn(prefix + "ntile", expr(
-        // standard NTILE: q = n div k, r = n mod k; the first r buckets
-        // hold q+1 rows. The ELSE's `DIV (q)` is unreachable when q = 0
-        // (the threshold is then n, so every row takes the THEN branch)
-        // and CASE evaluates lazily, so no division by zero can occur.
-        s"""CAST(CASE
-           |  WHEN __ridx <= (__n % $ntile) * ((__n DIV $ntile) + 1)
-           |  THEN (__ridx - 1) DIV ((__n DIV $ntile) + 1) + 1
-           |  ELSE (__n % $ntile) +
-           |    (__ridx - 1 - (__n % $ntile) * ((__n DIV $ntile) + 1))
-           |      DIV (__n DIV $ntile) + 1
-           |END AS INT)""".stripMargin))
-    ranked.drop("__ridx", "__nk", "__n")
+    requireChunks(chunks)
+    Seq("row_number", "percent_rank", "cume_dist", "ntile").map(prefix + _)
+      .foreach(c => require(!df.columns.contains(c),
+        s"input already carries the column '$c'"))
+    val w = byKey(keyCol, ordCol)
+    val outs = Seq(row_number().over(w).as(prefix + "row_number"),
+      percent_rank().over(w).as(prefix + "percent_rank"),
+      cume_dist().over(w).as(prefix + "cume_dist")) ++
+      (if (ntile >= 2)
+        Seq(org.apache.spark.sql.functions.ntile(ntile).over(w).as(prefix + "ntile"))
+      else Nil)
+    forceChunks(df.select(col("*") +: outs: _*), chunks)
   }
 
   /** Exact skew-free FIRST/LAST VALUE per key — the anchor-value face of
-    * the family: `first_value(v) OVER (PARTITION BY key ORDER BY ord)`
-    * and `last_value(v) OVER (... ROWS BETWEEN UNBOUNDED PRECEDING AND
-    * UNBOUNDED FOLLOWING)` both pay the hot key's one-task sort in the
-    * serial plan. Under the unique-ord contract they are just the values
-    * at sequence 1 and sequence n: the chunk-parallel running count
-    * builds the sequence, the per-key total names the last slot, and two
-    * one-row-per-key donor relations (broadcast-friendly) join back
-    * null-safely. Respect-nulls semantics: the anchor row's value carries
-    * even when it is null.
+    * the family: `first_value(v)` and `last_value(v) OVER (PARTITION BY
+    * key ORDER BY ord ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
+    * FOLLOWING)` both pay the hot key's one-task sort in the serial plan.
+    * The rule's full-frame arm replaces the window with one per-key
+    * min/max of struct(ord, v) — a partial-aggregated group-by, no sort —
+    * joined back on the key, so `chunks` is not needed by this shape.
+    * Respect-nulls semantics: the anchor row's value carries even when it
+    * is null. Same contract: `ord` unique within key (tied anchor ords
+    * tiebreak by value, inside the serial pick's arbitrariness class).
     *
     * Output: the input columns plus `firstCol` and `lastCol`. */
   def anchorValuesChunked(
@@ -559,20 +303,13 @@ object Skew {
       firstCol: String,
       lastCol: String,
       chunks: Int = 32): DataFrame = {
-    (Seq(firstCol, lastCol) ++ Seq("__ridx", "__one", "__nk", "__n", "__fk", "__lk"))
-      .foreach(h => require(!df.columns.contains(h),
-        s"input already carries the column '$h'"))
-    val seqd = runningAggChunked(df.withColumn("__one", lit(1L)),
-      keyCol, ordCol, "__one", "__ridx", "count", chunks).drop("__one")
-    val firsts = seqd.filter(col("__ridx") === 1)
-      .select(col(keyCol).as("__fk"), col(valueCol).as(firstCol))
-    val totals = df.groupBy(col(keyCol).as("__nk")).agg(count(lit(1)).as("__n"))
-    val lasts = seqd.join(totals, col(keyCol) <=> col("__nk"))
-      .filter(col("__ridx") === col("__n"))
-      .select(col(keyCol).as("__lk"), col(valueCol).as(lastCol))
-    seqd.join(firsts, col(keyCol) <=> col("__fk"), "left")
-      .join(lasts, col(keyCol) <=> col("__lk"), "left")
-      .drop("__ridx", "__fk", "__lk")
+    Seq(firstCol, lastCol).foreach(c => require(!df.columns.contains(c),
+      s"input already carries the column '$c'"))
+    requireChunks(chunks)
+    val w = byKey(keyCol, ordCol)
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    forceChunks(df.select(col("*"), first(col(valueCol)).over(w).as(firstCol),
+      last(col(valueCol)).over(w).as(lastCol)), chunks)
   }
 
   /** Exact skew-free RANGE-FRAME aggregate — `agg(v) OVER (PARTITION BY
@@ -581,29 +318,20 @@ object Skew {
     * customer over epoch seconds), the most common feature-engineering
     * shape of all, and one more face of the hot-key one-task sort.
     *
-    * RANGE frames are VALUE-based, which makes the block decomposition
-    * SIMPLER than the ROWS form: blocks come straight from fixed ord
-    * ranges of width span >= max(preceding, following) (no sequence
-    * numbers at all), and any frame member of a row in block b lies
-    * within span of it — so in block b-1's trailing band of width
-    * `preceding` or block b+1's leading band of width `following`, both
-    * of which one generator pass copies in as donors. Extra donors are
-    * HARMLESS (a row outside [o - preceding, o + following] simply never
-    * enters the frame), so only completeness matters, and the frame
-    * re-evaluates verbatim over (key, block) — identical rows in
-    * identical order, bit-identical for every input type and EVERY
-    * deterministic aggregate, ties in ord included (peers are
-    * value-grouped, and a block is an ord range, so peers never split).
+    * The rule's ord-block arm takes it: blocks are fixed ord ranges of
+    * width >= max(preceding, following) (no sequence numbers), any frame
+    * member of a row lies in the same or an adjacent block, and one
+    * Expand copies the adjacent bands in as donors — extra donors are
+    * harmless to a value frame, and peers share a block by construction,
+    * so the frame re-evaluates verbatim, bit-identical for every type and
+    * every deterministic aggregate, ties in ord included.
     *
-    * `ord` must be integral (epoch seconds/millis, ids — Spark's
-    * rangeBetween takes long offsets); `preceding`/`following` >= 0 in
-    * ord units, at least one positive. NULL-ord rows form the usual
-    * nulls-first peer group confined to block 0. `agg` one of
-    * sum/min/max/count/avg. Block count adapts to
-    * min(chunks, ordRange / max(preceding, following)) so neighbor
-    * blocks always suffice; a frame wider than the whole range
-    * degenerates to the plain window (1 block = per-key partition).
-    * Output: the input columns plus `resultCol`. */
+    * `ord` must be numeric (epoch seconds/millis, ids);
+    * `preceding`/`following` >= 0 in ord units, at least one positive.
+    * `agg` one of sum/min/max/count/avg. Blocks number min(chunks,
+    * ordRange / max(preceding, following)); a frame reaching over half
+    * the ord range keeps the plain window. Output: the input columns plus
+    * `resultCol`. */
   def slidingRangeAggChunked(
       df: DataFrame,
       keyCol: String,
@@ -618,57 +346,23 @@ object Skew {
       s"frame must have positive reach: preceding=$preceding following=$following")
     require(Set("sum", "min", "max", "count", "avg")(agg),
       s"slidingRangeAggChunked supports sum/min/max/count/avg, got '$agg'")
-    Seq("__rblk", "__rtblk").foreach(h =>
-      require(!df.columns.contains(h),
-        s"input already carries the internal column '$h'"))
-    import org.apache.spark.sql.expressions.Window
-    val aggFn: Column => Column = agg match {
-      case "sum" => sum(_)
-      case "min" => min(_)
-      case "max" => max(_)
-      case "avg" => avg(_)
-      case _ => count(_)
-    }
-    def theWindow(partExtra: Seq[Column]) =
-      Window.partitionBy((col(keyCol) +: partExtra): _*).orderBy(col(ordCol))
-        .rangeBetween(-preceding, following)
-    val stats = df.agg(min(col(ordCol).cast("double")).as("lo"),
-      max(col(ordCol).cast("double")).as("hi")).collect()(0)
-    if (stats.isNullAt(0))
-      return df.withColumn(resultCol, aggFn(col(valueCol)).over(theWindow(Nil)))
-    val (lo, hi) = (stats.getDouble(0), stats.getDouble(1))
-    val reach = math.max(preceding, following).toDouble
-    val nBlocks = math.min(chunks.toLong,
-      (((hi - lo) / math.max(reach, 1e-9))).toLong) max 1L
-    if (nBlocks < 2) // frame reach spans the data: the plain window IS the plan
-      return df.withColumn(resultCol, aggFn(col(valueCol)).over(theWindow(Nil)))
-    val span = (hi - lo) / nBlocks
-    // same monotone clamp as the chunk machinery: NULL ords land in
-    // block 0 (their peer group is self-contained there), stale-stats
-    // out-of-range values clamp to the edge blocks (width >= span still)
-    def blockOf(ord: Column) = least(greatest(
-      floor((ord.cast("double") - lit(lo)) / lit(span)).cast("long"),
-      lit(0L)), lit(nBlocks - 1))
-    val base = df.withColumn("__rblk", blockOf(col(ordCol)))
-    // donor membership derives from the SAME block function (no edge
-    // arithmetic that could disagree with the floor by an ulp): a row is
-    // needed by block b+1 iff some ord within `preceding` ahead of it
-    // lands there, i.e. blockOf(ord + preceding) > blockOf(ord) — exact
-    // by monotonicity. Extra donors are harmless for a RANGE frame.
-    val none = lit(Array.empty[Long])
-    val toNext = if (preceding == 0) none
-      else when(blockOf(col(ordCol) + preceding) > col("__rblk"),
-        array(col("__rblk") + 1L)).otherwise(none)
-    val toPrev = if (following == 0) none
-      else when(blockOf(col(ordCol) - following) < col("__rblk"),
-        array(col("__rblk") - 1L)).otherwise(none)
-    val extended = base.withColumn("__rtblk",
-      explode(concat(array(col("__rblk")), toNext, toPrev)))
-    extended.withColumn(resultCol,
-        aggFn(col(valueCol)).over(theWindow(Seq(col("__rtblk")))))
-      .filter(col("__rtblk") === col("__rblk"))
-      .drop("__rblk", "__rtblk")
+    forceChunks(df.withColumn(resultCol, aggFn(agg)(col(valueCol)).over(
+      byKey(keyCol, ordCol).rangeBetween(-preceding, following))), chunks)
   }
+
+  private def requireChunks(chunks: Int): Unit =
+    require(chunks >= 2 && chunks <= 4096, s"chunks out of range: $chunks")
+
+  private def aggFn(agg: String): Column => Column = agg match {
+    case "sum" => sum(_)
+    case "min" => min(_)
+    case "max" => max(_)
+    case "avg" => avg(_)
+    case _ => count(_)
+  }
+
+  private def byKey(keyCol: String, ordCol: String) =
+    Window.partitionBy(col(keyCol)).orderBy(col(ordCol))
 
   /** Exact GLOBAL row_number over (value ASC|DESC, tie ASC) — and
     * optionally the matching running SUM of the value — without a

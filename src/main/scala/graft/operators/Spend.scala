@@ -106,11 +106,8 @@ object Spend {
       c: Cols = transactionCols,
       windowDuration: String = "10 minutes",
       slideDuration: String = "5 minutes",
-      watermark: String = "5 minutes",
-      dedup: Boolean = true): DataFrame = {
-    val marked = df.withWatermark(c.ts, watermark)
-    val deduped = if (dedup) dedupeStream(marked, c) else marked
-    deduped
+      watermark: String = "5 minutes"): DataFrame =
+    dedupeStream(df.withWatermark(c.ts, watermark), c)
       .groupBy(window(col(c.ts), windowDuration, slideDuration), col(c.key))
       .agg(Exact.dsum(col(c.amount)).as("total_spent"))
       .select(
@@ -118,7 +115,6 @@ object Spend {
         col("window.start").as("window_start"),
         col("window.end").as("window_end"),
         col("total_spent"))
-  }
 
   /** True daily totals per key from (deduplicated) events — the intended
     * semantics pinned by the reference's golden data

@@ -11,16 +11,20 @@ import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, Ascending,
   UnixMicros, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
   Average, Count, Sum}
+import org.apache.spark.sql.catalyst.optimizer.ConstantFolding
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter,
-  Join, JoinHint, LogicalPlan, Project, Union, Window}
+  Join, JoinHint, LocalRelation, LogicalPlan, Project, Union, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   FloatType, IntegerType, LongType, ShortType, TimestampType}
 
-/** Optimizer rule: HOT-KEY running windows re-planned as the chunk
-  * decomposition — the automatic form of
-  * [[graft.operators.Skew.runningAggChunked]].
+/** Optimizer rule: HOT-KEY windows re-planned as the chunk decomposition
+  * — graft's ONE implementation of it. The rule serves two callers: the
+  * optimizer ([[apply]], gated on statistics that prove a hot key) and the
+  * [[graft.operators.Skew]] window verbs ([[forceChunks]], which skip the
+  * hotness gates and decompose with the caller's chunk count). Both run
+  * the same arms below; only how the [[Gate]] is found differs.
   *
   * The target pathology is real and measured (unlike the one-distinct
   * aggregate, whose hot key Spark 4's planner already spreads by
@@ -35,8 +39,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   * 60%-hot key at 20M rows: plain max task 6.8-7.6 s (~= the stage),
   * chunked 2.0-2.1 s.
   *
-  * The rewrite is the exact associative decomposition (same algebra as
-  * the manual verb, same null discipline):
+  * The rewrite is the exact associative decomposition (with the window
+  * aggregate's own null discipline):
   *
   *   chunk    = clamp(floor((o - lo) / span), 0, C-1)    — monotone in o
   *   totals   = sum(v) GROUP BY (sk, chunk)
@@ -474,47 +478,102 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
             case a: AttributeReference => a.name.startsWith(C_NAME)
             case _ => false
           } =>
-        decomposeAll(exprs) match {
-          case Some(ds) if ds.forall(_.v.deterministic) &&
-              ordTypeOk(ds.head.ord.dataType) &&
-              ds.head.partSpec.forall(_.isInstanceOf[AttributeReference]) =>
-            val pk = ds.head.partSpec.map(_.asInstanceOf[AttributeReference])
-            gateFor(ds, ds.head.ord, pk, child, perKeyRows) match {
-              case Some(g) if g.rows >= BigInt(minRows) &&
-                  ds.forall(d => avgExact(d.kind, d.v, g)) &&
-                  ds.forall(decimalExact(_, g)) &&
-                  rangeCompatible(ds, g) =>
-                g.hotHashes.filter(_ => pk.nonEmpty) match {
-                  case Some(hs) => hotSplit(w, child, ds, pk, chunks, g, hs)
-                  case None => rewrite(child, ds, ds.head.ord, pk, chunks, g)
-                }
-              case _ => w
-            }
-          case _ =>
-            // FULL-FRAME arm (r14): every expression aggregates the WHOLE
-            // partition — the per-group-total / grand-total idiom, which
-            // WindowExec still runs one task per key. Same hotness gates;
-            // the rewrite is Aggregate + broadcast-sized join back.
-            decomposeFull(exprs) match {
-              case Some(fs) if fs.forall(_.v.deterministic) &&
-                  fs.head.partSpec.forall(_.isInstanceOf[AttributeReference]) =>
-                val pk = fs.head.partSpec.map(_.asInstanceOf[AttributeReference])
-                val proofs = fs.collect { case d if d.kind == "avg" => d.v }
-                (catalogGate(None, pk, child, perKeyRows) match {
-                  case CatalogFire(g) => Some(g)
-                  case CatalogCold => None
-                  case CatalogSilent =>
-                    censusGate(proofs, None, pk, child, perKeyRows)
-                }) match {
-                  case Some(g) if g.rows >= BigInt(minRows) &&
-                      fs.forall(d => avgExact(d.kind, d.v, g)) =>
-                    rewriteFull(child, fs, pk)
-                  case _ => w
-                }
-              case _ => w
+        // the hotness gates: catalog stats decide whenever they can (the
+        // ANALYZE path stays primary); the census is the no-catalog-stats
+        // fallback. Tri-state since r16 (ADVICE r15): catalog stats that
+        // conclusively decide NOT-HOT suppress the census — an ANALYZE'd
+        // cold-key table must never pay a planning-time scan the catalog
+        // already answered.
+        chunkPlan(w, chunks) { (proofs, ord, pk) =>
+          (catalogGate(ord, pk, child, perKeyRows) match {
+            case CatalogFire(g) => Some(g)
+            case CatalogCold => None
+            case CatalogSilent =>
+              censusGate(proofs, ord, pk, child, perKeyRows)
+          }).filter(_.rows >= BigInt(minRows))
+        }.getOrElse(w)
+    }
+  }
+
+  /** The decomposition of one Window node, or None to leave it plain.
+    * `gate(proofs, ord, pk)` supplies the numbers the rewrite consumes —
+    * the automatic path's hotness-gated catalog/census verdict, or the
+    * forced path's exact scan ([[forceChunks]]); the exactness proofs
+    * (avg 2^53, decimal overflow, RANGE reach) apply on both. The running
+    * arm's `ord` is the ORDER column; the FULL-FRAME arm (r14: every
+    * expression aggregates the WHOLE partition — the per-group-total /
+    * grand-total idiom, which WindowExec still runs one task per key)
+    * has none, and rewrites to Aggregate + a broadcast-sized join back. */
+  private def chunkPlan(w: Window, chunks: Int)(
+      gate: (Seq[Expression], Option[AttributeReference],
+        Seq[AttributeReference]) => Option[Gate]): Option[LogicalPlan] = {
+    val child = w.child
+    decomposeAll(w.windowExpressions) match {
+      case Some(ds) if ds.forall(_.v.deterministic) &&
+          ordTypeOk(ds.head.ord.dataType) &&
+          ds.head.partSpec.forall(_.isInstanceOf[AttributeReference]) =>
+        val pk = ds.head.partSpec.map(_.asInstanceOf[AttributeReference])
+        gate(proofAttrsOf(ds), Some(ds.head.ord), pk).collect {
+          case g if ds.forall(d => avgExact(d.kind, d.v, g)) &&
+              ds.forall(decimalExact(_, g)) && rangeCompatible(ds, g) =>
+            g.hotHashes.filter(_ => pk.nonEmpty) match {
+              case Some(hs) => hotSplit(w, child, ds, pk, chunks, g, hs)
+              case None => rewrite(child, ds, ds.head.ord, pk, chunks, g)
             }
         }
+      case _ =>
+        decomposeFull(w.windowExpressions) match {
+          case Some(fs) if fs.forall(_.v.deterministic) &&
+              fs.head.partSpec.forall(_.isInstanceOf[AttributeReference]) =>
+            val pk = fs.head.partSpec.map(_.asInstanceOf[AttributeReference])
+            gate(fs.collect { case d if d.kind == "avg" => d.v }, None, pk)
+              .collect { case g if fs.forall(d => avgExact(d.kind, d.v, g)) =>
+                rewriteFull(child, fs, pk)
+              }
+          case _ => None
+        }
     }
+  }
+
+  /** The FORCED form, for the [[graft.operators.Skew]] window verbs: `df`
+    * is a plain window query — Projects over the Window node the verb just
+    * added — and that Window is rewritten with `chunks` chunks whatever
+    * its size, through the same decomposition the automatic path uses.
+    * Only the hotness side is skipped: no `minRows` / `perKeyRows` /
+    * [[HotShare]] gate and no hot-key split. The [[Gate]] comes from ONE
+    * fresh exact scan of the window's child (row count, ORDER range, and
+    * the proof columns' ranges); the census cache is neither read nor
+    * filled. A shape the decomposition cannot take exactly (an FP running
+    * sum, an unprovable decimal sum, an all-null ORDER column, `chunks`
+    * below 2, ...) returns `df` unchanged — the plain window, which is
+    * exact by definition. */
+  private[graft] def forceChunks(
+      df: org.apache.spark.sql.DataFrame,
+      chunks: Int): org.apache.spark.sql.DataFrame = {
+    def forced(w0: Window): Option[LogicalPlan] = {
+      // the node as apply receives it: the optimizer has folded literal
+      // casts (a RANGE bound or lag default the analyzer cast to the
+      // column's type) before any rule of ours runs. Only the node's own
+      // expressions fold — the child plan stays as analyzed.
+      val w = ConstantFolding(w0.withNewChildren(
+          Seq(LocalRelation(w0.child.output)))).asInstanceOf[Window]
+        .copy(child = w0.child)
+      val p = chunkPlan(w, chunks) { (proofs, ord, _) =>
+        exactGate(df.sparkSession, proofs, ord, w.child)
+      }
+      if (p.isEmpty) logInfo(s"AutoChunkWindow: forced chunking declined " +
+        s"— the window stays plain: ${w.windowExpressions.mkString(", ")}")
+      p
+    }
+    // the verb's window is the first one below the root's Projects
+    def swap(p: LogicalPlan): Option[LogicalPlan] = p match {
+      case w: Window => forced(w)
+      case pr @ Project(_, c) => swap(c).map(n => pr.copy(child = n))
+      case _ => None
+    }
+    (if (chunks >= 2) swap(df.queryExecution.analyzed) else None)
+      .map(org.apache.spark.sql.graft.ColumnBridge.ofRows(df.sparkSession, _))
+      .getOrElse(df)
   }
 
   /** One full-frame expression: an aggregate over the partition's whole
@@ -1116,25 +1175,6 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
       colRange: AttributeReference => Option[(BigDecimal, BigDecimal)],
       hotHashes: Option[Set[Long]] = None)
 
-  /** Hotness + range gate. Catalog stats decide whenever they can (the
-    * ANALYZE path stays primary); the census is the no-catalog-stats
-    * fallback — global windows since r14 (ndv = 1 needs no statistic),
-    * keyed windows since r15 via the sketch probe (VERDICT r14 #1).
-    * Tri-state since r16 (ADVICE r15, medium): catalog stats that
-    * conclusively decide NOT-HOT suppress the census — an ANALYZE'd
-    * cold-key table must never pay a planning-time full scan the
-    * catalog already answered. */
-  private def gateFor(
-      ds: Seq[Decomposed], ord: AttributeReference,
-      pk: Seq[AttributeReference], child: LogicalPlan,
-      perKeyRows: Long): Option[Gate] =
-    catalogGate(Some(ord), pk, child, perKeyRows) match {
-      case CatalogFire(g) => Some(g)
-      case CatalogCold => None
-      case CatalogSilent =>
-        censusGate(proofAttrsOf(ds), Some(ord), pk, child, perKeyRows)
-    }
-
   /** The value attributes whose ranges the avg/decimal-sum proofs will
     * ask for — censused alongside the ord in one scan. */
   private def proofAttrsOf(ds: Seq[Decomposed]): Seq[Expression] =
@@ -1346,18 +1386,10 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
     if (child.stats.sizeInBytes < minBytes) return None
     val spark = org.apache.spark.sql.SparkSession.getActiveSession
       .getOrElse(return None)
-    // censused positions: the ord (when the arm has one), plus every
-    // value column the avg / decimal-sum overflow proofs will ask for
-    val ordPos = ordOpt.map(o => child.output.indexWhere(_.exprId == o.exprId))
-    if (ordPos.contains(-1)) return None
-    val proofAttrs = proofExprs.map {
-      case a: AttributeReference => child.output.indexWhere(_.exprId == a.exprId)
-      case _ => -1
-    }
-    if (proofAttrs.contains(-1)) return None // non-attribute arg: no proof
+    val (ordPos, need) = rangePositions(proofExprs, ordOpt, child)
+      .getOrElse(return None)
     val keyPos = pk.map(a => child.output.indexWhere(_.exprId == a.exprId))
     if (keyPos.contains(-1)) return None
-    val need = (ordPos.toSeq ++ proofAttrs).distinct.sorted
     val key = child.canonicalized
     val cached = Option(censusCache.get(key)).filter(c =>
       need.forall(c.byPos.contains) && (!keyed || c.keyStats.contains(keyPos)))
@@ -1414,21 +1446,55 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
       // the one key (the whole relation) must overwhelm one task
       if (census.rows < BigInt(perKeyRows)) return None
     }
-    // the ord range must be real (all-null or non-finite ords: the plain
-    // window is the only provable plan)
+    gateOf(child, census.rows, census.byPos, ordPos, hotHashes)
+  }
+
+  /** The forced path's gate ([[forceChunks]]): the same one scan as the
+    * census, always fresh, never cached, and no key sketches — nothing
+    * here decides hotness. */
+  private def exactGate(
+      spark: org.apache.spark.sql.SparkSession, proofExprs: Seq[Expression],
+      ordOpt: Option[AttributeReference], child: LogicalPlan): Option[Gate] =
+    rangePositions(proofExprs, ordOpt, child).flatMap { case (ordPos, need) =>
+      val (rows, byPos, _) = scanStats(spark, child, need, ordOpt, Nil)
+      gateOf(child, rows, byPos, ordPos, None)
+    }
+
+  /** The child-output positions a gate's scan must range: the ord (when
+    * the arm has one), and that plus every value column the avg /
+    * decimal-sum overflow proofs will ask for. None when a proof argument
+    * is not a child attribute (no provable range). */
+  private def rangePositions(
+      proofExprs: Seq[Expression], ordOpt: Option[AttributeReference],
+      child: LogicalPlan): Option[(Option[Int], Seq[Int])] = {
+    val ordPos = ordOpt.map(o => child.output.indexWhere(_.exprId == o.exprId))
+    val proofPos = proofExprs.map {
+      case a: AttributeReference => child.output.indexWhere(_.exprId == a.exprId)
+      case _ => -1
+    }
+    if (ordPos.contains(-1) || proofPos.contains(-1)) None
+    else Some((ordPos, (ordPos.toSeq ++ proofPos).distinct.sorted))
+  }
+
+  /** The Gate over one scan's numbers — None when the ord range is not
+    * real (all-null or non-finite ords: the plain window is the only
+    * provable plan). */
+  private def gateOf(
+      child: LogicalPlan, rows: BigInt,
+      byPos: Map[Int, Option[(BigDecimal, BigDecimal)]], ordPos: Option[Int],
+      hotHashes: Option[Set[Long]]): Option[Gate] = {
     val (lo, hi) = ordPos match {
-      case Some(p) => census.byPos(p) match {
+      case Some(p) => byPos(p) match {
         case Some((a, b)) => (a.toDouble, b.toDouble)
         case None => return None
       }
       case None => (0.0, 0.0)
     }
-    Some(Gate(census.rows, lo, hi, a => {
+    Some(Gate(rows, lo, hi, a => {
       val p = child.output.indexWhere(_.exprId == a.exprId)
-      if (p < 0) None else census.byPos.get(p).flatten
+      if (p < 0) None else byPos.get(p).flatten
     }, hotHashes))
   }
-
 
   /** The census itself: answer from the cache entry or run
     * the ONE scan job and cache the result. Pulled out of [[censusGate]]
@@ -1439,81 +1505,20 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
       pk: Seq[AttributeReference], child: LogicalPlan, key: LogicalPlan,
       spark: org.apache.spark.sql.SparkSession): Census =
     cached.getOrElse {
-      import org.apache.spark.sql.catalyst.expressions.XxHash64
-      import org.apache.spark.sql.catalyst.expressions.aggregate.{
-        ApproxTopK, HyperLogLogPlusPlus, Max, Min}
-      // ONE scan: count(1) + min/max per needed column (+ the two key
-      // sketches when keyed). The ord is read through ordNumeric (epoch
-      // micros for timestamps — the unit the chunk function divides in);
-      // value columns keep their native type so decimal proofs stay
-      // exact.
-      def rangeExpr(pos: Int): Expression = {
-        val a = child.output(pos)
-        ordOpt match {
-          case Some(o) if a.exprId == o.exprId =>
-            Cast(ordNumeric(o), DoubleType)
-          case _ => a
-        }
-      }
-      // one 64-bit hash folds multi-column keys (nulls hash
-      // deterministically); collisions can only merge distinct keys,
-      // which OVERSTATES hotness — a performance false-positive, never
-      // a wrong answer (chunking a lukewarm key is still exact)
-      val hashKey = if (keyed) Some(new XxHash64(pk)) else None
-      val aggs: Seq[NamedExpression] =
-        (Alias(Count(Seq(Literal(1))).toAggregateExpression(), "__graft_cnt")() +:
-          need.flatMap { p =>
-            Seq(Alias(Min(rangeExpr(p)).toAggregateExpression(), s"__graft_lo_$p")(),
-              Alias(Max(rangeExpr(p)).toAggregateExpression(), s"__graft_hi_$p")())
-          }) ++ hashKey.toSeq.flatMap { h =>
-            Seq(
-              Alias(HyperLogLogPlusPlus(h).toAggregateExpression(),
-                "__graft_ndv")(),
-              // top 100, not top 1 (r16): the same sketch that proves the
-              // heaviest key now NAMES every heavy hitter for the hot-key
-              // split — identical scan cost, the sketch tracks 10k items
-              // either way
-              Alias(ApproxTopK(h, Literal(100), Literal(10000))
-                .toAggregateExpression(), "__graft_top")())
-          }
       logInfo(s"AutoChunkWindow: launching one-scan census " +
         s"(${if (keyed) "keyed sketch probe" else "global"}, " +
         s"${need.length} column range(s)) over ${child.nodeName} of " +
         s"~${child.stats.sizeInBytes} bytes — cached until invalidateCensus()")
       censusRuns.incrementAndGet()
-      val row = org.apache.spark.sql.graft.ColumnBridge
-        .ofRows(spark, Aggregate(Nil, aggs, child)).collect()(0)
-      val byPos = need.zipWithIndex.map { case (p, i) =>
-        val (loI, hiI) = (1 + 2 * i, 2 + 2 * i)
-        p -> (if (row.isNullAt(loI) || row.isNullAt(hiI)) None
-              else for {
-                mn <- statBigDecimal(row.get(loI))
-                mx <- statBigDecimal(row.get(hiI))
-              } yield (mn, mx))
-      }.toMap
+      val (rows, byPos, sketch) =
+        scanStats(spark, child, need, ordOpt, if (keyed) pk else Nil)
       val keyStats: Map[Seq[Int], (BigInt, Seq[(Long, BigInt)])] =
-        if (!keyed) Map.empty
-        else {
-          val ndvI = 1 + 2 * need.length
-          val ndv = BigInt(row.getLong(ndvI))
-          // approx_top_k yields array<struct<item, count>> ordered by
-          // estimated count; element 0's count is the heaviest key's,
-          // the full (hash, count) list feeds the hot-key split (r16)
-          val items = row.get(ndvI + 1) match {
-            case s: scala.collection.Seq[_] =>
-              s.map { e =>
-                val r = e.asInstanceOf[org.apache.spark.sql.Row]
-                (r.getAs[Long]("item"), BigInt(r.getAs[Long]("count")))
-              }.toSeq
-            case _ => Nil
-          }
-          Map(keyPos -> ((ndv, items)))
-        }
+        sketch.map(s => Map(keyPos -> s)).getOrElse(Map.empty)
       // merge a prior entry's stats: a second window over the same child
       // with a DIFFERENT key set (or extra proof columns) re-censuses once
       // and keeps both, instead of ping-ponging the cache between key sets
       val prev = Option(censusCache.get(key))
-      val c = Census(BigInt(row.getLong(0)),
+      val c = Census(rows,
         prev.map(_.byPos).getOrElse(Map.empty) ++ byPos,
         prev.map(_.keyStats).getOrElse(Map.empty) ++ keyStats,
         System.nanoTime())
@@ -1521,6 +1526,79 @@ object AutoChunkWindow extends Rule[LogicalPlan] {
       censusCache.put(key, c)
       c
     }
+
+  /** ONE scan job over `child`: the exact row count, min/max per `need`
+    * position, and — when `pk` is non-empty — the two key sketches
+    * (estimated NDV, and the ApproxTopK heavy-hitter list as (key-hash,
+    * estimated count) pairs, heaviest first). The ord is read through
+    * ordNumeric (epoch micros for timestamps — the unit the chunk
+    * function divides in); value columns keep their native type so
+    * decimal proofs stay exact. */
+  private def scanStats(
+      spark: org.apache.spark.sql.SparkSession, child: LogicalPlan,
+      need: Seq[Int], ordOpt: Option[AttributeReference],
+      pk: Seq[AttributeReference])
+      : (BigInt, Map[Int, Option[(BigDecimal, BigDecimal)]],
+        Option[(BigInt, Seq[(Long, BigInt)])]) = {
+    import org.apache.spark.sql.catalyst.expressions.XxHash64
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{
+      ApproxTopK, HyperLogLogPlusPlus, Max, Min}
+    def rangeExpr(pos: Int): Expression = {
+      val a = child.output(pos)
+      ordOpt match {
+        case Some(o) if a.exprId == o.exprId =>
+          Cast(ordNumeric(o), DoubleType)
+        case _ => a
+      }
+    }
+    // one 64-bit hash folds multi-column keys (nulls hash
+    // deterministically); collisions can only merge distinct keys,
+    // which OVERSTATES hotness — a performance false-positive, never
+    // a wrong answer (chunking a lukewarm key is still exact)
+    val hashKey = if (pk.nonEmpty) Some(new XxHash64(pk)) else None
+    val aggs: Seq[NamedExpression] =
+      (Alias(Count(Seq(Literal(1))).toAggregateExpression(), "__graft_cnt")() +:
+        need.flatMap { p =>
+          Seq(Alias(Min(rangeExpr(p)).toAggregateExpression(), s"__graft_lo_$p")(),
+            Alias(Max(rangeExpr(p)).toAggregateExpression(), s"__graft_hi_$p")())
+        }) ++ hashKey.toSeq.flatMap { h =>
+          Seq(
+            Alias(HyperLogLogPlusPlus(h).toAggregateExpression(),
+              "__graft_ndv")(),
+            // top 100, not top 1 (r16): the same sketch that proves the
+            // heaviest key now NAMES every heavy hitter for the hot-key
+            // split — identical scan cost, the sketch tracks 10k items
+            // either way
+            Alias(ApproxTopK(h, Literal(100), Literal(10000))
+              .toAggregateExpression(), "__graft_top")())
+        }
+    val row = org.apache.spark.sql.graft.ColumnBridge
+      .ofRows(spark, Aggregate(Nil, aggs, child)).collect()(0)
+    val byPos = need.zipWithIndex.map { case (p, i) =>
+      val (loI, hiI) = (1 + 2 * i, 2 + 2 * i)
+      p -> (if (row.isNullAt(loI) || row.isNullAt(hiI)) None
+            else for {
+              mn <- statBigDecimal(row.get(loI))
+              mx <- statBigDecimal(row.get(hiI))
+            } yield (mn, mx))
+    }.toMap
+    val sketch = hashKey.map { _ =>
+      val ndvI = 1 + 2 * need.length
+      // approx_top_k yields array<struct<item, count>> ordered by
+      // estimated count; element 0's count is the heaviest key's,
+      // the full (hash, count) list feeds the hot-key split (r16)
+      val items = row.get(ndvI + 1) match {
+        case s: scala.collection.Seq[_] =>
+          s.map { e =>
+            val r = e.asInstanceOf[org.apache.spark.sql.Row]
+            (r.getAs[Long]("item"), BigInt(r.getAs[Long]("count")))
+          }.toSeq
+        case _ => Nil
+      }
+      (BigInt(row.getLong(ndvI)), items)
+    }
+    (BigInt(row.getLong(0)), byPos, sketch)
+  }
 
   /** RANGE-sliding fire guard: (a) the seq-block kinds (lag/lead, ROWS
     * sliding) and the ord-block RANGE kind need DIFFERENT blockings — a

@@ -58,7 +58,6 @@ object SpendingPipeline {
       window: String = "10 minutes",
       slide: String = "5 minutes",
       watermark: String = "5 minutes",
-      dedup: Boolean = true,
       checkpointDir: String = sys.props("java.io.tmpdir") +
         "/graft-ckpt-" + java.util.UUID.randomUUID().toString,
       trigger: Option[Trigger] = None,
@@ -89,15 +88,14 @@ object SpendingPipeline {
   def windowedSpend(spark: SparkSession, source: Source, conf: Config = Config()): DataFrame =
     Spend.windowedSpendStream(
       transactions(spark, source), Spend.transactionCols,
-      conf.window, conf.slide, conf.watermark, conf.dedup)
+      conf.window, conf.slide, conf.watermark)
 
   /** Daily totals per customer (1-day tumbling window under watermark). */
   def dailySpend(spark: SparkSession, source: Source, conf: Config = Config()): DataFrame = {
     val tx = transactions(spark, source)
     val marked = tx.withWatermark("timestamp", conf.watermark)
-    val deduped =
-      if (conf.dedup) Spend.dedupeStream(marked, Spend.transactionCols) else marked
-    Spend.dailySpendStream(deduped, Spend.transactionCols)
+    Spend.dailySpendStream(Spend.dedupeStream(marked, Spend.transactionCols),
+      Spend.transactionCols)
   }
 
   /** Start `df` into `sink`; always sets a checkpointLocation. */

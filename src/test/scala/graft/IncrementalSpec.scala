@@ -37,8 +37,15 @@ class IncrementalSpec extends SparkSpec {
     assert(!before.keySet.exists(_ >= "d=2024-01-25"),
       "bootstrap must stop at the cutoff")
 
+    // dynamic overwrite is a write option: the session conf must read
+    // exactly as before the call (unset stays unset, not "static")
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
     Incremental.applyIncrement(
       spark, ev.filter(col("ts") >= cutoff), table.toString)
+    assert(spark.conf.getOption(modeKey) == modeBefore,
+      s"applyIncrement changed the session's $modeKey: " +
+        s"$modeBefore -> ${spark.conf.getOption(modeKey)}")
     val after = partitionFiles(table)
 
     val touched = after.keySet.filter(_ >= "d=2024-01-25")

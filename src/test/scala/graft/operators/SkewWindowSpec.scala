@@ -3,9 +3,10 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Chunk-decomposed exact running sum: value parity with the plain
-  * window on random and hot-key data, range-boundary rows, and the plan
-  * pin that the node-scale window is partitioned by (key, chunk). */
+/** The Skew window verbs: value parity with the plain window on random
+  * and hot-key data, range-boundary rows, nulls and ties. Each verb is a
+  * forced AutoChunkWindow arm, so each test is a differential pin of that
+  * arm; the plan test checks that every verb's rewrite actually fired. */
 class SkewWindowSpec extends SparkSpec {
   import spark.implicits._
 
@@ -56,14 +57,41 @@ class SkewWindowSpec extends SparkSpec {
       .queryExecution.optimizedPlan.toString
     // the local window must carry the chunk in its partition spec — that
     // IS the skew fix (a key-only partition spec would serialize hot
-    // keys). The key rides inside the __sk struct (null-safe equi-join
-    // surrogate, r12), so the spec reads (__sk, __chunk).
-    assert(raw"windowspecdefinition\(__sk#\d+, __chunk#\d+".r.findFirstIn(p)
-      .isDefined, s"(sk, chunk)-partitioned window missing:\n$p")
+    // keys). The key rides inside the rule's struct surrogate (null-safe
+    // equi-join key), so the spec reads (__graft_chunk_sk, __graft_chunk).
+    assert(raw"windowspecdefinition\(__graft_chunk_sk#\d+, __graft_chunk#\d+".r
+      .findFirstIn(p).isDefined, s"(sk, chunk)-partitioned window missing:\n$p")
     val bigWindowByKeyOnly =
-      raw"windowspecdefinition\((__sk|k)#\d+L?, o#\d+L".r.findFirstIn(p)
+      raw"windowspecdefinition\((__graft_chunk_sk|k)#\d+L?, o#\d+L".r.findFirstIn(p)
     assert(bigWindowByKeyOnly.isEmpty,
       s"row-scale window still partitioned by key alone:\n$p")
+    // every routed verb is a forced AutoChunkWindow arm: a declined
+    // rewrite would still pass the value-parity tests (the plain window
+    // is exact), so the decomposition's attributes must be in each plan
+    val dec = df.withColumn("v", col("v").cast("decimal(12,2)"))
+    val routed: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+      "runningSumChunked" -> Skew.runningSumChunked(df, "k", "o", "v", "x"),
+      "runningAggChunked(count)" ->
+        Skew.runningAggChunked(df, "k", "o", "v", "x", "count"),
+      "runningAggChunked(decimal sum)" ->
+        Skew.runningAggChunked(dec, "k", "o", "v", "x", "sum"),
+      "laggedChunked(lag)" -> Skew.laggedChunked(df, "k", "o", "v", "x", 2),
+      "laggedChunked(lead, default)" -> Skew.laggedChunked(df, "k", "o", "v",
+        "x", 1, lead = true, default = -1L),
+      "slidingAggChunked" -> Skew.slidingAggChunked(df, "k", "o", "v", "x",
+        "avg", 3, following = 2),
+      "slidingRangeAggChunked" -> Skew.slidingRangeAggChunked(df, "k", "o",
+        "v", "x", "sum", preceding = 30L),
+      "rankFamilyChunked" -> Skew.rankFamilyChunked(df, "k", "o", ntile = 4),
+      "anchorValuesChunked" ->
+        Skew.anchorValuesChunked(df, "k", "o", "v", "f", "l"),
+      "laggedIgnoreNullsChunked" ->
+        Skew.laggedIgnoreNullsChunked(df, "k", "o", "v", "x"))
+    routed.foreach { case (verb, out) =>
+      assert(out.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
+        s"$verb: the forced rewrite declined, the plan is the plain window:\n" +
+          out.queryExecution.optimizedPlan)
+    }
   }
 
   test("min/max variants match their plain windows (offset-less first chunk)") {
@@ -320,7 +348,7 @@ class SkewWindowSpec extends SparkSpec {
     // subtree twice (verdict #1: 2x scan, 5.5x shuffle) and its two
     // evaluations could disagree under tied ords (ADVICE). The block form
     // duplicates boundary rows with a GENERATOR from one evaluated pass:
-    // the plan must carry exactly one scan of the source and one Generate
+    // the plan must carry exactly one scan of the source and one Expand
     val df = spark.range(2000L).select(
       pmod(col("id"), lit(3L)).as("k"), col("id").as("o"),
       pmod(col("id"), lit(17L)).as("v"))
@@ -332,7 +360,7 @@ class SkewWindowSpec extends SparkSpec {
     val scans = "Range \\(0, 2000".r.findAllIn(p).size
     assert(scans == 2,
       s"sequence subtree must be evaluated once (2 scans), found $scans:\n$p")
-    assert(p.contains("Generate") || p.contains("explode"),
+    assert(p.contains("Expand"),
       s"boundary duplication must be a generator, not a self-join:\n$p")
     assert(!p.contains("LeftOuter"), s"donor self-join must be gone:\n$p")
   }
@@ -654,13 +682,13 @@ class SkewWindowSpec extends SparkSpec {
         s"the dominant tie group still rides a value-only window:\n" +
           s"${got.queryExecution.optimizedPlan}")
       // and the chunk machinery is actually in the plan
-      assert(got.queryExecution.optimizedPlan.toString.contains("__chunk"),
+      assert(got.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
         "tieChunks must route through the chunk decomposition")
     }
     // default (tieChunks = 0) stays the r14 plan — consuming rows are
     // untouched by the new parameter
     val legacy = Skew.globalRankByValue(df, "v", "u", "r")
-    assert(!legacy.queryExecution.optimizedPlan.toString.contains("__chunk"),
+    assert(!legacy.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
       "default tieChunks must keep the single-window form")
     // STRING tie columns must IGNORE tieChunks (the chunk function's
     // double cast is not monotone in lexicographic order — "10" < "9"
@@ -672,7 +700,7 @@ class SkewWindowSpec extends SparkSpec {
     val sw = Window.orderBy(col("v").asc, col("u").asc)
     val sWant = sdf.withColumn("r", row_number().over(sw).cast("long"))
     val sGot = Skew.globalRankByValue(sdf, "v", "u", "r", tieChunks = 8)
-    assert(!sGot.queryExecution.optimizedPlan.toString.contains("__chunk"),
+    assert(!sGot.queryExecution.optimizedPlan.toString.contains("__graft_chunk"),
       "string tieCol must keep the plain within-group window")
     assert(sGot.exceptAll(sWant).isEmpty && sWant.exceptAll(sGot).isEmpty,
       "string tieCol ranks must match the serial lexicographic window")

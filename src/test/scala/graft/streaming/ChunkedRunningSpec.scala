@@ -110,12 +110,12 @@ class ChunkedRunningSpec extends SparkSpec {
     // even when 60%-hot — auto mode must pick the plain window there and
     // the decomposition only when one key's slice is big enough. The
     // sink observes the decision through the result plan (the chunked
-    // path carries __chunk; the plain path is a bare window).
+    // path carries __graft_chunk; the plain path is a bare window).
     val plans = ArrayBuffer.empty[Boolean]
     val outs = ArrayBuffer.empty[DataFrame]
     val fn = ChunkedRunning.foreachBatch("k", "o", "v", "run", "sum",
         chunks = 0, autoHotRows = 200L, autoChunks = 4) { (out, _) =>
-      plans += out.queryExecution.optimizedPlan.toString.contains("__chunk")
+      plans += out.queryExecution.optimizedPlan.toString.contains("__graft_chunk")
       outs += out.persist(); out.count(); ()
     }
     // batch 0: 400 rows, key 0 holds 300 (>= 200) -> must chunk
@@ -183,7 +183,7 @@ class ChunkedRunningSpec extends SparkSpec {
     val fn = ChunkedRunning.foreachBatch("k", "o", "v", "run", "sum",
         chunks = 0, autoHotRows = 200L, autoChunks = 4) { (out, _) =>
       val op = out.queryExecution.optimizedPlan
-      plans += ((op.toString.contains("__chunk"),
+      plans += ((op.toString.contains("__graft_chunk"),
         op.toString.contains("Union"),
         op.collect {
           case w: org.apache.spark.sql.catalyst.plans.logical.Window => w

@@ -261,7 +261,7 @@ class RollingRangeSpec extends SparkSpec {
         preceding = 50L, chunks = 0, autoHotRows = 200L, autoChunks = 4) {
       (out, _) =>
         val op = out.queryExecution.optimizedPlan.toString
-        plans += ((op.contains("__rblk"), op.contains("Union")))
+        plans += ((op.contains("__graft_chunk_rblk"), op.contains("Union")))
         outs += out.persist(); out.count(); ()
     }
     fn(mk(0L, 500L).toDF("k", "o", "v"), 0L)
