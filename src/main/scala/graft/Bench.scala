@@ -199,7 +199,6 @@ object Bench {
     }
     def epsRound(round: Int): Sample = {
       val atMs = System.currentTimeMillis()
-      val t0 = System.nanoTime()
       if (payloads.isEmpty) Sample(-1.0, atMs, Some("no payloads"))
       else try Sample(streamEpsOnce(round), atMs, None)
       catch { case t: Throwable =>
@@ -1270,11 +1269,7 @@ object Bench {
       // while state rows stay flat.
       val s9 = if (stageFilter.exists(!_("stream_state_1m"))) ""
         else streamStateSoak(spark)
-      // the stage was session_tws_2m through r12 (r13 right-sized the
-      // soak to 1M events); accept the old key as a filter alias so
-      // pre-r13 stage filters keep selecting it (ADVICE r13)
-      val s10 = if (stageFilter.exists(f =>
-          !f("session_tws_1m") && !f("session_tws_2m"))) ""
+      val s10 = if (stageFilter.exists(!_("session_tws_1m"))) ""
         else sessionTwsSoak(spark)
       val s11 = if (stageFilter.exists(!_("stream_join_1m"))) ""
         else streamJoinSoak(spark)
@@ -1512,7 +1507,7 @@ object Bench {
             .as("delay_sec"))
         .writeStream.outputMode("append").format("memory")
         .queryName("soak_stream_join")
-        .option("checkpointLocation", SparkEntry.tempCkpt())
+        .option("checkpointLocation", SparkEntry.tempDir("ckpt"))
         .start()
       val stateRows = Array.newBuilder[Long]
       val matched = Array.newBuilder[Long]
@@ -1575,7 +1570,7 @@ object Bench {
           .transformWithStateStreaming(ev, gapMs = 15 * 60 * 1000L)
         val q = sessions.toDF().writeStream.outputMode("append")
           .format("memory").queryName("soak_session_tws")
-          .option("checkpointLocation", SparkEntry.tempCkpt())
+          .option("checkpointLocation", SparkEntry.tempDir("ckpt"))
           .start()
         val stateRows = Array.newBuilder[Long]
         val timersReg = Array.newBuilder[Long]

@@ -1,7 +1,7 @@
 package graft
 
-import graft.functions.{DamerauLevenshtein, DotProduct, MinHashBandKeys,
-  MinHashMd5, SimHash64, StripAccentsExpr, TopKByScore, UnicodeNfc, WordShingles}
+import graft.functions.{DamerauLevenshtein, DotProduct, SimHash64,
+  StripAccentsExpr, TopKByScore, UnicodeNfc}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
@@ -14,9 +14,8 @@ import org.apache.spark.sql.execution.SparkStrategy
 /** SparkSessionExtensions entry point: registers graft's custom Catalyst
   * expressions as SQL functions, so `spark.sql("SELECT graft_dot(a, b)")`
   * works alongside the Column API, graft's optimizer rules
-  * ([[graft.plans.RewriteDotProductHof]]: portable HOF dot product ->
-  * codegen'd DotProduct, and MvRewrite, TopKRewrite, AutoChunkWindow) and
-  * its planner strategies
+  * ([[graft.plans.MvRewrite]], [[graft.plans.TopKRewrite]],
+  * [[graft.plans.AutoChunkWindow]]) and its planner strategies
   * ([[graft.plans.AsOfJoinStrategy]]: native as-of join;
   * [[graft.plans.ParseJsonOnce]]: a filter on parsed JSON fields reads the
   * one full parse instead of re-parsing the payload).
@@ -48,12 +47,8 @@ object GraftExtensions {
     * builder) — the one table both registration paths read. */
   private[graft] val functions: Seq[(String, Class[_], FunctionBuilder)] = Seq(
     ("graft_dot", classOf[DotProduct], a => DotProduct(a(0), a(1))),
-    ("graft_minhash", classOf[MinHashMd5], a => MinHashMd5(a(0), intArg(a(1), "k"))),
-    ("graft_minhash_bands", classOf[MinHashBandKeys], a =>
-      MinHashBandKeys(a(0), intArg(a(1), "k"), intArg(a(2), "bands"))),
     ("graft_simhash", classOf[SimHash64], a => SimHash64(a(0))),
     ("graft_damerau", classOf[DamerauLevenshtein], a => DamerauLevenshtein(a(0), a(1))),
-    ("graft_word_shingles", classOf[WordShingles], a => WordShingles(a(0), intArg(a(1), "n"))),
     ("graft_nfc", classOf[UnicodeNfc], a => UnicodeNfc(a.head)),
     ("graft_strip_accents", classOf[StripAccentsExpr], a => StripAccentsExpr(a.head)),
     ("graft_fold_key", classOf[StripAccentsExpr], a => foldKeyExpr(a.head)),
@@ -65,8 +60,7 @@ object GraftExtensions {
 
   /** Optimizer rules, in the order they run. */
   private[graft] val rules: Seq[Rule[LogicalPlan]] = Seq(
-    graft.plans.RewriteDotProductHof, graft.plans.MvRewrite,
-    graft.plans.TopKRewrite, graft.plans.AutoChunkWindow)
+    graft.plans.MvRewrite, graft.plans.TopKRewrite, graft.plans.AutoChunkWindow)
 
   /** Planner strategies: the native as-of join (AsOfJoinPlan logical ->
     * AsOfJoinExec sort-merge physical), then the one-parse JSON filter. */

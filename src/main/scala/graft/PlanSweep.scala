@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, JsonToStructs}
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.SortAggregateExec
@@ -18,6 +19,14 @@ import org.apache.spark.sql.execution.aggregate.SortAggregateExec
   * one tokenizes its whole payload on every row it sees, see
   * [[graft.plans.ParseJsonOnce]]); `sort_aggregate` counts SortAggregate
   * nodes.
+  *
+  * `rules_fired` is the row's ledger from Spark's own rule meter
+  * (`RuleExecutor.queryExecutionMeter`): for every `graft.plans.*`
+  * optimizer rule that ran while the row was built, `Rule=effective/total`
+  * runs, `;`-separated, sorted by rule name. The meter is global to the
+  * JVM, so rows are swept serially and it is reset before each one.
+  * Planner strategies are not rules; `json_parses` counts
+  * [[graft.plans.ParseJsonOnce]]'s effect instead.
   *
   * `runMain graft.PlanSweep <sfDir> <outFile>`
   *
@@ -42,6 +51,18 @@ object PlanSweep extends AdaptiveSparkPlanHelper {
       n.expressions.map(_.collect { case e if p(e) => e }.size).sum
     }.sum
 
+  /** `graft.plans.*` rows of `RuleExecutor.dumpTimeSpent()` as
+    * `Rule=effective/total` runs (the per-rule maps are private; the dump
+    * prints `name effTime / time effRuns / runs` per rule). */
+  def rulesFired(dump: String): String = {
+    val fired = dump.linesIterator.map(_.trim.split("\\s+"))
+      .collect { case Array(name, _, "/", _, eff, "/", total)
+        if name.startsWith("graft.plans.") =>
+        s"${name.stripPrefix("graft.plans.")}=$eff/$total" }
+      .toSeq.sorted
+    if (fired.isEmpty) "-" else fired.mkString(";")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outFile = args(1)
@@ -55,6 +76,7 @@ object PlanSweep extends AdaptiveSparkPlanHelper {
 
     val rows = SparkEntry.queries.keys.toSeq.sorted.map { n =>
       try {
+        RuleExecutor.resetMetrics()
         val (txt, plan) = graft.util.Checkpoints.scoped {
           val qe = SparkEntry.queries(n)(spark, sfDir).queryExecution
           (qe.explainString(
@@ -77,17 +99,18 @@ object PlanSweep extends AdaptiveSparkPlanHelper {
           count(txt, "PushedFilters: []"),
           countExpressions(plan)(_.isInstanceOf[JsonToStructs]),
           collectWithSubqueries(plan) { case a: SortAggregateExec => a }.size,
+          rulesFired(RuleExecutor.dumpTimeSpent()),
           "ok").mkString("\t")
       } catch {
         case t: Throwable =>
-          (Seq(n) ++ Seq.fill(11)("-") :+ s"failed: ${t.toString.take(120)}")
+          (Seq(n) ++ Seq.fill(12)("-") :+ s"failed: ${t.toString.take(120)}")
             .mkString("\t")
       }
     }
     val header = Seq("query", "cartesian", "bnl_join", "single_partition",
       "sort_merge_join", "broadcast_hash_join", "shuffled_hash_join",
       "exchange", "parquet_scans", "scans_no_pushed_filters", "json_parses",
-      "sort_aggregate", "status")
+      "sort_aggregate", "rules_fired", "status")
       .mkString("\t")
     val p = java.nio.file.Paths.get(outFile)
     java.nio.file.Files.createDirectories(p.getParent)

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.types._
 
-import java.sql.Timestamp
-
 /** Canonical schemas for the transaction stream.
   *
   * The reference declares two divergent schemas — a 7-field canonical one
@@ -28,18 +26,6 @@ object Schemas {
     StructField("currency", StringType, nullable = true),
     StructField("category", StringType, nullable = true)
   ))
-
-  /** Typed view of a parsed transaction. */
-  final case class Transaction(
-      transaction_id: String,
-      customer_id: String,
-      merchant_id: Option[Int],
-      timestamp: Timestamp,
-      amount: Double,
-      payment_method: String,
-      status: String,
-      currency: Option[String],
-      category: Option[String])
 
   /** Schema of the `events` harness table (the stream analog). */
   val event: StructType = StructType(Seq(

@@ -867,9 +867,7 @@ object SparkEntry {
     // missing trailing columns without flagging it; the type mismatch is
     // what makes a record malformed.)
     "s8_csv_corrupt" -> ((s, dir) => {
-      val csvDir = sys.props("java.io.tmpdir") + "/graft-csv-" +
-        math.abs(dir.hashCode)
-      FileUtils.deleteDirectory(new File(csvDir))
+      val csvDir = tempDir("csv")
       val amount = when(col("event_id") % 20 === 0, lit("###"))
         .otherwise(format_string("%.2f", col("value")))
       Tables.events(s, dir)
@@ -1953,8 +1951,7 @@ object SparkEntry {
     // The oracle is a flat full recompute — the incremental path must be
     // bit-identical to it.
     "x29_incremental_rollup" -> ((s, dir) => {
-      val tableDir = sys.props("java.io.tmpdir") + "/graft-increll-" +
-        math.abs(dir.hashCode)
+      val tableDir = tempDir("increll")
       val ev = Tables.events(s, dir)
       val cutoff = lit("2024-01-25").cast("timestamp")
       graft.operators.Incremental.build(ev.filter(col("ts") < cutoff), tableDir)
@@ -1971,9 +1968,7 @@ object SparkEntry {
     // recompute exactly.
     "stream_incremental_rollup" -> ((s, dir) => {
       import s.implicits._
-      val tableDir = sys.props("java.io.tmpdir") + "/graft-increll-stream-" +
-        math.abs(dir.hashCode)
-      FileUtils.deleteDirectory(new File(tableDir)) // stale partitions from a prior gate run
+      val tableDir = tempDir("increll-stream")
       val rows = Tables.events(s, dir)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_type"), col("value"))
@@ -1995,8 +1990,7 @@ object SparkEntry {
     // that lets a 100 TB corpus evolve without rewriting history. The
     // oracle replays the union with typed NULLs.
     "x30_schema_evolution" -> ((s, dir) => {
-      val base = sys.props("java.io.tmpdir") + "/graft-evolve-" +
-        math.abs(dir.hashCode)
+      val base = tempDir("evolve")
       val docs = Tables.documents(s, dir)
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("text"), col("source"))
@@ -2017,8 +2011,7 @@ object SparkEntry {
     // be invisible to every query, so the oracle is the flat table.
     // LayoutSpec pins the file-count contract.
     "x31_compact" -> ((s, dir) => {
-      val base = sys.props("java.io.tmpdir") + "/graft-compact-" +
-        math.abs(dir.hashCode)
+      val base = tempDir("compact")
       Tables.documents(s, dir).repartition(64)
         .write.mode("overwrite").parquet(s"$base/small")
       graft.operators.Layout.compact(
@@ -2034,8 +2027,7 @@ object SparkEntry {
     // this layout is what turns "last week" queries from full scans into
     // listing seven directories.
     "x40_partition_prune" -> ((s, dir) => {
-      val base = sys.props("java.io.tmpdir") + "/graft-datepart-" +
-        math.abs(dir.hashCode)
+      val base = tempDir("datepart")
       graft.operators.Layout.writeDatePartitioned(
         Tables.events(s, dir), col("ts"), base)
       s.read.parquet(base)
@@ -2055,8 +2047,7 @@ object SparkEntry {
     // dynamicpruningexpression on the scan. At 100 TB this is how a
     // "revenue for promo days" join reads 4 directories, not 3,650.
     "x47_dpp" -> ((s, dir) => {
-      val base = sys.props("java.io.tmpdir") + "/graft-datepart-" +
-        math.abs(dir.hashCode)
+      val base = tempDir("datepart")
       graft.operators.Layout.writeDatePartitioned(
         Tables.events(s, dir), col("ts"), base)
       val dim = s.range(0, 30).select(
@@ -2087,9 +2078,7 @@ object SparkEntry {
     // whose manifest file sets match. The oracle recomputes the same feed
     // from the raw relation.
     "x52_change_feed" -> ((s, dir) => {
-      val base = sys.props("java.io.tmpdir") + "/graft-cdf-" +
-        math.abs(dir.hashCode)
-      FileUtils.deleteDirectory(new File(base))
+      val base = tempDir("cdf")
       val rel = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"),
           to_date(col("ts")).cast("string").as("event_date"))
@@ -2115,9 +2104,7 @@ object SparkEntry {
     }),
 
     "x48_time_travel" -> ((s, dir) => {
-      val base = sys.props("java.io.tmpdir") + "/graft-versioned-" +
-        math.abs(dir.hashCode)
-      FileUtils.deleteDirectory(new File(base))
+      val base = tempDir("versioned")
       val rel = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"),
           to_date(col("ts")).cast("string").as("event_date"))
@@ -2147,9 +2134,7 @@ object SparkEntry {
     // (damage undone): a manifest entry leaked from v1/v2 into the
     // rollback shifts a daily total and fails the hash.
     "x63_rollback" -> ((s, dir) => {
-      val base = sys.props("java.io.tmpdir") + "/graft-rollback-" +
-        math.abs(dir.hashCode)
-      FileUtils.deleteDirectory(new File(base))
+      val base = tempDir("rollback")
       val rel = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"),
           to_date(col("ts")).cast("string").as("event_date"))
@@ -2182,9 +2167,7 @@ object SparkEntry {
     // skips identical file sets unread); the oracle is the direct v2
     // aggregate, so the hash proves the IVM invisible.
     "x68_ivm_retract" -> ((s, dir) => {
-      val base = sys.props("java.io.tmpdir") + "/graft-ivm-" +
-        math.abs(dir.hashCode)
-      FileUtils.deleteDirectory(new File(base))
+      val base = tempDir("ivm")
       val rel = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"),
           to_date(col("ts")).cast("string").as("event_date"))
@@ -2220,11 +2203,8 @@ object SparkEntry {
     // (upsert AND delete) — a write leaking across the shared immutable
     // files shifts a daily total on the wrong branch and fails the hash.
     "x64_clone" -> ((s, dir) => {
-      val base = sys.props("java.io.tmpdir") + "/graft-clone-src-" +
-        math.abs(dir.hashCode)
-      val dst = sys.props("java.io.tmpdir") + "/graft-clone-dst-" +
-        math.abs(dir.hashCode)
-      FileUtils.deleteDirectory(new File(base)); FileUtils.deleteDirectory(new File(dst))
+      val base = tempDir("clone-src")
+      val dst = tempDir("clone-dst")
       val rel = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"),
           to_date(col("ts")).cast("string").as("event_date"))
@@ -2257,8 +2237,7 @@ object SparkEntry {
     // double-counted partial shifts a daily total and fails the hash.
     "x46_mv_refresh" -> ((s, dir) => {
       val base = s"$dir/events.parquet"
-      val mvDir = sys.props("java.io.tmpdir") + "/graft-mv2-" +
-        math.abs(dir.hashCode)
+      val mvDir = tempDir("mv2")
       val eventDate = to_date(col("ts").cast("timestamp"))
       val cut = lit("2024-01-20").cast("date")
       graft.plans.MvRewrite.buildAndRegister(s, base, mvDir,
@@ -2284,8 +2263,7 @@ object SparkEntry {
     // partitions byte-identical by mtime); the graded aggregate proves
     // updates replaced their keys, survivors stayed, and appends landed.
     "x44_upsert" -> ((s, dir) => {
-      val base = sys.props("java.io.tmpdir") + "/graft-upsert-" +
-        math.abs(dir.hashCode)
+      val base = tempDir("upsert")
       graft.operators.Layout.writeDatePartitioned(
         Tables.events(s, dir), col("ts"), base)
       val d = Tables.events(s, dir).withColumn("event_date", to_date(col("ts")))
@@ -2314,8 +2292,7 @@ object SparkEntry {
     // directory and never the base file. The 100 TB story: dashboards
     // keep their base-table SQL; plans stop scanning the fact table.
     "x42_mv_rewrite" -> ((s, dir) => {
-      val mvDir = sys.props("java.io.tmpdir") + "/graft-mv-" +
-        math.abs(dir.hashCode)
+      val mvDir = tempDir("mv")
       graft.plans.MvRewrite.buildAndRegister(s, s"$dir/events.parquet", mvDir,
         dims = Seq(
           "event_date" -> to_date(col("ts").cast("timestamp")),
@@ -2336,8 +2313,7 @@ object SparkEntry {
     // column residue. Oracle = the same filtered aggregate over the base
     // table; PlanSpec pins that the MV is scanned, never the base.
     "x49_mv_filter" -> ((s, dir) => {
-      val mvDir = sys.props("java.io.tmpdir") + "/graft-mv3-" +
-        math.abs(dir.hashCode)
+      val mvDir = tempDir("mv3")
       graft.plans.MvRewrite.buildAndRegister(s, s"$dir/events.parquet", mvDir,
         dims = Seq(
           "event_date" -> to_date(col("ts").cast("timestamp")),
@@ -2360,8 +2336,7 @@ object SparkEntry {
     // answered ENTIRELY from the rollup. MvRewriteSpec pins the base is
     // never scanned; the oracle is the base-table query.
     "x66_mv_minmax" -> ((s, dir) => {
-      val mvDir = sys.props("java.io.tmpdir") + "/graft-mv4-" +
-        math.abs(dir.hashCode)
+      val mvDir = tempDir("mv4")
       graft.plans.MvRewrite.buildAndRegister(s, s"$dir/events.parquet", mvDir,
         dims = Seq(
           "event_date" -> to_date(col("ts").cast("timestamp")),
@@ -3244,7 +3219,6 @@ object SparkEntry {
     // exact micros (min/max, truncating mean, rank-formula median over the
     // (latency, user) total order) plus the conversion count
     "ext_conversion_latency" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val ev = Tables.events(s, dir).select(col("user_id"),
         col("event_type"), unix_micros(col("ts")).as("ts_us"))
       val signup = ev.filter(col("event_type") === "signup")
@@ -3653,8 +3627,7 @@ object SparkEntry {
     // original, so any roundtrip corruption (type mapping, nulls,
     // timestamps) breaks the hash
     "s9_orc_roundtrip" -> ((s, dir) => {
-      val orcDir = sys.props("java.io.tmpdir") + "/graft-orc-" +
-        math.abs(dir.hashCode)
+      val orcDir = tempDir("orc")
       Tables.events(s, dir)
         .select(col("event_id"), col("event_type"),
           (money(col("value")) * 100).cast("long").as("cents"))
@@ -3718,9 +3691,7 @@ object SparkEntry {
     // same survivors directly, so a leaky manifest, a lost insert, or an
     // under-deleted partition all break the hash
     "x73_tpch_refresh" -> ((s, dir) => {
-      val base = sys.props("java.io.tmpdir") + "/graft-rf-" +
-        math.abs(dir.hashCode)
-      FileUtils.deleteDirectory(new File(base))
+      val base = tempDir("rf")
       // YEAR partitions: the RF deltas are key-sampled, so they touch
       // every partition — commitUpsert/commitDelete cost one job per
       // touched partition, and month granularity made that 84 jobs per
@@ -4376,7 +4347,6 @@ object SparkEntry {
     // hex, byte length on binary) a media-ingest census needs, exact
     // counts and share bp per detected format
     "ext_media_sniff" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val magic = when(col("doc_id") % 4 === 0, unhex(lit("89504E47")))
         .when(col("doc_id") % 4 === 1, unhex(lit("FFD8FFE0")))
         .when(col("doc_id") % 4 === 2, unhex(lit("52494646")))
@@ -4402,7 +4372,6 @@ object SparkEntry {
     // C beyond (the pareto head rule at two thresholds); reported as the
     // per-class census every inventory policy starts from
     "ext_abc_classification" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       // running cum via the two-level globalRankByValue (r14, VERDICT
       // r13 #3 — parts grow with SF); total is a one-row broadcast. The
       // trailing share window below runs over the 3-row class census.
@@ -4934,8 +4903,7 @@ object SparkEntry {
     // pruned-then-filtered must equal the plain filter (the oracle);
     // LayoutSpec asserts the pruning itself.
     "x60_bloom_skip_index" -> ((s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-fbloom-" +
-        math.abs(dir.hashCode)
+      val out = tempDir("fbloom")
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
         round(col("value") * 100).cast("long").as("cents"))
       // 16 files hashed on event_id: every file holds a mix of users
@@ -5038,8 +5006,7 @@ object SparkEntry {
     // the raw table (the oracle); LayoutSpec asserts the pruning itself
     // (selected files strictly fewer than total).
     "x50_skip_index" -> ((s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-zskip-" +
-        math.abs(dir.hashCode)
+      val out = tempDir("zskip")
       val ev = Tables.events(s, dir).select(col("event_id"), col("event_type"),
         col("value"),
         datediff(to_date(col("ts")), lit("2024-01-01").cast("date")).as("day"))
@@ -5063,8 +5030,7 @@ object SparkEntry {
     // construction, so the oracle computes the same aggregates from the
     // raw rows; LayoutSpec pins that the plan scans only _skipindex.
     "x53_stats_only" -> ((s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-zskip2-" +
-        math.abs(dir.hashCode)
+      val out = tempDir("zskip2")
       val ev = Tables.events(s, dir).select(col("event_id"), col("event_type"),
         col("value"),
         datediff(to_date(col("ts")), lit("2024-01-01").cast("date")).as("day"))
@@ -5214,8 +5180,7 @@ object SparkEntry {
           Tables.ensureParallelism(Tables.documents(s, dir)))
         .orderBy(col("source"), col("lang_pred"))),
 
-    // real greedy-merge subword tokenization over the generated merge table
-    // (replaces the approxBpeCount heuristic as the graded token counter);
+    // real greedy-merge subword tokenization over the generated merge table;
     // the oracle replays the identical greedy scan as a recursive CTE over
     // the same table embedded as SQL literals
     "ext_bpe_tokens" -> ((s, dir) =>
@@ -5605,8 +5570,8 @@ object SparkEntry {
       // Two-step select: the fraction derives from the already-computed
       // count column — CollapseProject's non-cheap guard keeps the
       // sort+fold evaluated ONCE per doc (verified: one array_sort in the
-      // optimized plan), where a direct topBigramFraction(text) would pay
-      // it twice.
+      // optimized plan), where dividing a second topBigramCount(text) would
+      // pay it twice.
       import graft.operators.TextAnalysis._
       Tables.ensureParallelism(Tables.documents(s, dir))
         .select(col("doc_id"),
@@ -6349,7 +6314,7 @@ object SparkEntry {
     "ext_knn_ivf_saved" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val q = emb.filter(col("vec_id") < 10).withColumnRenamed("vec_id", "q_id")
-      val ivfDir = tempCkpt() // same deferred-reap lifecycle as stream ckpts
+      val ivfDir = tempDir("ivf")
       graft.operators.Similarity.ivfIndex(emb, nlist = 16, nprobe = 16).save(ivfDir)
       graft.operators.Similarity.loadIvfIndex(s, ivfDir).search(q, k = 5)
     }),
@@ -6442,7 +6407,7 @@ object SparkEntry {
       val q = out.writeStream.outputMode("append").format("memory")
         .queryName("stream_daily_spend_available_now_t")
         .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", tempCkpt()).start()
+        .option("checkpointLocation", tempDir("ckpt")).start()
       q.awaitTermination()
       s.table("stream_daily_spend_available_now_t")
         .filter(col("customer_id") =!= "-1")
@@ -6891,25 +6856,29 @@ object SparkEntry {
       """"timestamp":"2024-06-01T00:00:00.000Z","amount":1.0,""" +
       """"payment_method":"UPI","status":"Success"}"""
 
-  /** Throwaway checkpoint dir for a graded stream run, removed at JVM
-    * exit — repeated gate runs must not litter tmpdir. Deletion is
-    * DEFERRED (not at q.stop()): the session-wide state-store maintenance
-    * thread keeps providers loaded past a query's stop, and deleting the
-    * directory under a loaded provider fails a LATER stateful query in the
-    * same session with the dead path (observed: stream_late_data_drop
-    * failing on an earlier query's deleted state dir). */
-  private[graft] def tempCkpt(): String = {
-    val dir = sys.props("java.io.tmpdir") + "/graft-ckpt-" +
+  /** A fresh scratch directory for one call of a graded row (a stream
+    * checkpoint, tables it writes, state it keeps), named
+    * `graft-<tag>-<uuid>` under tmpdir. Unique per call, so two sessions
+    * or two processes running the same row on the same data never share
+    * (or clean) each other's files. Removed at JVM exit, so repeated gate
+    * runs do not litter tmpdir. Deletion is DEFERRED (not at q.stop()):
+    * the session-wide state-store maintenance thread keeps providers
+    * loaded past a query's stop, and deleting the directory under a loaded
+    * provider fails a LATER stateful query in the same session with the
+    * dead path (observed: stream_late_data_drop failing on an earlier
+    * query's deleted state dir). */
+  private[graft] def tempDir(tag: String): String = {
+    val dir = sys.props("java.io.tmpdir") + s"/graft-$tag-" +
       java.util.UUID.randomUUID().toString
-    ckptsToReap.synchronized { ckptsToReap += dir }
+    dirsToReap.synchronized { dirsToReap += dir }
     dir
   }
 
-  private val ckptsToReap = scala.collection.mutable.Buffer.empty[String]
+  private val dirsToReap = scala.collection.mutable.Buffer.empty[String]
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      ckptsToReap.synchronized {
-        ckptsToReap.foreach(d => FileUtils.deleteQuietly(new File(d)))
+      dirsToReap.synchronized {
+        dirsToReap.foreach(d => FileUtils.deleteQuietly(new File(d)))
       }))
   }
 
@@ -6962,7 +6931,7 @@ object SparkEntry {
 
   /** The harness every single-source graded stream row runs on: a
     * `MemoryStream` of `T` feeding the writer `sink` builds from it, with a
-    * reaped [[tempCkpt]] checkpoint. Each inner `Seq` of `batches` is
+    * reaped [[tempDir]] checkpoint. Each inner `Seq` of `batches` is
     * exactly one micro-batch, in order. With `restartAfter = Some(k)` the
     * query stops after `k` batches and `sink` is called again on the same
     * source and checkpoint — a new query (and a fresh foreachBatch
@@ -6973,7 +6942,7 @@ object SparkEntry {
       restartAfter: Option[Int] = None)(sink: Dataset[T] => DataStreamWriter[_]): Unit = {
     implicit val sqlCtx: SQLContext = s.sqlContext
     val ms = MemoryStream[T]
-    val ckpt = tempCkpt()
+    val ckpt = tempDir("ckpt")
     val runs = restartAfter.fold(Seq(batches))(k => Seq(batches.take(k), batches.drop(k)))
     runs.foreach { run =>
       val q = sink(ms.toDS()).option("checkpointLocation", ckpt).start()
@@ -7029,7 +6998,7 @@ object SparkEntry {
     * the foreachBatch exactly-once contract, so an engine replay rewrites
     * rather than duplicates); the graded result is the union read back. */
   private final class BatchParquet(cols: String*) {
-    private val outDir = tempCkpt()
+    private val outDir = tempDir("out")
     private val dirs = scala.collection.mutable.Buffer.empty[String]
     def write(out: DataFrame, id: Long): Unit = {
       val dir = s"$outDir/b_$id"
@@ -7054,7 +7023,7 @@ object SparkEntry {
     val out = new BatchParquet("customer_id", "te", "running_cents")
     val fn = graft.streaming.ChunkedRunning.foreachBatch(
       "customer_id", "te", "cents", "running_cents",
-      agg = "sum", chunks = 8, stateDir = Some(tempCkpt()))(out.write)
+      agg = "sum", chunks = 8, stateDir = Some(tempDir("state")))(out.write)
     feedStream(s, chunks(txPayloads(s), 4)) { ms =>
       txCents(ms.toDF()).writeStream.foreachBatch(fn)
     }
@@ -7084,7 +7053,7 @@ object SparkEntry {
     val fn = graft.streaming.RollingRange.foreachBatch(
       "customer_id", "te", "cents", "roll_cents",
       agg = "sum", preceding = 3600L, chunks = 8,
-      stateDir = Some(tempCkpt()))(out.write)
+      stateDir = Some(tempDir("state")))(out.write)
     feedStream(s, chunks(txPayloads(s), 4)) { ms =>
       txCents(ms.toDF()).writeStream.foreachBatch(fn)
     }
@@ -7125,7 +7094,7 @@ object SparkEntry {
     val fn = graft.streaming.RollingRange.foreachBatch(
       "customer_id", "te", "cents", "roll_cents",
       agg = "sum", preceding = 3600L, chunks = 8,
-      stateDir = Some(tempCkpt()), slack = 60L)(out.write)
+      stateDir = Some(tempDir("state")), slack = 60L)(out.write)
     feedStream(s, chunks(scrambled, 4) :+ sentinels) { ms =>
       ms.toDF("customer_id", "te", "cents").writeStream.foreachBatch(fn)
     }
@@ -7145,7 +7114,7 @@ object SparkEntry {
   private def runningChunkedRestartStream(s: SparkSession): DataFrame = {
     import s.implicits._
     val out = new BatchParquet("customer_id", "te", "running_cents")
-    val stateDir = tempCkpt()
+    val stateDir = tempDir("state")
     feedStream(s, chunks(txPayloads(s), 4), restartAfter = Some(2)) { ms =>
       // a NEW closure per start: in-memory offsets begin empty and the
       // stateDir reload path is what the row grades
@@ -7170,7 +7139,7 @@ object SparkEntry {
     * would surface as missing/duplicated rows and fail the oracle hash. */
   private def restartStream(s: SparkSession): DataFrame = {
     import s.implicits._
-    val outDir = tempCkpt() // same deferred-reap lifecycle as the checkpoint
+    val outDir = tempDir("out")
     val feed = chunks(txPayloads(s), 4)
     // the re-fed second chunk lands AFTER recovery: dropping it requires
     // the dedup state to have survived the restart, not just the offsets
@@ -7241,7 +7210,7 @@ object SparkEntry {
       col("customer_id"), col("amount"),
       (col("refund_ts").cast("long") - col("timestamp").cast("long"))
         .as("delay_sec"))
-    val ckpt = tempCkpt()
+    val ckpt = tempDir("ckpt")
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName(name).option("checkpointLocation", ckpt).start()
     val rfSentinel = (ts: String) =>
@@ -7384,9 +7353,7 @@ object SparkEntry {
     * state table is one row per user at any stream length. */
   private def streamEwma(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val stateDir = sys.props("java.io.tmpdir") + "/graft-ewma-stream-" +
-      math.abs(dir.hashCode)
-    FileUtils.deleteDirectory(new File(stateDir))
+    val stateDir = tempDir("ewma-stream")
     val daily = Tables.events(s, dir)
       .groupBy(col("user_id"), to_date(col("ts")).as("d"))
       .agg((sum(money(col("value"))) * 100).cast("long").as("cents"))
@@ -7428,9 +7395,7 @@ object SparkEntry {
   private def streamMaxConcurrency(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val outDir = sys.props("java.io.tmpdir") + "/graft-conc-stream-" +
-      math.abs(dir.hashCode)
-    FileUtils.deleteDirectory(new File(outDir))
+    val outDir = tempDir("conc-stream")
     val rows = Tables.events(s, dir)
       .select(col("user_id"), to_date(col("ts")).cast("string").as("d"),
         unix_micros(col("ts")).as("ts_us"))
@@ -7469,9 +7434,7 @@ object SparkEntry {
     * frontier-sized at any stream length. */
   private def streamSkyline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val stateDir = sys.props("java.io.tmpdir") + "/graft-skyline-stream-" +
-      math.abs(dir.hashCode)
-    FileUtils.deleteDirectory(new File(stateDir))
+    val stateDir = tempDir("skyline-stream")
     val rows = Tables.part(s, dir)
       .select(col("p_partkey"),
         (money(col("p_retailprice")) * 100).cast("long").as("price_cents"),
@@ -7504,11 +7467,9 @@ object SparkEntry {
     * empty week; the corpus has none (30 contiguous days). */
   private def streamGrowthAccounting(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = sys.props("java.io.tmpdir") + "/graft-growth-stream-" +
-      math.abs(dir.hashCode)
+    val base = tempDir("growth-stream")
     val stateDir = base + "/state"
     val outDir = base + "/rows"
-    FileUtils.deleteDirectory(new File(base))
     val uw = Tables.events(s, dir)
       .select(col("user_id"),
         date_trunc("week", col("ts")).cast("date").cast("string").as("w"))
@@ -7606,9 +7567,7 @@ object SparkEntry {
     * project once from the final counters. */
   private def streamBasketRules(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = sys.props("java.io.tmpdir") + "/graft-basket-stream-" +
-      math.abs(dir.hashCode)
-    FileUtils.deleteDirectory(new File(base))
+    val base = tempDir("basket-stream")
     val bi = Tables.lineitem(s, dir)
       .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("b"), col("p_brand").as("i")).distinct()
@@ -7670,9 +7629,7 @@ object SparkEntry {
     * batch fold's strict `>`. */
   private def streamCusum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val stateDir = sys.props("java.io.tmpdir") + "/graft-cusum-stream-" +
-      math.abs(dir.hashCode)
-    FileUtils.deleteDirectory(new File(stateDir))
+    val stateDir = tempDir("cusum-stream")
     val dailyDf = Tables.events(s, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("d"))
       .agg((sum(money(col("value"))) * 100).cast("long").as("cents"))
@@ -7765,8 +7722,8 @@ object SparkEntry {
   private def streamDedupIncremental(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val indexDir = tempCkpt()
-    val pairsDir = tempCkpt()
+    val indexDir = tempDir("index")
+    val pairsDir = tempDir("pairs")
     graft.operators.Dedup.minhashBands(docs.filter(col("doc_id") % 10 =!= 0))
       .write.mode("overwrite").parquet(indexDir)
     val newIds = docs.filter(col("doc_id") % 10 === 0)
@@ -7800,7 +7757,7 @@ object SparkEntry {
   private def streamKnn(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
-    val outDir = tempCkpt()
+    val outDir = tempDir("out")
     feedStream(s, Seq(0L until 4L, 4L until 7L, 7L until 10L)) { ms =>
       ms.toDF("id").writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -7822,7 +7779,7 @@ object SparkEntry {
     * matter how many times a chunk is delivered. */
   private def streamUpsertTable(s: SparkSession): DataFrame = {
     import s.implicits._
-    val outDir = tempCkpt() // reaped like every graded stream artifact
+    val outDir = tempDir("out")
     val feed = chunks(txPayloads(s), 4)
     // the last chunk again is a replayed delivery: the upsert must absorb
     // it without duplicates
@@ -8318,7 +8275,7 @@ object SparkEntry {
           (unix_timestamp(col("p_ts")) - unix_timestamp(col("v_ts")))
             .as("secs_since_view"))
     val qname = s"stream_interval_join_${joinType.toLowerCase}_t"
-    val ckpt = tempCkpt()
+    val ckpt = tempDir("ckpt")
     val q = joined.writeStream.outputMode("append").format("memory")
       .queryName(qname)
       .option("checkpointLocation", ckpt).start()

@@ -13,8 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the same literals tokenizes identically; the DuckDB oracle replays the
   * identical greedy scan as a recursive CTE over the same literal lists).
   *
-  * This replaces the `approxBpeCount` length heuristic with a real
-  * tokenizer: text is scanned left to right, and at each position the
+  * Text is scanned left to right, and at each position the
   * longest merge-table entry matching the upcoming characters is consumed
   * as one token (3-gram over 2-gram over single character; spaces separate
   * words and are never part of a token, which the scan gets for free

@@ -16,18 +16,12 @@ import org.apache.spark.sql.types._
   * identical results), ~100x less per-pair overhead.
   *
   * Array elements must be non-null (embedding vectors). If lengths differ,
-  * the common prefix is used — unless `strict` is set, which yields null on
-  * a length mismatch instead. Strict mode exists for the optimizer rewrite
-  * of the HOF form ([[graft.plans.RewriteDotProductHof]]): zip_with
-  * null-pads the shorter array, so the HOF's sum is null when lengths
-  * differ, and a semantics-preserving rewrite must reproduce that.
+  * the common prefix is used.
   */
-case class DotProduct(left: Expression, right: Expression, strict: Boolean = false)
+case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
-
-  override def nullable: Boolean = strict || super.nullable
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(lt, _), ArrayType(rt, _))
@@ -44,7 +38,6 @@ case class DotProduct(left: Expression, right: Expression, strict: Boolean = fal
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    if (strict && x.numElements() != y.numElements()) return null
     val n = math.min(x.numElements(), y.numElements())
     val (lf, rf) = (isFloat(left), isFloat(right))
     var acc = 0.0
@@ -65,11 +58,8 @@ case class DotProduct(left: Expression, right: Expression, strict: Boolean = fal
       val acc = ctx.freshName("acc")
       val getL = if (isFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
       val getR = if (isFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      val strictGuard =
-        if (strict) s"if ($a.numElements() != $b.numElements()) { ${ev.isNull} = true; } else"
-        else ""
       s"""
-         |$strictGuard {
+         |{
          |  int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |  double $acc = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {

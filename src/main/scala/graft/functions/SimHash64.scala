@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * UBIGINT)`), so SimHash dedup is checkable against an external SQL
   * oracle, unlike an xxhash64-based variant. Value-identical to the column
   * formulation `conv(substr(md5(t),1,15),16,10)` + 60 per-bit vote folds
-  * (Dedup.simhashHof), but one O(tokens) loop per row.
+  * (the specs' `Twins.simhashHof`), but one O(tokens) loop per row.
   */
 case class SimHash64(child: Expression)
     extends UnaryExpression with CodegenFallback {

@@ -12,9 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * O(n), no sort, no per-element Catalyst lambda dispatch).
   *
   * Value-identical to the higher-order-function definition
-  * ([[graft.operators.TextAnalysis.topBigramCountHof]]: run-length fold
-  * over array_sort of the concat_ws bigrams), which stays as the reference
-  * implementation asserted equal by spec — same contract as
+  * (the specs' `Twins.topBigramCountHof`: run-length fold over array_sort
+  * of the concat_ws bigrams), the reference implementation asserted equal
+  * by spec — same contract as
   * [[MinHashMd5]] / [[SimHash64]]. HOF folds are interpreted per element in
   * Spark 4, and the repetition metrics are a full-corpus scan in any
   * Gopher-style quality pipeline, so the fused form is the hot path.

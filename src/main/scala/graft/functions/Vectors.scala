@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Embedding-vector primitives as pure Catalyst expressions (no UDFs): the
-  * lambda higher-order functions (`zip_with`, `aggregate`) stay inside the
+/** Embedding-vector primitives as pure Catalyst expressions (no UDFs):
+  * codegen'd expressions and built-in array functions stay inside the
   * optimized expression tree, so vector math runs without serialization
   * overhead and survives whole-stage codegen boundaries.
   *
@@ -24,14 +24,6 @@ object Vectors {
   def dot(a: Column, b: Column): Column =
     ColumnBridge.column(
       DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** The higher-order-function formulation (kept as the reference
-    * implementation / documentation of the semantics DotProduct compiles). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, v) => acc + v)
 
   /** L2 norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -65,19 +57,9 @@ object Vectors {
 
   /** Squared L2 distance (monotone with L2; avoids the sqrt per pair),
     * backed by the codegen'd [[L2Squared]] expression — bit-identical to
-    * the interpreted fold ([[l2SquaredHof]]), no per-element allocation. */
+    * the interpreted `aggregate(zip_with(...))` fold, no per-element
+    * allocation. */
   def l2Squared(a: Column, b: Column): Column =
     ColumnBridge.column(
       L2Squared(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** The higher-order-function formulation (reference implementation of
-    * the semantics [[L2Squared]] compiles — spec-pinned equal). */
-  def l2SquaredHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0),
-      (acc, v) => acc + v)
 }

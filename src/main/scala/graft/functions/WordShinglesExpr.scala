@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Value-identical to the column formulation
   * `when(size(toks) >= n, array_distinct(transform(sequence(0, size-n),
-  * i => array_join(slice(toks, i+1, n), " "))))` (Dedup.wordShinglesHof —
+  * i => array_join(slice(toks, i+1, n), " "))))` (the specs' `Twins.wordShinglesHof` —
   * the agreement is spec-pinned), including first-occurrence order and the
   * null result for docs shorter than `n` tokens. The HOF form interprets
   * its lambda per element and copies each length-`n` slice — O(tokens x n)

@@ -58,16 +58,6 @@ object Dedup {
       ColumnBridge.expression(split(normalize(text), " ")), n))
   }
 
-  /** The higher-order-function definition of [[wordShingles]] (reference
-    * semantics; the fused expression must stay value-identical, including
-    * first-occurrence order and the short-doc null). */
-  def wordShinglesHof(text: Column, n: Int = 3): Column = {
-    val toks = split(normalize(text), " ")
-    when(size(toks) >= n,
-      array_distinct(transform(sequence(lit(0), size(toks) - n),
-        i => array_join(slice(toks, i + lit(1), lit(n)), " "))))
-  }
-
   /** MinHash signature: k independent hash minima. Hash j of shingle s is
     * md5(s + "#" + j); the minimum is lexicographic over hex strings, which
     * every engine orders identically. Backed by the single-pass
@@ -77,21 +67,6 @@ object Dedup {
     ColumnBridge.column(
       graft.functions.MinHashMd5(ColumnBridge.expression(shingles), k))
   }
-
-  /** The higher-order-function definition of [[minhashSignature]] (reference
-    * semantics; MinHashMd5 must stay value-identical to this). */
-  def minhashSignatureHof(shingles: Column, k: Int = 12): Column =
-    array((0 until k).map { j =>
-      array_min(transform(shingles, s => md5(concat(s, lit("#" + j)).cast("binary"))))
-    }: _*)
-
-  /** LSH band keys: the signature split into `bands` runs of `r` values,
-    * each hashed to one bucket key. */
-  def bandKeys(sig: Column, bands: Int, r: Int): Column =
-    array((0 until bands).map { b =>
-      md5(concat_ws("|", (0 until r).map(i => element_at(sig, b * r + i + 1)): _*)
-        .cast("binary"))
-    }: _*)
 
   /** The banded-signature relation (id, band, key) — the STORABLE index
     * side of MinHash dedup: 32-byte keys, `bands` rows per doc, tiny at any
@@ -572,21 +547,6 @@ object Dedup {
     import org.apache.spark.sql.graft.ColumnBridge
     val toks = array_distinct(split(normalize(text), " "))
     ColumnBridge.column(graft.functions.SimHash64(ColumnBridge.expression(toks)))
-  }
-
-  /** Column-expression definition of [[simhash]] (reference semantics the
-    * SimHash64 expression must match): 60 per-bit vote folds over
-    * conv(substr(md5(t),1,15),16,10). */
-  def simhashHof(text: Column): Column = {
-    val toks = array_distinct(split(normalize(text), " "))
-    val tokHash = (t: Column) => conv(substring(md5(t.cast("binary")), 1, 15), 16, 10).cast("long")
-    val bitCols = (0 until 60).map { b =>
-      val vote = aggregate(toks, lit(0),
-        (acc, t) => acc +
-          when(shiftright(tokHash(t), b).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
-      when(vote > 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bitCols.reduce(_ + _)
   }
 
   /** Near-dup pairs by SimHash: block on 4 15-bit chunks, then verify

@@ -33,12 +33,4 @@ object Ingest {
   /** Drop rows whose required fields failed to parse. */
   def wellFormed(parsed: DataFrame): DataFrame =
     parsed.filter(col("transaction_id").isNotNull && col("timestamp").isNotNull)
-
-  /** Typed view: compile-time field checks where downstream logic is
-    * hand-written Scala (Dataset[T] per SURVEY.md §1.3). */
-  def typedTransactions(raw: DataFrame): org.apache.spark.sql.Dataset[Schemas.Transaction] = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    wellFormed(parseTransactions(raw)).as[Schemas.Transaction]
-  }
 }

@@ -3,24 +3,11 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Output layout for training consumption — the step after curation and
-  * packing: route every row to one of `numShards` shards by content hash of
-  * its id, sort within each shard, and write one parquet directory per
-  * shard. The properties a training loader needs:
-  *
-  *   - shard assignment is a pure function of the id (xxhash64 — stable
-  *     across runs and as the corpus grows, like [[Sampling.hashSplit]];
-  *     re-sharding never reshuffles surviving rows between shards unless
-  *     `numShards` changes),
-  *   - rows inside a shard are contiguous and sorted (e.g. by the packer's
-  *     `(bin, bin_offset)`), so a loader streams a shard sequentially,
-  *   - `partitionBy` gives exact `shard=K` directories — a shard is a
-  *     directory, not a "roughly one file" hope.
-  *
-  * Scale shape: one shuffle on the shard id (numShards-way), sort within
-  * partitions only — never a global sort. At 100 TB pick numShards so a
-  * shard is a few GB (the usual shard contract), thousands of shards; the
-  * shuffle is the unavoidable one any layout step pays.
+/** File layout for training consumption and data skipping: stable
+  * content-hash shard ids (a pure function of the id — stable across runs
+  * and as the corpus grows, like [[Sampling.hashSplit]]), z-order
+  * clustering, footer-stats and bloom skip indexes, small-file compaction
+  * and date-partitioned writes.
   */
 object Layout {
 
@@ -37,45 +24,6 @@ object Layout {
   def shardIdPortable(id: Column, numShards: Int, salt: String = "shard"): Column = {
     require(numShards > 0, s"numShards must be positive, got $numShards")
     (Sampling.hashDraw(id, salt) % numShards).cast("int")
-  }
-
-  /** Route, sort, write. `sortCols` orders rows WITHIN each shard (pass the
-    * packing order `(bin, bin_offset)` for packed corpora, or the doc id).
-    * Returns the sharded frame it wrote (for inspection/tests).
-    *
-    * The "exact shard=K directories" promise covers EMPTY shards too:
-    * `partitionBy` only creates a directory for shard values that received
-    * rows (possible misses for small corpora or an unlucky xxhash
-    * distribution), so after the write any missing `shard=K` directory is
-    * created empty — a loader enumerating shard=0..numShards-1 must never
-    * 404 (an empty directory reads as an empty shard, which is the truth). */
-  def writeTrainingShards(
-      df: DataFrame,
-      outDir: String,
-      numShards: Int,
-      sortCols: Seq[Column],
-      idCol: String = "doc_id",
-      portable: Boolean = false): DataFrame = {
-    require(numShards > 0, s"numShards must be positive, got $numShards")
-    val sid = if (portable) shardIdPortable(col(idCol), numShards)
-      else shardId(col(idCol), numShards)
-    val sharded = df.withColumn("shard", sid)
-      // one task per shard value (hash collisions may co-locate two shard
-      // values in a task; partitionBy still splits them into exact dirs)
-      .repartition(numShards, col("shard"))
-      .sortWithinPartitions(col("shard") +: sortCols: _*)
-    sharded.write.mode("overwrite").partitionBy("shard").parquet(outDir)
-    val hconf = df.sparkSession.sessionState.newHadoopConf()
-    val out = new org.apache.hadoop.fs.Path(outDir)
-    val fs = out.getFileSystem(hconf)
-    (0 until numShards).foreach { k =>
-      val dir = new org.apache.hadoop.fs.Path(out, s"shard=$k")
-      if (!fs.exists(dir) && !fs.mkdirs(dir))
-        throw new IllegalStateException(
-          s"could not create empty shard directory $dir: the layout " +
-            s"contract is exactly $numShards shard=K directories")
-    }
-    sharded
   }
 
   // -------------------------------------------------------------- z-order

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multimodal columns: image/audio/video as opaque `binary` payloads with a
@@ -64,28 +64,4 @@ object Multimodal {
     media.withColumn("meta",
       struct(lit(w).as("width"), lit(h).as("height"),
         col("meta.format").as("format"), col("meta.duration_ms").as("duration_ms")))
-
-  /** The mapPartitions escape hatch for codecs that need native buffers:
-    * demonstrates the typed per-partition batch shape (one codec init per
-    * partition, streamed rows). The decode body is the same STUB. */
-  def decodePartitioned(media: DataFrame, dim: Int = 8): Dataset[(Long, Array[Double])] = {
-    import media.sparkSession.implicits._
-    media.select(col("media_id"), col("bytes")).as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // real impl: val codec = Codec.open() once per partition
-        val digest = java.security.MessageDigest.getInstance("MD5")
-        rows.map { case (id, bytes) =>
-          val feats = Array.tabulate(dim) { j =>
-            digest.reset()
-            digest.update(bytes)
-            digest.update(s"/f$j".getBytes)
-            val d = digest.digest()
-            // first 48 bits -> [0,1)
-            val v = (0 until 6).foldLeft(0L)((acc, i) => (acc << 8) | (d(i) & 0xffL))
-            v.toDouble / (1L << 48).toDouble
-          }
-          (id, feats)
-        }
-      }
-  }
 }

@@ -63,11 +63,6 @@ object Quality {
       sum(when(coalesce(predicate, lit(false)), 1L).otherwise(0L)).cast("double") /
         greatest(count(lit(1)), lit(1L)).cast("double"), min)
 
-  /** Fraction of rows whose `c` is one of `values` (nulls are not). */
-  def acceptedValues(df: DataFrame, c: String, values: Seq[String],
-      min: Double = 1.0): DataFrame =
-    compliance(df, s"accepted:$c", col(c).isin(values: _*), min)
-
   /** Fraction of (non-null) foreign keys in `c` that exist in
     * `dim.dimCol` — referential integrity. Left-semi join count over
     * non-null count; AQE broadcasts a small dimension. */

@@ -58,16 +58,6 @@ object Sampling {
     f"$cap%08x"
   }
 
-  /** Deterministic Bernoulli sample: keeps ~`fraction` of rows, selected by
-    * content hash (same rows every run, any engine, any partitioning).
-    * fraction >= 1.0 keeps EVERY row — the hex comparison is strict, so
-    * without the special case the top hash value ("ffffffff…") would be
-    * dropped (~2^-32 of rows). */
-  def deterministicSample(df: DataFrame, idCol: String, fraction: Double,
-      salt: String = "sample"): DataFrame =
-    if (fraction >= 1.0) df
-    else df.filter(hashBucket(col(idCol), salt) < lit(hexThreshold(fraction)))
-
   /** Assign each row to a named split (train/val/test, ...) by content hash.
     * `splits` are (name, fraction) in order; fractions must sum to <= 1 and
     * any remainder falls into `defaultSplit`. Adding rows later never moves
@@ -108,7 +98,7 @@ object Sampling {
     * primitive (DoReMi/DataComp-style domain reweighting): each row is
     * emitted `floor(w)` times plus one more with probability `frac(w)`,
     * where the Bernoulli draw is the same content hash as
-    * [[deterministicSample]]. `w = 2.0` duplicates every row exactly twice;
+    * [[hashSplit]]. `w = 2.0` duplicates every row exactly twice;
     * `w = 0.25` keeps a quarter of rows; `w = 1.5` keeps everything and
     * duplicates half. Copies are stamped 0-based in `copyCol` so downstream
     * shuffling/packing can tell them apart.
@@ -332,7 +322,6 @@ object Sampling {
     require(k >= 1 && k <= 64, s"k out of range: $k")
     import org.apache.spark.sql.expressions.Window
     val spark = df.sparkSession
-    import spark.implicits._
     val base = df.select(col(idCol).as("id"), col(labelCol).cast("int").as("lbl"))
       .filter(col("id").isNotNull && col("lbl").isNotNull)
     // bounded: the label set of a contrastive corpus is classes, not rows

@@ -113,15 +113,6 @@ object Similarity {
     }
   }
 
-  /** The window-rank definition of [[topKPerQuery]] (reference semantics;
-    * the heap aggregate must stay value-identical — asserted by spec). */
-  private[graft] def topKPerQueryWindow(scored: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
   /** Exact top-k: score all corpus rows per query, rank, keep k.
     * Output: (q_id, vec_id, cosine, rank). */
   def bruteForceTopK(
@@ -131,7 +122,6 @@ object Similarity {
       idCol: String = "vec_id",
       embCol: String = "embedding",
       qIdCol: String = "q_id"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // repartition: the corpus streams through a broadcast nested-loop join,
     // and a single-file corpus would otherwise score on one task
     val c = corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
@@ -273,7 +263,6 @@ object Similarity {
       idCol: String = "vec_id",
       embCol: String = "embedding",
       qIdCol: String = "q_id"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val d = resolveDim(corpus, embCol, dim)
     // one-shot entry point: an EMPTY query side fails loudly (headDim's
     // documented rationale — a silent empty result would hide a broken
@@ -378,7 +367,6 @@ object Similarity {
       idCol: String = "vec_id",
       embCol: String = "embedding",
       qIdCol: String = "q_id"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val d = resolveDim(corpus, embCol, dim)
     // same guards as lshTopK: loud empty-query check for the one-shot
     // entry point, then the per-row execution-time width check
@@ -558,7 +546,6 @@ object Similarity {
         nprobe: Int = -1,
         qIdCol: String = "q_id",
         embCol: String = "embedding"): DataFrame = {
-      import org.apache.spark.sql.expressions.Window
       val np = if (nprobe > 0) nprobe else nprobeDefault
       // queries must have the width the index was trained at — per-row
       // execution-time guard: no LIMIT-1 job per search() on a reused
@@ -854,9 +841,7 @@ object Similarity {
     * identically, which is what makes a float centroid hash-checkable. The
     * cost of that guarantee is `collect_list` per label: a label's vectors
     * must fit in one task (fine for class/domain labels — thousands of
-    * members × a few KB each; NOT for millions per label). For unbounded
-    * labels use [[labelCentroidsFast]], which is fully distributed but sums
-    * in partition order (values equal up to float association, not bits). */
+    * members × a few KB each; NOT for millions per label). */
   def labelCentroids(
       df: DataFrame,
       labelCol: String = "label",
@@ -1180,22 +1165,6 @@ object Similarity {
       .select(col("q_id"), col("__e.id").as("vec_id"),
         col("__e.score").as("score"), (col("__pos") + 1).as("rank"))
   }
-
-  /** The scale form of [[labelCentroids]]: posexplode to (label, dim, value)
-    * rows and average with a combinable aggregation — partial-aggregates
-    * map-side, no per-label materialization, handles millions of vectors
-    * per label. Double sums depend on partition order, so results match the
-    * ordered form to ~1e-9 relative (spec-pinned), not bit-exactly. */
-  def labelCentroidsFast(
-      df: DataFrame,
-      labelCol: String = "label",
-      idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame =
-    df.select(col(labelCol),
-        posexplode(col(embCol).cast("array<double>")).as(Seq("dim_idx", "v")))
-      .groupBy(col(labelCol), col("dim_idx"))
-      .agg(count(lit(1)).as("n"), (sum(col("v")) / count(lit(1))).as("value"))
-      .select(col(labelCol), col("n"), col("dim_idx"), col("value"))
 
   // ---------------------------------------------------- fixed-point kmeans
 

@@ -242,7 +242,8 @@ object Sketch {
     *
     * Scale shape: one combinable max-aggregation — 100 TB collapse to
     * <= 2^p counter rows, partial max map-side. Sketches merge by
-    * `union -> groupBy max` ([[hllMerge]]) across shards, days or
+    * `union -> groupBy max` (registers combine by max — associative,
+    * commutative, idempotent) across shards, days or
     * micro-batches. Deterministic and partitioning-independent like
     * everything in this module. */
   def hllBuild(df: DataFrame, itemCol: String, p: Int = 10,
@@ -257,11 +258,6 @@ object Sketch {
         rho.as("rho"))
       .groupBy(col("bucket")).agg(max(col("rho")).as("register"))
   }
-
-  /** Merge two register tables built with the same (p, salt): registers
-    * combine by max — associative, commutative, idempotent. */
-  def hllMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.union(b).groupBy(col("bucket")).agg(max(col("register")).as("register"))
 
   /** Per-group HLL register tables: one `(groupCols..., bucket, register)`
     * row per group per non-empty bucket — the "approx distinct per
@@ -360,18 +356,6 @@ object Sketch {
     * sketches alone (both built with the same (k, salt)). */
   def kmvUnion(a: DataFrame, b: DataFrame, k: Int): DataFrame =
     a.union(b).distinct().orderBy(col("h")).limit(k)
-
-  /** Distinct-count estimate from a FULL sketch (the input had >= k
-    * distinct items): `(k-1) * 2^32 / h_k`. One integer-exact numerator,
-    * one rounded cast, one rounded division — engine-identical. Returns a
-    * one-row frame (n_hashes, h_k, estimate); when the sketch is not full
-    * (n_hashes < k) the sketch IS the distinct hash set and `n_hashes` is
-    * the exact answer — callers should use it and ignore `estimate`. */
-  def kmvDistinctEstimate(sketch: DataFrame, k: Int): DataFrame =
-    sketch.agg(count(lit(1)).as("n_hashes"), max(col("h")).as("h_k"))
-      .select(col("n_hashes"), col("h_k"),
-        (lit((k - 1).toLong * 4294967296L).cast("double") /
-          col("h_k").cast("double")).as("estimate"))
 
   /** The raw HLL cardinality estimate `alpha_m * m^2 / sum_j 2^-M_j`, as a
     * one-row frame with INTEGER-EXACT evidence columns — `nz` (non-zero

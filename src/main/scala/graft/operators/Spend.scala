@@ -60,17 +60,6 @@ object Spend {
       .select(col("__m.__row.*"))
   }
 
-  /** The windowed reference form of [[dedupeBy]] (same total order, so the
-    * two are value-identical — asserted by spec; kept as the semantic
-    * definition). */
-  private[graft] def dedupeByWindow(df: DataFrame, keys: Seq[String], order: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val row = struct(df.columns.toIndexedSeq.map(col): _*)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy((order.map(c => col(c).asc) :+ row.asc): _*)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
-
   /** Streaming dedup by id, state bounded by the watermark (fixes the
     * reference's unbounded dedup state, SURVEY.md §2.6 D1). Caller must have
     * applied `withWatermark` on `c.ts` first.

@@ -17,13 +17,6 @@ object TextAnalysis {
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** BPE-ish subword count: word-boundary pieces plus long-word overflow
-    * (approximates `len(text)/4` behavior of byte-pair tokenizers on
-    * natural text without needing a vocab file). */
-  def approxBpeCount(text: Column): Column =
-    size(split(trim(text), "\\s+")) +
-      (length(regexp_replace(text, "[\\s]", "")) / lit(8)).cast("int")
-
   /** Ratio of punctuation characters (explicit class — identical regex
     * semantics across engines). */
   def punctRatio(text: Column): Column =
@@ -109,7 +102,7 @@ object TextAnalysis {
   }
 
   /** Adjacent-token bigrams (NOT distinct — counts matter here). */
-  private def bigrams(text: Column): Column = {
+  private[graft] def bigrams(text: Column): Column = {
     val toks = tokens(lower(text))
     when(size(toks) >= 2,
       transform(sequence(lit(1), size(toks) - 1),
@@ -132,38 +125,11 @@ object TextAnalysis {
       lit(0L))
   }
 
-  /** The higher-order-function definition of [[topBigramCount]] (reference
-    * semantics; the fused expression must stay value-identical to this):
-    * run-length fold over the sorted bigram array. */
-  def topBigramCountHof(text: Column): Column =
-    aggregate(
-      array_sort(bigrams(text)),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, x) => {
-        val run = when(x === acc.getField("prev"), acc.getField("run") + 1)
-          .otherwise(lit(1L))
-        struct(x.as("prev"), run.as("run"),
-          greatest(acc.getField("best"), run).as("best"))
-      },
-      acc => acc.getField("best"))
-
-  /** Share of all bigram occurrences taken by the most frequent bigram —
-    * the "top 2-gram fraction" repetition filter (high values flag
-    * boilerplate/spam). 0 for docs without bigrams.
-    *
-    * When selecting BOTH the count and the fraction, derive the fraction
-    * from the count column in a second projection instead of calling this
-    * (`count / greatest(size(tokens)-1, 1)`): expressions are not
-    * common-subexpression-eliminated across output columns, so this form
-    * would pay the sort+fold a second time per document. */
-  def topBigramFraction(text: Column): Column =
-    topBigramCount(text).cast("double") / bigramDenominator(text).cast("double")
-
   /** The bigram-share denominator (bigram occurrences floored at 1),
     * computed without building the bigram array: size(tokens)-1 equals
     * size(bigrams) for >= 2 tokens and both floor to 1 below that — the
-    * equivalence is pinned by spec. Shared by [[topBigramFraction]] and the
-    * graded two-step query so the two can't drift apart. */
+    * equivalence is pinned by spec. The graded two-step query derives the
+    * top-bigram share from [[topBigramCount]] over it. */
   def bigramDenominator(text: Column): Column =
     greatest(size(tokens(text)) - 1, lit(1))
 

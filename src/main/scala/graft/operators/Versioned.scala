@@ -21,8 +21,8 @@ import scala.jdk.CollectionConverters._
   *
   * Readers never list the directory (a listing would see uncommitted or
   * dead files): the manifest IS the table. Files referenced by any
-  * manifest are never rewritten or deleted (vacuuming old versions would
-  * drop manifests first — not implemented here).
+  * manifest are never rewritten or deleted; there is no vacuum, so every
+  * version stays readable until the table directory itself is removed.
   *
   * The partition column is stored IN the data files (not as hive
   * directories): partition pruning happens at manifest level — the reader
@@ -221,8 +221,8 @@ object Versioned {
     * [[commitUpsert]]'s updates meet — without the partition value a
     * delete would scan the whole table to find its rows). A partition
     * whose rows are all deleted drops off the manifest entirely. Returns
-    * the new version; history below it stays readable (time travel sees
-    * the rows until [[vacuum]]). */
+    * the new version; history below it stays readable (time travel still
+    * sees the deleted rows). */
   def commitDelete(
       spark: SparkSession, dir: String, keys: DataFrame,
       keyCols: Seq[String], partCol: String): Int = {
@@ -307,125 +307,12 @@ object Versioned {
         if (keyCols.contains(c)) col(c) else src.getField(c).as(c)): _*)
   }
 
-  /** Compaction commit: rewrite ONE partition's files into a single new
-    * file dir, content-identical — the maintenance verb for a partition
-    * that accumulated many small upsert files. Produces a new version
-    * (compaction must never mutate history); every other partition
-    * carries forward. Readers of old versions still see the old files. */
-  def compactPartition(spark: SparkSession, dir: String, part: String): Int = {
-    val v0 = latestVersion(dir)
-    require(v0 >= 0, s"$dir has no commits")
-    val m = readManifest(dir, v0)
-    val (target, carried) = m.entries.partition(_.part == part)
-    require(target.nonEmpty, s"partition $part absent at v$v0")
-    val v1 = v0 + 1
-    val rows = graft.util.Checkpoints.cut(
-      spark.read.parquet(target.map(_.path): _*).coalesce(1))
-    val e = writePart(dir, v1, part, rows)
-    writeManifest(dir, Manifest(v1, carried :+ e))
-    v1
-  }
-
-  /** Parquet data files under one entry path — the fragmentation unit:
-    * an upsert rewrites a partition as ONE manifest entry, but the dir
-    * holds a file per non-empty write task, and small upserts leave many
-    * small files. Metadata-only listing, bounded per partition. */
-  private def parquetFileCount(path: String): Int = {
-    val root = Paths.get(path)
-    if (!Files.exists(root)) 0
-    else {
-      // Files.walk holds directory handles until closed — a compactWhere
-      // sweep over many partitions would otherwise exhaust fds
-      val s = Files.walk(root)
-      try s.iterator().asScala
-        .count(_.getFileName.toString.endsWith(".parquet"))
-      finally s.close()
-    }
-  }
-
-  /** Policy-driven compaction: every partition whose dirs hold at least
-    * `minFiles` parquet data files is rewritten into a single file dir,
-    * ALL in one new version — one commit for the whole maintenance sweep
-    * instead of one version per partition ([[compactPartition]] stays
-    * the targeted verb). Untouched partitions carry forward; returns
-    * (newVersion, compacted partition values), or (-1, Nil) when nothing
-    * qualifies — no empty commit. */
-  def compactWhere(
-      spark: SparkSession, dir: String, minFiles: Int): (Int, Seq[String]) = {
-    require(minFiles >= 2, s"minFiles must be >= 2, got $minFiles")
-    val v0 = latestVersion(dir)
-    require(v0 >= 0, s"$dir has no commits")
-    val m = readManifest(dir, v0)
-    val byPart = m.entries.groupBy(_.part)
-    val targets = byPart
-      .filter(_._2.map(e => parquetFileCount(e.path)).sum >= minFiles)
-      .keys.toSeq.sorted
-    if (targets.isEmpty) return (-1, Nil)
-    val v1 = v0 + 1
-    val carried = m.entries.filterNot(e => targets.contains(e.part))
-    // same §2.6 overlap as the commit verbs: each partition's compaction
-    // is an independent read+rewrite of its own files
-    val rewritten = mapPartsConcurrently(spark, targets) { p =>
-      val rows = graft.util.Checkpoints.cut(
-        spark.read.parquet(byPart(p).map(_.path): _*).coalesce(1))
-      writePart(dir, v1, p, rows)
-    }
-    writeManifest(dir, Manifest(v1, carried ++ rewritten))
-    (v1, targets)
-  }
-
-  /** Vacuum: drop every manifest BELOW `keepFrom`, then delete data files
-    * referenced by NO surviving manifest. Time travel earlier than
-    * `keepFrom` is gone after this — that is the contract that makes
-    * deleting safe (a file is only removed once no readable version can
-    * name it). Returns the deleted file dirs. */
-  def vacuum(dir: String, keepFrom: Int): Seq[String] = {
-    val latest = latestVersion(dir)
-    require(keepFrom >= 0 && keepFrom <= latest,
-      s"keepFrom $keepFrom outside [0, $latest]")
-    val live = (keepFrom to latest)
-      .flatMap(v => readManifest(dir, v).entries.map(_.path)).toSet
-    // foreign-file guard: a shallow [[cloneTable]] manifest names files
-    // under the SOURCE table's root — this table's vacuum must never
-    // delete another table's data, so only paths under our own root
-    // qualify as dead
-    val ownRoot = Paths.get(dir).toAbsolutePath.normalize
-    def own(p: String) =
-      Paths.get(p).toAbsolutePath.normalize.startsWith(ownRoot)
-    val dead = (0 until keepFrom)
-      .flatMap(v => readManifest(dir, v).entries.map(_.path))
-      .distinct.filterNot(live).filter(own)
-    // data files FIRST, manifests LAST: a crash mid-vacuum then leaves the
-    // dead manifests still on disk naming the already-deleted files, and
-    // RE-RUNNING vacuum(keepFrom) recomputes the same dead set and
-    // completes (every delete is idempotent). The reverse order would
-    // orphan data files no surviving manifest names — invisible forever,
-    // because vacuum only ever deletes files a dead manifest points at.
-    // Versions below keepFrom are un-readable either way (that is the
-    // vacuum contract); crash-safety here means re-runnable, not readable.
-    dead.foreach { p =>
-      val root = Paths.get(p)
-      if (Files.exists(root)) {
-        val s = Files.walk(root)
-        val files = try s.iterator().asScala.toSeq finally s.close()
-        files.reverseIterator.foreach(f => Files.deleteIfExists(f))
-      }
-    }
-    (0 until keepFrom).foreach { v =>
-      Files.deleteIfExists(manifestDir(dir).resolve(s"v$v.json"))
-    }
-    dead
-  }
-
   /** Shallow clone: a NEW table at `dstDir` whose v0 re-lists `version`'s
     * entries verbatim — O(1) I/O at any table size (Delta's shallow-clone
     * semantics). The clone SHARES the source's immutable files: commits to
     * either table only ever add files under their own directory, so the
-    * branches diverge safely — but a [[vacuum]] on the SOURCE can delete
-    * files a clone still names (deep-copy or compact the clone first if
-    * the source's history must go). A vacuum on the CLONE never touches
-    * shared files: it only deletes files under its own root (the
-    * foreign-file guard in [[vacuum]]). */
+    * branches diverge safely. Removing the SOURCE directory removes files
+    * the clone still names. */
   def cloneTable(srcDir: String, dstDir: String, version: Int = -1): Int = {
     require(latestVersion(dstDir) == -1, s"$dstDir already has commits")
     val v = if (version < 0) latestVersion(srcDir) else version
@@ -440,9 +327,7 @@ object Versioned {
     * O(1) I/O at ANY table size — rolling a 100 TB table back from a bad
     * load costs one manifest write, never a data copy. The bad versions
     * stay readable (rollback is an ordinary commit, auditable and itself
-    * rollback-able); [[vacuum]] computes liveness from surviving manifests,
-    * so a post-rollback vacuum keeps the restored files alive even when
-    * every pre-rollback version is dropped. */
+    * rollback-able). */
   def rollback(dir: String, toVersion: Int): Int = {
     val latest = latestVersion(dir)
     require(toVersion >= 0 && toVersion < latest,

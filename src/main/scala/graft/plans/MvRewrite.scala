@@ -388,7 +388,7 @@ object MvRewrite extends Rule[LogicalPlan] {
       rows: DataFrame,
       dims: Seq[(String, org.apache.spark.sql.Column)],
       measures: Seq[(String, org.apache.spark.sql.Column)],
-      ranges: Seq[(String, org.apache.spark.sql.Column)] = Nil): DataFrame = {
+      ranges: Seq[(String, org.apache.spark.sql.Column)]): DataFrame = {
     val dimCols = dims.map { case (n, c) => c.as(n) }
     val aggCols = count(lit(1)).as("mv_n") +:
       (measures.map { case (n, c) => sum(c).as(s"mv_sum_$n") } ++

@@ -47,7 +47,7 @@ object TopKRewrite extends Rule[LogicalPlan] {
     }
 
   def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case f @ Filter(cond,
+    case Filter(cond,
         Window(Seq(alias @ Alias(WindowExpression(_: RowNumber,
           WindowSpecDefinition(_, _, _)), _)), partSpec, orderSpec, child, _))
         if rewriteable(cond, alias, partSpec, orderSpec, child) =>

@@ -97,9 +97,6 @@ object ChunkedRunning {
       case "max" => max(_)
       case _ => count(_)
     }
-    // offsets re-combine across batches the way chunk totals do within
-    // one: counts ADD (sum of counts), everything else reuses its own fn
-    val offFn: Column => Column = if (agg == "count") sum(_) else aggFn
     def combine(loc: Column, off: Column): Column = agg match {
       case "sum" => when(loc.isNull && off.isNull, lit(null))
         .otherwise(coalesce(loc, lit(0L)) + coalesce(off, lit(0L)))

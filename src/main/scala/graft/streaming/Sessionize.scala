@@ -10,13 +10,13 @@ import java.sql.Timestamp
 /** Sessionization of the transaction stream: contiguous activity per
   * customer separated by gaps > `gap`.
   *
-  * Two implementations with identical output schema:
+  * Implementations with identical output schema:
   *  - [[native]]: the built-in `session_window` (preferred — stock Catalyst
   *    state handling, works batch and streaming);
-  *  - [[withState]]: `mapGroupsWithState` with an event-time timeout — the
-  *    custom-state escape hatch for session logic the native window can't
-  *    express (e.g. value-dependent gaps), here kept semantically aligned
-  *    with the native version as the template.
+  *  - [[streaming]] and [[transformWithStateStreaming]]: custom-state
+  *    escape hatches (`flatMapGroupsWithState`, `transformWithState`) for
+  *    session logic the native window can't express (e.g. value-dependent
+  *    gaps), kept semantically aligned with the native version.
   */
 object Sessionize {
 
@@ -120,37 +120,6 @@ object Sessionize {
     ds.groupByKey(_.customer_id)
       .transformWithState(new SessionStateProcessor(gapMs),
         TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** mapGroupsWithState sessionization — the custom-state TEMPLATE,
-    * exercised in batch mode (state lives within the batch). A production
-    * streaming deployment must add `GroupStateTimeout.EventTimeTimeout` +
-    * pruning of closed sessions from the state list, or state grows
-    * unboundedly and open sessions re-emit every trigger; prefer [[native]]
-    * (built-in state lifecycle) unless the gap rule is value-dependent. */
-  def withState(ds: Dataset[SessionEvent], gapMs: Long = 30 * 60 * 1000L): Dataset[Session] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.customer_id)
-      .mapGroupsWithState[List[SessionState], List[Session]](
-        GroupStateTimeout.NoTimeout) {
-        (customer: String, events: Iterator[SessionEvent], state: GroupState[List[SessionState]]) =>
-          val sorted = events.toSeq.sortBy(_.timestamp.getTime)
-          var sessions = state.getOption.getOrElse(Nil)
-          sorted.foreach { e =>
-            val t = e.timestamp.getTime
-            sessions match {
-              case cur :: rest if t - cur.end <= gapMs => // inclusive: session_window merges an event at exactly end+gap (oracle-pinned)
-                sessions = cur.copy(end = t, total = cur.total + e.amount, n = cur.n + 1) :: rest
-              case _ =>
-                sessions = SessionState(t, t, e.amount, 1) :: sessions
-            }
-          }
-          state.update(sessions)
-          sessions.reverse.map(st =>
-            Session(customer, new Timestamp(st.start), new Timestamp(st.end + gapMs),
-              st.total, st.n))
-      }
-      .flatMap(identity)
   }
 }
 

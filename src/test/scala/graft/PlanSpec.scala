@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Physical-plan regression guards: the properties that make these queries
   * scale (pushdown, pruning, broadcast, partial aggregation) must stay
   * visible in the plan — a silent regression here costs orders of magnitude

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 
 /** Oracle rows prove the sf0.01 values; these pin the rule arithmetic on a
   * hand-counted basket set and the graph summary on known-shape graphs. */

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Fixed-point BM25 invariants: agreement with the true double-precision
   * formula (the quantization must not disturb the ranking on realistic

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The contrastive-training data tier: hard negatives/positives must
   * respect the label predicate and exact ranking, and triplet assembly

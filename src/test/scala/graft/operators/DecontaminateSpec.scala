@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Train-vs-eval decontamination and corpus-df rarity (exact values on the
   * graded corpus are oracle-checked via x11_decontaminate / ext_doc_rarity;

@@ -58,13 +58,13 @@ class ExtensionSpec extends SparkSpec {
     val sh = Dedup.wordShingles(col("text"))
     val both = docs.select(
       Dedup.minhashSignature(sh, 12).as("fast"),
-      Dedup.minhashSignatureHof(sh, 12).as("ref"))
+      graft.Twins.minhashSignatureHof(sh, 12).as("ref"))
     assert(both.filter(col("fast") =!= col("ref")).count() == 0)
     import org.apache.spark.sql.graft.ColumnBridge
     val bandBoth = docs.select(
       ColumnBridge.column(graft.functions.MinHashBandKeys(
         ColumnBridge.expression(sh), 12, 4)).as("fast"),
-      Dedup.bandKeys(Dedup.minhashSignatureHof(sh, 12), 4, 3).as("ref"))
+      graft.Twins.bandKeys(graft.Twins.minhashSignatureHof(sh, 12), 4, 3).as("ref"))
     assert(bandBoth.filter(col("fast") =!= col("ref")).count() == 0)
   }
 
@@ -77,7 +77,7 @@ class ExtensionSpec extends SparkSpec {
     for (n <- Seq(3, 5)) {
       val both = docs.select(
         Dedup.wordShingles(col("text"), n).as("fast"),
-        Dedup.wordShinglesHof(col("text"), n).as("ref"))
+        graft.Twins.wordShinglesHof(col("text"), n).as("ref"))
       // element-wise AND order-wise equality, null-safe
       assert(both.filter(not(col("fast") <=> col("ref"))).count() == 0, s"n=$n")
     }
@@ -265,7 +265,7 @@ class ExtensionSpec extends SparkSpec {
       .limit(200).union(edges)
     val both = docs.select(
       topBigramCount(col("text")).as("fast"),
-      topBigramCountHof(col("text")).as("ref"))
+      graft.Twins.topBigramCountHof(col("text")).as("ref"))
     assert(both.filter(
       col("fast").isNull || col("fast") =!= col("ref")).count() == 0)
   }
@@ -288,7 +288,7 @@ class ExtensionSpec extends SparkSpec {
     val sims = docs.select(col("doc_id"), Dedup.simhash(col("text")).as("sim"))
       .as[(Long, Long)].collect().toMap
     // fused expression must match the 64-fold column formulation
-    val hof = docs.select(col("doc_id"), Dedup.simhashHof(col("text")).as("sim"))
+    val hof = docs.select(col("doc_id"), graft.Twins.simhashHof(col("text")).as("sim"))
       .as[(Long, Long)].collect().toMap
     assert(sims == hof)
     def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
@@ -603,14 +603,13 @@ class ExtensionSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val out = df.select(col("doc_id"),
       dupTokenFraction(col("text")).as("d"),
-      topBigramCount(col("text")).as("c"),
-      topBigramFraction(col("text")).as("f"))
-      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2), r.getDouble(3)))
+      topBigramCount(col("text")).as("c"))
+      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2)))
       .toMap
     assert(math.abs(out(1L)._1 - (1.0 - 2.0 / 6.0)) < 1e-12)
-    assert(out(1L)._2 == 3L && out(1L)._3 == 0.6)
-    assert(out(2L)._1 == 0.0 && out(2L)._2 == 1L && out(2L)._3 == 0.5)
-    assert(out(3L) == ((0.0, 0L, 0.0)))
+    assert(out(1L)._2 == 3L)
+    assert(out(2L)._1 == 0.0 && out(2L)._2 == 1L)
+    assert(out(3L) == ((0.0, 0L)))
   }
 
   test("int8 quantization: bounded elementwise error, cosine preserved") {
@@ -652,7 +651,23 @@ class ExtensionSpec extends SparkSpec {
     val exprFeats = Multimodal.withFeatures(media, dim = 4)
       .select(col("media_id"), col("features")).as[(Long, Array[Double])]
       .collect().toMap
-    val mpFeats = Multimodal.decodePartitioned(media, dim = 4).collect().toMap
+    // the mapPartitions shape a native codec needs: one init per partition,
+    // streamed rows; first 48 bits of md5(bytes ++ "/f<j>") -> [0,1)
+    val mpFeats = media.select(col("media_id"), col("bytes"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions { rows =>
+        val digest = java.security.MessageDigest.getInstance("MD5")
+        rows.map { case (id, bytes) =>
+          (id, Array.tabulate(4) { j =>
+            digest.reset()
+            digest.update(bytes)
+            digest.update(s"/f$j".getBytes)
+            val d = digest.digest()
+            (0 until 6).foldLeft(0L)((acc, i) => (acc << 8) | (d(i) & 0xffL))
+              .toDouble / (1L << 48).toDouble
+          })
+        }
+      }.collect().toMap
     assert(exprFeats.keySet == mpFeats.keySet)
     exprFeats.foreach { case (id, fs) =>
       fs.zip(mpFeats(id)).foreach { case (a, b) => assert(math.abs(a - b) < 1e-12) }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Behavioral tests for keyword extraction and label-centroid pooling (the
   * DuckDB oracle hash-checks both on real data; these pin the semantics on
@@ -93,21 +92,6 @@ class KeywordsCentroidSpec extends SparkSpec {
       (3L, Array(1.0f, 2.0f, 3.0f), 1)).toDF("vec_id", "embedding", "label")
     val eX = intercept[Exception] { Similarity.nearestCentroid(crossRagged).collect() }
     assert(messages(eX).contains("does not match centroid width"), messages(eX))
-  }
-
-  test("ordered and fast centroid forms agree within float association") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val ordered = Similarity.labelCentroids(emb)
-      .select("label", "dim_idx", "value")
-      .as[(Int, Int, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
-    val fast = Similarity.labelCentroidsFast(emb)
-      .select("label", "dim_idx", "value")
-      .as[(Int, Int, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
-    assert(ordered.keySet == fast.keySet)
-    ordered.foreach { case (k, v) =>
-      assert(math.abs(v - fast(k)) <= 1e-9 * math.max(1.0, math.abs(v)),
-        s"$k: ordered=$v fast=${fast(k)}")
-    }
   }
 
   test("semDedupPairs = brute all-pairs restricted to shared clusters, exactly") {

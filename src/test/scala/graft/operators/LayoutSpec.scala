@@ -3,64 +3,12 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Shard-layout properties: exact directories, lossless routing, in-shard
-  * sort order, and growth-stable assignment. (File layout has no SQL
-  * oracle — these specs are the check, like the sink specs.) */
+/** File-layout properties: growth-stable shard assignment, z-order
+  * interleave and clustering, skip-index pruning and compaction. (File
+  * layout has no SQL oracle — these specs are the check, like the sink
+  * specs.) */
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
-
-  private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-layout").toString
-
-  test("writeTrainingShards: exact shard dirs, all rows, sorted within shard") {
-    val out = tmpDir()
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    val packed = Sampling.packSequences(docs,
-      TextAnalysis.tokenCount(col("text")), 512)
-    Layout.writeTrainingShards(packed, out, numShards = 7,
-      sortCols = Seq(col("bin"), col("bin_offset"), col("doc_id")))
-
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.startsWith("shard=")).sorted
-    assert(dirs.length == 7, s"expected 7 shard dirs, got ${dirs.mkString(",")}")
-
-    val back = spark.read.parquet(out)
-    assert(back.count() == docs.count())
-    // routing is the documented pure function of the id
-    val misrouted = back.filter(
-      col("shard") =!= Layout.shardId(col("doc_id"), 7)).count()
-    assert(misrouted == 0)
-
-    // within every shard FILE the rows are contiguous-sorted: parquet
-    // preserves row order per file, so read each file alone and check
-    dirs.foreach { d =>
-      val files = new java.io.File(s"$out/$d").listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-      assert(files.nonEmpty)
-      files.foreach { f =>
-        val rows = spark.read.parquet(f.toString)
-          .select("bin", "bin_offset", "doc_id")
-          .as[(Long, Long, Long)].collect()
-        assert(rows.sameElements(rows.sortBy(r => (r._1, r._2, r._3))),
-          s"rows out of order in $d/${f.getName}")
-      }
-    }
-  }
-
-  test("empty shards still get their shard=K directory") {
-    // 3 rows into 64 shards: most shards receive zero rows, and partitionBy
-    // alone would create no directory for them — a loader enumerating
-    // shard=0..63 must never hit a missing path
-    val out = tmpDir()
-    val tiny = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "text")
-    Layout.writeTrainingShards(tiny, out, numShards = 64, sortCols = Seq(col("doc_id")))
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.startsWith("shard=")).toSet
-    assert(dirs == (0 until 64).map(k => s"shard=$k").toSet,
-      s"missing: ${(0 until 64).map(k => s"shard=$k").toSet -- dirs}")
-    // the read-back still carries exactly the written rows
-    assert(spark.read.parquet(out).count() == 3)
-  }
 
   test("shard assignment never moves a row as the corpus grows") {
     val ids = spark.range(5000).toDF("doc_id")

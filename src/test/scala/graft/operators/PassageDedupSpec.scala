@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Behavioral tests for the passage-level tile dedup family
   * (`Dedup.wordTiles` / `passageDedup` / `boilerplateTiles`); the DuckDB

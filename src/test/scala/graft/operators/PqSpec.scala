@@ -98,9 +98,26 @@ class PqSpec extends SparkSpec {
       .toDF("id", "a", "b")
     val fast = pairs.select($"id", Vectors.l2Squared($"a", $"b").as("d"))
       .as[(Long, Double)].collect().toMap
-    val ref = pairs.select($"id", Vectors.l2SquaredHof($"a", $"b").as("d"))
+    val ref = pairs.select($"id", graft.Twins.l2SquaredHof($"a", $"b").as("d"))
       .as[(Long, Double)].collect().toMap
     assert(fast == ref, "codegen L2 diverged from the HOF reference")
+  }
+
+  test("codegen'd DotProduct is bit-identical to literal products and the HOF fold") {
+    import graft.functions.Vectors
+    // RDD-backed (not a LocalRelation): ConvertToLocalRelation would
+    // otherwise constant-fold the projection in the interpreter
+    val vecs = spark.createDataset(spark.sparkContext.parallelize(Seq(
+      (1L, Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)),
+      (2L, Array(0.5, -0.25, 8.0), Array(-1.5, 2.0, 0.125)))))
+      .toDF("id", "a", "b")
+    val expected = Map(1L -> (1.0 * 4 + 2.0 * 5 + 3.0 * 6), 2L -> (-0.75 - 0.5 + 1.0))
+    val got = vecs.select($"id", Vectors.dot($"a", $"b").as("dot"))
+      .as[(Long, Double)].collect().toMap
+    assert(got == expected)
+    val ref = vecs.select($"id", graft.Twins.dotHof($"a", $"b").as("dot"))
+      .as[(Long, Double)].collect().toMap
+    assert(got == ref, "codegen dot diverged from the HOF reference")
   }
 
   test("encoding is deterministic across partitionings; params validated") {

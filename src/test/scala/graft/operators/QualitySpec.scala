@@ -34,7 +34,7 @@ class QualitySpec extends SparkSpec {
 
   test("compliance: a null predicate row counts as non-compliant") {
     // tag IS NULL -> isin(...) yields null -> must count as failing
-    val r = Quality.acceptedValues(frame, "tag", Seq("a", "b"))
+    val r = Quality.compliance(frame, "accepted:tag", col("tag").isin("a", "b"))
       .as[(String, Double, Boolean)].collect().head
     assert(r == (("compliance:accepted:tag", 0.75, false)))
     val pos = Quality.compliance(frame, "amount_positive", col("amount") > 0.0)
@@ -56,7 +56,7 @@ class QualitySpec extends SparkSpec {
   test("a suite is a union and a gate is a filter on passed") {
     val suite = Quality.completeness(frame, "id")
       .unionAll(Quality.uniqueness(frame, "id"))
-      .unionAll(Quality.acceptedValues(frame, "tag", Seq("a", "b")))
+      .unionAll(Quality.compliance(frame, "accepted:tag", col("tag").isin("a", "b")))
     assert(suite.count() == 3)
     assert(suite.filter(!col("passed")).count() == 1)
   }
@@ -73,7 +73,7 @@ class QualitySpec extends SparkSpec {
       .unionAll(Quality.distinctness(frame, "id"))
       .unionAll(Quality.distinctness(frame, "tag"))
       .unionAll(Quality.compliance(frame, "amount_positive", col("amount") > 0.0))
-      .unionAll(Quality.acceptedValues(frame, "tag", Seq("a", "b")))
+      .unionAll(Quality.compliance(frame, "accepted:tag", col("tag").isin("a", "b")))
       .as[(String, Double, Boolean)].collect().toSet
     assert(fused == individual && fused.size == 5)
   }

@@ -10,6 +10,13 @@ class SamplingSpec extends SparkSpec {
 
   private lazy val ids = spark.range(10000).toDF("id")
 
+  /** The ids a single-split [[Sampling.hashSplit]] keeps at `fraction`:
+    * a content-hash Bernoulli sample. */
+  private def sample(df: org.apache.spark.sql.DataFrame, fraction: Double,
+      salt: String = "sample") =
+    Sampling.hashSplit(df, "id", Seq("in" -> fraction), salt = salt)
+      .filter(col("split") === "in").select("id")
+
   test("hashSplit fractions land near their targets") {
     val counts = Sampling.hashSplit(ids, "id",
         Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
@@ -29,10 +36,8 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("different salts give independent assignments") {
-    val a = Sampling.deterministicSample(ids, "id", 0.5, salt = "a")
-      .as[Long].collect().toSet
-    val b = Sampling.deterministicSample(ids, "id", 0.5, salt = "b")
-      .as[Long].collect().toSet
+    val a = sample(ids, 0.5, salt = "a").as[Long].collect().toSet
+    val b = sample(ids, 0.5, salt = "b").as[Long].collect().toSet
     val overlap = (a intersect b).size.toDouble / 10000
     assert(overlap > 0.2 && overlap < 0.3, s"expected ~0.25 overlap, got $overlap")
   }
@@ -43,7 +48,7 @@ class SamplingSpec extends SparkSpec {
     val n = Sampling.hashSplit(ids, "id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
       .filter(col("split") === "rest").count()
     assert(n == 0L)
-    assert(Sampling.deterministicSample(ids, "id", 1.0).count() == 10000L)
+    assert(sample(ids, 1.0).count() == 10000L)
   }
 
   test("samples are nested: sample(f1) is a subset of sample(f2) for f1 <= f2") {
@@ -54,8 +59,8 @@ class SamplingSpec extends SparkSpec {
     (1 to 5).foreach { _ =>
       val (a, b) = (rnd.nextDouble(), rnd.nextDouble())
       val (lo, hi) = if (a <= b) (a, b) else (b, a)
-      val s1 = Sampling.deterministicSample(small, "id", lo).as[Long].collect().toSet
-      val s2 = Sampling.deterministicSample(small, "id", hi).as[Long].collect().toSet
+      val s1 = sample(small, lo).as[Long].collect().toSet
+      val s2 = sample(small, hi).as[Long].collect().toSet
       assert(s1.subsetOf(s2), s"f=$lo not nested in f=$hi")
     }
   }

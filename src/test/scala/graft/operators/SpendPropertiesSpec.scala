@@ -69,7 +69,7 @@ class SpendPropertiesSpec extends SparkSpec {
     val df = rows.toDF("k", "o", "id", "v")
     val agg = Spend.dedupeBy(df, Seq("k"), Seq("o"))
       .collect().map(_.toSeq).toSet
-    val win = Spend.dedupeByWindow(df, Seq("k"), Seq("o"))
+    val win = graft.Twins.dedupeByWindow(df, Seq("k"), Seq("o"))
       .collect().map(_.toSeq).toSet
     assert(agg == win)
     assert(agg.size == rows.map(_._1).distinct.size)

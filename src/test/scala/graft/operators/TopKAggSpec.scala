@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** The bounded heap aggregate behind `Similarity.topKPerQuery` must stay
   * value-identical to the window-rank reference form
-  * (`Similarity.topKPerQueryWindow`) — same ranks, same tie-breaks
+  * (`graft.Twins.topKPerQueryWindow`) — same ranks, same tie-breaks
   * (cosine DESC, vec_id ASC), same k-truncation — while shuffling at most
   * k entries per query per task. */
 class TopKAggSpec extends SparkSpec {
@@ -22,7 +22,7 @@ class TopKAggSpec extends SparkSpec {
   test("heap aggregate matches the window reference (ties, small k)") {
     val s = scored(3600L)
     val fast = Similarity.topKPerQuery(s, 7)
-    val ref = Similarity.topKPerQueryWindow(s, 7)
+    val ref = graft.Twins.topKPerQueryWindow(s, 7)
     assert(fast.schema.map(f => (f.name, f.dataType)) ==
       ref.schema.map(f => (f.name, f.dataType)))
     assert(fast.exceptAll(ref).isEmpty && ref.exceptAll(fast).isEmpty)
@@ -32,7 +32,7 @@ class TopKAggSpec extends SparkSpec {
   test("k larger than the group yields the whole group, ranked") {
     val s = scored(45L) // 9 queries x 5 candidates
     val fast = Similarity.topKPerQuery(s, 100)
-    val ref = Similarity.topKPerQueryWindow(s, 100)
+    val ref = graft.Twins.topKPerQueryWindow(s, 100)
     assert(fast.exceptAll(ref).isEmpty && ref.exceptAll(fast).isEmpty)
     assert(fast.count() == 45)
   }
@@ -58,7 +58,7 @@ class TopKAggSpec extends SparkSpec {
         |FROM (SELECT q_id, graft_top_k(cosine, vec_id, 4) AS top
         |  FROM topk_scored GROUP BY q_id)
         |LATERAL VIEW posexplode(top) x AS pos, e""".stripMargin)
-    val ref = Similarity.topKPerQueryWindow(scored(900L), 4)
+    val ref = graft.Twins.topKPerQueryWindow(scored(900L), 4)
     assert(sql.exceptAll(ref).isEmpty && ref.exceptAll(sql).isEmpty)
   }
 }

@@ -1,10 +1,13 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, Executors}
+import scala.concurrent.duration._
+import scala.concurrent.{Await, ExecutionContext, Future}
 
 /** Manifest-based versioning: commits must be O(delta) (untouched
   * partitions SHARE files across versions, by path), historical snapshots
@@ -67,26 +70,7 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.readManifest(base, v2).entries.map(_.part)
       .contains("2099-12-31"))
 
-    // compaction: content-identical, new version, history intact
-    val preCompact = Versioned.read(spark, base, v2)
-      .filter(col("event_date") === "2024-01-05")
-      .orderBy(col("event_id")).collect().map(_.toString).toSeq
-    val v3 = Versioned.compactPartition(spark, base, "2024-01-05")
-    val postCompact = Versioned.read(spark, base, v3)
-      .filter(col("event_date") === "2024-01-05")
-      .orderBy(col("event_id")).collect().map(_.toString).toSeq
-    assert(postCompact == preCompact, "compaction changed content")
     assert(Versioned.read(spark, base, 0).count() > 0, "history lost")
-
-    // vacuum: versions below keepFrom become unreadable, their exclusive
-    // files are gone, every surviving version still reads
-    val deleted = Versioned.vacuum(base, keepFrom = v3)
-    assert(deleted.nonEmpty, "nothing vacuumed despite rewritten partitions")
-    deleted.foreach(p =>
-      assert(!Files.exists(java.nio.file.Paths.get(p)), s"dead file $p survived"))
-    intercept[Exception](Versioned.readManifest(base, 0))
-    assert(Versioned.read(spark, base, v3).count() ==
-      rel.count() + 5 /* nova */ + 0)
   }
 
   test("keyed delete and the change feed between versions") {
@@ -138,7 +122,7 @@ class VersionedSpec extends SparkSpec {
       .filter(col("event_date") === "2024-01-06").count() == delAll.count())
   }
 
-  test("single-pass bootstrap, atomic manifests, re-runnable vacuum") {
+  test("single-pass bootstrap and atomic manifests") {
     val base = Files.createTempDirectory("graft-versioned-crash").toString
     Versioned.commitFull(spark, base, rel, "event_date")
     val m0 = Versioned.readManifest(base, 0)
@@ -160,27 +144,10 @@ class VersionedSpec extends SparkSpec {
     val names = scala.jdk.CollectionConverters.IteratorHasAsScala(residue)
       .asScala.map(_.getFileName.toString).toSeq
     assert(names.sorted == Seq("v0.json", "v1.json"), s"manifest dir: $names")
-
-    // a vacuum interrupted between its two phases (data files deleted,
-    // dead manifests still present) must complete on RE-RUN: simulate the
-    // crash by deleting a dead-exclusive file dir by hand, then vacuum
-    val deadExclusive = m0.entries.filter(_.part == "2024-01-05").map(_.path)
-    assert(deadExclusive.nonEmpty)
-    deadExclusive.foreach { p =>
-      val root = java.nio.file.Paths.get(p)
-      val files = Files.walk(root).iterator()
-      scala.jdk.CollectionConverters.IteratorHasAsScala(files).asScala
-        .toSeq.reverseIterator.foreach(f => Files.deleteIfExists(f))
-    }
-    val deleted = Versioned.vacuum(base, keepFrom = v1)
-    assert(!Files.exists(java.nio.file.Paths.get(base, "_manifests", "v0.json")),
-      "re-run vacuum left the dead manifest behind")
-    deleted.foreach(p =>
-      assert(!Files.exists(java.nio.file.Paths.get(p)), s"dead file $p survived"))
     assert(Versioned.read(spark, base, v1).count() == rel.count())
   }
 
-  test("rollback restores a version O(1), survives vacuum, is re-rollbackable") {
+  test("rollback restores a version O(1) and is re-rollbackable") {
     val base = Files.createTempDirectory("graft-versioned-rb").toString
     Versioned.commitFull(spark, base, rel, "event_date")
     val upd = rel.filter(col("event_date") === "2024-01-05")
@@ -213,51 +180,11 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.readManifest(base, v3).entries ==
       Versioned.readManifest(base, v1).entries)
 
-    // vacuum keeping only the latest (a v1-content rollback) must keep the
-    // restored files alive — liveness comes from surviving manifests
-    Versioned.vacuum(base, keepFrom = v3)
     assert(Versioned.read(spark, base, v3).count() == rel.count())
     intercept[IllegalArgumentException](Versioned.rollback(base, v3)) // no-op target
   }
 
-  test("compactWhere sweeps every fragmented partition in ONE commit") {
-    val base = Files.createTempDirectory("graft-versioned-cw").toString
-    Versioned.commitFull(spark, base, rel, "event_date")
-    // fragment two partitions with single-day upserts (each adds a file)
-    for (day <- Seq("2024-01-05", "2024-01-06"); _ <- 1 to 2) {
-      val upd = rel.filter(col("event_date") === day)
-        .limit(5).withColumn("value", col("value") + 1.0)
-      Versioned.commitUpsert(spark, base, upd, Seq("event_id"), "event_date")
-    }
-    val before = Versioned.read(spark, base).orderBy("event_id").collect().toSeq
-    val v0 = Versioned.latestVersion(base)
-    def fileCounts(v: Int): Map[String, Int] =
-      Versioned.readManifest(base, v).entries.groupBy(_.part)
-        .view.mapValues(_.map(e => Files.walk(java.nio.file.Paths.get(e.path))
-          .iterator())
-        .map(it => scala.jdk.CollectionConverters.IteratorHasAsScala(it)
-          .asScala.count(_.getFileName.toString.endsWith(".parquet"))).sum)
-        .toMap
-    // the rewritten days' dirs hold a file per non-empty write task —
-    // genuinely fragmented; the bootstrap days hold one file each
-    val frag = fileCounts(v0)
-    assert(frag("2024-01-05") >= 2 && frag("2024-01-06") >= 2,
-      s"fixture fragmented wrong: $frag")
-    val minF = math.min(frag("2024-01-05"), frag("2024-01-06"))
-    val (v1, parts) = Versioned.compactWhere(spark, base, minFiles = minF)
-    assert(v1 == v0 + 1 && parts == Seq("2024-01-05", "2024-01-06"),
-      s"targets $parts from $frag")
-    // one version, every target now a single data file, content identical
-    val after = fileCounts(v1)
-    parts.foreach(p => assert(after(p) == 1, s"$p not compacted: $after"))
-    assert(Versioned.read(spark, base, v1).orderBy("event_id")
-      .collect().toSeq == before)
-    // nothing left to compact: no empty commit
-    assert(Versioned.compactWhere(spark, base, minFiles = 2) == ((-1, Nil)))
-    assert(Versioned.latestVersion(base) == v1)
-  }
-
-  test("shallow clone: O(1), branches diverge, clone vacuum spares shared files") {
+  test("shallow clone: O(1), branches diverge") {
     val src = Files.createTempDirectory("graft-clone-src").toString
     val dst = Files.createTempDirectory("graft-clone-dst").toString
     Versioned.commitFull(spark, src, rel, "event_date")
@@ -276,13 +203,31 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.read(spark, dst).count() ==
       rel.count() - day.count())
 
-    // vacuum the clone down to its delete commit: the dropped v0 manifest
-    // names ONLY source-owned files — the foreign-file guard must delete
-    // nothing, and the source stays fully readable
-    val deleted = Versioned.vacuum(dst, keepFrom = dv1)
-    assert(deleted.isEmpty, s"clone vacuum deleted shared files: $deleted")
-    assert(Versioned.read(spark, src).count() == rel.count())
+    assert(dv1 == 1)
     // cloning into a non-empty table fails loudly
     intercept[IllegalArgumentException](Versioned.cloneTable(src, dst))
+  }
+
+  // graded rows that write scratch tables take a fresh directory per call
+  // (SparkEntry.tempDir): two sessions running the same row on the same
+  // data never share, overwrite or clean each other's files
+  test("two sessions running the scratch-table rows at once match a single run") {
+    val names = Seq("x73_tpch_refresh", "x60_bloom_skip_index")
+    def run(s: org.apache.spark.sql.SparkSession, name: String): Seq[String] =
+      SparkEntry.queries(name)(s, dir).collect().map(_.toString).toSeq.sorted
+    val single = names.map(n => n -> run(spark, n)).toMap
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val start = new CountDownLatch(1)
+      val runs = Seq(spark.newSession(), spark.newSession()).map { s =>
+        Future {
+          start.await()
+          names.map(n => n -> run(s, n)).toMap
+        }
+      }
+      start.countDown()
+      runs.foreach(r => assert(Await.result(r, 10.minutes) == single))
+    } finally pool.shutdown()
   }
 }

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
   * shape (avg-hot and histogram-hot), stays value-identical (nulls
   * included), and leaves every non-matching shape alone. */
 class AutoChunkWindowSpec extends SparkSpec {
-  import spark.implicits._
 
   private def withConfs(kvs: (String, String)*)(body: => Unit): Unit =
     graft.GraftSession.withConfs(spark, kvs: _*)(body)
@@ -1689,7 +1688,6 @@ class AutoChunkWindowSpec extends SparkSpec {
       "whose histogram names the heavy hitter plans the Union split " +
       "WITHOUT a census scan — same shape as the sketch path, identical " +
       "answers, hotSplit=false reverts to whole-relation chunking") {
-    import org.apache.spark.sql.expressions.Window
     val t = "graft_autochunk_hist_split"
     freshTable(t) {
       withConfs("spark.sql.statistics.histogram.enabled" -> "true") {

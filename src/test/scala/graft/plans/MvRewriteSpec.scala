@@ -172,4 +172,18 @@ class MvRewriteSpec extends SparkSpec {
       assert(p.contains("events.parquet"))
     }
   }
+
+  test("a re-run of an MV row in the same JVM reads its own fresh MV") {
+    val mvDirOf = """graft-mv-[^/]+""".r
+    def mvDirs(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.inputFiles.flatMap(mvDirOf.findFirstIn).toSet
+    val first = graft.SparkEntry.queries("x42_mv_rewrite")(spark, dir)
+    val firstRows = first.collect().map(_.toString).toSeq.sorted
+    val second = graft.SparkEntry.queries("x42_mv_rewrite")(spark, dir)
+    val secondRows = second.collect().map(_.toString).toSeq.sorted
+    assert(mvDirs(first).size == 1 && mvDirs(second).size == 1,
+      s"each run must read exactly one MV: ${mvDirs(first)} ${mvDirs(second)}")
+    assert(mvDirs(first) != mvDirs(second), "the re-run read the first run's MV")
+    assert(secondRows == firstRows)
+  }
 }

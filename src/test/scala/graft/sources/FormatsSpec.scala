@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Source/sink format breadth: the engine's tables round-trip through CSV

@@ -41,7 +41,7 @@ class BloomDedupSpec extends SparkSpec {
     assert(out.map(_._2).distinct.size == out.size, "emitted a duplicate fp")
     assert(out.size == 500, s"expected 500 uniques, got ${out.size}")
     // first-wins: every kept doc_id is the FIRST carrier of its fp
-    assert(out.forall { case (id, fp) => id <= 2000 },
+    assert(out.forall { case (id, _) => id <= 2000 },
       "a re-sent copy was kept over the first occurrence")
   }
 
